@@ -2,6 +2,8 @@ package graft.api
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.{Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import graft.types._
 
@@ -10,10 +12,20 @@ import graft.types._
   * error status mapping Validation/Config→400, Planner→422, Execution→500,
   * Connection/Provider→503 and `toJSON` bodies so clients can reconstruct
   * typed errors from `code`. Zero dependencies: the JDK's HttpServer.
+  *
+  * Requests are served concurrently by a fixed pool with one thread per
+  * task slot of the session (`defaultParallelism`), so the server admits
+  * no more queries at once than Spark has slots to run their tasks.
   */
 final class MultiDbHttpServer(db: MultiDb, port: Int = 0) {
 
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
+  private val pool = {
+    val n = new AtomicInteger()
+    Executors.newFixedThreadPool(math.max(1, db.spark.sparkContext.defaultParallelism), { r =>
+      val t = new Thread(r, s"graft-http-${n.incrementAndGet()}"); t.setDaemon(true); t
+    })
+  }
 
   def start(): Int = {
     server.createContext("/query", (ex: HttpExchange) => handle(ex) {
@@ -56,12 +68,19 @@ final class MultiDbHttpServer(db: MultiDb, port: Int = 0) {
       if (issues.nonEmpty) throw ConfigError(issues)
       (200, """{"valid":true}""")
     })
-    server.setExecutor(null)
+    server.setExecutor(pool)
     server.start()
     server.getAddress.getPort
   }
 
-  def stop(): Unit = server.stop(0)
+  /** Closes the socket, then interrupts in-flight handlers and waits (up to
+    * 10 s) for the pool's threads to exit.
+    */
+  def stop(): Unit = {
+    server.stop(0)
+    pool.shutdownNow()
+    pool.awaitTermination(10, TimeUnit.SECONDS)
+  }
 
   /** Role-side config checks: every role table/column reference must exist
     * (the role provider half of "/validate/config validates metadata + role

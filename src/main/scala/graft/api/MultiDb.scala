@@ -1,6 +1,7 @@
 package graft.api
 
 import java.util.concurrent.{Executors, TimeUnit, TimeoutException, FutureTask}
+import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import graft.access.{AccessControl, Masking}
 import graft.exec.{Resolver, ResolvedQuery}
@@ -24,12 +25,15 @@ final class MultiDb(
     registry: SourceRegistry,
 ) extends AutoCloseable {
 
-  @volatile private var state: (MetadataIndex, Map[String, RoleMeta]) = load()
+  /** One consistent (metadata, roles) pair; a reload swaps it whole. */
+  private type Snapshot = (MetadataIndex, Map[String, RoleMeta])
+
+  @volatile private var state: Snapshot = load()
   private val timeoutPool = Executors.newCachedThreadPool { r =>
     val t = new Thread(r, "graft-query-timeout"); t.setDaemon(true); t
   }
 
-  private def load(): (MetadataIndex, Map[String, RoleMeta]) = {
+  private def load(): Snapshot = {
     val cfg =
       try metadataProvider.load()
       catch { case e: Exception if !e.isInstanceOf[MultiDbError] =>
@@ -97,7 +101,7 @@ final class MultiDb(
     * 100 TB path never materializes on the driver).
     */
   def frame(q: QueryDefinition, context: ExecutionContext = ExecutionContext()): DataFrame =
-    resolveChecked(q, context)._1.frame
+    resolveTimed(state, q, context)._1._1.frame
 
   /** Full reference-shaped query lifecycle. */
   def query(q: QueryDefinition, context: ExecutionContext = ExecutionContext()): QueryResult = {
@@ -107,9 +111,13 @@ final class MultiDb(
     def log(phase: String, msg: String): Unit =
       if (q.debug) debug += DebugLogEntry(System.currentTimeMillis(), phase, msg)
 
-    val (index, rolesById) = state // snapshot
+    // one snapshot for the whole query: every resolve below (including the
+    // partial-cache refetch) reads it, never the live `state` a concurrent
+    // reload may have swapped
+    val snapshot = state
+    val (index, _) = snapshot
     log("validation", s"validating query from '${q.from}'")
-    val ((resolved, plan, mappingsMeta), tPlanned) = resolveTimed(q, context, Some(log))
+    val ((resolved, plan, mappingsMeta), tPlanned) = resolveTimed(snapshot, q, context, Some(log))
     val t1 = System.nanoTime()
 
     def metaOf(executionMs: Option[Long], columns: Seq[ResultColumnMeta]): QueryResultMeta =
@@ -161,7 +169,7 @@ final class MultiDb(
           if (missing.isEmpty) Nil
           else {
             log("cache", s"fetching ${missing.size} missed ids from database")
-            val (res2, _, _) = resolveChecked(q.copy(byIds = Some(missing)), context)
+            val ((res2, _, _), _) = resolveTimed(snapshot, q.copy(byIds = Some(missing)), context)
             assemble(withTimeout(plan, res2.frame.collect()), res2)
           }
         DataResult(cacheData ++ dbData,
@@ -177,25 +185,19 @@ final class MultiDb(
     }
   }
 
-  private def resolveChecked(
-      q: QueryDefinition,
-      context: ExecutionContext,
-      log: Option[(String, String) => Unit] = None,
-  ): (ResolvedQuery, Plan, Seq[ResultColumnMeta]) = {
-    resolveTimed(q, context, log)._1
-  }
-
-  /** Like resolveChecked, also returning the nanoTime boundary between
-    * planning (validate + ACL + strategy selection) and generation
-    * (Catalyst resolution) so `timing.planningMs` and `generationMs` are
-    * distinct real measurements, not one duplicated value.
+  /** Validate, ACL, plan and resolve `q` against one config snapshot,
+    * also returning the nanoTime boundary between planning (validate + ACL
+    * + strategy selection) and generation (Catalyst resolution) so
+    * `timing.planningMs` and `generationMs` are distinct real measurements,
+    * not one duplicated value.
     */
   private def resolveTimed(
+      snapshot: Snapshot,
       q: QueryDefinition,
       context: ExecutionContext,
       log: Option[(String, String) => Unit] = None,
   ): ((ResolvedQuery, Plan, Seq[ResultColumnMeta]), Long) = {
-    val (index, rolesById) = state
+    val (index, rolesById) = snapshot
     val issues = graft.validation.Validator.validate(index, rolesById, q, context)
     if (issues.nonEmpty) throw ValidationError(q.from, issues)
     val access = AccessControl.resolve(index, rolesById, context)
@@ -222,17 +224,28 @@ final class MultiDb(
   }
 
   /** Per-query timeout at the driver boundary (reference: executor-level
-    * timeoutMs, README.md:523) → ExecutionError QUERY_TIMEOUT.
+    * timeoutMs, README.md:523) → ExecutionError QUERY_TIMEOUT. The body runs
+    * under its own job group, so a timeout cancels this query's jobs only,
+    * never those of concurrent callers sharing the session.
     */
   private def withTimeout[T](plan: Plan, body: => T): T = {
     val timeoutMs = registry.timeoutFor(plan.targetDatabase)
-    val task = new FutureTask[T](() => body)
+    val group = s"graft-query-${MultiDb.queryIds.incrementAndGet()}"
+    val sc = spark.sparkContext
+    val task = new FutureTask[T](() => {
+      // pool threads inherit local properties from the thread that spawned
+      // them, so the group is set per task and cleared before the next one
+      sc.setJobGroup(group, s"graft query on '${plan.targetDatabase}'", interruptOnCancel = true)
+      try body finally sc.clearJobGroup()
+    })
     timeoutPool.execute(task)
     try task.get(timeoutMs, TimeUnit.MILLISECONDS)
     catch {
       case _: TimeoutException =>
+        // also covers jobs the body submits after this point (it may be
+        // between two actions when the interrupt lands)
+        sc.cancelJobGroupAndFutureJobs(group, s"query timed out after $timeoutMs ms")
         task.cancel(true)
-        spark.sparkContext.cancelAllJobs()
         throw ExecutionError("QUERY_TIMEOUT",
           Map("database" -> plan.targetDatabase, "timeoutMs" -> timeoutMs))
       case e: java.util.concurrent.ExecutionException =>
@@ -266,6 +279,11 @@ final class MultiDb(
 }
 
 object MultiDb {
+  /** Numbers every query's job group, unique per JVM (so per SparkContext):
+    * a group cancelled with its future jobs must never be reused.
+    */
+  private val queryIds = new AtomicLong()
+
   def apply(
       spark: SparkSession,
       config: MetadataConfig,

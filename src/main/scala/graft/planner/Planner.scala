@@ -21,8 +21,12 @@ trait CacheProvider {
 }
 
 /** Loader for one physical table: called at plan-execution time so reloads
-  * and snapshot isolation behave (a loader is cheap: `spark.read.parquet`
-  * or a JDBC reader config — the scan itself is lazy).
+  * and snapshot isolation behave, and called once per table reference per
+  * query, so it must be cheap. The scan itself is lazy, but a bare
+  * `spark.read.parquet` is not: it runs a schema-inference job on every
+  * call. Parquet tables therefore load through `SourceLoaders.parquet`,
+  * which reuses the inferred schema while the file's (modificationTime,
+  * length) is unchanged and re-infers when it changes.
   */
 final case class SourceRegistry(
     loaders: Map[(String, String), () => DataFrame], // (databaseId, tableId) → loader

@@ -125,13 +125,12 @@ object TpchCatalog {
       case t if t.database == "warehouse" && t.id == "nationDim" =>
         ("warehouse", t.id) -> (() => DerbyFixture.nation(spark, sfDir))
       case t if t.database == "tpch" =>
-        ("tpch", t.id) ->
-          (() => spark.read.parquet(s"$sfDir/${t.physicalName}.parquet"))
+        ("tpch", t.id) -> SourceLoaders.parquet(spark, s"$sfDir/${t.physicalName}.parquet")
     }.toMap,
     // replica content mirrors the primary byte-for-byte (zero simulated
     // lag), so offloaded queries return identical rows — oracle-checkable
     replicaLoaders = Map(("warehouse", "orders") ->
-      (() => spark.read.parquet(s"$sfDir/orders.parquet"))))
+      SourceLoaders.parquet(spark, s"$sfDir/orders.parquet")))
 
   private val cache = new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), MultiDb]()
 
@@ -146,16 +145,49 @@ object TpchCatalog {
 }
 
 /** Source-loader constructors for the registry: each logical database maps
-  * to whatever reader fits its engine. Parquet is exercised by the test
-  * fixtures; the JDBC form shows the federated path (this container has no
-  * reachable database, so it is compile-checked only) — partitioned reads
-  * keep a 100 TB table from funneling through one connection.
+  * to whatever reader fits its engine. Parquet backs the TPC-H catalog; the
+  * JDBC form shows the federated path (compile-checked only: no test reaches
+  * a live database) — partitioned reads keep a 100 TB table from funneling
+  * through one connection.
   */
 object SourceLoaders {
+  import org.apache.hadoop.fs.{FileSystem, Path}
   import org.apache.spark.sql.{DataFrame, SparkSession}
+  import org.apache.spark.sql.types.StructType
 
-  def parquet(spark: SparkSession, path: String): () => DataFrame =
-    () => spark.read.parquet(path)
+  /** Parquet loader that infers the schema once per file version.
+    *
+    * `spark.read.parquet` runs a Spark job to read footers and infer the
+    * schema on every call. This loader stats the path on every call (so a
+    * missing file still fails the load) and keys the inferred schema on its
+    * `(modificationTime, length)`; while the key holds it returns
+    * `spark.read.schema(memo).parquet(path)`, a fresh relation (fresh
+    * attribute ids) built with no Spark job. A rewritten file re-infers.
+    * For a directory the key is its newest mtime and total size over its
+    * direct children.
+    */
+  def parquet(spark: SparkSession, path: String): () => DataFrame = {
+    val memo = new java.util.concurrent.atomic.AtomicReference[((Long, Long), StructType)]()
+    () => {
+      val key = stamp(new Path(path), spark)
+      Option(memo.get) match {
+        case Some((k, schema)) if k == key => spark.read.schema(schema).parquet(path)
+        case _ =>
+          val df = spark.read.parquet(path)
+          memo.set((key, df.schema))
+          df
+      }
+    }
+  }
+
+  private def stamp(p: Path, spark: SparkSession): (Long, Long) = {
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val st = fs.getFileStatus(p) // FileNotFoundException when missing
+    if (!st.isDirectory) (st.getModificationTime, st.getLen)
+    else fs.listStatus(p).foldLeft((st.getModificationTime, 0L)) { case ((m, n), c) =>
+      (m max c.getModificationTime, n + c.getLen)
+    }
+  }
 
   /** Partition-parallel JDBC scan: `partitionColumn` must be indexed and
     * roughly uniform; Spark issues `numPartitions` range queries. Filters

@@ -2,9 +2,12 @@ package graft
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.time.Duration
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import graft.api.{MultiDbClient, MultiDbHttpServer}
+import graft.api.{MultiDb, MultiDbClient, MultiDbHttpServer}
 import graft.types._
 
 /** End-to-end HTTP surface tests (reference: HTTP_CLIENT.md, TESTS.md
@@ -280,5 +283,50 @@ class HttpApiSpec extends AnyFunSuite {
     val dead = new graft.api.MultiDbHttpClient("http://127.0.0.1:1", timeoutMs = 500)
     val ne = intercept[ConnectionError] { dead.query(QueryDefinition("orders")) }
     assert(ne.code == "NETWORK_ERROR")
+  }
+
+  test("POST /query is served concurrently; stop() ends the handler threads") {
+    // the first request blocks in its loader until the second one has been
+    // answered; a server with one handler thread cannot answer the second,
+    // so its client times out (both waits are bounded: fail, never hang)
+    val entered = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    val base = ContractFixture.registry(spark)
+    val registry = base.copy(loaders = base.loaders.updated(("pg-main", "products"), () => {
+      entered.countDown()
+      release.await(30, TimeUnit.SECONDS)
+      ContractFixture.productsDf(spark)
+    }))
+    def httpThreads = Thread.getAllStackTraces.keySet.asScala
+      .filter(_.getName.startsWith("graft-http")).toSet
+    val before = httpThreads
+    val srv = new MultiDbHttpServer(
+      MultiDb(spark, ContractFixture.config(), ContractFixture.roles, registry))
+    val p = srv.start()
+    def req(body: String) =
+      HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$p/query"))
+        .timeout(Duration.ofSeconds(20))
+        .POST(HttpRequest.BodyPublishers.ofString(body)).build()
+    try {
+      val first = client.sendAsync(
+        req("""{"definition": {"from": "products", "columns": ["id"]}}"""),
+        HttpResponse.BodyHandlers.ofString())
+      assert(entered.await(30, TimeUnit.SECONDS), "first request never reached its loader")
+      val second = client.send(req("""{"definition": {"from": "orders", "columns": ["id"]}}"""),
+        HttpResponse.BodyHandlers.ofString())
+      assert(second.statusCode() == 200)
+      assert(graft.api.Json.mapper.readTree(second.body()).get("data").size() == 5)
+      assert(!first.isDone, "the first request finished before its release")
+      release.countDown()
+      val r1 = first.get(30, TimeUnit.SECONDS)
+      assert(r1.statusCode() == 200)
+      assert(graft.api.Json.mapper.readTree(r1.body()).get("data").size() == 3)
+    } finally {
+      release.countDown()
+      srv.stop()
+    }
+    val left = httpThreads -- before
+    left.foreach(_.join(2000)) // a worker may still be unwinding its run()
+    assert(left.forall(!_.isAlive), s"threads left running: ${left.map(_.getName)}")
   }
 }

@@ -1,11 +1,22 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, udf}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.api.{MetadataProvider, MultiDb, RoleProvider}
 import graft.meta._
-import graft.planner.SourceRegistry
+import graft.planner.{CacheProvider, SourceRegistry}
 import graft.types._
+
+/** Signals that a scan task is running; the UDF below reads it statically. */
+object SlowScan {
+  val started = new CountDownLatch(1)
+}
 
 /** Lifecycle behaviors (reference: METADATA.md:174-193, C1300-C1313):
   * healthCheck, reload with snapshot isolation, per-query timeout, provider
@@ -136,6 +147,70 @@ class LifecycleSpec extends AnyFunSuite {
     }
     assert(e.code == "QUERY_TIMEOUT")
     assert(e.toJson("details").asInstanceOf[Map[String, Any]]("timeoutMs") == 1L)
+  }
+
+  test("a timed-out query cancels only its own jobs; a concurrent query completes") {
+    // the events scan signals once a task is running, then sleeps per row
+    // (nondeterministic, so the optimizer neither folds it on the driver
+    // nor pushes it below the repartition)
+    val slow = udf { (_: String) =>
+      SlowScan.started.countDown(); Thread.sleep(300); true
+    }.asNondeterministic()
+    val base = ContractFixture.registry(spark)
+    val registry = base.copy(
+      loaders = base.loaders.updated(("ch-analytics", "events"),
+        () => ContractFixture.eventsDf(spark).repartition(1).filter(slow(col("id")))),
+      executorTimeoutMs = Map("pg-main" -> 1L)) // ch-analytics keeps the default
+    val db = MultiDb(spark, ContractFixture.config(), ContractFixture.roles, registry)
+    val other = Future(db.query(QueryDefinition("events", columns = Some(Seq("id")),
+      orderBy = Seq(QueryOrderBy("id", "asc")))))
+    assert(SlowScan.started.await(60, TimeUnit.SECONDS), "events scan never started")
+    val e = intercept[ExecutionError](db.query(QueryDefinition("orders",
+      columns = Some(Seq("id")))))
+    assert(e.code == "QUERY_TIMEOUT")
+    val r = Await.result(other, 60.seconds).asInstanceOf[DataResult]
+    assert(r.data.map(_("id")) == Seq("uuid-e1", "uuid-e2", "uuid-e3"))
+  }
+
+  test("a reload fired mid-query leaves the query on its entry snapshot") {
+    // second load renames users.email: a query that re-read the live config
+    // after the reload would fail validation
+    val cfg1 = ContractFixture.config()
+    val cfg2 = cfg1.copy(tables = cfg1.tables.map(t =>
+      if (t.id != "users") t
+      else t.copy(columns = t.columns.map(c =>
+        if (c.apiName == "email") c.copy(apiName = "mail") else c))))
+    val loads = new AtomicInteger()
+    val provider = new MetadataProvider {
+      def load(): MetadataConfig = if (loads.incrementAndGet() == 1) cfg1 else cfg2
+    }
+    val roles = new RoleProvider { def load(): Seq[RoleMeta] = ContractFixture.roles }
+    val base = ContractFixture.registry(spark)
+    // the cache holds uuid-c1 only, so uuid-c2 takes the partial-hit refetch
+    val full = base.cacheProviders("redis-main")
+    val partial = new CacheProvider {
+      def getMany(keys: Seq[String]): Map[String, Map[String, Any]] =
+        full.getMany(keys).filter(_._1 == "users:uuid-c1")
+    }
+    var db: MultiDb = null
+    val fired = new AtomicBoolean(false)
+    val usersLoad = base.loaders(("pg-main", "users"))
+    val registry = base.copy(
+      loaders = base.loaders.updated(("pg-main", "users"), () => {
+        if (fired.compareAndSet(false, true)) db.reloadMetadata()
+        usersLoad()
+      }),
+      cacheProviders = Map("redis-main" -> partial))
+    db = new MultiDb(spark, provider, roles, registry)
+    val q = QueryDefinition("users", columns = Some(Seq("id", "email")),
+      byIds = Some(Seq("uuid-c1", "uuid-c2")))
+    val r = db.query(q)
+    assert(fired.get && loads.get == 2)
+    assert(r.meta.strategy == "cache")
+    assert(r.asInstanceOf[DataResult].data.map(_("email")) ==
+      Seq("alice@example.com", "bob@example.com"))
+    // the reload did land: the next query sees the second snapshot
+    intercept[ValidationError](db.query(q))
   }
 
   test("error toJson carries code/message/errors for transports") {
