@@ -157,57 +157,54 @@ object SparkEntry {
        |  CAST(len(string_split(t, chr(10))) - len(kept) AS INT) AS n_lines_removed
        |FROM c ORDER BY doc_id""".stripMargin
 
-  /** Per-JVM ORC materializations of the region dim, keyed by sfDir —
-    * process-private temp dirs, written once under computeIfAbsent's lock.
+  /** Per-JVM materializations (ORC region, JSON/CSV supplier, ANN
+    * indexes, media asset tables, partitioned orders) and corpus counts
+    * are each built once per sfDir through [[TempDirs.memo]], under a
+    * fresh process-private temp dir named after the fixture's kind.
     */
-  private val orcRegionDir = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private def tempFixture(kind: String, dir: String, leaf: String)(write: String => Unit): String =
+    TempDirs.memo(kind, dir) {
+      val path = TempDirs.create(kind).resolve(leaf).toString
+      write(path)
+      path
+    }
 
-  /** Per-JVM hive-layout partitioned copy of orders (dirs keyed by order
-    * year) — the physical layout that makes partition pruning and dynamic
-    * partition pruning possible. Written once per sfDir.
-    */
-  private[graft] val partOrdersDir = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Per-JVM JSON-lines + CSV materializations of the supplier dim. */
-  private val textSupplierDir = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Per-JVM persisted IVF index (cells partitioned by centId + centroid
-    * table) — written once per sfDir, seeded quantizer so the s_ann_ivf
-    * oracle applies unchanged.
-    */
   /** Per-JVM cached embeddings row count per sfDir — the corpus size the
     * count-adaptive sizing rules (planesForCorpus, nlistForCorpus) read.
     * One metadata-cheap aggregate per directory per JVM, not one per
     * query run; at a production deployment this number comes from the
     * index/manifest (stampedCorpusCount), never a count job.
     */
-  private val embCountCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private def embCount(s: SparkSession, dir: String): Long =
+    TempDirs.memo("emb_count", dir)(t(s, dir, "embeddings").count())
 
   /** Cached documents row count per sfDir — the corpus-size input to the
     * Hamming combo-blocking rule (one metadata-cheap parquet count per
     * session, the embCount convention). */
-  private val docCountCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
   private def docCount(s: SparkSession, dir: String): Long =
-    docCountCache.computeIfAbsent(dir, d => t(s, d, "documents").count())
+    TempDirs.memo("doc_count", dir)(t(s, dir, "documents").count())
 
-  private def embCount(s: SparkSession, dir: String): Long =
-    embCountCache.computeIfAbsent(dir, d => t(s, d, "embeddings").count())
+  /** A persisted ANN index over the sfDir's embeddings (`cid`, `vec`),
+    * written once per JVM by `write(corpus, path)`.
+    */
+  private def annIndex(s: SparkSession, dir: String, kind: String)(
+      write: (DataFrame, String) => Unit): String =
+    tempFixture(kind, dir, "index") { path =>
+      write(t(s, dir, "embeddings").select(col("vec_id").as("cid"), col("embedding").as("vec")),
+        path)
+    }
 
-  private val ivfIndexDir = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+  /** Per-JVM persisted IVF index (cells partitioned by centId + centroid
+    * table) — seeded quantizer so the s_ann_ivf oracle applies unchanged.
+    * Constant-cell-size sizing at BUILD time (the one place a corpus
+    * count belongs); serving reads the cell count back from the index's
+    * own centroid table, never from the store.
+    */
   private def ivfIndex(s: SparkSession, dir: String): String =
-    ivfIndexDir.computeIfAbsent(dir, { d =>
-      val path = TempDirs.create("graft_ivf").resolve("index").toString
-      val corpus = t(s, d, "embeddings")
-        .select(col("vec_id").as("cid"), col("embedding").as("vec"))
-      // constant-cell-size sizing at BUILD time (the one place a corpus
-      // count belongs); serving reads the cell count back from the
-      // index's own centroid table, never from the store
+    annIndex(s, dir, "graft_ivf") { (corpus, path) =>
       ops.Similarity.writeIvfIndex(corpus, path,
-        nCells = ops.Similarity.nlistForCorpus(embCount(s, d)))
-      path
-    })
+        nCells = ops.Similarity.nlistForCorpus(embCount(s, dir)))
+    }
 
   /** Per-JVM persisted IVF index built from the TRAINED-centroid FIXTURE —
     * the full build-offline/serve-online composition: cell assignment is
@@ -221,33 +218,20 @@ object SparkEntry {
     * The training job itself stays pinned by OpsSpec (recall floors,
     * trained ≡ persisted parity).
     */
-  private val trainedIvfIndexDir = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def trainedIvfIndex(s: SparkSession, dir: String): String =
-    trainedIvfIndexDir.computeIfAbsent(dir, { d =>
-      val path = TempDirs.create("graft_ivf_trained").resolve("index").toString
-      val corpus = t(s, d, "embeddings")
-        .select(col("vec_id").as("cid"), col("embedding").as("vec"))
+    annIndex(s, dir, "graft_ivf_trained") { (corpus, path) =>
       ops.Similarity.writeIvfIndex(corpus, path, nCells = 16,
         centroids = Some(fixtureCentroids(s)))
-      path
-    })
+    }
 
   /** Per-JVM persisted SHARDED IVF index (cells laid out shard=…/centId=…,
     * shard-keyed centroid table, meta stamp) — written once per sfDir;
     * assignment is deterministic, so the s_ann_ivf_sharded oracle applies
     * unchanged to the served path.
     */
-  private val shardedIvfIndexDir = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def shardedIvfIndex(s: SparkSession, dir: String): String =
-    shardedIvfIndexDir.computeIfAbsent(dir, { d =>
-      val path = TempDirs.create("graft_ivf_sharded").resolve("index").toString
-      ops.Similarity.writeIvfIndexSharded(
-        t(s, d, "embeddings").select(col("vec_id").as("cid"), col("embedding").as("vec")),
-        path, nShards = 2)
-      path
-    })
+    annIndex(s, dir, "graft_ivf_sharded")(
+      ops.Similarity.writeIvfIndexSharded(_, _, nShards = 2))
 
   /** Per-JVM persisted SHARDED IVF index under the TRAINED per-shard
     * fixture quantizer (r19 — the r18 verdict's "sharded is seeded-only"
@@ -256,16 +240,10 @@ object SparkEntry {
     * k-means snapshot. Deterministic given the fixture, so the
     * s_ann_ivf_sharded_trained oracle applies unchanged to the serve.
     */
-  private val shardedTrainedIvfIndexDir = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def shardedTrainedIvfIndex(s: SparkSession, dir: String): String =
-    shardedTrainedIvfIndexDir.computeIfAbsent(dir, { d =>
-      val path = TempDirs.create("graft_ivf_sharded_tr").resolve("index").toString
-      ops.Similarity.writeIvfIndexSharded(
-        t(s, d, "embeddings").select(col("vec_id").as("cid"), col("embedding").as("vec")),
-        path, nShards = 2, centroids = Some(fixtureShardedCentroids(s)))
-      path
-    })
+    annIndex(s, dir, "graft_ivf_sharded_tr")(
+      ops.Similarity.writeIvfIndexSharded(_, _, nShards = 2,
+        centroids = Some(fixtureShardedCentroids(s))))
 
   /** Per-JVM persisted plain-PQ index under the SEEDED corpus-sized
     * codebook (r19 — the kCode-amortization directive): since
@@ -277,16 +255,8 @@ object SparkEntry {
     * encode given the persisted codebook), so the same count-adaptive
     * oracle gates both.
     */
-  private val pqSeededIndexDir = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def pqSeededIndex(s: SparkSession, dir: String): String =
-    pqSeededIndexDir.computeIfAbsent(dir, { d =>
-      val path = TempDirs.create("graft_pq").resolve("index").toString
-      ops.Similarity.writePqIndex(
-        t(s, d, "embeddings").select(col("vec_id").as("cid"), col("embedding").as("vec")),
-        path, m = 8, subDim = 8)
-      path
-    })
+    annIndex(s, dir, "graft_pq")(ops.Similarity.writePqIndex(_, _, m = 8, subDim = 8))
 
   /** Per-JVM persisted IVF-PQ index under the SEEDED corpus-sized
     * quantizers (nlistForCorpus cells, kCodeForCorpus codebook — the
@@ -296,16 +266,8 @@ object SparkEntry {
     * exactly the integers the in-flight form computes — so results and
     * oracle are unchanged.
     */
-  private val ivfPqSeededIndexDir = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def ivfPqSeededIndex(s: SparkSession, dir: String): String =
-    ivfPqSeededIndexDir.computeIfAbsent(dir, { d =>
-      val path = TempDirs.create("graft_ivfpq").resolve("index").toString
-      ops.Similarity.writeIvfPqIndex(
-        t(s, d, "embeddings").select(col("vec_id").as("cid"), col("embedding").as("vec")),
-        path, m = 8, subDim = 8)
-      path
-    })
+    annIndex(s, dir, "graft_ivfpq")(ops.Similarity.writeIvfPqIndex(_, _, m = 8, subDim = 8))
 
   /** Per-JVM persisted IVF-PQ index under the TRAINED fixtures (k-means
     * centroids route, k-means codebook compresses) — codes and vectors
@@ -314,48 +276,37 @@ object SparkEntry {
     * committed fixtures, so the s_ann_ivfpq_trained oracle applies
     * unchanged to the served path.
     */
-  private val ivfPqTrainedIndexDir = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def ivfPqTrainedIndex(s: SparkSession, dir: String): String =
-    ivfPqTrainedIndexDir.computeIfAbsent(dir, { d =>
-      val path = TempDirs.create("graft_ivfpq_trained").resolve("index").toString
-      ops.Similarity.writeIvfPqIndex(
-        t(s, d, "embeddings").select(col("vec_id").as("cid"), col("embedding").as("vec")),
-        path, m = 8, subDim = 8,
+    annIndex(s, dir, "graft_ivfpq_trained")(
+      ops.Similarity.writeIvfPqIndex(_, _, m = 8, subDim = 8,
         centroids = Some(fixtureCentroids(s)),
-        codebook = Some(fixtureCodebook(s)))
-      path
-    })
+        codebook = Some(fixtureCodebook(s))))
 
   /** Per-JVM persisted SQ8 index (byte codes + range row + raw vectors) —
     * written once per sfDir; ranges and codes are byte-identical to the
     * in-flight build, so the s_ann_sq8 oracle applies unchanged.
     */
-  private val sq8IndexDir = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def sq8Index(s: SparkSession, dir: String): String =
-    sq8IndexDir.computeIfAbsent(dir, { d =>
-      val path = TempDirs.create("graft_sq8").resolve("index").toString
-      ops.Similarity.writeSq8Index(
-        t(s, d, "embeddings").select(col("vec_id").as("cid"), col("embedding").as("vec")),
-        path)
-      path
-    })
+    annIndex(s, dir, "graft_sq8")(ops.Similarity.writeSq8Index(_, _))
 
   /** Per-JVM persisted JL projected index (rounded projections + raw
     * vectors) — written once per sfDir; projections are bit-identical to
     * the in-flight build, so the s_ann_projected oracle applies unchanged.
     */
-  private val projectedIndexDir = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def projectedIndex(s: SparkSession, dir: String): String =
-    projectedIndexDir.computeIfAbsent(dir, { d =>
-      val path = TempDirs.create("graft_projected").resolve("index").toString
-      ops.Similarity.writeProjectedIndex(
-        t(s, d, "embeddings").select(col("vec_id").as("cid"), col("embedding").as("vec")),
-        path, outDims = 16, firstPlane = 100)
-      path
-    })
+    annIndex(s, dir, "graft_projected")(
+      ops.Similarity.writeProjectedIndex(_, _, outDims = 16, firstPlane = 100))
+
+  /** The non-empty lines of the committed resource fixture `/graft/<name>`,
+    * split on single spaces.
+    */
+  private def fixtureLines(name: String): List[Array[String]] = {
+    val in = getClass.getResourceAsStream(s"/graft/$name")
+    require(in != null, s"$name fixture missing from resources")
+    val src = scala.io.Source.fromInputStream(in, "UTF-8")
+    try src.getLines().filter(_.nonEmpty).map(_.split(' ')).toList
+    finally src.close()
+  }
 
   /** The committed k-means centroid fixture, parsed once per JVM. Lines
     * are `centId v1 .. v64` with `Double.toString` values — the shortest
@@ -363,16 +314,10 @@ object SparkEntry {
     * DuckDB oracle (which embeds the SAME text as literals) operate on
     * bit-identical centroids.
     */
-  private[graft] lazy val fixtureCentroidRows: Seq[(Int, Seq[Double])] = {
-    val in = getClass.getResourceAsStream("/graft/ivf_trained_centroids.txt")
-    require(in != null, "ivf_trained_centroids.txt fixture missing from resources")
-    val src = scala.io.Source.fromInputStream(in, "UTF-8")
-    try src.getLines().filter(_.nonEmpty).map { line =>
-      val parts = line.split(' ')
+  private[graft] lazy val fixtureCentroidRows: Seq[(Int, Seq[Double])] =
+    fixtureLines("ivf_trained_centroids.txt").map { parts =>
       parts.head.toInt -> parts.tail.map(_.toDouble).toSeq
-    }.toList
-    finally src.close()
-  }
+    }
 
   /** Fixture centroids as the (centId, cent_v, cent_n) frame [[ops.Similarity.ivfTopK]]
     * expects; cent_n recomputed with the same norm fold `kmeansCentroids`
@@ -391,17 +336,10 @@ object SparkEntry {
     * bit-exactness contract: Spark and the DuckDB oracle (which embeds
     * the SAME text as literals) serve bit-identical centroids.
     */
-  private[graft] lazy val fixtureShardedCentroidRows: Seq[(Long, Long, Seq[Double])] = {
-    val in = getClass.getResourceAsStream("/graft/ivf_sharded_trained_centroids.txt")
-    require(in != null,
-      "ivf_sharded_trained_centroids.txt fixture missing from resources")
-    val src = scala.io.Source.fromInputStream(in, "UTF-8")
-    try src.getLines().filter(_.nonEmpty).map { line =>
-      val parts = line.split(' ')
+  private[graft] lazy val fixtureShardedCentroidRows: Seq[(Long, Long, Seq[Double])] =
+    fixtureLines("ivf_sharded_trained_centroids.txt").map { parts =>
       (parts(0).toLong, parts(1).toLong, parts.drop(2).map(_.toDouble).toSeq)
-    }.toList
-    finally src.close()
-  }
+    }
 
   /** Fixture sharded centroids as the (shard, centId, cent_v, cent_n)
     * frame [[ops.Similarity.ivfShardedTopK]] expects; cent_n recomputed
@@ -421,16 +359,13 @@ object SparkEntry {
     * embeds the SAME text as literals) encode against bit-identical
     * codebook doubles.
     */
-  private[graft] lazy val fixtureCodebookRows: Seq[(Int, Int, Seq[Double])] = {
-    val in = getClass.getResourceAsStream("/graft/pq_trained_codebook.txt")
-    require(in != null, "pq_trained_codebook.txt fixture missing from resources")
-    val src = scala.io.Source.fromInputStream(in, "UTF-8")
-    try src.getLines().filter(_.nonEmpty).map { line =>
-      val parts = line.split(' ')
+  private[graft] lazy val fixtureCodebookRows: Seq[(Int, Int, Seq[Double])] =
+    codebookRows("pq_trained_codebook.txt")
+
+  private def codebookRows(name: String): Seq[(Int, Int, Seq[Double])] =
+    fixtureLines(name).map { parts =>
       (parts(0).toInt, parts(1).toInt, parts.drop(2).map(_.toDouble).toSeq)
-    }.toList
-    finally src.close()
-  }
+    }
 
   /** Fixture codebook as the (s, codeId, cb_sub) frame [[ops.Similarity.pqTopK]]
     * expects — swaps in frame-for-frame where the seeded codebook would be.
@@ -445,16 +380,8 @@ object SparkEntry {
     * vec − assigned-fixture-centroid residuals. Same line format and
     * bit-exactness contract as [[fixtureCodebookRows]].
     */
-  private[graft] lazy val fixtureResidualCodebookRows: Seq[(Int, Int, Seq[Double])] = {
-    val in = getClass.getResourceAsStream("/graft/pq_residual_codebook.txt")
-    require(in != null, "pq_residual_codebook.txt fixture missing from resources")
-    val src = scala.io.Source.fromInputStream(in, "UTF-8")
-    try src.getLines().filter(_.nonEmpty).map { line =>
-      val parts = line.split(' ')
-      (parts(0).toInt, parts(1).toInt, parts.drop(2).map(_.toDouble).toSeq)
-    }.toList
-    finally src.close()
-  }
+  private[graft] lazy val fixtureResidualCodebookRows: Seq[(Int, Int, Seq[Double])] =
+    codebookRows("pq_residual_codebook.txt")
 
   private[graft] def fixtureResidualCodebook(sp: SparkSession): DataFrame = {
     import sp.implicits._
@@ -468,28 +395,13 @@ object SparkEntry {
     * ANY engine — what lets the DuckDB oracle replay segmentation.
     */
   private[graft] lazy val fixtureUnigram: ops.Unigram.Trained = {
-    val in = getClass.getResourceAsStream("/graft/unigram_trained_pieces.txt")
-    require(in != null, "unigram_trained_pieces.txt fixture missing from resources")
-    val src = scala.io.Source.fromInputStream(in, "UTF-8")
-    try {
-      val lines = src.getLines().filter(_.nonEmpty).toList
-      val header = lines.head.split(' ')
-      require(header(0) == "!", s"bad unigram fixture header: ${lines.head}")
-      val pieces = lines.tail.map { line =>
-        val p = line.split(' ')
-        ops.Unigram.Piece(p(0), p(1).toLong, p(2).toDouble)
-      }
-      ops.Unigram.Trained(pieces, header(1).toInt, header(2).toDouble, Seq.empty)
-    } finally src.close()
+    val header :: lines = fixtureLines("unigram_trained_pieces.txt")
+    require(header(0) == "!", s"bad unigram fixture header: ${header.mkString(" ")}")
+    val pieces = lines.map(p => ops.Unigram.Piece(p(0), p(1).toLong, p(2).toDouble))
+    ops.Unigram.Trained(pieces, header(1).toInt, header(2).toDouble, Seq.empty)
   }
 
-  /** Per-JVM materialized PNG asset table (binary payload + metadata) —
-    * a real pipeline stores encoded media and DECODES on read; writing
-    * the fixture once per sfDir keeps the m_media_* rows measuring the
-    * decode path, not fixture generation, and exercises binary columns
-    * through parquet like production would.
-    */
-  private val imageAssetsDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private type Assets = org.apache.spark.sql.Dataset[ops.Multimodal.MediaAsset]
 
   /** Widen an asset frame to the cluster's parallelism BEFORE the
     * materializing write — never narrow a wide one (the ensureParallelism
@@ -503,8 +415,7 @@ object SparkEntry {
     * shuffles; at production scale asset stores are already many files
     * and the guard is a no-op.
     */
-  private def widenAssets(ds: org.apache.spark.sql.Dataset[ops.Multimodal.MediaAsset])
-      : org.apache.spark.sql.Dataset[ops.Multimodal.MediaAsset] = {
+  private def widenAssets(ds: Assets): Assets = {
     val target = ds.sparkSession.sparkContext.defaultParallelism
     // read the partition count off the executed plan's RDD (one plan,
     // reused by the write) — `ds.rdd` would build a SECOND physical plan
@@ -514,73 +425,56 @@ object SparkEntry {
     else ds
   }
 
-  private[graft] def imageAssetTable(s: SparkSession,
-      dir: String): org.apache.spark.sql.Dataset[ops.Multimodal.MediaAsset] = {
-    val pdir = imageAssetsDirs.computeIfAbsent(dir, { d =>
-      val path = TempDirs.create("graft_media").resolve("assets").toString
-      widenAssets(ops.Multimodal.imageAssets(t(s, d, "documents"))).write.parquet(path)
-      path
-    })
-    s.read.parquet(pdir).as[ops.Multimodal.MediaAsset](ops.Multimodal.assetEnc)
+  /** A media asset table generated from the sfDir's documents by `mk`,
+    * materialized (widened) once per JVM and read back per query.
+    */
+  private def assetTable(s: SparkSession, dir: String, kind: String)(
+      mk: DataFrame => Assets): Assets = {
+    val path = tempFixture(kind, dir, "assets") { path =>
+      widenAssets(mk(t(s, dir, "documents"))).write.parquet(path)
+    }
+    s.read.parquet(path).as[ops.Multimodal.MediaAsset](ops.Multimodal.assetEnc)
   }
+
+  /** Per-JVM materialized PNG asset table (binary payload + metadata) —
+    * a real pipeline stores encoded media and DECODES on read; writing
+    * the fixture once per sfDir keeps the m_media_* rows measuring the
+    * decode path, not fixture generation, and exercises binary columns
+    * through parquet like production would.
+    */
+  private[graft] def imageAssetTable(s: SparkSession, dir: String): Assets =
+    assetTable(s, dir, "graft_media")(ops.Multimodal.imageAssets(_))
 
   /** Per-JVM materialized NEAR-DUP PNG asset table (groups of 4 planted
     * near-identical variants — [[graft.ops.Multimodal.nearDupPixel]]) —
     * the image-dedup rows must measure the real decode + fingerprint
     * path, not fixture generation.
     */
-  private val imageDedupAssetsDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private[graft] def imageDedupAssetTable(s: SparkSession,
-      dir: String): org.apache.spark.sql.Dataset[ops.Multimodal.MediaAsset] = {
-    val pdir = imageDedupAssetsDirs.computeIfAbsent(dir, { d =>
-      val path = TempDirs.create("graft_media_dup").resolve("assets").toString
-      widenAssets(ops.Multimodal.imageDedupAssets(t(s, d, "documents"))).write.parquet(path)
-      path
-    })
-    s.read.parquet(pdir).as[ops.Multimodal.MediaAsset](ops.Multimodal.assetEnc)
-  }
+  private[graft] def imageDedupAssetTable(s: SparkSession, dir: String): Assets =
+    assetTable(s, dir, "graft_media_dup")(ops.Multimodal.imageDedupAssets(_))
 
   /** Per-JVM materialized NEAR-DUP WAV asset table — the audio sibling
     * of [[imageDedupAssetTable]].
     */
-  private val audioDedupAssetsDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private[graft] def audioDedupAssetTable(s: SparkSession,
-      dir: String): org.apache.spark.sql.Dataset[ops.Multimodal.MediaAsset] = {
-    val pdir = audioDedupAssetsDirs.computeIfAbsent(dir, { d =>
-      val path = TempDirs.create("graft_media_dupwav").resolve("assets").toString
-      widenAssets(ops.Multimodal.audioDedupAssets(t(s, d, "documents"))).write.parquet(path)
-      path
-    })
-    s.read.parquet(pdir).as[ops.Multimodal.MediaAsset](ops.Multimodal.assetEnc)
-  }
+  private[graft] def audioDedupAssetTable(s: SparkSession, dir: String): Assets =
+    assetTable(s, dir, "graft_media_dupwav")(ops.Multimodal.audioDedupAssets(_))
 
   /** Per-JVM materialized WAV asset table — same rationale as
     * [[imageAssetTable]]: the m_media_audio* rows must measure the REAL
     * `AudioSystem` container parse, not fixture generation.
     */
-  private val audioAssetsDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[graft] def audioAssetTable(s: SparkSession, dir: String): Assets =
+    assetTable(s, dir, "graft_media_wav")(ops.Multimodal.audioAssets(_))
 
-  private[graft] def audioAssetTable(s: SparkSession,
-      dir: String): org.apache.spark.sql.Dataset[ops.Multimodal.MediaAsset] = {
-    val pdir = audioAssetsDirs.computeIfAbsent(dir, { d =>
-      val path = TempDirs.create("graft_media_wav").resolve("assets").toString
-      widenAssets(ops.Multimodal.audioAssets(t(s, d, "documents"))).write.parquet(path)
-      path
-    })
-    s.read.parquet(pdir).as[ops.Multimodal.MediaAsset](ops.Multimodal.assetEnc)
-  }
-
-  private[graft] def partitionedOrders(s: SparkSession, dir: String): DataFrame = {
-    val pdir = partOrdersDir.computeIfAbsent(dir, { d =>
-      val path = TempDirs.create("graft_part").resolve("orders").toString
-      t(s, d, "orders").withColumn("o_year", year(col("o_orderdate")))
+  /** Per-JVM hive-layout partitioned copy of orders (dirs keyed by order
+    * year) — the physical layout that makes partition pruning and dynamic
+    * partition pruning possible.
+    */
+  private[graft] def partitionedOrders(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(tempFixture("graft_part", dir, "orders") { path =>
+      t(s, dir, "orders").withColumn("o_year", year(col("o_orderdate")))
         .write.partitionBy("o_year").parquet(path)
-      path
     })
-    s.read.parquet(pdir)
-  }
 
   /** Engine-routed query under a specific (non-admin) role — the
     * ACL + in-plan masking path under the oracle gate. */
@@ -1075,12 +969,9 @@ object SparkEntry {
     //      fact in one plan; the oracle reads the identical source data
     //      via the parquet view
     "q12_orc_source" -> { (s, dir) =>
-      val orcDir = orcRegionDir.computeIfAbsent(dir, { d =>
-        val path = TempDirs.create("graft_orc").resolve("region").toString
-        t(s, d, "region").write.orc(path)
-        path
+      val r = s.read.orc(tempFixture("graft_orc", dir, "region") { path =>
+        t(s, dir, "region").write.orc(path)
       })
-      val r = s.read.orc(orcDir)
       val n = t(s, dir, "nation")
       n.join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
         .select(col("n_nationkey"), col("n_name"), col("r_name"))
@@ -1092,13 +983,13 @@ object SparkEntry {
     //      then both variants join in one plan and must agree row-for-row
     //      with the parquet-only oracle
     "q16_text_formats" -> { (s, dir) =>
-      val base = textSupplierDir.computeIfAbsent(dir, { d =>
+      val base = TempDirs.memo("graft_text", dir) {
         val root = TempDirs.create("graft_text").toString
-        val sup = t(s, d, "supplier").select("s_suppkey", "s_name", "s_nationkey")
+        val sup = t(s, dir, "supplier").select("s_suppkey", "s_name", "s_nationkey")
         sup.write.json(s"$root/json")
         sup.write.option("header", "true").csv(s"$root/csv")
         root
-      })
+      }
       val schema = "s_suppkey BIGINT, s_name STRING, s_nationkey BIGINT"
       val j = s.read.schema(schema).json(s"$base/json")
       val cs = s.read.schema(schema).option("header", "true").csv(s"$base/csv")
@@ -1681,15 +1572,8 @@ object SparkEntry {
         ("video", 2L << 40, () => ops.Multimodal.videoHashes(
           ops.Multimodal.assetsFromText(t(s, dir, "documents"), "doc_id", "text"))
           .localCheckpoint()))
-      val mpool = java.util.concurrent.Executors.newFixedThreadPool(modalityDefs.size)
-      val modalities: Seq[(String, Long, DataFrame)] = try {
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutor(mpool)
-        scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(modalityDefs.map { case (n, off, f) =>
-            scala.concurrent.Future((n, off, f()))
-          }), scala.concurrent.duration.Duration(10, "min"))
-      } finally mpool.shutdown()
+      val modalities: Seq[(String, Long, DataFrame)] = Concurrent.all(s)(
+        modalityDefs.map { case (n, off, f) => () => (n, off, f()) })
       // the band arithmetic is only sound for ids inside one 2^40 band —
       // enforce it (guard-before-use), don't assume it
       def banded(c: org.apache.spark.sql.Column, off: Long): org.apache.spark.sql.Column =
@@ -2559,26 +2443,14 @@ object SparkEntry {
       // corpus passes (analysis kernel, shingle probe) are independent,
       // so they build CONCURRENTLY (guide §2.6 — the r20 shape ran them
       // serially through the checkpoint: VERDICT r20 wrong-item #1).
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      val (gated, dirty) = try {
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutor(pool)
-        val gF = scala.concurrent.Future {
-          ops.TextAnalysis.analyze(corpus)
-            .where(col("langGuess") === "en" && col("quality") >= 0.5)
-            .select(col("doc_id"), col("source"), col("fingerprint"),
-              col("nTokensWs"))
-            .localCheckpoint()
-        }
-        val dF = scala.concurrent.Future {
-          ops.Decontaminate.overlap(corpus, bench, "doc_id", "text",
-            minShared = 2).select("doc_id").localCheckpoint()
-        }
-        (scala.concurrent.Await.result(gF,
-            scala.concurrent.duration.Duration(10, "min")),
-          scala.concurrent.Await.result(dF,
-            scala.concurrent.duration.Duration(10, "min")))
-      } finally pool.shutdown()
+      val Seq(gated, dirty) = Concurrent.all(s)(Seq(
+        () => ops.TextAnalysis.analyze(corpus)
+          .where(col("langGuess") === "en" && col("quality") >= 0.5)
+          .select(col("doc_id"), col("source"), col("fingerprint"),
+            col("nTokensWs"))
+          .localCheckpoint(),
+        () => ops.Decontaminate.overlap(corpus, bench, "doc_id", "text",
+          minShared = 2).select("doc_id").localCheckpoint()))
       val clean = gated.join(dirty, Seq("doc_id"), "left_anti")
       val deduped = ops.Dedup.exactDedup(clean, col("fingerprint"), "doc_id")
       // materialize the sampled frame (bounded: one short row per
@@ -2917,8 +2789,7 @@ object SparkEntry {
       // overlapped as branches of the single union plan — measured
       // 4.6 → 8.0 s on this row before this fix, back under it after.
       // Results are order-independent (the union is unordered input to
-      // a groupBy); job descriptions are thread-local so the UI stays
-      // attributable.
+      // a groupBy); branch jobs stay in the caller's job group.
       val defs: Seq[(String, () => DataFrame)] = Seq(
         ("cdc", () => ops.Dedup.cdcPairs(docs, "doc_id", "text",
           k = 16, maskBits = 6, maxDf = 50, minShared = 2)),
@@ -2934,18 +2805,14 @@ object SparkEntry {
         }),
         ("winnow", () => ops.Dedup.winnowedPassagePairs(docs,
           "doc_id", "text", k = 30, w = 10, maxDf = 50, minShared = 2)))
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(defs.size)
-      val all = try {
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutor(pool)
-        val futures = defs.zipWithIndex.map { case ((_, f), i) =>
-          scala.concurrent.Future(lbl(1 << i, f()))
-        }
-        scala.concurrent.Await
-          .result(scala.concurrent.Future.sequence(futures),
-            scala.concurrent.duration.Duration(10, "min"))
-          .reduce(_ unionByName _)
-      } finally pool.shutdown()
+      // bit i and the combo frame's (critA, critB) orientation both follow
+      // list order, which must be name order to match the oracle's ORDER BY
+      val names = defs.map(_._1)
+      require(names == names.sorted,
+        s"d_dedup_criteria_matrix: criteria must be listed by name, got $names")
+      val all = Concurrent.all(s)(defs.zipWithIndex.map { case ((_, f), i) =>
+        () => lbl(1 << i, f())
+      }).reduce(_ unionByName _)
       // per-pair mask → per-mask count (≤ 2^4 − 1 rows) → expand to the
       // (critA, critB) cells via a 10-row combo frame: n_common(a, b) =
       // Σ over masks containing both bits. No row for an empty cell,
@@ -2955,7 +2822,6 @@ object SparkEntry {
       val maskCounts = all.groupBy("idA", "idB")
         .agg(expr("bit_or(critBit)").as("mask"))
         .groupBy("mask").agg(count(lit(1)).as("n"))
-      val names = defs.map(_._1)
       val combos = for {
         i <- names.indices; j <- i until names.size
       } yield (names(i), names(j), ((1L << i) | (1L << j)))

@@ -10,6 +10,14 @@ import java.nio.file.{Files, Path}
   * Deletion is best-effort (files are unlinked even if a component still
   * holds them open — fine on POSIX; failures are swallowed because the JVM
   * is exiting anyway).
+  *
+  * The same object memoizes those materializations: [[memo]] runs each
+  * fixture's build at most once per `(kind, key)` per JVM — `kind` names
+  * the fixture, `key` is usually the sfDir it was built from. Concurrent
+  * callers of one key wait for the single build; different keys build at
+  * the same time. A build may call the memo for another key (an index
+  * build reads the memoized corpus count). A build that throws is not
+  * memoized: the next call builds again.
   */
 object TempDirs {
 
@@ -33,6 +41,29 @@ object TempDirs {
           finally walk.close()
       }
     }, "graft-tempdir-cleanup"))
+  }
+
+  /** One key's build. `computeIfAbsent` only installs the holder; the
+    * build runs afterwards under the holder's own monitor, so a build may
+    * call [[memo]] for another key (ConcurrentHashMap forbids map updates
+    * inside `computeIfAbsent`) and only callers of the same key wait on
+    * it. The thunk is dropped once built, releasing whatever session it
+    * captured.
+    */
+  private final class Memo(private var build: () => Any) {
+    lazy val value: Any = { val v = build(); build = null; v }
+  }
+
+  private val memos = new java.util.concurrent.ConcurrentHashMap[(String, String), Memo]()
+
+  /** The value of `build` for `(kind, key)`, built once per JVM. A failed
+    * build's holder is dropped, so the next call builds with its own thunk.
+    */
+  def memo[T](kind: String, key: String)(build: => T): T = {
+    val k = (kind, key)
+    val m = memos.computeIfAbsent(k, _ => new Memo(() => build))
+    try m.value.asInstanceOf[T]
+    catch { case e: Throwable => memos.remove(k, m); throw e }
   }
 
   /** Create a fresh temp directory that will be deleted when this JVM exits. */

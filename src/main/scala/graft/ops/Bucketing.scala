@@ -18,8 +18,6 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   */
 object Bucketing {
 
-  private val tables = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private lazy val location =
     graft.TempDirs.create("graft_buckets").toString
 
@@ -36,8 +34,8 @@ object Bucketing {
     dir.replaceAll("[^a-zA-Z0-9]", "_") + "_" + sha16(dir)
 
   /** Materialize `df` as a bucketed+sorted managed table, once per JVM per
-    * (table, key, buckets) — computeIfAbsent blocks concurrent callers
-    * until the write completes; a re-call with the same name but a
+    * (table, key, buckets) — [[graft.TempDirs.memo]] blocks concurrent
+    * callers until the write completes; a re-call with the same name but a
     * different bucketing spec writes a distinct physical table rather than
     * silently serving the stale one. The physical name hashes the SAME
     * delimited spec as the cache key, so two cache entries can never
@@ -47,13 +45,13 @@ object Bucketing {
   def ensureBucketed(spark: SparkSession, df: => DataFrame, table: String,
       key: String, buckets: Int): String = {
     val spec = s"$table|$key|$buckets"
-    tables.computeIfAbsent(spec, { _ =>
+    graft.TempDirs.memo("graft_buckets", spec) {
       spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_buckets LOCATION '$location'")
       val fq = s"graft_buckets.`${table.replaceAll("[^a-zA-Z0-9]", "_")}_${sha16(spec)}`"
       df.write.mode(SaveMode.Overwrite)
         .bucketBy(buckets, key).sortBy(key)
         .format("parquet").saveAsTable(fq)
       fq
-    })
+    }
   }
 }

@@ -577,40 +577,18 @@ object Dedup {
     val sims = guardedSims(ensureParallelism(batch), idCol, textCol)
       .localCheckpoint(true)
     // the probe and the closure are independent consumers of the
-    // checkpointed sims: build them CONCURRENTLY ([[concurrently]]);
+    // checkpointed sims: build them CONCURRENTLY ([[graft.Concurrent]]);
     // matched is checkpointed too — id-sized, consumed twice by
     // incrementalCut (touched + losers), so the probe runs once
-    val (matched, comps) = concurrently(
-      indexMatchCore(sims, index, maxHamming, blocks)
+    val Seq(matched, comps) = graft.Concurrent.all(batch.sparkSession)(Seq(
+      () => indexMatchCore(sims, index, maxHamming, blocks)
         .select(col("doc_id")).distinct().localCheckpoint(true),
       // comps feeds touched + two loser branches: checkpoint (node-sized)
       // so the CC assembly doesn't replay per consumer
-      connectedComponentsStar(
+      () => connectedComponentsStar(
         pairsFromSimhash(sims.withColumnRenamed("doc_id", "id"), maxHamming, blocks),
-        "idA", "idB", maxIters).localCheckpoint(true))
+        "idA", "idB", maxIters).localCheckpoint(true)))
     incrementalCut(batch, idCol, matched, comps)
-  }
-
-  /** Build two INDEPENDENT eager frames from a 2-thread driver pool
-    * (guide §2.6: overlap independent jobs — the criteria-matrix /
-    * modality-decode pattern, r20). The incremental cuts' index probe
-    * and within-batch closure both read the same checkpointed signature
-    * frame and nothing of each other, but eager construction serialized
-    * them: the probe pass idled while the closure's job train ran (r21
-    * PlanProfile). Job descriptions are thread-local, so the UI stays
-    * attributable.
-    */
-  private def concurrently[A, B](fa: => A, fb: => B): (A, B) = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      val f1 = scala.concurrent.Future(fa)
-      val f2 = scala.concurrent.Future(fb)
-      val d = scala.concurrent.duration.Duration(10, "min")
-      (scala.concurrent.Await.result(f1, d),
-        scala.concurrent.Await.result(f2, d))
-    } finally pool.shutdown()
   }
 
   /** The shared loser assembly of the incremental near-dedup family —
@@ -664,14 +642,14 @@ object Dedup {
     val banded = bandedMinhash(batch, idCol, textCol, numHashes, bands)
       .localCheckpoint(true)
     // concurrent probe + closure over the shared banded checkpoint —
-    // see [[concurrently]]; matched is id-sized and consumed twice
-    val (matched, comps) = concurrently(
-      minhashMatchCore(banded, index, numHashes)
+    // see [[graft.Concurrent]]; matched is id-sized and consumed twice
+    val Seq(matched, comps) = graft.Concurrent.all(batch.sparkSession)(Seq(
+      () => minhashMatchCore(banded, index, numHashes)
         .where(col("estJaccard") >= threshold)
         .select(col("doc_id")).distinct().localCheckpoint(true),
-      connectedComponentsStar(
+      () => connectedComponentsStar(
         minhashPairsFromBanded(banded, numHashes, threshold),
-        "idA", "idB", maxIters).localCheckpoint(true))
+        "idA", "idB", maxIters).localCheckpoint(true)))
     incrementalCut(batch, idCol, matched, comps)
   }
 
@@ -1090,14 +1068,14 @@ object Dedup {
     val banded = cosineBandRows(withVec.select("doc_id", "v", "nrm"),
       planesPerBand, bands).localCheckpoint(true)
     // concurrent probe + closure over the shared banded checkpoint —
-    // see [[concurrently]]; matched is id-sized and consumed twice by
+    // see [[graft.Concurrent]]; matched is id-sized and consumed twice by
     // incrementalCut, comps feeds touched + two loser branches
-    val (matched, comps) = concurrently(
-      cosineMatchesFromBanded(banded, withVec, index, vecStore, threshold)
+    val Seq(matched, comps) = graft.Concurrent.all(batch.sparkSession)(Seq(
+      () => cosineMatchesFromBanded(banded, withVec, index, vecStore, threshold)
         .select(col("doc_id")).distinct().localCheckpoint(true),
-      connectedComponentsStar(
+      () => connectedComponentsStar(
         cosinePairsFromBanded(banded, withVec, threshold),
-        "idA", "idB", maxIters).localCheckpoint(true))
+        "idA", "idB", maxIters).localCheckpoint(true)))
     incrementalCut(batch, idCol, matched, comps)
   }
 
@@ -2002,15 +1980,15 @@ object Dedup {
         .where(col("n_shared") >= minShared)
     }
     // concurrent probe + closure over the shared chunk checkpoint —
-    // see [[concurrently]]; matched is id-sized and consumed twice
-    val (matched, comps) = concurrently(
-      chunks
+    // see [[graft.Concurrent]]; matched is id-sized and consumed twice
+    val Seq(matched, comps) = graft.Concurrent.all(batch.sparkSession)(Seq(
+      () => chunks
         .join(index.select(col("h"), col("len")).distinct(), Seq("h", "len"))
         .groupBy("id").agg(count(lit(1)).as("__ns"))
         .where(col("__ns") >= minShared)
         .select(col("id").as("doc_id")).localCheckpoint(true),
-      connectedComponentsStar(pairs, "idA", "idB", maxIters)
-        .localCheckpoint(true))
+      () => connectedComponentsStar(pairs, "idA", "idB", maxIters)
+        .localCheckpoint(true)))
     incrementalCut(batch, idCol, matched, comps)
   }
 

@@ -17,18 +17,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object DerbyFixture {
 
-  private val urls = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Materialize `<sfDir>/nation.parquet` into a process-private embedded
     * Derby DB (once per JVM per sfDir) and return its JDBC url.
     */
   def nationUrl(spark: SparkSession, sfDir: String): String =
-    urls.computeIfAbsent(sfDir, { d =>
+    graft.TempDirs.memo("graft_derby", sfDir) {
       val dir = graft.TempDirs.create("graft_derby")
       // keep derby.log out of the process cwd
       System.setProperty("derby.stream.error.file", s"$dir/derby.log")
       val url = s"jdbc:derby:$dir/graftdb;create=true"
-      spark.read.parquet(s"$d/nation.parquet")
+      spark.read.parquet(s"$sfDir/nation.parquet")
         .select("n_nationkey", "n_name", "n_regionkey")
         .coalesce(1) // 25 rows; one INSERT connection is plenty
         .write
@@ -37,7 +35,7 @@ object DerbyFixture {
         .option("createTableColumnTypes", "n_name VARCHAR(128)")
         .jdbc(url, "nation", new Properties)
       url
-    })
+    }
 
   /** Partition-parallel JDBC read of the materialized dim: 4 range scans
     * on `n_nationkey`. Column pruning and filter pushdown reach Derby.

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The ONE definition of the corpus-replication invariants the scale
-  * tools ([[StressX10]], [[StressX100]], [[StressDiag]], [[ScaleUp]])
+  * tools ([[StressX10]], [[StressX100]], [[ScaleUp]])
   * build their synthetic decades from. Each tool composes these
   * primitives its own way (fold-CASE columns vs broadcast mask tables,
   * 10-rotation classes vs factor-bounded rotations), but the rules
@@ -59,7 +59,7 @@ private[graft] object Synth {
       graft.ops.Similarity.projSign(1000 + r, i + 1).toFloat)
 
   /** `(__rep, __mask)` table of [[replicaMask]] rows for broadcast-join
-    * replication (the shape StressX100/StressDiag use for 100 replicas,
+    * replication (the shape StressX100 uses for 100 replicas,
     * where a 100-branch CASE column would not fold).
     */
   def maskTable(spark: SparkSession, n: Int): DataFrame = {
