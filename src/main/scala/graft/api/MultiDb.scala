@@ -17,6 +17,12 @@ trait RoleProvider { def load(): Seq[RoleMeta] }
   * query / reloadMetadata / reloadRoles / healthCheck / close, with
   * snapshot isolation — in-flight queries keep the metadata/roles references
   * captured at entry; reload atomically swaps them (METADATA.md:191-193).
+  *
+  * `query` answers repeats of an `execute` or `count` query from a
+  * [[ResultCache]] keyed on the snapshot (by identity), the definition and
+  * the context, after checking that the files the answer was read from are
+  * unchanged. A reload that returns an equal config and equal roles keeps
+  * the snapshot and so the cached results; any other reload drops them.
   */
 final class MultiDb(
     val spark: SparkSession,
@@ -25,15 +31,22 @@ final class MultiDb(
     registry: SourceRegistry,
 ) extends AutoCloseable {
 
-  /** One consistent (metadata, roles) pair; a reload swaps it whole. */
-  private type Snapshot = (MetadataIndex, Map[String, RoleMeta])
+  /** One consistent (metadata, roles) pair; a reload swaps it whole. Equal
+    * by identity: it keys the result cache.
+    */
+  private final class Snapshot(val index: MetadataIndex, val rolesById: Map[String, RoleMeta])
 
-  @volatile private var state: Snapshot = load()
+  @volatile private var state: Snapshot = {
+    val (cfg, rolesById) = load()
+    new Snapshot(MetadataIndex.build(cfg), rolesById)
+  }
+  private val reloadLock = new Object
+  private val results = new ResultCache(spark.sparkContext.hadoopConfiguration)
   private val timeoutPool = Executors.newCachedThreadPool { r =>
     val t = new Thread(r, "graft-query-timeout"); t.setDaemon(true); t
   }
 
-  private def load(): Snapshot = {
+  private def load(): (MetadataConfig, Map[String, RoleMeta]) = {
     val cfg =
       try metadataProvider.load()
       catch { case e: Exception if !e.isInstanceOf[MultiDbError] =>
@@ -42,18 +55,33 @@ final class MultiDb(
       try roleProvider.load()
       catch { case e: Exception if !e.isInstanceOf[MultiDbError] =>
         throw ProviderError("ROLE_LOAD_FAILED", "role", Some(e)) }
-    (MetadataIndex.build(cfg), roles.map(r => r.id -> r).toMap)
+    (cfg, roles.map(r => r.id -> r).toMap)
   }
 
-  def reloadMetadata(): Unit = state = load()
-  def reloadRoles(): Unit = state = load()
+  def reloadMetadata(): Unit = reload()
+  def reloadRoles(): Unit = reload()
+
+  /** Reloads run one at a time. An equal config and equal roles keep the
+    * current snapshot (its index and cached results); anything else
+    * installs a new snapshot and drops every cached result.
+    */
+  private def reload(): Unit = reloadLock.synchronized {
+    val (cfg, rolesById) = load()
+    if (cfg != state.index.config || rolesById != state.rolesById) {
+      state = new Snapshot(MetadataIndex.build(cfg), rolesById)
+      results.clear()
+    }
+  }
+
+  /** Hit, miss, stale and skip counts of the result cache. */
+  def resultCacheStats: ResultCacheStats = results.stats
 
   /** Contract-shaped health report (reference C1300-C1304): overall
     * `healthy` plus per-executor and per-cache-provider status with
     * measured latency and the failure message when unhealthy.
     */
   def healthCheck(): HealthCheckResult = {
-    val (index, _) = state
+    val index = state.index
     def probe(body: => Unit): ComponentHealth = {
       val t0 = System.nanoTime()
       try { body; ComponentHealth(healthy = true, (System.nanoTime() - t0) / 1000000) }
@@ -82,7 +110,7 @@ final class MultiDb(
   /** After close, queries fail with a typed EXECUTOR_MISSING (reference
     * C1313), not an untyped rejected-execution error.
     */
-  override def close(): Unit = { closed = true; timeoutPool.shutdownNow() }
+  override def close(): Unit = { closed = true; timeoutPool.shutdownNow(); results.clear() }
 
   private def ensureOpen(): Unit =
     if (closed) throw ExecutionError("EXECUTOR_MISSING", Map("reason" -> "closed"))
@@ -91,8 +119,8 @@ final class MultiDb(
     * endpoint); throws ValidationError, never touches a DataFrame.
     */
   def validateOnly(q: QueryDefinition, context: ExecutionContext = ExecutionContext()): Unit = {
-    val (index, rolesById) = state
-    val issues = graft.validation.Validator.validate(index, rolesById, q, context)
+    val snapshot = state
+    val issues = graft.validation.Validator.validate(snapshot.index, snapshot.rolesById, q, context)
     if (issues.nonEmpty) throw ValidationError(q.from, issues)
   }
 
@@ -103,19 +131,42 @@ final class MultiDb(
   def frame(q: QueryDefinition, context: ExecutionContext = ExecutionContext()): DataFrame =
     resolveTimed(state, q, context)._1._1.frame
 
-  /** Full reference-shaped query lifecycle. */
+  /** Full reference-shaped query lifecycle. An `execute` or `count` query
+    * without `debug` is first looked up in the result cache; a hit skips
+    * validation, access control, planning and resolution and runs no Spark
+    * job. Its meta carries the stored strategy, tables and columns and the
+    * timing of this call.
+    */
   def query(q: QueryDefinition, context: ExecutionContext = ExecutionContext()): QueryResult = {
     ensureOpen()
     val t0 = System.nanoTime()
-    val debug = Seq.newBuilder[DebugLogEntry]
-    def log(phase: String, msg: String): Unit =
-      if (q.debug) debug += DebugLogEntry(System.currentTimeMillis(), phase, msg)
-
     // one snapshot for the whole query: every resolve below (including the
     // partial-cache refetch) reads it, never the live `state` a concurrent
     // reload may have swapped
     val snapshot = state
-    val (index, _) = snapshot
+    val key =
+      if (q.debug || (q.executeMode != "execute" && q.executeMode != "count")) None
+      else Some(resultKey(snapshot, "result", q, context))
+    key.flatMap(results.get) match {
+      case Some(hit) =>
+        val timing = Timing(planningMs = 0, generationMs = 0,
+          executionMs = Some((System.nanoTime() - t0) / 1000000))
+        hit match {
+          case d: DataResult => d.copy(meta = d.meta.copy(timing = timing))
+          case c: CountResult => c.copy(meta = c.meta.copy(timing = timing))
+          case other => other
+        }
+      case None => run(snapshot, q, context, t0, key)
+    }
+  }
+
+  /** `query` past the result-cache lookup; stores under `key` when given. */
+  private def run(snapshot: Snapshot, q: QueryDefinition, context: ExecutionContext,
+      t0: Long, key: Option[Any]): QueryResult = {
+    val debug = Seq.newBuilder[DebugLogEntry]
+    def log(phase: String, msg: String): Unit =
+      if (q.debug) debug += DebugLogEntry(System.currentTimeMillis(), phase, msg)
+    val index = snapshot.index
     log("validation", s"validating query from '${q.from}'")
     val ((resolved, plan, mappingsMeta), tPlanned) = resolveTimed(snapshot, q, context, Some(log))
     val t1 = System.nanoTime()
@@ -145,8 +196,10 @@ final class MultiDb(
         val t2 = System.nanoTime()
         val n = withTimeout(plan, resolved.countFrame.count())
         log("execution", s"count = $n")
-        CountResult(n, metaOf(Some((System.nanoTime() - t2) / 1000000), Nil),
+        val result = CountResult(n, metaOf(Some((System.nanoTime() - t2) / 1000000), Nil),
           if (q.debug) Some(debug.result()) else None)
+        key.foreach(store(snapshot, _, result, resolved.countFrame))
+        result
       case _ if plan.cache.isDefined =>
         // P0 Redis-style fast path: MGET by key pattern; full hit serves from
         // cache, partial hit merges cache rows with a DB fetch for the
@@ -168,9 +221,20 @@ final class MultiDb(
         val dbData =
           if (missing.isEmpty) Nil
           else {
-            log("cache", s"fetching ${missing.size} missed ids from database")
-            val ((res2, _, _), _) = resolveTimed(snapshot, q.copy(byIds = Some(missing)), context)
-            assemble(withTimeout(plan, res2.frame.collect()), res2)
+            // provider rows are never cached; the database refetch of the
+            // missed ids is, keyed by its own definition
+            val refetch = q.copy(byIds = Some(missing))
+            val refetchKey =
+              if (q.debug) None else Some(resultKey(snapshot, "p0-refetch", refetch, context))
+            refetchKey.flatMap(results.get) match {
+              case Some(hit) => hit.asInstanceOf[DataResult].data
+              case None =>
+                log("cache", s"fetching ${missing.size} missed ids from database")
+                val ((res2, _, _), _) = resolveTimed(snapshot, refetch, context)
+                val data = assemble(withTimeout(plan, res2.frame.collect()), res2)
+                refetchKey.foreach(store(snapshot, _, DataResult(data, metaOf(None, Nil)), res2.frame))
+                data
+            }
           }
         DataResult(cacheData ++ dbData,
           metaOf(Some((System.nanoTime() - t2) / 1000000), mappingsMeta),
@@ -180,10 +244,26 @@ final class MultiDb(
         val rows = withTimeout(plan, resolved.frame.collect())
         log("execution", s"fetched ${rows.length} rows")
         val data = assemble(rows, resolved)
-        DataResult(data, metaOf(Some((System.nanoTime() - t2) / 1000000), mappingsMeta),
+        val result = DataResult(data,
+          metaOf(Some((System.nanoTime() - t2) / 1000000), mappingsMeta),
           if (q.debug) Some(debug.result()) else None)
+        key.foreach(store(snapshot, _, result, resolved.frame))
+        result
     }
   }
+
+  /** The result-cache key of `q` on `snapshot`; `part` tells a whole result
+    * from the database part of a P0 partial hit.
+    */
+  private def resultKey(snapshot: Snapshot, part: String, q: QueryDefinition,
+      context: ExecutionContext): Any =
+    (snapshot, part, ResultCache.typed(q), ResultCache.typed(context))
+
+  /** Offers `result` to the cache unless a reload or close has retired
+    * `snapshot` meanwhile.
+    */
+  private def store(snapshot: Snapshot, key: Any, result: QueryResult, frame: DataFrame): Unit =
+    if (!closed && (state eq snapshot)) results.put(key, result, frame)
 
   /** Validate, ACL, plan and resolve `q` against one config snapshot,
     * also returning the nanoTime boundary between planning (validate + ACL
@@ -197,7 +277,7 @@ final class MultiDb(
       context: ExecutionContext,
       log: Option[(String, String) => Unit] = None,
   ): ((ResolvedQuery, Plan, Seq[ResultColumnMeta]), Long) = {
-    val (index, rolesById) = snapshot
+    val (index, rolesById) = (snapshot.index, snapshot.rolesById)
     val issues = graft.validation.Validator.validate(index, rolesById, q, context)
     if (issues.nonEmpty) throw ValidationError(q.from, issues)
     val access = AccessControl.resolve(index, rolesById, context)

@@ -25,8 +25,14 @@ trait CacheProvider {
   * query, so it must be cheap. The scan itself is lazy, but a bare
   * `spark.read.parquet` is not: it runs a schema-inference job on every
   * call. Parquet tables therefore load through `SourceLoaders.parquet`,
-  * which reuses the inferred schema while the file's (modificationTime,
-  * length) is unchanged and re-infers when it changes.
+  * which reuses the inferred schema while the path's file version (path,
+  * length and modificationTime of every file under it, listed recursively)
+  * is unchanged and re-infers when it changes.
+  *
+  * A loader that returns a file relation (`spark.read.<format>(path)`) lets
+  * `MultiDb` cache the results of queries over it, checked against the same
+  * file version on every hit. Any other frame (in-memory, JDBC, DSv2, or
+  * one built from mutable state) is never cached and is re-run every time.
   */
 final case class SourceRegistry(
     loaders: Map[(String, String), () => DataFrame], // (databaseId, tableId) → loader

@@ -151,42 +151,52 @@ object TpchCatalog {
   * through one connection.
   */
 object SourceLoaders {
-  import org.apache.hadoop.fs.{FileSystem, Path}
+  import org.apache.hadoop.conf.Configuration
+  import org.apache.hadoop.fs.{FileStatus, Path}
   import org.apache.spark.sql.{DataFrame, SparkSession}
   import org.apache.spark.sql.types.StructType
 
   /** Parquet loader that infers the schema once per file version.
     *
     * `spark.read.parquet` runs a Spark job to read footers and infer the
-    * schema on every call. This loader stats the path on every call (so a
-    * missing file still fails the load) and keys the inferred schema on its
-    * `(modificationTime, length)`; while the key holds it returns
+    * schema on every call. This loader takes the path's [[fileVersion]] on
+    * every call (so a missing file still fails the load) and keys the
+    * inferred schema on it; while the version holds it returns
     * `spark.read.schema(memo).parquet(path)`, a fresh relation (fresh
-    * attribute ids) built with no Spark job. A rewritten file re-infers.
-    * For a directory the key is its newest mtime and total size over its
-    * direct children.
+    * attribute ids) built with no Spark job. A file rewritten anywhere
+    * under the path re-infers.
     */
   def parquet(spark: SparkSession, path: String): () => DataFrame = {
-    val memo = new java.util.concurrent.atomic.AtomicReference[((Long, Long), StructType)]()
+    val memo = new java.util.concurrent.atomic.AtomicReference[(Seq[FileStamp], StructType)]()
     () => {
-      val key = stamp(new Path(path), spark)
+      val version = fileVersion(spark.sparkContext.hadoopConfiguration, new Path(path))
       Option(memo.get) match {
-        case Some((k, schema)) if k == key => spark.read.schema(schema).parquet(path)
+        case Some((v, schema)) if v == version => spark.read.schema(schema).parquet(path)
         case _ =>
           val df = spark.read.parquet(path)
-          memo.set((key, df.schema))
+          memo.set((version, df.schema))
           df
       }
     }
   }
 
-  private def stamp(p: Path, spark: SparkSession): (Long, Long) = {
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val st = fs.getFileStatus(p) // FileNotFoundException when missing
-    if (!st.isDirectory) (st.getModificationTime, st.getLen)
-    else fs.listStatus(p).foldLeft((st.getModificationTime, 0L)) { case ((m, n), c) =>
-      (m max c.getModificationTime, n + c.getLen)
-    }
+  /** One file's identity for change detection: qualified path, length and
+    * modification time. A rewrite that keeps the length within the file
+    * system's mtime granularity goes unseen, as it does for Spark's own
+    * file listing.
+    */
+  final case class FileStamp(path: String, length: Long, modificationTime: Long)
+
+  /** Every file under `root`, listed recursively (hidden files included),
+    * sorted by path; `root` itself when it is a file. Throws
+    * `FileNotFoundException` when `root` is missing.
+    */
+  def fileVersion(conf: Configuration, root: Path): Seq[FileStamp] = {
+    val fs = root.getFileSystem(conf)
+    def walk(st: FileStatus): Seq[FileStamp] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.sortBy(_.getPath.toString).flatMap(walk)
+      else Seq(FileStamp(st.getPath.toString, st.getLen, st.getModificationTime))
+    walk(fs.getFileStatus(root))
   }
 
   /** Partition-parallel JDBC scan: `partitionColumn` must be indexed and

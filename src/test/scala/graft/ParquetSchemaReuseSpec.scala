@@ -1,10 +1,7 @@
 package graft
 
 import java.io.File
-import java.nio.file.{Files, StandardCopyOption}
-import java.util.concurrent.ConcurrentLinkedQueue
-import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.api.MultiDb
@@ -12,6 +9,7 @@ import graft.meta._
 import graft.planner.SourceRegistry
 import graft.sources.SourceLoaders
 import graft.types._
+import TestSpark.{jobsDuring, writeParquet}
 
 /** `SourceLoaders.parquet` infers a file's schema once per file version:
   * repeat loads run no Spark job, a rewritten file re-infers, and a missing
@@ -22,43 +20,8 @@ class ParquetSchemaReuseSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.session
   import TestSpark.session.implicits._
 
-  /** Writes `df` as one parquet file at `file` (replacing it). */
-  private def writeParquet(df: DataFrame, file: File): Unit = {
-    val dir = TempDirs.create("graft-test-pq-write").resolve("out").toString
-    df.coalesce(1).write.parquet(dir)
-    val part = new File(dir).listFiles().find(f =>
-      f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
-    Files.move(part.toPath, file.toPath, StandardCopyOption.REPLACE_EXISTING)
-  }
-
   private def tempFile(): File =
     TempDirs.create("graft-test-pq").resolve("items.parquet").toFile
-
-  /** Jobs started while `body` runs on this thread, counted by a listener
-    * that a marker job (in another group) has flushed.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"schema-reuse-${System.nanoTime()}"
-    val marker = s"$group-marker"
-    val groups = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "schema reuse probe")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "listener flush marker")
-      try spark.range(1).collect() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!groups.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(groups.contains(marker), "listener never saw the marker job")
-      groups.asScala.count(_ == group)
-    } finally sc.removeSparkListener(listener)
-  }
 
   /** A one-table engine over `path`, loaded through `SourceLoaders.parquet`. */
   private def engine(path: File): MultiDb = MultiDb(spark,
@@ -103,6 +66,26 @@ class ParquetSchemaReuseSpec extends AnyFunSuite {
       assert(db.query(byId).asInstanceOf[DataResult].data.map(_("v")) ==
         Seq(5000000000L, 6000000000L), s"after rewriting $path")
     }
+  }
+
+  test("a file rewritten in place inside a partition directory re-infers its schema") {
+    // the directory entries above the file do not change when it is
+    // rewritten in place, so only a recursive file version sees it
+    def bytes(df: DataFrame): Array[Byte] = {
+      val f = tempFile()
+      writeParquet(df, f)
+      Files.readAllBytes(f.toPath)
+    }
+    val dir = new File(tempFile().getParentFile, "parts")
+    val file = new File(dir, "p=1/x.parquet").toPath
+    Files.createDirectories(file.getParent)
+    Files.write(file, bytes(Seq((1, 10)).toDF("id", "v")))
+    val load = SourceLoaders.parquet(spark, dir.getPath)
+    assert(load().schema("v").dataType == org.apache.spark.sql.types.IntegerType)
+    Files.write(file, bytes(Seq((1, 5000000000L)).toDF("id", "v")))
+    val reloaded = load()
+    assert(reloaded.schema("v").dataType == org.apache.spark.sql.types.LongType)
+    assert(reloaded.select("v").as[Long].collect().toSeq == Seq(5000000000L))
   }
 
   test("a deleted file fails the query as QUERY_FAILED and the executor as unhealthy") {
