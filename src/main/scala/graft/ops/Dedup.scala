@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops.Materialize.MaterializeOps
 import graft.functions.TextFunctions
+import graft.sources.SourceLoaders
 
 /** Deduplication operators for training-data pipelines: exact, MinHash+LSH,
   * SimHash, and n-gram Jaccard. Designed for the 100 TB path:
@@ -1152,7 +1153,7 @@ object Dedup {
     */
   def semanticDedupIndexed(spark: org.apache.spark.sql.SparkSession,
       path: String, idCol: String, threshold: Double): DataFrame = {
-    val cells = spark.read.parquet(s"$path/cells")
+    val cells = SourceLoaders.parquet(spark, s"$path/cells")
     val assigned = cells.select(col("cid").as("doc_id"),
         transform(col("vec"), x => x.cast("double")).as("v"),
         col("centId").as("cell"))

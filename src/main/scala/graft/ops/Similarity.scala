@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions.dot_product
+import graft.sources.SourceLoaders
 
 /** Similarity search over an embedding column (`array<float>`), two tiers:
   *
@@ -708,7 +709,7 @@ object Similarity {
   def ivfTopKIndexed(queries: DataFrame, path: String,
       k: Int = 10, nProbe: Int = -1): DataFrame = {
     val spark = queries.sparkSession
-    val cent = spark.read.parquet(s"$path/centroids")
+    val cent = SourceLoaders.parquet(spark, s"$path/centroids")
     val np =
       if (nProbe != -1) nProbe
       else {
@@ -720,7 +721,7 @@ object Similarity {
         else nprobeForCells(cent.count().toInt)
       }
     val probed = nearestCells(prep(queries, "qid"), "qid", cent, keep = np)
-    val cells = spark.read.parquet(s"$path/cells")
+    val cells = SourceLoaders.parquet(spark, s"$path/cells")
     // restrict once to the union of probed cells (per-query restriction
     // happens in the candidate join) — the one store read: candidates
     // carry `vec` straight from this scan into the rescore (r21; the
@@ -1057,7 +1058,7 @@ object Similarity {
     val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(metaPath),
       s"sharded IVF index at $path has no meta stamp — rebuild with writeIvfIndexSharded")
-    val cent = spark.read.parquet(s"$path/centroids")
+    val cent = SourceLoaders.parquet(spark, s"$path/centroids")
     // probe-policy integers from the centroid schema stamp — zero jobs
     // (r21); a pre-r21 index falls back to the one-row meta read
     val md = cent.schema("centId").metadata
@@ -1066,7 +1067,7 @@ object Similarity {
         (md.getLong("graft.perShardCells").toInt,
           md.getLong("graft.nShards").toInt)
       else {
-        val meta = spark.read.parquet(s"$path/meta")
+        val meta = SourceLoaders.parquet(spark, s"$path/meta")
           .select(col("perShardCells").cast("int"), col("nShards").cast("int"))
           .head()
         (meta.getInt(0), meta.getInt(1))
@@ -1085,7 +1086,7 @@ object Similarity {
       .withColumn("rn", row_number().over(w))
       .where(col("rn") <= nShards.toLong * np)
       .select(col("qid"), col("shard"), col("centId"))
-    val cells = spark.read.parquet(s"$path/cells")
+    val cells = SourceLoaders.parquet(spark, s"$path/cells")
     // restrict once to the union of probed (shard, cell) directories —
     // the one store read: candidates carry `vec` straight from this scan
     // into the rescore, and keep=1 per-shard assignment + the distinct
@@ -1320,9 +1321,9 @@ object Similarity {
     val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(metaPath),
       s"PQ index at $path has no meta stamp — rebuild with writePqIndex")
-    val codes = spark.read.parquet(s"$path/codes")
-    val vectors = spark.read.parquet(s"$path/vectors")
-    val cbSub = spark.read.parquet(s"$path/codebook")
+    val codes = SourceLoaders.parquet(spark, s"$path/codes")
+    val vectors = SourceLoaders.parquet(spark, s"$path/vectors")
+    val cbSub = SourceLoaders.parquet(spark, s"$path/codebook")
     // sizing integers from the codebook schema stamp — zero jobs (r21);
     // a pre-r21 index falls back to the one-row meta read
     val cmd = cbSub.schema("codeId").metadata
@@ -1331,7 +1332,7 @@ object Similarity {
         (cmd.getLong("graft.corpusCount"), cmd.getLong("graft.m").toInt,
           cmd.getLong("graft.subDim").toInt)
       else {
-        val meta = spark.read.parquet(s"$path/meta")
+        val meta = SourceLoaders.parquet(spark, s"$path/meta")
           .select(col("corpusCount").cast("long"), col("m").cast("int"),
             col("subDim").cast("int")).head()
         (meta.getLong(0), meta.getInt(1), meta.getInt(2))
@@ -1463,7 +1464,7 @@ object Similarity {
     val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(metaPath),
       s"IVF-PQ index at $path has no meta stamp — rebuild with writeIvfPqIndex")
-    val cent = spark.read.parquet(s"$path/centroids")
+    val cent = SourceLoaders.parquet(spark, s"$path/centroids")
     // sizing integers from the centroid schema stamp — zero jobs (r21);
     // a pre-r21 index falls back to the one-row meta read
     val cmd = cent.schema("centId").metadata
@@ -1472,7 +1473,7 @@ object Similarity {
         (cmd.getLong("graft.corpusCount"), cmd.getLong("graft.m").toInt,
           cmd.getLong("graft.subDim").toInt, cmd.getLong("graft.nlist").toInt)
       else {
-        val meta = spark.read.parquet(s"$path/meta")
+        val meta = SourceLoaders.parquet(spark, s"$path/meta")
           .select(col("corpusCount").cast("long"), col("m").cast("int"),
             col("subDim").cast("int"), col("nlist").cast("int")).head()
         (meta.getLong(0), meta.getInt(1), meta.getInt(2), meta.getInt(3))
@@ -1480,13 +1481,13 @@ object Similarity {
     val np = if (nProbe != -1) nProbe else nprobeForCells(nlist)
     val rf = if (refine != -1) refine
       else refineForCandidates(expectedProbed(n, nlist, np))
-    val cbSub = spark.read.parquet(s"$path/codebook")
+    val cbSub = SourceLoaders.parquet(spark, s"$path/codebook")
     val q = prep(queries, "qid")
     val probed = nearestCells(q, "qid", cent, keep = np)
     val probedCells = broadcast(probed.select("centId").distinct())
     // both data-sized reads prune to probed cell directories
-    val codes = spark.read.parquet(s"$path/codes").join(probedCells, "centId")
-    val vectors = spark.read.parquet(s"$path/vectors").join(probedCells, "centId")
+    val codes = SourceLoaders.parquet(spark, s"$path/codes").join(probedCells, "centId")
+    val vectors = SourceLoaders.parquet(spark, s"$path/vectors").join(probedCells, "centId")
     // route against the VECTORS table's (cid, centId) projection — one
     // row per cid by construction, so no distinct() exchange; the former
     // shape distinct()-ed the codes table's m rows per cid (r21)
@@ -1744,8 +1745,8 @@ object Similarity {
   def sq8TopKIndexed(queries: DataFrame, path: String,
       k: Int = 10, refine: Int = -1): DataFrame = {
     val spark = queries.sparkSession
-    val rg = spark.read.parquet(s"$path/ranges")
-    val codes = spark.read.parquet(s"$path/codes")
+    val rg = SourceLoaders.parquet(spark, s"$path/ranges")
+    val codes = SourceLoaders.parquet(spark, s"$path/codes")
     val rf =
       if (refine != -1) refine
       else {
@@ -1758,7 +1759,7 @@ object Similarity {
         refineForCandidates(md.getLong("graft.corpusCount"))
       }
     val rec = sq8Decode(codes, rg)
-    val vectors = spark.read.parquet(s"$path/vectors")
+    val vectors = SourceLoaders.parquet(spark, s"$path/vectors")
     val approx = prep(queries, "qid").select(col("qid"), col("qid_v"))
       .crossJoin(rec)
       .where(col("qid") =!= col("cid"))
@@ -2009,7 +2010,7 @@ object Similarity {
     val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val metaDf =
       if (!fs.exists(metaPath)) None
-      else Some(spark.read.parquet(s"$path/meta"))
+      else Some(SourceLoaders.parquet(spark, s"$path/meta"))
     val meta = metaDf.map(
       _.select(col("outDims").cast("int"), col("firstPlane").cast("int"))
         .head())
@@ -2038,9 +2039,9 @@ object Similarity {
         refineForCandidates(
           counted.get.select(col("corpusCount").cast("long")).head().getLong(0))
       }
-    val cp = spark.read.parquet(s"$path/projected")
+    val cp = SourceLoaders.parquet(spark, s"$path/projected")
       .select(col("cid"), col("proj").as("cp"))
-    val vectors = spark.read.parquet(s"$path/vectors")
+    val vectors = SourceLoaders.parquet(spark, s"$path/vectors")
     val qp = signProject(queries.select(col("qid"), col("vec")), "qid", "vec",
         metaDims, metaPlane)
       .select(col("qid"), col("proj").as("qp"))

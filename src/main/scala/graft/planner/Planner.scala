@@ -25,9 +25,11 @@ trait CacheProvider {
   * query, so it must be cheap. The scan itself is lazy, but a bare
   * `spark.read.parquet` is not: it runs a schema-inference job on every
   * call. Parquet tables therefore load through `SourceLoaders.parquet`,
-  * which reuses the inferred schema while the path's file version (path,
-  * length and modificationTime of every file under it, listed recursively)
-  * is unchanged and re-infers when it changes.
+  * the engine's one parquet reader, which reuses the inferred schema
+  * JVM-wide while the path's file version (path, length and
+  * modificationTime of every file under it, listed recursively) and the
+  * session's parquet read settings are unchanged, and re-infers when
+  * either changes.
   *
   * A loader that returns a file relation (`spark.read.<format>(path)`) lets
   * `MultiDb` cache the results of queries over it, checked against the same

@@ -26,7 +26,7 @@ object DerbyFixture {
       // keep derby.log out of the process cwd
       System.setProperty("derby.stream.error.file", s"$dir/derby.log")
       val url = s"jdbc:derby:$dir/graftdb;create=true"
-      spark.read.parquet(s"$sfDir/nation.parquet")
+      SourceLoaders.parquet(spark, s"$sfDir/nation.parquet")
         .select("n_nationkey", "n_name", "n_regionkey")
         .coalesce(1) // 25 rows; one INSERT connection is plenty
         .write

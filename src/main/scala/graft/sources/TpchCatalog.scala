@@ -125,12 +125,12 @@ object TpchCatalog {
       case t if t.database == "warehouse" && t.id == "nationDim" =>
         ("warehouse", t.id) -> (() => DerbyFixture.nation(spark, sfDir))
       case t if t.database == "tpch" =>
-        ("tpch", t.id) -> SourceLoaders.parquet(spark, s"$sfDir/${t.physicalName}.parquet")
+        ("tpch", t.id) -> (() => SourceLoaders.parquet(spark, s"$sfDir/${t.physicalName}.parquet"))
     }.toMap,
     // replica content mirrors the primary byte-for-byte (zero simulated
     // lag), so offloaded queries return identical rows — oracle-checkable
     replicaLoaders = Map(("warehouse", "orders") ->
-      SourceLoaders.parquet(spark, s"$sfDir/orders.parquet")))
+      (() => SourceLoaders.parquet(spark, s"$sfDir/orders.parquet"))))
 
   private val cache = new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), MultiDb]()
 
@@ -142,75 +142,4 @@ object TpchCatalog {
 
   def frame(spark: SparkSession, sfDir: String)(q: graft.types.QueryDefinition): DataFrame =
     multiDb(spark, sfDir).frame(q)
-}
-
-/** Source-loader constructors for the registry: each logical database maps
-  * to whatever reader fits its engine. Parquet backs the TPC-H catalog; the
-  * JDBC form shows the federated path (compile-checked only: no test reaches
-  * a live database) — partitioned reads keep a 100 TB table from funneling
-  * through one connection.
-  */
-object SourceLoaders {
-  import org.apache.hadoop.conf.Configuration
-  import org.apache.hadoop.fs.{FileStatus, Path}
-  import org.apache.spark.sql.{DataFrame, SparkSession}
-  import org.apache.spark.sql.types.StructType
-
-  /** Parquet loader that infers the schema once per file version.
-    *
-    * `spark.read.parquet` runs a Spark job to read footers and infer the
-    * schema on every call. This loader takes the path's [[fileVersion]] on
-    * every call (so a missing file still fails the load) and keys the
-    * inferred schema on it; while the version holds it returns
-    * `spark.read.schema(memo).parquet(path)`, a fresh relation (fresh
-    * attribute ids) built with no Spark job. A file rewritten anywhere
-    * under the path re-infers.
-    */
-  def parquet(spark: SparkSession, path: String): () => DataFrame = {
-    val memo = new java.util.concurrent.atomic.AtomicReference[(Seq[FileStamp], StructType)]()
-    () => {
-      val version = fileVersion(spark.sparkContext.hadoopConfiguration, new Path(path))
-      Option(memo.get) match {
-        case Some((v, schema)) if v == version => spark.read.schema(schema).parquet(path)
-        case _ =>
-          val df = spark.read.parquet(path)
-          memo.set((version, df.schema))
-          df
-      }
-    }
-  }
-
-  /** One file's identity for change detection: qualified path, length and
-    * modification time. A rewrite that keeps the length within the file
-    * system's mtime granularity goes unseen, as it does for Spark's own
-    * file listing.
-    */
-  final case class FileStamp(path: String, length: Long, modificationTime: Long)
-
-  /** Every file under `root`, listed recursively (hidden files included),
-    * sorted by path; `root` itself when it is a file. Throws
-    * `FileNotFoundException` when `root` is missing.
-    */
-  def fileVersion(conf: Configuration, root: Path): Seq[FileStamp] = {
-    val fs = root.getFileSystem(conf)
-    def walk(st: FileStatus): Seq[FileStamp] =
-      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.sortBy(_.getPath.toString).flatMap(walk)
-      else Seq(FileStamp(st.getPath.toString, st.getLen, st.getModificationTime))
-    walk(fs.getFileStatus(root))
-  }
-
-  /** Partition-parallel JDBC scan: `partitionColumn` must be indexed and
-    * roughly uniform; Spark issues `numPartitions` range queries. Filters
-    * and column pruning push down through the JDBC source.
-    */
-  def jdbc(spark: SparkSession, url: String, table: String,
-      partitionColumn: String, lowerBound: Long, upperBound: Long,
-      numPartitions: Int, props: java.util.Properties = new java.util.Properties)
-      : () => DataFrame =
-    () => spark.read
-      .option("partitionColumn", partitionColumn)
-      .option("lowerBound", lowerBound)
-      .option("upperBound", upperBound)
-      .option("numPartitions", numPartitions)
-      .jdbc(url, table, props)
 }

@@ -11,9 +11,10 @@ import graft.sources.SourceLoaders
 import graft.types._
 import TestSpark.{jobsDuring, writeParquet}
 
-/** `SourceLoaders.parquet` infers a file's schema once per file version:
-  * repeat loads run no Spark job, a rewritten file re-infers, and a missing
-  * file still fails the load (QUERY_FAILED, unhealthy executor).
+/** `SourceLoaders.parquet` infers a file's schema once per file version
+  * and parquet read settings: repeat loads run no Spark job, a rewritten
+  * file or a changed setting re-infers, and a missing file still fails the
+  * load (QUERY_FAILED, unhealthy executor).
   */
 class ParquetSchemaReuseSpec extends AnyFunSuite {
 
@@ -31,7 +32,7 @@ class ParquetSchemaReuseSpec extends AnyFunSuite {
         Seq(ColumnMeta("id", "id", "int"), ColumnMeta("v", "v", "int")),
         primaryKey = Seq("id")))),
     Seq(RoleMeta("admin", None)),
-    SourceRegistry(Map(("pq", "items") -> SourceLoaders.parquet(spark, path.getPath))))
+    SourceRegistry(Map(("pq", "items") -> (() => SourceLoaders.parquet(spark, path.getPath)))))
 
   private val byId = QueryDefinition("items", columns = Some(Seq("id", "v")),
     orderBy = Seq(QueryOrderBy("id", "asc")))
@@ -39,7 +40,7 @@ class ParquetSchemaReuseSpec extends AnyFunSuite {
   test("repeat loads of an unchanged file run no Spark job and keep the inferred schema") {
     val file = tempFile()
     writeParquet(Seq((1, 10), (2, 20)).toDF("id", "v"), file)
-    val load = SourceLoaders.parquet(spark, file.getPath)
+    val load = () => SourceLoaders.parquet(spark, file.getPath)
     assert(jobsDuring(load()) >= 1) // first load infers (and proves the counter counts)
     var frames = Seq.empty[DataFrame]
     assert(jobsDuring { frames = Seq.fill(3)(load()) } == 0)
@@ -80,12 +81,27 @@ class ParquetSchemaReuseSpec extends AnyFunSuite {
     val file = new File(dir, "p=1/x.parquet").toPath
     Files.createDirectories(file.getParent)
     Files.write(file, bytes(Seq((1, 10)).toDF("id", "v")))
-    val load = SourceLoaders.parquet(spark, dir.getPath)
+    val load = () => SourceLoaders.parquet(spark, dir.getPath)
     assert(load().schema("v").dataType == org.apache.spark.sql.types.IntegerType)
     Files.write(file, bytes(Seq((1, 5000000000L)).toDF("id", "v")))
     val reloaded = load()
     assert(reloaded.schema("v").dataType == org.apache.spark.sql.types.LongType)
     assert(reloaded.select("v").as[Long].collect().toSeq == Seq(5000000000L))
+  }
+
+  test("switching spark.sql.parquet.mergeSchema between two loads re-infers the schema") {
+    val dir = new File(tempFile().getParentFile, "merge")
+    Seq((1, 10)).toDF("id", "a").write.parquet(new File(dir, "p=1").getPath)
+    Seq((2, 20)).toDF("id", "b").write.parquet(new File(dir, "p=2").getPath)
+    val load = () => SourceLoaders.parquet(spark, dir.getPath)
+    assert(load().schema.fieldNames.toSet != Set("id", "a", "b", "p"))
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try {
+      val merged = load()
+      assert(merged.schema == spark.read.parquet(dir.getPath).schema)
+      assert(merged.schema.fieldNames.toSet == Set("id", "a", "b", "p"))
+    } finally spark.conf.unset("spark.sql.parquet.mergeSchema")
+    assert(load().schema == spark.read.parquet(dir.getPath).schema)
   }
 
   test("a deleted file fails the query as QUERY_FAILED and the executor as unhealthy") {

@@ -86,6 +86,60 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct"))
   }
 
+  test("a second s_ann_ivf_indexed serve reads its nlist stamp from the memoized schema") {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    SparkEntry.queries("s_ann_ivf_indexed")(spark, dir).collect()
+    var served: org.apache.spark.sql.DataFrame = null
+    // a missing stamp would fall back to a count job over the centroids
+    assert(TestSpark.jobsDuring { served = SparkEntry.queries("s_ann_ivf_indexed")(spark, dir) } == 0)
+    val centroids = served.queryExecution.analyzed.collect {
+      case r @ LogicalRelation(fs: HadoopFsRelation, _, _, _, _)
+          if fs.location.rootPaths.exists(_.getName == "centroids") => r
+    }
+    assert(centroids.nonEmpty)
+    centroids.foreach(r => assert(
+      r.output.find(_.name == "centId").get.metadata.contains("graft.nlist"), r.output))
+  }
+
+  test("final sort: a small result sorts in one partition, a 1-byte advisory size keeps the range exchange") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, RangePartitioning, SinglePartition}
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object aqe extends AdaptiveSparkPlanHelper
+    val advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    // d_sample_hash's rows in order, the exchange feeding the executed
+    // (adaptive) plan's root sort, and the jobs the run took, with the row
+    // built and run under `size` (the session default when None)
+    def run(size: Option[String]): (Seq[Row], Option[Partitioning], Int) = {
+      size.foreach(spark.conf.set(advisory, _))
+      try {
+        val df = SparkEntry.queries("d_sample_hash")(spark, dir)
+        var rows = Seq.empty[Row]
+        val jobs = TestSpark.jobsDuring { rows = df.collect().toSeq }
+        val plan = df.queryExecution.executedPlan
+        val exchange = aqe.collectFirst(plan) { case s: SortExec if s.global => s }
+          .flatMap(s => aqe.collectFirst(s.child) { case e: ShuffleExchangeExec => e.outputPartitioning })
+        (rows, exchange, jobs)
+      } finally size.foreach(_ => spark.conf.unset(advisory))
+    }
+    val (small, onePartition, smallJobs) = run(None)
+    val (large, range, largeJobs) = run(Some("1"))
+    assert(onePartition.contains(SinglePartition), onePartition)
+    assert(range.collect { case r: RangePartitioning => r.numPartitions }
+      .contains(spark.conf.get("spark.sql.shuffle.partitions").toInt), range)
+    // the range exchange's sampling job is the one job the small form drops
+    assert(smallJobs < largeJobs, s"one partition: $smallJobs jobs, range: $largeJobs jobs")
+    assert(small.nonEmpty)
+    assert(small == large)
+  }
+
+  test("final sort: a second construction of d_text_analysis runs no Spark job") {
+    SparkEntry.queries("d_text_analysis")(spark, dir)
+    assert(TestSpark.jobsDuring(SparkEntry.queries("d_text_analysis")(spark, dir)) == 0)
+  }
+
   test("hand-built star join broadcasts all three dims") {
     val p = planOf("q8_star_join")
     assert("BroadcastHashJoin".r.findAllIn(p).size >= 3, p.take(3000))
@@ -461,6 +515,28 @@ class PlanQualitySpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
+  /** The exchange feeding a registry row's root global sort: the one
+    * [[graft.ops.FinalSort]] sizes.
+    */
+  private def presentationExchange(plan: SparkPlan)
+      : Option[org.apache.spark.sql.execution.exchange.ShuffleExchangeExec] = {
+    import org.apache.spark.sql.execution.{InputAdapter, SortExec, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    def unwrap(p: SparkPlan): SparkPlan = p match {
+      case w: WholeStageCodegenExec => unwrap(w.child)
+      case i: InputAdapter => unwrap(i.child)
+      case other => other
+    }
+    unwrap(plan) match {
+      case s: SortExec if s.global => Some(unwrap(s.child)).collect { case e: ShuffleExchangeExec => e }
+      case _ => None
+    }
+  }
+
+  /** The plan below a row's root presentation sort and its exchange. */
+  private def belowPresentationSort(plan: SparkPlan): SparkPlan =
+    presentationExchange(plan).fold(plan)(_.child)
+
   test("pii scrub is one scan-stage projection: no shuffle, codegen'd, prune-friendly") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.WholeStageCodegenExec
@@ -604,8 +680,9 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(p.contains("BroadcastHashJoin"), p.take(3000))
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"))
     // the global budget's offsets window stays the only single-partition
-    // exchange (the final presentation orderBy is rangepartitioning)
-    val singles = plan.collect {
+    // exchange below the root presentation sort (whose own exchange
+    // FinalSort sizes)
+    val singles = belowPresentationSort(plan).collect {
       case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition => e }
     assert(singles.size == 1, p.take(3000))
   }
@@ -745,8 +822,15 @@ class PlanQualitySpec extends AnyFunSuite {
     import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
     for (name <- Seq("d_pipeline_pack", "d_mixture_sample", "d_pipeline_clean",
       "d_mixture_tokens", "d_curriculum", "d_length_quantiles")) {
-      val plan = nonAdaptivePlan(SparkEntry.queries(name)(spark, dir))
-      val singles = plan.collect {
+      val df = SparkEntry.queries(name)(spark, dir)
+      val plan = nonAdaptivePlan(df)
+      // the root presentation sort is one partition exactly when its
+      // input's size estimate fits one advisory-sized partition
+      val qe = df.queryExecution
+      assert(presentationExchange(plan).map(_.outputPartitioning == SinglePartition) ==
+        Some(qe.optimizedPlan.stats.sizeInBytes <= qe.sparkSession.sessionState.conf.getConf(
+          org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)), name)
+      val singles = belowPresentationSort(plan).collect {
         case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition => e }
       // pipeline_pack: quantile histogram total + cutoff window + two
       // prefix-sum offset windows; mixture (docs and tokens): the

@@ -43,7 +43,7 @@ class ResultCacheSpec extends AnyFunSuite {
     caches = caches)
 
   private def registry(file: File) =
-    SourceRegistry(Map(("pq", "items") -> SourceLoaders.parquet(spark, file.getPath)))
+    SourceRegistry(Map(("pq", "items") -> (() => SourceLoaders.parquet(spark, file.getPath))))
 
   /** A one-table engine over `file`, loaded through `SourceLoaders.parquet`. */
   private def engine(file: File): MultiDb =
