@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 import graft.sources.{SourceLoaders, TpchCatalog}
 import graft.types._
 import graft.ops.Materialize.MaterializeOps
+import graft.ops.Similarity.{Exhaustive, Ivf, IvfSharded, Lsh, Pq, Projected, Raw, Sq8}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -194,16 +195,16 @@ object SparkEntry {
         path)
     }
 
-  /** Per-JVM persisted IVF index (cells partitioned by centId + centroid
-    * table) — seeded quantizer so the s_ann_ivf oracle applies unchanged.
-    * Constant-cell-size sizing at BUILD time (the one place a corpus
-    * count belongs); serving reads the cell count back from the index's
-    * own centroid table, never from the store.
+  /** Per-JVM persisted IVF index (vectors partitioned by centId +
+    * centroid table) — seeded quantizer so the s_ann_ivf oracle applies
+    * unchanged. Constant-cell-size sizing at BUILD time (the one place a
+    * corpus count belongs); serving reads the cell count back from the
+    * index's stamp, never from the store.
     */
   private def ivfIndex(s: SparkSession, dir: String): String =
     annIndex(s, dir, "graft_ivf") { (corpus, path) =>
-      ops.Similarity.writeIvfIndex(corpus, path,
-        nCells = ops.Similarity.nlistForCorpus(embCount(s, dir)))
+      ops.Similarity.writeAnnIndex(corpus, path,
+        Ivf(nCells = ops.Similarity.nlistForCorpus(embCount(s, dir))), Raw)
     }
 
   /** Per-JVM persisted IVF index built from the TRAINED-centroid FIXTURE —
@@ -220,18 +221,18 @@ object SparkEntry {
     */
   private[graft] def trainedIvfIndex(s: SparkSession, dir: String): String =
     annIndex(s, dir, "graft_ivf_trained") { (corpus, path) =>
-      ops.Similarity.writeIvfIndex(corpus, path, nCells = 16,
-        centroids = Some(fixtureCentroids(s)))
+      ops.Similarity.writeAnnIndex(corpus, path,
+        Ivf(nCells = 16, centroids = Some(fixtureCentroids(s))), Raw)
     }
 
-  /** Per-JVM persisted SHARDED IVF index (cells laid out shard=…/centId=…,
-    * shard-keyed centroid table, meta stamp) — written once per sfDir;
+  /** Per-JVM persisted SHARDED IVF index (vectors laid out
+    * shard=…/centId=…, shard-keyed centroid table) — written once per sfDir;
     * assignment is deterministic, so the s_ann_ivf_sharded oracle applies
     * unchanged to the served path.
     */
   private def shardedIvfIndex(s: SparkSession, dir: String): String =
     annIndex(s, dir, "graft_ivf_sharded")(
-      ops.Similarity.writeIvfIndexSharded(_, _, nShards = 2))
+      ops.Similarity.writeAnnIndex(_, _, IvfSharded(nShards = 2), Raw))
 
   /** Per-JVM persisted SHARDED IVF index under the TRAINED per-shard
     * fixture quantizer (r19 — the r18 verdict's "sharded is seeded-only"
@@ -242,13 +243,13 @@ object SparkEntry {
     */
   private def shardedTrainedIvfIndex(s: SparkSession, dir: String): String =
     annIndex(s, dir, "graft_ivf_sharded_tr")(
-      ops.Similarity.writeIvfIndexSharded(_, _, nShards = 2,
-        centroids = Some(fixtureShardedCentroids(s))))
+      ops.Similarity.writeAnnIndex(_, _,
+        IvfSharded(nShards = 2, centroids = Some(fixtureShardedCentroids(s))), Raw))
 
   /** Per-JVM persisted plain-PQ index under the SEEDED corpus-sized
     * codebook (r19 — the kCode-amortization directive): since
     * kCodeForCorpus, the encode scan (corpus·m·kCode rows) dominates the
-    * in-flight pqTopK at one decade up (r18: 11.2 s in-flight vs ~2 s
+    * in-flight PQ row at one decade up (r18: 11.2 s in-flight vs ~2 s
     * served at sf1.0) — and encode output is BUILD state, a pure
     * function of (corpus, codebook). The s_ann_pq row serves from this
     * layout; results are identical to the in-flight form (deterministic
@@ -256,7 +257,8 @@ object SparkEntry {
     * oracle gates both.
     */
   private def pqSeededIndex(s: SparkSession, dir: String): String =
-    annIndex(s, dir, "graft_pq")(ops.Similarity.writePqIndex(_, _, m = 8, subDim = 8))
+    annIndex(s, dir, "graft_pq")(ops.Similarity.writeAnnIndex(_, _, Exhaustive,
+      Pq(m = 8, subDim = 8, kCode = ops.Similarity.kCodeForCorpus(embCount(s, dir)))))
 
   /** Per-JVM persisted IVF-PQ index under the SEEDED corpus-sized
     * quantizers (nlistForCorpus cells, kCodeForCorpus codebook — the
@@ -267,27 +269,31 @@ object SparkEntry {
     * oracle are unchanged.
     */
   private def ivfPqSeededIndex(s: SparkSession, dir: String): String =
-    annIndex(s, dir, "graft_ivfpq")(ops.Similarity.writeIvfPqIndex(_, _, m = 8, subDim = 8))
+    annIndex(s, dir, "graft_ivfpq") { (corpus, path) =>
+      val n = embCount(s, dir)
+      ops.Similarity.writeAnnIndex(corpus, path, Ivf(nCells = ops.Similarity.nlistForCorpus(n)),
+        Pq(m = 8, subDim = 8, kCode = ops.Similarity.kCodeForCorpus(n)))
+    }
 
   /** Per-JVM persisted IVF-PQ index under the TRAINED fixtures (k-means
     * centroids route, k-means codebook compresses) — codes and vectors
     * laid out centId=… so serving prunes both reads to probed cells;
-    * quantizers + corpus count ride the stamp. Deterministic given the
-    * committed fixtures, so the s_ann_ivfpq_trained oracle applies
-    * unchanged to the served path.
+    * quantizers persist beside them, spec + corpus count ride the stamp.
+    * Deterministic given the committed fixtures, so the
+    * s_ann_ivfpq_trained oracle applies unchanged to the served path.
     */
   private def ivfPqTrainedIndex(s: SparkSession, dir: String): String =
     annIndex(s, dir, "graft_ivfpq_trained")(
-      ops.Similarity.writeIvfPqIndex(_, _, m = 8, subDim = 8,
-        centroids = Some(fixtureCentroids(s)),
-        codebook = Some(fixtureCodebook(s))))
+      ops.Similarity.writeAnnIndex(_, _,
+        Ivf(nCells = 16, centroids = Some(fixtureCentroids(s))),
+        Pq(m = 8, subDim = 8, codebook = Some(fixtureCodebook(s)))))
 
   /** Per-JVM persisted SQ8 index (byte codes + range row + raw vectors) —
     * written once per sfDir; ranges and codes are byte-identical to the
     * in-flight build, so the s_ann_sq8 oracle applies unchanged.
     */
   private def sq8Index(s: SparkSession, dir: String): String =
-    annIndex(s, dir, "graft_sq8")(ops.Similarity.writeSq8Index(_, _))
+    annIndex(s, dir, "graft_sq8")(ops.Similarity.writeAnnIndex(_, _, Exhaustive, Sq8()))
 
   /** Per-JVM persisted JL projected index (rounded projections + raw
     * vectors) — written once per sfDir; projections are bit-identical to
@@ -295,7 +301,8 @@ object SparkEntry {
     */
   private def projectedIndex(s: SparkSession, dir: String): String =
     annIndex(s, dir, "graft_projected")(
-      ops.Similarity.writeProjectedIndex(_, _, outDims = 16, firstPlane = 100))
+      ops.Similarity.writeAnnIndex(_, _, Exhaustive,
+        Projected(outDims = 16, firstPlane = 100)))
 
   /** The non-empty lines of the committed resource fixture `/graft/<name>`,
     * split on single spaces.
@@ -319,7 +326,7 @@ object SparkEntry {
       parts.head.toInt -> parts.tail.map(_.toDouble).toSeq
     }
 
-  /** Fixture centroids as the (centId, cent_v, cent_n) frame [[ops.Similarity.ivfTopK]]
+  /** Fixture centroids as the (centId, cent_v, cent_n) frame [[ops.Similarity.Ivf]]
     * expects; cent_n recomputed with the same norm fold `kmeansCentroids`
     * uses, so serving math is identical to a live-trained frame.
     */
@@ -342,7 +349,7 @@ object SparkEntry {
     }
 
   /** Fixture sharded centroids as the (shard, centId, cent_v, cent_n)
-    * frame [[ops.Similarity.ivfShardedTopK]] expects; cent_n recomputed
+    * frame [[ops.Similarity.IvfSharded]] expects; cent_n recomputed
     * with the same norm fold the trainer used. Per-shard cell count =
     * rows/2 — the probe policy's input, like the unsharded fixture's
     * size pins its nCells.
@@ -367,7 +374,7 @@ object SparkEntry {
       (parts(0).toInt, parts(1).toInt, parts.drop(2).map(_.toDouble).toSeq)
     }
 
-  /** Fixture codebook as the (s, codeId, cb_sub) frame [[ops.Similarity.pqTopK]]
+  /** Fixture codebook as the (s, codeId, cb_sub) frame [[ops.Similarity.Pq]]
     * expects — swaps in frame-for-frame where the seeded codebook would be.
     */
   private[graft] def fixtureCodebook(sp: SparkSession): DataFrame = {
@@ -1139,10 +1146,10 @@ object SparkEntry {
     "s_ann_lsh" -> { (s, dir) =>
       val e = t(s, dir, "embeddings")
       val planes = ops.Similarity.planesForCorpus(embCount(s, dir), targetPerBucket = 32)
-      ops.Similarity.lshTopKBanded(
+      ops.Similarity.annTopK(
         e.where(col("vec_id") < 20).select(col("vec_id").as("qid"), col("embedding").as("vec")),
         e.select(col("vec_id").as("cid"), col("embedding").as("vec")),
-        k = 5, planesPerBand = planes, bands = 4).orderBy("qid", "rank")
+        5, Lsh(planesPerBand = planes, bands = 4), Raw).orderBy("qid", "rank")
     },
     // ---- ANN: banded LSH with query-side multi-probe (2 weakest-bit
     //      flips per band → 3 buckets probed per band); the corpus index
@@ -1151,10 +1158,10 @@ object SparkEntry {
     "s_ann_lsh_probed" -> { (s, dir) =>
       val e = t(s, dir, "embeddings")
       val planes = ops.Similarity.planesForCorpus(embCount(s, dir), targetPerBucket = 32)
-      ops.Similarity.lshTopKBanded(
+      ops.Similarity.annTopK(
         e.where(col("vec_id") < 20).select(col("vec_id").as("qid"), col("embedding").as("vec")),
         e.select(col("vec_id").as("cid"), col("embedding").as("vec")),
-        k = 5, planesPerBand = planes, bands = 4, probes = 2).orderBy("qid", "rank")
+        5, Lsh(planesPerBand = planes, bands = 4, probes = 2), Raw).orderBy("qid", "rank")
     },
     // ---- ANN: IVF scale path, corpus-adaptively sized — nlist from the
     //      constant-cell-size rule (nlistForCorpus: ~125 vectors/cell),
@@ -1165,22 +1172,22 @@ object SparkEntry {
     "s_ann_ivf" -> { (s, dir) =>
       val e = t(s, dir, "embeddings")
       val nCells = ops.Similarity.nlistForCorpus(embCount(s, dir))
-      ops.Similarity.ivfTopK(
+      ops.Similarity.annTopK(
         e.where(col("vec_id") < 20).select(col("vec_id").as("qid"), col("embedding").as("vec")),
         e.select(col("vec_id").as("cid"), col("embedding").as("vec")),
-        k = 5, nCells = nCells,
-        nProbe = ops.Similarity.nprobeForCells(nCells)).orderBy("qid", "rank")
+        5, Ivf(nCells = nCells, nProbe = ops.Similarity.nprobeForCells(nCells)), Raw)
+        .orderBy("qid", "rank")
     },
     // ---- ANN: the same IVF probe against a PERSISTED index — corpus
     //      written partitioned by centId (build-offline/serve-online);
     //      probing nprobe/nlist cells reads nprobe/nlist partition
     //      directories. nlist was sized at BUILD time; the serve path
-    //      derives nprobe from the index's own centroid table (nProbe =
+    //      derives nprobe from the nlist stamped on the index (nProbe =
     //      -1), so no sizing job touches the store. Identical results to
     //      s_ann_ivf → same oracle.
     "s_ann_ivf_indexed" -> { (s, dir) =>
       val e = t(s, dir, "embeddings")
-      ops.Similarity.ivfTopKIndexed(
+      ops.Similarity.serveAnnIndex(
         e.where(col("vec_id") < 20).select(col("vec_id").as("qid"), col("embedding").as("vec")),
         ivfIndex(s, dir), k = 5, nProbe = -1).orderBy("qid", "rank")
     },
@@ -1192,12 +1199,12 @@ object SparkEntry {
       val e = t(s, dir, "embeddings")
       // nlist here is a property of the committed MODEL (the fixture's
       // centroid count), not of the corpus; only the probe policy applies
-      ops.Similarity.ivfTopK(
+      ops.Similarity.annTopK(
         e.where(col("vec_id") < 20).select(col("vec_id").as("qid"), col("embedding").as("vec")),
         e.select(col("vec_id").as("cid"), col("embedding").as("vec")),
-        k = 5, nCells = fixtureCentroidRows.size,
-        nProbe = ops.Similarity.nprobeForCells(fixtureCentroidRows.size),
-        centroids = Some(fixtureCentroids(s))).orderBy("qid", "rank")
+        5, Ivf(nCells = fixtureCentroidRows.size,
+          nProbe = ops.Similarity.nprobeForCells(fixtureCentroidRows.size),
+          centroids = Some(fixtureCentroids(s))), Raw).orderBy("qid", "rank")
     },
     // ---- ANN: trained quantizer + PERSISTED index — training and cell
     //      assignment paid once at build; the probe reads 4/16 partition
@@ -1205,7 +1212,7 @@ object SparkEntry {
     //      fixture-parameterized oracle.
     "s_ann_ivf_trained_indexed" -> { (s, dir) =>
       val e = t(s, dir, "embeddings")
-      ops.Similarity.ivfTopKIndexed(
+      ops.Similarity.serveAnnIndex(
         e.where(col("vec_id") < 20).select(col("vec_id").as("qid"), col("embedding").as("vec")),
         trainedIvfIndex(s, dir), k = 5, nProbe = -1).orderBy("qid", "rank")
     },
@@ -1217,10 +1224,10 @@ object SparkEntry {
     //      oracle recomputes shard/cell/probe routing from count(*).
     "s_ann_ivf_sharded" -> { (s, dir) =>
       val e = t(s, dir, "embeddings")
-      ops.Similarity.ivfShardedTopK(
+      ops.Similarity.annTopK(
         e.where(col("vec_id") < 20).select(col("vec_id").as("qid"), col("embedding").as("vec")),
         e.select(col("vec_id").as("cid"), col("embedding").as("vec")),
-        k = 5, nShards = 2, corpusSize = embCount(s, dir)).orderBy("qid", "rank")
+        5, IvfSharded(nShards = 2, corpusSize = embCount(s, dir)), Raw).orderBy("qid", "rank")
     },
     // ---- ANN: the same sharded probe against a PERSISTED sharded index —
     //      cells laid out shard=…/centId=… (a probe reads probed
@@ -1229,7 +1236,7 @@ object SparkEntry {
     //      results to s_ann_ivf_sharded → same oracle.
     "s_ann_ivf_sharded_indexed" -> { (s, dir) =>
       val e = t(s, dir, "embeddings")
-      ops.Similarity.ivfTopKIndexedSharded(
+      ops.Similarity.serveAnnIndex(
         e.where(col("vec_id") < 20).select(col("vec_id").as("qid"), col("embedding").as("vec")),
         shardedIvfIndex(s, dir), k = 5, nProbe = -1).orderBy("qid", "rank")
     },
@@ -1242,11 +1249,11 @@ object SparkEntry {
     //      s_ann_ivf_trained convention, shard-keyed).
     "s_ann_ivf_sharded_trained" -> { (s, dir) =>
       val e = t(s, dir, "embeddings")
-      ops.Similarity.ivfShardedTopK(
+      ops.Similarity.annTopK(
         e.where(col("vec_id") < 20).select(col("vec_id").as("qid"), col("embedding").as("vec")),
         e.select(col("vec_id").as("cid"), col("embedding").as("vec")),
-        k = 5, nShards = 2,
-        centroids = Some(fixtureShardedCentroids(s))).orderBy("qid", "rank")
+        5, IvfSharded(nShards = 2, centroids = Some(fixtureShardedCentroids(s))), Raw)
+        .orderBy("qid", "rank")
     },
     // ---- ANN: the same trained-sharded probe against a PERSISTED
     //      sharded index (shard=…/centId=… layout, per-shard cell count
@@ -1254,7 +1261,7 @@ object SparkEntry {
     //      s_ann_ivf_sharded_trained → same oracle.
     "s_ann_ivf_sharded_trained_indexed" -> { (s, dir) =>
       val e = t(s, dir, "embeddings")
-      ops.Similarity.ivfTopKIndexedSharded(
+      ops.Similarity.serveAnnIndex(
         e.where(col("vec_id") < 20).select(col("vec_id").as("qid"), col("embedding").as("vec")),
         shardedTrainedIvfIndex(s, dir), k = 5, nProbe = -1).orderBy("qid", "rank")
     },
@@ -1270,18 +1277,18 @@ object SparkEntry {
     //      Since r19 this row runs the BUILD-THEN-SERVE composition (the
     //      r18 verdict's amortization directive): the corpus-sized encode
     //      (corpus·m·kCode rows — 10× at sf1.0 under kCode=160) is paid
-    //      once at writePqIndex and the query ADC-ranks the PERSISTED
+    //      once at index build and the query ADC-ranks the PERSISTED
     //      codes; encode is deterministic given the persisted codebook,
     //      so results and the count-adaptive oracle are unchanged. The
-    //      in-flight pqTopK remains the build-time/API form (OpsSpec pins
-    //      served ≡ in-flight). m = 8 is the mForCorpus floor at every
+    //      in-flight annTopK form remains the build-time/API form (OpsSpec
+    //      pins served ≡ in-flight). m = 8 is the mForCorpus floor at every
     //      gated scale (parity require below keeps drift loud).
     "s_ann_pq" -> { (s, dir) =>
       val e = t(s, dir, "embeddings")
       require(ops.Similarity.mForCorpus(embCount(s, dir)) == 8,
         "s_ann_pq oracle hardcodes m=8 subspaces; mForCorpus moved off the " +
           "floor at this corpus size — regenerate the oracle SQL for the new m")
-      ops.Similarity.pqTopKIndexed(
+      ops.Similarity.serveAnnIndex(
         e.where(col("vec_id") < 20).select(col("vec_id").as("qid"), col("embedding").as("vec")),
         pqSeededIndex(s, dir), k = 5, refine = -1)
         .orderBy("qid", "rank")
@@ -1292,10 +1299,10 @@ object SparkEntry {
     //      finishes — the 4x-compression tier between raw floats and PQ's 32x
     "s_ann_sq8" -> { (s, dir) =>
       val e = t(s, dir, "embeddings")
-      ops.Similarity.sq8TopK(
+      ops.Similarity.annTopK(
         e.where(col("vec_id") < 20).select(col("vec_id").as("qid"), col("embedding").as("vec")),
         e.select(col("vec_id").as("cid"), col("embedding").as("vec")),
-        k = 5, refine = ops.Similarity.refineForCandidates(embCount(s, dir)))
+        5, Exhaustive, Sq8(refine = ops.Similarity.refineForCandidates(embCount(s, dir))))
         .orderBy("qid", "rank")
     },
     // ---- ANN: PERSISTED SQ8 index — codes (1 B/dim on disk) + ranges +
@@ -1306,7 +1313,7 @@ object SparkEntry {
     //      stamp convention). Identical results to s_ann_sq8 → same oracle.
     "s_ann_sq8_indexed" -> { (s, dir) =>
       val e = t(s, dir, "embeddings")
-      ops.Similarity.sq8TopKIndexed(
+      ops.Similarity.serveAnnIndex(
         e.where(col("vec_id") < 20).select(col("vec_id").as("qid"), col("embedding").as("vec")),
         sq8Index(s, dir), k = 5, refine = -1).orderBy("qid", "rank")
     },
@@ -1319,13 +1326,13 @@ object SparkEntry {
       val n = embCount(s, dir)
       val nCells = ops.Similarity.nlistForCorpus(n)
       val nProbe = ops.Similarity.nprobeForCells(nCells)
-      ops.Similarity.ivfSq8TopK(
+      ops.Similarity.annTopK(
         e.where(col("vec_id") < 20).select(col("vec_id").as("qid"), col("embedding").as("vec")),
         e.select(col("vec_id").as("cid"), col("embedding").as("vec")),
-        k = 5, nCells = nCells, nProbe = nProbe,
+        5, Ivf(nCells = nCells, nProbe = nProbe),
         // the ranked pool here is the PROBED population, not the corpus
-        refine = ops.Similarity.refineForCandidates(
-          ops.Similarity.expectedProbed(n, nCells, nProbe)))
+        Sq8(refine = ops.Similarity.refineForCandidates(
+          ops.Similarity.expectedProbed(n, nCells, nProbe))))
         .orderBy("qid", "rank")
     },
     // ---- ANN, IVF-PQ composition: coarse cells route (corpus-sized
@@ -1333,7 +1340,7 @@ object SparkEntry {
     //      compress, ADC ranks ONLY inside probed cells, exact rescore
     //      finishes — the scan-pruning form of s_ann_pq
     //      Since r19: build-then-serve (the s_ann_pq amortization note
-    //      above) — writeIvfPqIndex pays the corpus-sized encode once
+    //      above) — the index build pays the corpus-sized encode once
     //      with the SAME seeded quantizers (nlistForCorpus cells,
     //      kCodeForCorpus codebook), and the serve derives nprobe from
     //      the stamped nlist and refine from the stamped corpus count —
@@ -1344,7 +1351,7 @@ object SparkEntry {
       require(ops.Similarity.mForCorpus(embCount(s, dir)) == 8,
         "s_ann_ivfpq oracle hardcodes m=8 subspaces; mForCorpus moved off " +
           "the floor at this corpus size — regenerate the oracle SQL for the new m")
-      ops.Similarity.ivfPqTopKIndexed(
+      ops.Similarity.serveAnnIndex(
         e.where(col("vec_id") < 20).select(col("vec_id").as("qid"), col("embedding").as("vec")),
         ivfPqSeededIndex(s, dir), k = 5)
         .orderBy("qid", "rank")
@@ -1355,12 +1362,12 @@ object SparkEntry {
     //      recomputes quantization from the same literal values
     "s_ann_pq_trained" -> { (s, dir) =>
       val e = t(s, dir, "embeddings")
-      ops.Similarity.pqTopK(
+      ops.Similarity.annTopK(
         e.where(col("vec_id") < 20).select(col("vec_id").as("qid"), col("embedding").as("vec")),
         e.select(col("vec_id").as("cid"), col("embedding").as("vec")),
-        k = 5, m = 8, subDim = 8, kCode = 16,
-        refine = ops.Similarity.refineForCandidates(embCount(s, dir)),
-        codebook = Some(fixtureCodebook(s))).orderBy("qid", "rank")
+        5, Exhaustive, Pq(m = 8, subDim = 8, kCode = 16,
+          refine = ops.Similarity.refineForCandidates(embCount(s, dir)),
+          codebook = Some(fixtureCodebook(s)))).orderBy("qid", "rank")
     },
     // ---- ANN: the FULLY-trained IVF-PQ composition — trained coarse
     //      quantizer routes, trained codebook compresses; both committed
@@ -1371,15 +1378,14 @@ object SparkEntry {
       // grows with the corpus, so the refine budget sizes from it
       val nCells = fixtureCentroidRows.size
       val nProbe = ops.Similarity.nprobeForCells(nCells)
-      ops.Similarity.ivfPqTopK(
+      ops.Similarity.annTopK(
         e.where(col("vec_id") < 20).select(col("vec_id").as("qid"), col("embedding").as("vec")),
         e.select(col("vec_id").as("cid"), col("embedding").as("vec")),
-        k = 5, nCells = nCells, nProbe = nProbe,
-        m = 8, subDim = 8, kCode = 16,
-        refine = ops.Similarity.refineForCandidates(
-          ops.Similarity.expectedProbed(embCount(s, dir), nCells, nProbe)),
-        centroids = Some(fixtureCentroids(s)),
-        codebook = Some(fixtureCodebook(s))).orderBy("qid", "rank")
+        5, Ivf(nCells = nCells, nProbe = nProbe, centroids = Some(fixtureCentroids(s))),
+        Pq(m = 8, subDim = 8, kCode = 16,
+          refine = ops.Similarity.refineForCandidates(
+            ops.Similarity.expectedProbed(embCount(s, dir), nCells, nProbe)),
+          codebook = Some(fixtureCodebook(s)))).orderBy("qid", "rank")
     },
     // ---- ANN: the TRAINED IVF-PQ pipeline served from a PERSISTED index
     //      (r18) — routing state IS index state: centroids, codebook,
@@ -1390,7 +1396,7 @@ object SparkEntry {
     //      results to s_ann_ivfpq_trained → same oracle.
     "s_ann_ivfpq_trained_indexed" -> { (s, dir) =>
       val e = t(s, dir, "embeddings")
-      ops.Similarity.ivfPqTopKIndexed(
+      ops.Similarity.serveAnnIndex(
         e.where(col("vec_id") < 20).select(col("vec_id").as("qid"), col("embedding").as("vec")),
         ivfPqTrainedIndex(s, dir), k = 5).orderBy("qid", "rank")
     },
@@ -1402,15 +1408,14 @@ object SparkEntry {
       val e = t(s, dir, "embeddings")
       val nCells = fixtureCentroidRows.size
       val nProbe = ops.Similarity.nprobeForCells(nCells)
-      ops.Similarity.ivfPqResidualTopK(
+      ops.Similarity.annTopK(
         e.where(col("vec_id") < 20).select(col("vec_id").as("qid"), col("embedding").as("vec")),
         e.select(col("vec_id").as("cid"), col("embedding").as("vec")),
-        k = 5, nCells = nCells, nProbe = nProbe,
-        m = 8, subDim = 8, kCode = 16,
-        refine = ops.Similarity.refineForCandidates(
-          ops.Similarity.expectedProbed(embCount(s, dir), nCells, nProbe)),
-        centroids = Some(fixtureCentroids(s)),
-        codebook = Some(fixtureResidualCodebook(s))).orderBy("qid", "rank")
+        5, Ivf(nCells = nCells, nProbe = nProbe, centroids = Some(fixtureCentroids(s))),
+        Pq(m = 8, subDim = 8, kCode = 16,
+          refine = ops.Similarity.refineForCandidates(
+            ops.Similarity.expectedProbed(embCount(s, dir), nCells, nProbe)),
+          codebook = Some(fixtureResidualCodebook(s)), residual = true)).orderBy("qid", "rank")
     },
     // ---- multimodal: REAL PNG decode (javax.imageio) via mapPartitions —
     //      fixture PNGs are deterministic pixel functions of (x, y, id),
@@ -2871,27 +2876,27 @@ object SparkEntry {
     //      projected rank noise the cut absorbs scales with the corpus)
     "s_ann_projected" -> { (s, dir) =>
       val e = t(s, dir, "embeddings")
-      ops.Similarity.projectedTopK(
+      ops.Similarity.annTopK(
         e.where(col("vec_id") < 20)
           .select(col("vec_id").as("qid"), col("embedding").as("vec")),
         e.select(col("vec_id").as("cid"), col("embedding").as("vec")),
-        k = 5, outDims = 16,
-        refine = ops.Similarity.refineForCandidates(embCount(s, dir)),
-        firstPlane = 100).orderBy("qid", "rank")
+        5, Exhaustive, Projected(outDims = 16, firstPlane = 100,
+          refine = ops.Similarity.refineForCandidates(embCount(s, dir))))
+        .orderBy("qid", "rank")
     },
     // ---- ANN: PERSISTED JL projected index — rounded 16-dim projections
     //      (what serving scans: outDims/64 of the raw ranking I/O) +
     //      vectors written once; projections are bit-identical to the
     //      in-flight build, so results equal s_ann_projected → same oracle.
-    //      refine = -1 sizes the budget from the corpus count persisted
-    //      in the index meta (zero jobs over the store at serve time)
+    //      refine = -1 sizes the budget from the corpus count stamped on
+    //      the index (zero jobs over the store at serve time)
     "s_ann_projected_indexed" -> { (s, dir) =>
       val e = t(s, dir, "embeddings")
-      ops.Similarity.projectedTopKIndexed(
+      ops.Similarity.serveAnnIndex(
         e.where(col("vec_id") < 20)
           .select(col("vec_id").as("qid"), col("embedding").as("vec")),
-        projectedIndex(s, dir), k = 5, outDims = 16, refine = -1,
-        firstPlane = 100).orderBy("qid", "rank")
+        projectedIndex(s, dir), k = 5, refine = -1,
+        expect = Some(Projected(outDims = 16, firstPlane = 100))).orderBy("qid", "rank")
     },
     // ---- alignment-robust passage pairs: winnowing fingerprints (MOSS)
     //      catch shared passages at ANY offset — the recall the aligned
@@ -6479,7 +6484,7 @@ object SparkEntry {
          |SELECT sa AS "srcA", sb AS "srcB",
          |  round(CAST(neq AS DOUBLE) / 32.0, 6) AS est_jaccard
          |FROM pr ORDER BY 1, 2""".stripMargin,
-    // Mirrors Similarity.lshTopKBanded under constant-occupancy sizing:
+    // Mirrors annTopK(Lsh, Raw) under constant-occupancy sizing:
     // 4 bands of planesForCorpus(count(*), target 32) planes — the SQL
     // recomputes the rule from the corpus count (OracleFrag.adaptive*) —
     // union of band matches, exact cosine, rank over (sim DESC, cid).
@@ -6497,7 +6502,7 @@ object SparkEntry {
          |SELECT qid, cid, sim,
          |  CAST(row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS INT) AS rank
          |FROM sc QUALIFY rank <= 5 ORDER BY qid, rank""".stripMargin,
-    // Mirrors Similarity.lshTopKBanded with probes=2 under the same
+    // Mirrors annTopK(Lsh(probes = 2), Raw) under the same
     // adaptive sizing: the query side probes the exact bucket plus the 2
     // weakest-|dot| bit flips per band (OracleFrag.adaptiveProbeCtes =
     // the probeBuckets flip arithmetic with planes a runtime variable);
@@ -6516,7 +6521,7 @@ object SparkEntry {
          |SELECT qid, cid, sim,
          |  CAST(row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS INT) AS rank
          |FROM sc QUALIFY rank <= 5 ORDER BY qid, rank""".stripMargin,
-    // Mirrors Similarity.ivfTopK: seeded centroids (the nlist smallest
+    // Mirrors annTopK(Ivf, Raw): seeded centroids (the nlist smallest
     // ids, nlist count-adaptive), cosine argmin assignment, constant-
     // fraction probe, exact top-k inside probed cells.
     "s_ann_ivf" -> ivfOracleSql,
@@ -6533,7 +6538,7 @@ object SparkEntry {
     "s_ann_ivf_sharded_indexed" -> shardedIvfOracleSql,
     "s_ann_ivf_sharded_trained" -> shardedTrainedIvfOracleSql,
     "s_ann_ivf_sharded_trained_indexed" -> shardedTrainedIvfOracleSql,
-    // Mirrors Similarity.pqTopK stage-for-stage: seeded codebook, per-
+    // Mirrors annTopK(Exhaustive, Pq) stage-for-stage: seeded codebook, per-
     // subspace L2 encode (d2 = c·c − 2c·b + b·b, same fold order), ADC
     // table with round(·,9) decimal sums, count-adaptive refine cut, exact rescore.
     "s_ann_pq" ->
@@ -6576,7 +6581,7 @@ object SparkEntry {
     // The persisted layout serves byte-identical ranges + codes, so the
     // indexed path carries the same oracle (the s_ann_ivf_indexed rule)
     "s_ann_sq8_indexed" -> sq8OracleSql,
-    // Mirrors Similarity.ivfSq8TopK: the s_ann_ivf routing CTEs (count-
+    // Mirrors annTopK(Ivf, Sq8): the s_ann_ivf routing CTEs (count-
     // adaptive nlist/nprobe) feed the s_ann_sq8 quantization CTEs — ax
     // ranks ONLY routed (qid, cid) pairs, then the same count-adaptive refine +
     // exact rescore
@@ -6628,7 +6633,7 @@ object SparkEntry {
          |SELECT qid, cid, sim,
          |  CAST(row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS INT) AS rank
          |FROM sc QUALIFY rank <= 5 ORDER BY qid, rank""".stripMargin,
-    // Mirrors Similarity.ivfPqTopK: the s_ann_ivf routing CTEs (count-
+    // Mirrors annTopK(Ivf, Pq): the s_ann_ivf routing CTEs (count-
     // adaptive seeded cells, argmin assignment, constant-fraction probe)
     // feed the s_ann_pq ADC CTEs — ax aggregates ONLY routed (qid, cid)
     // pairs, then the count-adaptive refine + rescore. The PQ codebook is

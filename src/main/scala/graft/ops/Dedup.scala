@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops.Materialize.MaterializeOps
 import graft.functions.TextFunctions
-import graft.sources.SourceLoaders
 
 /** Deduplication operators for training-data pipelines: exact, MinHash+LSH,
   * SimHash, and n-gram Jaccard. Designed for the 100 TB path:
@@ -1141,8 +1140,9 @@ object Dedup {
       .select(col("doc_id").as(idCol), col("cell"))
   }
 
-  /** SemDeDup over a PERSISTED cell layout ([[Similarity.writeIvfIndex]]:
-    * the corpus written PARTITIONED BY coarse cell) — the 100 TB serving
+  /** SemDeDup over a PERSISTED cell layout ([[Similarity.writeAnnIndex]]
+    * with an [[Similarity.Ivf]] router: the corpus written PARTITIONED BY
+    * coarse cell) — the 100 TB serving
     * shape of [[semanticDedup]]: the quantizer argmax is paid ONCE at
     * index-build time, and the within-cell pair stage reads cells from
     * their own partition directories (the self-join's equi-key IS the
@@ -1153,7 +1153,7 @@ object Dedup {
     */
   def semanticDedupIndexed(spark: org.apache.spark.sql.SparkSession,
       path: String, idCol: String, threshold: Double): DataFrame = {
-    val cells = SourceLoaders.parquet(spark, s"$path/cells")
+    val cells = Similarity.annIndexCells(spark, path)
     val assigned = cells.select(col("cid").as("doc_id"),
         transform(col("vec"), x => x.cast("double")).as("v"),
         col("centId").as("cell"))

@@ -1,21 +1,38 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions.dot_product
 import graft.sources.SourceLoaders
 
-/** Similarity search over an embedding column (`array<float>`), two tiers:
+/** Similarity search over an embedding column (`array<float>`).
   *
-  *  - brute-force cosine top-k — the exactness baseline. The corpus side is
-  *    broadcast when small; at scale the query side fans out per partition,
-  *    so the join is embarrassingly parallel (no shuffle of the corpus).
-  *  - LSH-bucketed ANN — random-hyperplane signs bucket vectors; only
-  *    same-bucket candidates are scored. Hyperplane coefficients are a
-  *    deterministic constant-folded ±1 literal matrix (data-independent,
-  *    reproducible, no stored model). The scale path: shuffle keys are
-  *    small ints, candidate sets shrink ~2^planes-fold.
+  * Every ANN tier is one pipeline of three parts, named by a spec:
+  *  - a [[Similarity.Router]] picks candidate (qid, cid) pairs: banded
+  *    hyperplane [[Similarity.Lsh]], coarse cells ([[Similarity.Ivf]], or
+  *    [[Similarity.IvfSharded]] past the one-index broadcast ceiling), or
+  *    [[Similarity.Exhaustive]] (every pair);
+  *  - a [[Similarity.Codec]] ranks the candidates on a compressed form and
+  *    cuts each query's list to `refine`: [[Similarity.Pq]] (ADC over
+  *    per-subspace codes, optionally on cell residuals), [[Similarity.Sq8]]
+  *    (one byte per dimension), [[Similarity.Projected]] (JL sign
+  *    projection), or [[Similarity.Raw]] (no cut);
+  *  - one exact cosine rescore keeps the per-query top-k.
+  * [[Similarity.annTopK]] runs a spec in flight; [[Similarity.writeAnnIndex]]
+  * persists the router state (centroids, cells as partition directories),
+  * the codec state (codes, codebook, ranges or projections) and the
+  * vectors; [[Similarity.serveAnnIndex]] rebuilds the spec from the index
+  * and runs it with every cid-keyed read pruned to the probed cells.
+  * [[Similarity.bruteForceTopK]] is the exact reference.
+  *
+  * The stamp rule: an index carries every spec parameter and sizing
+  * integer (`graft.router`, `graft.codec`, `graft.nlist`, …,
+  * `graft.corpusCount`) as schema metadata on the `cid` field of its
+  * `vectors` table, in every layout. Parquet keeps field metadata, and the
+  * serve reads it from the memoized schema ([[SourceLoaders.parquet]]), so
+  * sizing a probe or a refine budget runs no Spark job. An index without
+  * the stamp RAISES instead of guessing a policy.
   *
   * The inner product is a custom codegen'd Catalyst expression
   * (graft.functions.DotProduct) — Spark's HOF fold is CodegenFallback and
@@ -338,7 +355,7 @@ object Similarity {
     * still 16× under raw floats), the ADC scan is m lookups/candidate
     * (linear in m), and the build-time encode is corpus·m·kCode rows —
     * which is why the serving story for this rule is the PERSISTED
-    * index family ([[writePqIndex]]/[[writeIvfPqIndex]]): encode is
+    * index ([[writeAnnIndex]] with a [[Pq]] codec): encode is
     * build state, paid once. Endpoint: m caps at `dims` (subDim = 1 —
     * 256-level per-dimension codes, which IS the SQ8 tier with a trained
     * codebook per dim); past that point the family has no finer PQ dial
@@ -485,9 +502,17 @@ object Similarity {
       .where(col("rank") <= k)
   }
 
-  /** ANN top-k via banded hyperplane LSH (OR-amplification): a candidate
-    * is scored if it shares ANY of `bands` independent
-    * `planesPerBand`-bit buckets with the query.
+  // --------------------------------------------------------------------
+  // The spec: a router picks candidate pairs, a codec ranks them and cuts
+  // each query's list to `refine`, one exact cosine rescore finishes.
+
+  /** Where candidate (qid, cid) pairs come from. */
+  sealed trait Router
+
+  /** Banded hyperplane LSH (OR-amplification): a candidate is scored if it
+    * shares ANY of `bands` independent `planesPerBand`-bit buckets with the
+    * query; `probes` adds query-side multi-probe bit flips per band. One
+    * band is single-table LSH.
     *
     * The two knobs trade recall against bucket size — recall ≈
     * 1-(1-(1-θ/π)^planesPerBand)^bands (measured on the sf0.01 fixture:
@@ -503,57 +528,435 @@ object Similarity {
     *  - candidate shuffle stays id-only either way — vectors re-join
     *    AFTER pair dedup, so widening bands never ships vectors per band.
     */
-  def lshTopKBanded(
-      queries: DataFrame, // (qid, vec)
-      corpus: DataFrame,  // (cid, vec)
-      k: Int = 10,
-      planesPerBand: Int = 4,
-      bands: Int = 4,
-      probes: Int = 0, // query-side multi-probe bit flips per band
-  ): DataFrame = {
-    // band shuffle carries ids only; vectors re-join after pair dedup (the
-    // per-side frames are small relative to candidate rows — AQE broadcasts).
-    // Banding runs through the one-pass bucket kernel (bit-identical to the
-    // defining hyperplaneBucket folds — BandKernelSpec).
+  final case class Lsh(planesPerBand: Int = 4, bands: Int = 4, probes: Int = 0)
+      extends Router
+
+  /** IVF (inverted-file) routing: coarse-quantize the corpus into `nCells`
+    * cells — each vector assigned to its nearest centroid by cosine — and
+    * pair each query with the `nProbe` nearest cells (-1 = the
+    * [[nprobeForCells]] policy). The classic candidate-cut shape: corpus
+    * scan cost is one broadcast-centroid pass, the probe join touches
+    * ~nProbe/nCells of the corpus, and cells are hash-partitionable on
+    * centId at any scale.
+    *
+    * The quantizer is SEEDED by default (centroids = the corpus vectors
+    * with the `nCells` smallest ids): deterministic, so the DuckDB oracle
+    * mirrors assignment + probing exactly. `centroids` swaps in a trained
+    * `(centId, cent_v, cent_n)` frame ([[kmeansCentroids]] or a committed
+    * fixture) without touching the plumbing (a trained quantizer is not
+    * oracle-expressible, which is why the seeded one is the gated
+    * variant); `nCells` then sizes only the probe and refine policies.
+    */
+  final case class Ivf(nCells: Int = 16, nProbe: Int = 4,
+      centroids: Option[DataFrame] = None) extends Router
+
+  /** Sharded IVF — the 100 TB path PAST the single-index broadcast
+    * ceiling: hash-partition the corpus into `nShards` shards, build an
+    * independent constant-cell IVF index per shard
+    * ([[shardedSeededCentroids]]), rank ALL shards' cells together and
+    * probe the `nShards·nProbe` globally best per query.
+    *
+    * [[nlistForCorpus]]'s maxNlist (2²⁰ cells ≈ 0.5 GiB of broadcast
+    * centroids) bounds one index at ~131M vectors under the constant-cell
+    * rule; a corpus of billions of embeddings must be hash-partitioned
+    * into shards, each carrying its OWN constant-cell index, with probes
+    * fanning out per shard and one global exact re-rank at the end. Every
+    * stage stays the single-index shape: centroids broadcast PER SHARD
+    * (each under the ceiling), assignment is an argmax aggregate, the
+    * candidate shuffle carries ids only.
+    *
+    * Recall shape (r20 — MEASURED, not assumed): the r18 design probed
+    * the top `nProbe` cells in EVERY shard, on the argument that each
+    * shard is a uniform 1/nShards sample; RecallX100 refuted it at the
+    * 100× decade (equal allocation 0.908/0.853/0.837 at nShards 2/4/8
+    * seeded vs 0.976 unsharded; trained x2 0.840 vs 1.000) — a query's
+    * neighbor mass is NOT uniform across shards, so the hot shard's
+    * per-shard probe list truncates while cold shards burn probes. The
+    * fix is two-part (both measured): ONE global probe list of
+    * `nShards·nProbe` cells over the union of per-shard quantizers
+    * (restores the unsharded router's cell CHOICE — necessary but
+    * measured insufficient alone), plus the [[nprobeShardedForCells]]
+    * shard-count term (the equal-budget residual is the per-shard
+    * ASSIGNMENT restriction; the term's ×2.5/×3/×3.5 at nShards 2/4/8
+    * measured seeded 0.987/0.997/≥0.993 vs 0.976 unsharded, trained
+    * 0.984 at x2 vs the 1.000 unsharded-trained bar). Cost shape:
+    * candidates per query ≈ nShards · nProbe · cellSize =
+    * (4+log2 nShards)/2 × the unsharded probed fraction — the explicit
+    * price of held recall under sharding; what sharding buys
+    * is each shard's centroid table staying under the broadcast ceiling,
+    * the assignment scan scoring only |corpus|·perShardCells rows
+    * (≈ 1/nShards of the unsharded scan — the measured 354→77→34→22 s
+    * cost slide across nShards 1/2/4/8 at the 100× decade), and index
+    * builds/rebuilds parallelizing per shard.
+    *
+    * `nCells`/`nProbe` default to -1 = sized by [[nlistForCorpus]] /
+    * [[nprobeShardedForCells]] from the EXPECTED SHARD population
+    * `ceil(corpusSize/nShards)` (corpusSize -1 = one count job; pass the
+    * known count to avoid it). `centroids` swaps in a trained per-shard
+    * quantizer frame (shard, centId, cent_v, cent_n) —
+    * [[shardedKmeansCentroids]] or a committed fixture — without touching
+    * the assignment/probe/re-rank plumbing; the per-shard cell count
+    * (and the probe policy) then derive from the FRAME, and every
+    * quantizer is validated shard-complete/even before use: supplied
+    * frames through the full [[requireShardedCentroids]] check, the
+    * seeded deal through one count() over its pushed-down scan (r19
+    * advisor — count == nShards·nCells over distinct non-negative ids
+    * below that bound implies exactly ids 0..bound-1). A contiguous
+    * corpus SMALLER than the rule's deal clamps nCells to n/nShards —
+    * the smaller quantizer, not a misleading raise.
+    */
+  final case class IvfSharded(nShards: Int = 2, nCells: Int = -1,
+      nProbe: Int = -1, centroids: Option[DataFrame] = None,
+      corpusSize: Long = -1L) extends Router
+
+  /** Every (query, corpus) pair — for codecs small enough to scan whole:
+    * memory shrinks by the codec's ratio, scan work does not. */
+  case object Exhaustive extends Router
+
+  /** How candidates are ranked before the exact rescore, and how many of
+    * each query's candidates (`refine`; -1 = [[refineForCandidates]] of
+    * the router's expected pool) survive to it. */
+  sealed trait Codec
+
+  /** No compressed ranking: every routed candidate is rescored exactly. */
+  case object Raw extends Codec
+
+  /** Product quantization (PQ/ADC): compress each corpus vector to `m`
+    * one-byte codes — per `subDim`-dim subspace, the id of its nearest
+    * codebook centroid — rank candidates by the asymmetric-distance sum of
+    * per-subspace query·centroid dots, exact-rescore the top `refine`. THE
+    * memory lever at 100 TB: a 64-dim float vector (256 B) becomes `m`
+    * bytes (32× smaller), so the candidate scan touches codes, not
+    * vectors, and the shuffle carries (id, subspace, code) ints only.
+    *
+    * The codebook is SEEDED by default (centroids = sub-vectors of the
+    * `kCode` smallest-id corpus vectors): deterministic, so the DuckDB
+    * oracle recomputes encode + ADC + refine exactly; `codebook` swaps in a
+    * trained `(s, codeId, cb_sub)` frame ([[pqTrainedCodebook]]).
+    *
+    * ADC sums are decimal-accumulated over per-subspace dots rounded to 9
+    * decimals — bit-reproducible across engines, so the refine cutoff can
+    * never drift from the oracle.
+    *
+    * Under a cell router the codes are non-residual by default: one
+    * codebook serves all cells, so routing changes WHICH codes are
+    * scanned, never the codes themselves. `residual` (IVFADC, Jegou et al.
+    * 2011) quantizes vec − assigned centroid instead and ranks by
+    * dot(q, centroid) + Σ_s dot(q_sub, cb_s) — one broadcast qcent term per
+    * (query, cell) plus the same lookup table. At equal bits the codebook
+    * spans the residual cloud instead of the whole corpus spread, so
+    * ranking is finer and recall ≥ the non-residual form (pinned by
+    * OpsSpec on the fixture); pass [[pqResidualCodebook]]'s frame.
+    */
+  final case class Pq(m: Int = 8, subDim: Int = 8, kCode: Int = 16,
+      refine: Int = 30, codebook: Option[DataFrame] = None,
+      residual: Boolean = false) extends Codec
+
+  /** Scalar quantization (SQ8): compress each corpus dimension to ONE
+    * byte — code = ⌊(x − lo_d) / step_d⌋ clamped to [0, 255], with
+    * per-dimension ranges [lo_d, hi_d) from one corpus aggregate and
+    * step_d = (hi_d − lo_d)/256 — then rank candidates by the exact dot
+    * against the BUCKET-MIDPOINT reconstruction (lo_d + (code+0.5)·step_d,
+    * the asymmetric-distance convention: the query stays full-precision).
+    * The compression tier between raw floats and PQ: 4× (float32→byte)
+    * with near-exact ranking — each dimension keeps 256 levels where PQ's
+    * 16-centroid codebook keeps 16 levels per 8-dim SUBSPACE — so SQ8
+    * needs a far smaller refine budget for the same recall (FAISS's SQ8
+    * vs PQ trade).
+    *
+    * Deterministic end-to-end (min/max are order-independent, floor and
+    * the midpoint decode are exact double arithmetic), so the DuckDB
+    * oracle recomputes ranges → codes → reconstruction → refine
+    * bit-for-bit; the approximate dot rounds to 9 decimals and ranks as
+    * DECIMAL so the refine cutoff can never drift between engines. Ranges
+    * come from the WHOLE corpus, so under a cell router routing changes
+    * which codes are scanned, never the codes, and probing every cell
+    * reproduces the exhaustive form exactly (pinned in OpsSpec).
+    */
+  final case class Sq8(refine: Int = 30) extends Codec
+
+  /** JL project-then-rescore: candidates rank by PROJECTED-space cosine —
+    * an `outDims/64`-cost ranking dot against [[signProject]]'s
+    * deterministic matrix from plane `firstPlane` — and the refine best
+    * per query rescore exactly in full space (the SQ8 coarse-then-refine
+    * composition one compression family over: quantize bytes vs project
+    * dimensions). Projected vectors are the ROUNDED signProject output, so
+    * a serve ranking against the persisted projections lands on identical
+    * candidates. A zero-norm projection scores −2 (below every cosine)
+    * instead of NULL-ranking nondeterministically.
+    */
+  final case class Projected(outDims: Int = 16, firstPlane: Int = 100,
+      refine: Int = 30) extends Codec
+
+  /** ANN top-k in flight: route, rank and cut with the codec, rescore
+    * exactly. Output `(qid, cid, sim, rank)`, ties broken by cid. */
+  def annTopK(queries: DataFrame, corpus: DataFrame, k: Int, router: Router,
+      codec: Codec): DataFrame = {
+    requireSpec(router, codec)
+    val c = prep(corpus, "cid")
+    val q = prep(queries, "qid")
+    lazy val n = corpusCount(router, corpus)
+    val cells = resolveCells(router, c, n)
+    val assigned = cells.map(assign(c, _))
+    // keep=1 assignment puts each cid in exactly one cell and the probe
+    // emits distinct (qid, cell) rows, so cell-routed pairs are already
+    // unique — no distinct() exchange (r21)
+    val pairs = router match {
+      case r: Lsh => Some(lshPairs(q, c, r))
+      case _ => cells.map(cl => probe(q, cl).join(assigned.get, cl.keys)
+        .where(col("qid") =!= col("cid")).select("qid", "cid", "centId"))
+    }
+    val tables = encode(codec, c, corpus, cells, assigned)
+    rescoreTopK(rankAndCut(codec, q, queries, pairs, cells, tables, n),
+      queries, corpus, k)
+  }
+
+  /** Persist an ANN index — the build-offline / serve-online split: cell
+    * assignment and encode are paid once here, and [[serveAnnIndex]]
+    * never re-derives them (ROUTING STATE IS INDEX STATE: a serve that
+    * re-derived cells or codes from seeds against a drifted corpus would
+    * rank in a different quantization than the codes were written in, a
+    * silent-recall bug). The layout under `path`:
+    *  - `vectors` — `(cid, vec)`, laid out `centId=…` (Ivf) or
+    *    `shard=…/centId=…` (IvfSharded) so a probe reads only the probed
+    *    cell directories; its `cid` field carries the stamp;
+    *  - `centroids` — the cell routers' quantizer;
+    *  - the codec state: `codes` + `codebook` (Pq), `codes` + `ranges`
+    *    (Sq8) or `projected` (Projected); every cid-keyed table is laid
+    *    out like the vectors.
+    * What a serve SCANS to rank is the codec table — `m` small ints per
+    * vector (Pq), one byte per dimension (Sq8) or `outDims/64` of the raw
+    * floats (Projected) — while full-precision vectors are read only for
+    * the refine survivors. Results of a serve equal [[annTopK]] with the
+    * same spec (assignment and encode are deterministic), so one DuckDB
+    * oracle gates both.
+    */
+  def writeAnnIndex(corpus: DataFrame, path: String, router: Router,
+      codec: Codec): Unit = {
+    requireSpec(router, codec)
+    require(!router.isInstanceOf[Lsh],
+      "an Lsh router has no persisted layout: index with Ivf, IvfSharded or Exhaustive")
+    val c = prep(corpus, "cid")
+    lazy val n = corpusCount(router, corpus)
+    val cells = resolveCells(router, c, n)
+    val assigned = cells.map(assign(c, _))
+    // the stamp records the quantizer's actual size: a corpus smaller
+    // than nCells seeds fewer cells
+    val built = cells match {
+      case Some(cl) if cl.sharded => IvfSharded(cl.nShards, cl.nCells)
+      case Some(cl) => Ivf(cl.cent.count().toInt)
+      case None => Exhaustive
+    }
+    val stamp = stampOf(built, codec, if (codec == Raw) None else Some(n))
+    val keys = cells.fold(Seq.empty[String])(_.keys)
+    def write(name: String, t: DataFrame): Unit =
+      if (!t.columns.contains("cid")) t.write.parquet(s"$path/$name")
+      else assigned.fold(t)(t.join(_, "cid"))
+        .write.partitionBy(keys: _*).parquet(s"$path/$name")
+    write("vectors", corpus.select(col("cid").as("cid", stamp), col("vec")))
+    cells.foreach(cl => write("centroids", cl.cent))
+    encode(codec, c, corpus, cells, assigned).foreach { case (name, t) => write(name, t) }
+  }
+
+  /** Serve a [[writeAnnIndex]] layout: rebuild the spec from the index's
+    * stamp, probe the persisted centroids, read only the probed cell
+    * directories of every cid-keyed table, rank the persisted codec
+    * state, and rescore exactly against the persisted vectors.
+    *
+    * `nProbe = -1` applies the router's probe policy ([[nprobeForCells]],
+    * or [[nprobeShardedForCells]] per shard) to the STAMPED cell count;
+    * `refine = -1` sizes the budget with [[refineForCandidates]] from the
+    * STAMPED corpus count (the probed population under a cell router, the
+    * corpus otherwise) — zero jobs over the store. `refine` defaults to
+    * -1 because the fixed 30 it replaced measured a recall decay of
+    * 0.236 → 0.047 across corpus decades. `expect` names the codec
+    * the caller ranks with: a stamp built with other parameters raises
+    * instead of silently ranking in the wrong space. An index without the
+    * stamp RAISES: guessing a policy silently serves wrong recall.
+    */
+  def serveAnnIndex(queries: DataFrame, path: String, k: Int = 10,
+      nProbe: Int = -1, refine: Int = -1,
+      expect: Option[Codec] = None): DataFrame = {
+    val spark = queries.sparkSession
+    val st = readStamp(spark, path, nProbe, refine)
+    expect.foreach(e => require(
+      codecKind(e) == codecKind(st.codec) && codecInts(e) == codecInts(st.codec),
+      s"ANN index at $path was built with ${describe(st.codec)}, caller passed ${describe(e)}"))
+    def load(name: String) = SourceLoaders.parquet(spark, s"$path/$name")
+    val cells = st.router match {
+      case Ivf(nlist, np, _) => Some(Cells(load("centroids"), 1, nlist, np, sharded = false))
+      case r: IvfSharded => Some(Cells(load("centroids"), r.nShards, r.nCells, r.nProbe, sharded = true))
+      case _ => None
+    }
+    val q = prep(queries, "qid")
+    val probed = cells.map(probe(q, _))
+    // restrict once to the union of probed cells (per-query restriction
+    // happens in the pair join): every cid-keyed read prunes to probed
+    // cell directories
+    val probedCells = cells.map(cl =>
+      broadcast(probed.get.select(cl.keys.map(col): _*).distinct()))
+    def pruned(t: DataFrame) = cells.fold(t)(cl => t.join(probedCells.get, cl.keys))
+    val vectors = pruned(st.vectors)
+    // pairs carry `vec` straight from the one vectors scan, so the Raw
+    // rescore never re-joins the store by cid (r21)
+    val pairs = cells.map(cl => vectors.join(probed.get, cl.keys)
+      .where(col("qid") =!= col("cid"))
+      .select(col("qid"), col("cid"), col("centId"), col("vec")))
+    if (st.codec == Raw) rescoreTopKWithVec(pairs.get, queries, k)
+    else {
+      def table(name: String) = { val t = load(name); if (t.columns.contains("cid")) pruned(t) else t }
+      rescoreTopK(rankAndCut(st.codec, q, queries, pairs, cells, table, st.corpusCount),
+        queries, vectors.select(col("cid"), col("vec")), k)
+    }
+  }
+
+  /** The cells of an [[Ivf]]-routed [[writeAnnIndex]] layout — `(cid, vec,
+    * centId)`, one partition directory per cell — for operators that pair
+    * within cells. Raises like [[serveAnnIndex]] on an unstamped index. */
+  def annIndexCells(spark: SparkSession, path: String): DataFrame = {
+    val st = readStamp(spark, path, -1, -1)
+    require(st.router.isInstanceOf[Ivf], s"ANN index at $path is not Ivf-routed")
+    st.vectors
+  }
+
+  private def requireSpec(router: Router, codec: Codec): Unit = {
+    require(router != Exhaustive || codec != Raw,
+      "Exhaustive routing with the Raw codec is exact search: use bruteForceTopK")
+    codec match {
+      case p: Pq if p.residual => require(router.isInstanceOf[Ivf] || router.isInstanceOf[IvfSharded],
+        "residual PQ codes need a cell router (Ivf or IvfSharded)")
+      case _ =>
+    }
+  }
+
+  private def corpusCount(router: Router, corpus: DataFrame): Long = router match {
+    case r: IvfSharded if r.corpusSize >= 0 => r.corpusSize
+    case _ => corpus.count()
+  }
+
+  // --------------------------------------------------------------------
+  // The index stamp: every spec parameter and sizing integer, as schema
+  // metadata on the `vectors` table's `cid` field.
+
+  private final case class Stamped(vectors: DataFrame, router: Router,
+      codec: Codec, corpusCount: Long)
+
+  private def routerKind(router: Router): String = router match {
+    case _: Lsh => "lsh"
+    case _: Ivf => "ivf"
+    case _: IvfSharded => "ivf_sharded"
+    case Exhaustive => "exhaustive"
+  }
+
+  private def codecKind(codec: Codec): String = codec match {
+    case Raw => "raw"
+    case _: Pq => "pq"
+    case _: Sq8 => "sq8"
+    case _: Projected => "projected"
+  }
+
+  /** The integers the serve rebuilds a codec from — the projection space,
+    * the subspace split; never `refine`, a serve-time dial. */
+  private def codecInts(codec: Codec): Seq[(String, Long)] = codec match {
+    case p: Pq => Seq("m" -> p.m.toLong, "subDim" -> p.subDim.toLong,
+      "residual" -> (if (p.residual) 1L else 0L))
+    case p: Projected => Seq("outDims" -> p.outDims.toLong, "firstPlane" -> p.firstPlane.toLong)
+    case _ => Nil
+  }
+
+  private def describe(codec: Codec): String =
+    codecKind(codec) + codecInts(codec).map { case (k, v) => s"$k=$v" }.mkString("(", ", ", ")")
+
+  private def stampOf(router: Router, codec: Codec,
+      corpusCount: Option[Long]): org.apache.spark.sql.types.Metadata = {
+    val routerInts = router match {
+      case r: Ivf => Seq("nlist" -> r.nCells.toLong)
+      case r: IvfSharded => Seq("nShards" -> r.nShards.toLong, "perShardCells" -> r.nCells.toLong)
+      case _ => Nil
+    }
+    val b = new org.apache.spark.sql.types.MetadataBuilder()
+      .putString("graft.router", routerKind(router))
+      .putString("graft.codec", codecKind(codec))
+    (routerInts ++ codecInts(codec) ++ corpusCount.map("corpusCount" -> _))
+      .foreach { case (key, v) => b.putLong(s"graft.$key", v) }
+    b.build()
+  }
+
+  /** THE stamp reader: the index's vectors table (one memoized schema read,
+    * zero jobs) and the spec rebuilt from its stamp, with the caller's
+    * `nProbe`/`refine` dials. Raises when the index has no vectors table
+    * or the stamp lacks a key the spec needs. */
+  private def readStamp(spark: SparkSession, path: String, nProbe: Int,
+      refine: Int): Stamped = {
+    val vectors =
+      try SourceLoaders.parquet(spark, s"$path/vectors")
+      catch { case e: java.io.FileNotFoundException =>
+        throw new IllegalArgumentException(
+          s"ANN index at $path has no meta stamp: no vectors table — build it with writeAnnIndex", e)
+      }
+    val md = vectors.schema("cid").metadata
+    def stamped(key: String): String = {
+      require(md.contains(s"graft.$key"),
+        s"ANN index at $path has no meta stamp graft.$key on vectors.cid (an " +
+          "unstamped index: no stamped corpus count or spec) — rebuild it with writeAnnIndex")
+      s"graft.$key"
+    }
+    def int(key: String): Int = md.getLong(stamped(key)).toInt
+    val router = md.getString(stamped("router")) match {
+      case "exhaustive" => Exhaustive
+      case "ivf" => Ivf(int("nlist"), nProbe)
+      case "ivf_sharded" => IvfSharded(int("nShards"), int("perShardCells"), nProbe)
+    }
+    val codec = md.getString(stamped("codec")) match {
+      case "raw" => Raw
+      case "pq" => Pq(int("m"), int("subDim"), refine = refine, residual = int("residual") == 1)
+      case "sq8" => Sq8(refine)
+      case "projected" => Projected(int("outDims"), int("firstPlane"), refine)
+    }
+    Stamped(vectors, router, codec,
+      if (codec == Raw) -1L else md.getLong(stamped("corpusCount")))
+  }
+
+  // --------------------------------------------------------------------
+  // Routers
+
+  /** Banded candidate pairs of [[Lsh]] over prepped frames — the band
+    * shuffle carries ids only; vectors re-join after pair dedup (the
+    * per-side frames are small relative to candidate rows — AQE
+    * broadcasts). Banding runs through the one-pass bucket kernel
+    * (bit-identical to the defining hyperplaneBucket folds —
+    * BandKernelSpec).
+    */
+  private def lshPairs(q: DataFrame, c: DataFrame, r: Lsh): DataFrame = {
     def banded(df: DataFrame, id: String) =
-      prep(df, id).select(col(id), posexplode(
-          graft.functions.BandFunctions.band_buckets(col(s"${id}_v"), planesPerBand, bands)))
+      df.select(col(id), posexplode(
+          graft.functions.BandFunctions.band_buckets(col(s"${id}_v"), r.planesPerBand, r.bands)))
         .withColumnsRenamed(Map("pos" -> "band", "col" -> "bucket"))
     // the query side probes (1+probes) buckets per band; the corpus index
     // is untouched — multi-probe trades a little query fan-out for recall
     def bandedProbed(df: DataFrame, id: String) = {
-      val probeLists = array((0 until bands).map(b =>
-        hyperplaneProbes(col(s"${id}_v"), planesPerBand, b * planesPerBand, probes)): _*)
-      prep(df, id).select(col(id), posexplode(probeLists))
+      val probeLists = array((0 until r.bands).map(b =>
+        hyperplaneProbes(col(s"${id}_v"), r.planesPerBand, b * r.planesPerBand, r.probes)): _*)
+      df.select(col(id), posexplode(probeLists))
         .withColumnsRenamed(Map("pos" -> "band", "col" -> "buckets"))
         .select(col(id), col("band"), explode(col("buckets")).as("bucket"))
     }
-    val qSide = if (probes == 0) banded(queries, "qid") else bandedProbed(queries, "qid")
-    val cand = qSide.join(banded(corpus, "cid"), Seq("band", "bucket"))
+    val qSide = if (r.probes == 0) banded(q, "qid") else bandedProbed(q, "qid")
+    qSide.join(banded(c, "cid"), Seq("band", "bucket"))
       .where(col("qid") =!= col("cid"))
       .select("qid", "cid").distinct()
-    rescoreTopK(cand, queries, corpus, k)
   }
 
-  /** IVF (inverted-file) ANN: coarse-quantize the corpus into `nCells`
-    * cells — each vector assigned to its nearest centroid by cosine — then
-    * probe only the `nProbe` nearest cells per query and run exact top-k
-    * inside them. The classic candidate-cut shape: corpus scan cost is one
-    * broadcast-centroid pass, the probe join touches ~nProbe/nCells of the
-    * corpus, and cells are hash-partitionable on centId at any scale.
-    *
-    * The quantizer is SEEDED (centroids = the corpus vectors with the
-    * `nCells` smallest ids): deterministic, so the DuckDB oracle mirrors
-    * assignment + probing exactly. Swapping in k-means centroids changes
-    * only the `cent` frame — assignment/probe/scoring plumbing is
-    * identical (a trained quantizer is not oracle-expressible, which is
-    * why the seeded one is the gated variant).
-    */
+  /** Cosine of a prepped `id` row to a centroid row, as `csim`. */
+  private def csim(id: String): Column =
+    (dot_product(col(s"${id}_v"), col("cent_v")) /
+      (col(s"${id}_n") * col("cent_n"))).as("csim")
+
   /** Lloyd-iterated k-means centroids over the corpus (cosine assignment,
     * element-wise mean update). Init = the seeded centroids, so iters = 0
     * reproduces the oracle-gated variant exactly. Mean aggregation is
     * float-order dependent, so TRAINED centroids are for the recall/skew
-    * unit gate, not the hash oracle — which is precisely why [[ivfTopK]]
+    * unit gate, not the hash oracle — which is precisely why [[Ivf]]
     * keeps the seeded quantizer as its gated default. At scale each
     * iteration is one broadcast-centroid pass + one groupBy(centId):
     * linear, shuffle-light, and the centroid frame stays tiny.
@@ -569,17 +972,8 @@ object Similarity {
       .select(col("cid").cast("int").as("centId"), col("cid_v").as("cent_v"),
         col("cid_n").as("cent_n"))
     for (_ <- 1 to iters) {
-      // argmax aggregate, not a row_number window: partial aggregation
-      // collapses the |corpus|·nCells scored rows map-side (the
-      // nearestCells keep=1 rule); the winning cell then re-joins its
-      // vector by id for the mean update
-      val assigned = c.crossJoin(broadcast(cent))
-        .select(col("cid"), col("centId"),
-          (dot_product(col("cid_v"), col("cent_v")) /
-            (col("cid_n") * col("cent_n"))).as("csim"))
-        .groupBy(col("cid"))
-        .agg(max_by(col("centId"),
-          struct(col("csim"), (-col("centId")).as("negId"))).as("centId"))
+      // the winning cell re-joins its vector by id for the mean update
+      val assigned = nearestCells(c, "cid", cent, keep = 1)
         .join(c.select(col("cid"), col("cid_v")), "cid")
       val updated = assigned.groupBy("centId")
         .agg(array((0 until d).map(i =>
@@ -630,9 +1024,7 @@ object Similarity {
   private def nearestCells(df: DataFrame, id: String, cent: DataFrame,
       keep: Int): DataFrame = {
     val scored = df.crossJoin(broadcast(cent))
-      .select(col(id), col("centId"),
-        (dot_product(col(s"${id}_v"), col("cent_v")) /
-          (col(s"${id}_n") * col("cent_n"))).as("csim"))
+      .select(col(id), col("centId"), csim(id))
     if (keep == 1)
       scored.groupBy(col(id))
         .agg(max_by(col("centId"),
@@ -647,104 +1039,6 @@ object Similarity {
     }
   }
 
-  def ivfTopK(
-      queries: DataFrame, // (qid, vec)
-      corpus: DataFrame,  // (cid, vec)
-      k: Int = 10,
-      nCells: Int = 16,
-      nProbe: Int = 4,
-      centroids: Option[DataFrame] = None, // (centId, cent_v, cent_n); e.g. kmeansCentroids
-  ): DataFrame = {
-    val c = prep(corpus, "cid")
-    val cent = centroids.getOrElse(seededCentroids(c, nCells))
-    val assigned = nearestCells(c, "cid", cent, keep = 1)
-    val probed = nearestCells(prep(queries, "qid"), "qid", cent, keep = nProbe)
-    // keep=1 assignment puts each cid in exactly one cell and the probe
-    // window emits distinct (qid, centId) rows, so pairs are already
-    // unique — the ivfPqTopK argument; no distinct() exchange (r21)
-    val cand = probed.join(assigned, "centId")
-      .where(col("qid") =!= col("cid"))
-      .select("qid", "cid")
-    rescoreTopK(cand, queries, corpus, k)
-  }
-
-  /** Persist an IVF index: the corpus written PARTITIONED BY coarse cell
-    * (hive layout, one directory per centId) plus the centroid table.
-    * This is the build-offline / serve-online split of real ANN serving:
-    * assignment cost is paid once at write, and a probe of nProbe/nCells
-    * cells prunes to nProbe/nCells partition DIRECTORIES — files in
-    * unprobed cells are never opened, unlike the in-memory form where
-    * pruning happens after the scan. Results are identical to [[ivfTopK]]
-    * with the same quantizer (assignment is deterministic), so the same
-    * DuckDB oracle gates both.
-    */
-  def writeIvfIndex(corpus: DataFrame, path: String, nCells: Int = 16,
-      centroids: Option[DataFrame] = None): Unit = {
-    val c = prep(corpus, "cid")
-    val cent = centroids.getOrElse(seededCentroids(c, nCells))
-    val assigned = nearestCells(c, "cid", cent, keep = 1)
-    corpus.join(assigned, "cid")
-      .write.partitionBy("centId").parquet(s"$path/cells")
-    // stamp the cell count into the centroid table's schema metadata
-    // (the writeSq8Index convention): nlist IS build-time metadata, and
-    // the stamp lets the serve size its probe policy with a schema read
-    // instead of a count job over the centroid table (r21)
-    val stamp = new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong("graft.nlist", cent.count()).build()
-    cent.select(col("centId").as("centId", stamp), col("cent_v"),
-        col("cent_n"))
-      .write.parquet(s"$path/centroids")
-  }
-
-  /** Query a [[writeIvfIndex]] layout: probe the nProbe nearest cells per
-    * query; both the candidate scan and the exact-rescore vector join read
-    * ONLY the probed cell directories (partition pruning on centId).
-    *
-    * `nProbe = -1` (the default) applies [[nprobeForCells]] to the
-    * INDEX's own cell count — the centroid table the layout already
-    * carries, nlist rows, so serving never runs a sizing job over the
-    * corpus-sized store: the nlist chosen at build time IS the index
-    * metadata the probe policy needs.
-    */
-  def ivfTopKIndexed(queries: DataFrame, path: String,
-      k: Int = 10, nProbe: Int = -1): DataFrame = {
-    val spark = queries.sparkSession
-    val cent = SourceLoaders.parquet(spark, s"$path/centroids")
-    val np =
-      if (nProbe != -1) nProbe
-      else {
-        // nlist from the build-time schema stamp — zero jobs (r21); a
-        // pre-r21 unstamped index falls back to the old count job
-        val md = cent.schema("centId").metadata
-        if (md.contains("graft.nlist"))
-          nprobeForCells(md.getLong("graft.nlist").toInt)
-        else nprobeForCells(cent.count().toInt)
-      }
-    val probed = nearestCells(prep(queries, "qid"), "qid", cent, keep = np)
-    val cells = SourceLoaders.parquet(spark, s"$path/cells")
-    // restrict once to the union of probed cells (per-query restriction
-    // happens in the candidate join) — the one store read: candidates
-    // carry `vec` straight from this scan into the rescore (r21; the
-    // former shape re-joined the store by cid for the vectors and
-    // distinct()-ed pairs that keep=1 assignment already made unique)
-    val probedCells = cells.join(broadcast(probed.select("centId").distinct()), "centId")
-    val cand = probedCells.join(probed, "centId")
-      .where(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"), col("vec"))
-    rescoreTopKWithVec(cand, queries, k)
-  }
-
-  // --------------------------------------------------------------------
-  // Sharded IVF — the 100 TB path PAST the single-index broadcast ceiling.
-  // [[nlistForCorpus]]'s maxNlist (2²⁰ cells ≈ 0.5 GiB of broadcast
-  // centroids) bounds one index at ~131M vectors under the constant-cell
-  // rule; a corpus of billions of embeddings must be hash-partitioned
-  // into shards, each carrying its OWN constant-cell index, with probes
-  // fanning out per shard and one global exact re-rank at the end. Every
-  // stage stays the single-index shape: centroids broadcast PER SHARD
-  // (each under the ceiling), assignment is an argmax aggregate, the
-  // candidate shuffle carries ids only.
-
   /** Shard of an id under `nShards` hash partitions — `pmod(id, n)`, the
     * deterministic, oracle-expressible stand-in for a production hash
     * partitioner (for the synthetic contiguous ids it IS uniform).
@@ -758,11 +1052,11 @@ object Similarity {
     * SCAN predicate (`cid < nShards·nCells`), never a per-shard sort, and
     * the DuckDB oracle mirrors it with the same two integers. Each shard
     * ends up with exactly `nCells` centroids (ids are contiguous from 0 —
-    * the seededCentroids assumption, ENFORCED by
-    * [[requireShardedCentroids]] at every call site: a sparse or
-    * non-contiguous corpus would otherwise deal shards uneven or missing
-    * centroids and silently degrade recall). centId = the centroid's cid:
-    * globally unique, so candidate joins can key on centId alone.
+    * the seededCentroids assumption, ENFORCED at every resolution by one
+    * count() over the deal: a sparse or non-contiguous corpus would
+    * otherwise deal shards uneven or missing centroids and silently
+    * degrade recall). centId = the centroid's cid: globally unique, so
+    * candidate joins can key on centId alone.
     */
   private def shardedSeededCentroids(c: DataFrame, nShards: Int,
       nCells: Int): DataFrame =
@@ -773,17 +1067,15 @@ object Similarity {
 
   /** Enforce the sharded-quantizer shape instead of assuming it (r18
     * advisor item): every one of `nShards` shards must carry the SAME
-    * number of centroids — and exactly `expectCells` when the caller
-    * knows it. Used for CALLER-SUPPLIED/trained frames (fixture-sized
-    * local relations) and at index-build time; the seeded SERVE path
-    * validates with one cheap count() instead (r19 advisor — its frame
-    * is a pushed-down corpus scan, and count == nShards·nCells over
-    * distinct non-negative ids below that bound already implies the
-    * shard-complete even deal). Returns the per-shard cell count — the
-    * number [[nprobeForCells]] sizes the per-shard probe from.
+    * number of centroids. Used for CALLER-SUPPLIED/trained frames
+    * (fixture-sized local relations); the seeded deal validates with one
+    * cheap count() instead (r19 advisor — its frame is a pushed-down
+    * corpus scan, and count == nShards·nCells over distinct non-negative
+    * ids below that bound already implies the shard-complete even deal).
+    * Returns the per-shard cell count — the number
+    * [[nprobeShardedForCells]] sizes the per-shard probe from.
     */
-  private def requireShardedCentroids(cent: DataFrame, nShards: Int,
-      expectCells: Int = -1): Int = {
+  private def requireShardedCentroids(cent: DataFrame, nShards: Int): Int = {
     val counts = cent.groupBy("shard").count().collect()
       .map(r => r.get(0).toString.toLong -> r.getLong(1)).toMap
     require(counts.size == nShards,
@@ -794,12 +1086,7 @@ object Similarity {
       s"sharded quantizer dealt UNEVEN per-shard centroid counts " +
         s"(${counts.toSeq.sortBy(_._1).mkString(", ")}) — sparse or " +
         "non-contiguous corpus ids under the seeded rule?")
-    val per = counts.values.head
-    require(expectCells == -1 || per == expectCells,
-      s"sharded quantizer dealt $per centroids per shard, expected " +
-        s"$expectCells — sparse or non-contiguous corpus ids under the " +
-        "seeded rule? (the round-robin deal assumes ids contiguous from 0)")
-    per.toInt
+    counts.values.head.toInt
   }
 
   /** Per-shard Lloyd-trained centroids — the trained-quantizer analogue
@@ -838,9 +1125,7 @@ object Similarity {
       // partial aggregation collapses the |corpus|·nCells scored rows
       // map-side); the winning cell re-joins its vector for the mean
       val assigned = c.join(broadcast(cent), "shard")
-        .select(col("cid"), col("shard"), col("centId"),
-          (dot_product(col("cid_v"), col("cent_v")) /
-            (col("cid_n") * col("cent_n"))).as("csim"))
+        .select(col("cid"), col("shard"), col("centId"), csim("cid"))
         .groupBy(col("cid"), col("shard"))
         .agg(max_by(col("centId"),
           struct(col("csim"), (-col("centId")).as("negId"))).as("centId"))
@@ -861,264 +1146,194 @@ object Similarity {
     cent
   }
 
-  /** Sharded IVF ANN: hash-partition the corpus into `nShards` shards,
-    * build an independent constant-cell IVF index per shard
-    * ([[shardedSeededCentroids]]), rank ALL shards' cells together and
-    * probe the `nShards·nProbe` globally best per query, and
-    * exact-re-rank the candidates to one global top-k.
-    *
-    * Recall shape (r20 — MEASURED, not assumed): the r18 design probed
-    * the top `nProbe` cells in EVERY shard, on the argument that each
-    * shard is a uniform 1/nShards sample; RecallX100 refuted it at the
-    * 100× decade (equal allocation 0.908/0.853/0.837 at nShards 2/4/8
-    * seeded vs 0.976 unsharded; trained x2 0.840 vs 1.000) — a query's
-    * neighbor mass is NOT uniform across shards, so the hot shard's
-    * per-shard probe list truncates while cold shards burn probes. The
-    * fix is two-part (both measured): ONE global probe list of
-    * `nShards·nProbe` cells over the union of per-shard quantizers
-    * (restores the unsharded router's cell CHOICE — necessary but
-    * measured insufficient alone), plus the [[nprobeShardedForCells]]
-    * shard-count term (the equal-budget residual is the per-shard
-    * ASSIGNMENT restriction; the term's ×2.5/×3/×3.5 at nShards 2/4/8
-    * measured seeded 0.987/0.997/≥0.993 vs 0.976 unsharded, trained
-    * 0.984 at x2 vs the 1.000 unsharded-trained bar). Cost shape:
-    * candidates per query ≈ nShards · nProbe · cellSize =
-    * (4+log2 nShards)/2 × the unsharded probed fraction — the explicit
-    * price of held recall under sharding; what sharding buys
-    * is each shard's centroid table staying under the broadcast ceiling,
-    * the assignment scan scoring only |corpus|·perShardCells rows
-    * (≈ 1/nShards of the unsharded scan — the measured 354→77→34→22 s
-    * cost slide across nShards 1/2/4/8 at the 100× decade), and index
-    * builds/rebuilds parallelizing per shard.
-    *
-    * `nCells`/`nProbe` default to -1 = sized by [[nlistForCorpus]] /
-    * [[nprobeShardedForCells]] from the EXPECTED SHARD population
-    * `ceil(corpusSize/nShards)` (corpusSize -1 = one count job; pass the
-    * known count to avoid it). `centroids` swaps in a trained per-shard
-    * quantizer frame (shard, centId, cent_v, cent_n) —
-    * [[shardedKmeansCentroids]] or a committed fixture — without touching
-    * the assignment/probe/re-rank plumbing; the per-shard cell count
-    * (and the probe policy) then derive from the FRAME, and every
-    * quantizer is validated shard-complete/even before use: supplied
-    * frames through the full [[requireShardedCentroids]] check, the
-    * seeded deal through one count() over its pushed-down scan (r19
-    * advisor — count == nShards·nCells over distinct non-negative ids
-    * below that bound implies exactly ids 0..bound-1). A contiguous
-    * corpus SMALLER than the rule's deal clamps nCells to n/nShards —
-    * the smaller quantizer, not a misleading raise.
-    */
-  def ivfShardedTopK(
-      queries: DataFrame, // (qid, vec)
-      corpus: DataFrame,  // (cid, vec)
-      k: Int = 10,
-      nShards: Int = 2,
-      nCells: Int = -1,
-      nProbe: Int = -1,
-      corpusSize: Long = -1L,
-      centroids: Option[DataFrame] = None, // (shard, centId, cent_v, cent_n)
-  ): DataFrame = {
-    require(nShards >= 1, s"nShards must be >= 1: $nShards")
-    val c = prep(corpus, "cid")
-    val seededCells = if (centroids.isDefined) -1 else {
-      val n = if (corpusSize >= 0) corpusSize else corpus.count()
-      require(n >= nShards,
-        s"corpus ($n rows) cannot seed one centroid per shard (nShards=$nShards)")
-      val perShard = (n - 1) / nShards + 1
-      val want = if (nCells != -1) nCells else nlistForCorpus(perShard)
-      // corpus smaller than the quantizer the rule would deal (r19
-      // advisor): the seeded deal draws ids < nShards·nCells, so a
-      // CONTIGUOUS corpus with n < nShards·nCells would under-deal some
-      // shards and trip the shape validation with a misleading
-      // "non-contiguous ids" error. Clamp to what the id range can
-      // supply — the smaller quantizer the pre-validation path served.
-      math.min(want.toLong, n / nShards).toInt
-    }
-    val cent = centroids.getOrElse(shardedSeededCentroids(c, nShards, seededCells))
-    val nc =
-      if (centroids.isDefined) requireShardedCentroids(cent, nShards)
-      else {
-        // Seeded path (r19 advisor): the frame is a pushed-down
-        // `cid < nShards·seededCells` scan over the CORPUS, not a local
-        // relation — the full per-shard groupBy/collect weakened the
-        // documented "pass the known count to avoid a job" contract.
-        // Distinct non-negative ids below the bound count to
-        // nShards·seededCells ONLY when they are exactly 0..bound-1,
-        // i.e. the round-robin deal is shard-complete AND even — one
-        // count() over the tiny filtered scan pins the whole shape.
-        val bound = nShards.toLong * seededCells
-        val got = cent.count()
-        require(got == bound,
-          s"seeded sharded quantizer found $got corpus ids below $bound, " +
-            s"expected $bound — sparse or non-contiguous corpus ids " +
-            "(the round-robin deal assumes ids contiguous from 0)")
-        seededCells
-      }
-    val np = if (nProbe != -1) nProbe else nprobeShardedForCells(nc, nShards)
-    // corpus side: argmax within OWN shard (equi-join on shard keeps the
-    // scored population at |corpus|·nCells, same as unsharded)
-    val assigned = c.withColumn("shard", shardOf(col("cid"), nShards))
-      .join(broadcast(cent), "shard")
-      .select(col("cid"),
-        col("centId"),
-        (dot_product(col("cid_v"), col("cent_v")) /
-          (col("cid_n") * col("cent_n"))).as("csim"))
-      .groupBy(col("cid"))
-      .agg(max_by(col("centId"),
-        struct(col("csim"), (-col("centId")).as("negId"))).as("centId"))
-    // query side: ONE GLOBAL probe list of nShards·nProbe cells over the
-    // union of per-shard quantizers (r20 — the measured fix: equal
-    // per-shard allocation `PARTITION BY (qid, shard) … rn <= nProbe`
-    // sat 0.07–0.16 recall below the unsharded router at the 100×
-    // decade, because a query's neighbor mass is NOT uniform across
-    // shards and the hot shard's probe list truncates while cold shards
-    // burn probes; ranking all shards' cells together restores the
-    // unsharded router's cell choice at the IDENTICAL candidate budget)
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("csim").desc, col("centId"))
-    val probed = prep(queries, "qid").crossJoin(broadcast(cent))
-      .select(col("qid"), col("centId"),
-        (dot_product(col("qid_v"), col("cent_v")) /
-          (col("qid_n") * col("cent_n"))).as("csim"))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= nShards.toLong * np)
-      .select(col("qid"), col("centId"))
-    // centIds are globally unique, keep=1 assignment + distinct probed
-    // cells → pairs already unique (the ivfPqTopK argument)
-    val cand = probed.join(assigned, "centId")
-      .where(col("qid") =!= col("cid"))
-      .select("qid", "cid")
-    rescoreTopK(cand, queries, corpus, k) // global exact re-rank
+  /** A cell router resolved against its quantizer: the centroid table
+    * (`centId, cent_v, cent_n`, plus `shard` when sharded), the shard
+    * count, cells per shard, and the cells a query probes per shard
+    * (`nProbeArg` -1 = the router's policy). */
+  private final case class Cells(cent: DataFrame, nShards: Int, nCells: Int,
+      nProbeArg: Int, sharded: Boolean) {
+    val nProbe: Int =
+      if (nProbeArg != -1) nProbeArg
+      else if (sharded) nprobeShardedForCells(nCells, nShards)
+      else nprobeForCells(nCells)
+    def keys: Seq[String] = if (sharded) Seq("shard", "centId") else Seq("centId")
   }
 
-  /** Persist a SHARDED IVF index: cells laid out `shard=…/centId=…` (two
-    * partition levels — a probe prunes to probed (shard, cell) directory
-    * pairs), the shard-keyed centroid table, and a one-row meta stamping
-    * (nShards, perShardCells, corpusCount) — the stamp conventions of
-    * [[writeSq8Index]]/[[writeProjectedIndex]]: a server sizes its probe
-    * policy from the INDEX, never from jobs over the store.
-    */
-  def writeIvfIndexSharded(corpus: DataFrame, path: String,
-      nShards: Int = 2, nCells: Int = -1,
-      centroids: Option[DataFrame] = None): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val c = prep(corpus, "cid")
-    val n = corpus.count()
-    val seededCells = if (centroids.isDefined) -1 else {
-      require(n >= nShards,
-        s"corpus ($n rows) cannot seed one centroid per shard (nShards=$nShards)")
-      val perShard = (n - 1) / nShards + 1
-      val want = if (nCells != -1) nCells else nlistForCorpus(perShard)
-      // same small-corpus clamp as ivfShardedTopK (r19 advisor)
-      math.min(want.toLong, n / nShards).toInt
+  /** Resolve a cell router against a prepped corpus: the caller's
+    * quantizer or the seeded one, validated (sharded) and sized. */
+  private def resolveCells(router: Router, c: DataFrame, n: => Long): Option[Cells] =
+    router match {
+      case r: Ivf =>
+        Some(Cells(r.centroids.getOrElse(seededCentroids(c, r.nCells)), 1,
+          r.nCells, r.nProbe, sharded = false))
+      case r: IvfSharded =>
+        require(r.nShards >= 1, s"nShards must be >= 1: ${r.nShards}")
+        val seededCells = if (r.centroids.isDefined) -1 else {
+          require(n >= r.nShards,
+            s"corpus ($n rows) cannot seed one centroid per shard (nShards=${r.nShards})")
+          val perShard = (n - 1) / r.nShards + 1
+          val want = if (r.nCells != -1) r.nCells else nlistForCorpus(perShard)
+          // corpus smaller than the quantizer the rule would deal (r19
+          // advisor): the seeded deal draws ids < nShards·nCells, so a
+          // CONTIGUOUS corpus with n < nShards·nCells would under-deal some
+          // shards and trip the shape validation with a misleading
+          // "non-contiguous ids" error. Clamp to what the id range can
+          // supply — the smaller quantizer the pre-validation path served.
+          math.min(want.toLong, n / r.nShards).toInt
+        }
+        val cent = r.centroids.getOrElse(shardedSeededCentroids(c, r.nShards, seededCells))
+        val nc =
+          if (r.centroids.isDefined) requireShardedCentroids(cent, r.nShards)
+          else {
+            // Seeded path (r19 advisor): the frame is a pushed-down
+            // `cid < nShards·seededCells` scan over the CORPUS, not a local
+            // relation — the full per-shard groupBy/collect weakened the
+            // documented "pass the known count to avoid a job" contract.
+            // Distinct non-negative ids below the bound count to
+            // nShards·seededCells ONLY when they are exactly 0..bound-1,
+            // i.e. the round-robin deal is shard-complete AND even — one
+            // count() over the tiny filtered scan pins the whole shape.
+            val bound = r.nShards.toLong * seededCells
+            val got = cent.count()
+            require(got == bound,
+              s"seeded sharded quantizer found $got corpus ids below $bound, " +
+                s"expected $bound — sparse or non-contiguous corpus ids " +
+                "(the round-robin deal assumes ids contiguous from 0)")
+            seededCells
+          }
+        Some(Cells(cent, r.nShards, nc, r.nProbe, sharded = true))
+      case _ => None
     }
-    val cent = centroids.getOrElse(shardedSeededCentroids(c, nShards, seededCells))
-    val nc = requireShardedCentroids(cent, nShards, expectCells = seededCells)
-    val assigned = c.withColumn("shard", shardOf(col("cid"), nShards))
-      .join(broadcast(cent), "shard")
-      .select(col("cid"), col("shard"), col("centId"),
-        (dot_product(col("cid_v"), col("cent_v")) /
-          (col("cid_n") * col("cent_n"))).as("csim"))
+
+  /** Corpus cell assignment, `(cid, centId)` — plus `shard` when sharded,
+    * where the argmax runs within the vector's OWN shard (equi-join on
+    * shard keeps the scored population at |corpus|·nCells, same as
+    * unsharded). */
+  private def assign(c: DataFrame, cl: Cells): DataFrame =
+    if (!cl.sharded) nearestCells(c, "cid", cl.cent, keep = 1)
+    else c.withColumn("shard", shardOf(col("cid"), cl.nShards))
+      .join(broadcast(cl.cent), "shard")
+      .select(col("cid"), col("shard"), col("centId"), csim("cid"))
       .groupBy(col("cid"), col("shard"))
       .agg(max_by(col("centId"),
         struct(col("csim"), (-col("centId")).as("negId"))).as("centId"))
-    corpus.join(assigned, "cid")
-      .write.partitionBy("shard", "centId").parquet(s"$path/cells")
-    // stamp the probe-policy integers into the centroid table's schema
-    // metadata too (the writeSq8Index convention): the serve sizes its
-    // probe with a schema read instead of a one-row meta job (r21). The
-    // meta dataset still persists — it is the layout's documented
-    // presence marker (serve raises without it) and the fallback for
-    // readers of pre-r21 indexes.
-    val stamp = new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong("graft.nShards", nShards.toLong)
-      .putLong("graft.perShardCells", nc.toLong)
-      .putLong("graft.corpusCount", n).build()
-    cent.select(col("shard"), col("centId").as("centId", stamp),
-        col("cent_v"), col("cent_n"))
-      .write.parquet(s"$path/centroids")
-    Seq((nShards, nc, n)).toDF("nShards", "perShardCells", "corpusCount")
-      .coalesce(1).write.parquet(s"$path/meta")
+
+  /** Each query's probed cells, `(qid, centId)` — plus `shard` when
+    * sharded, where ONE GLOBAL probe list of nShards·nProbe cells ranks
+    * the union of per-shard quantizers (r20 — the measured fix: equal
+    * per-shard allocation `PARTITION BY (qid, shard) … rn <= nProbe` sat
+    * 0.07–0.16 recall below the unsharded router at the 100× decade,
+    * because a query's neighbor mass is NOT uniform across shards and the
+    * hot shard's probe list truncates while cold shards burn probes;
+    * ranking all shards' cells together restores the unsharded router's
+    * cell choice at the IDENTICAL candidate budget). */
+  private def probe(q: DataFrame, cl: Cells): DataFrame =
+    if (!cl.sharded) nearestCells(q, "qid", cl.cent, keep = cl.nProbe)
+    else {
+      val w = Window.partitionBy(col("qid"))
+        .orderBy(col("csim").desc, col("centId"))
+      q.crossJoin(broadcast(cl.cent))
+        .select(col("qid"), col("shard"), col("centId"), csim("qid"))
+        .withColumn("rn", row_number().over(w))
+        .where(col("rn") <= cl.nShards.toLong * cl.nProbe)
+        .select(col("qid"), col("shard"), col("centId"))
+    }
+
+  // --------------------------------------------------------------------
+  // Codecs
+
+  /** A codec's build state, keyed by the index directory it persists to:
+    * `codebook` + `codes` (Pq), `ranges` + `codes` (Sq8), `projected`. */
+  private def encode(codec: Codec, c: DataFrame, corpus: DataFrame,
+      cells: Option[Cells], assigned: Option[DataFrame]): Map[String, DataFrame] =
+    codec match {
+      case Raw => Map.empty
+      case p: Pq =>
+        val base =
+          if (!p.residual) c
+          else residualFrame(assigned.get, c, cells.get.cent)
+            .select(col("cid"), col("r_v").as("cid_v"))
+        val cbSub = p.codebook.getOrElse(seededCodebook(base, p.m, p.subDim, p.kCode))
+        Map("codebook" -> cbSub, "codes" -> pqEncode(base, cbSub, p.m, p.subDim))
+      case _: Sq8 =>
+        // derive the dimension from the data (the kmeansCentroids rule)
+        val d = corpus.select(size(col("vec"))).head.getInt(0)
+        val rg = sq8Ranges(c)
+        Map("ranges" -> rg, "codes" -> sq8Codes(c, rg, d))
+      case p: Projected =>
+        Map("projected" -> signProject(corpus.select(col("cid"), col("vec")),
+          "cid", "vec", p.outDims, p.firstPlane))
+    }
+
+  /** Rank the router's pairs (None = every pair) on the codec's state and
+    * keep each query's top `refine` — `(qid, cid)` ids only downstream.
+    * Every ranking value is the 9-decimal no-drift [[adotLong]], so the
+    * refine cutoff matches the DuckDB oracles. Raw passes pairs through.
+    */
+  private def rankAndCut(codec: Codec, q: DataFrame, queries: DataFrame,
+      pairs: Option[DataFrame], cells: Option[Cells], table: String => DataFrame,
+      n: => Long): DataFrame = {
+    def cut(approx: DataFrame, refine: Int): DataFrame = {
+      // the ranked pool: the expected probed population under a cell
+      // router, the corpus otherwise
+      val rf = if (refine != -1) refine
+        else refineForCandidates(cells.fold(n)(cl => expectedProbed(n, cl.nCells, cl.nProbe)))
+      approx
+        .withColumn("arn", row_number().over(
+          Window.partitionBy("qid").orderBy(col("adot").desc, col("cid"))))
+        .where(col("arn") <= rf).select("qid", "cid")
+    }
+    def paired(qSide: DataFrame, cSide: DataFrame): DataFrame = pairs match {
+      case Some(p) => p.join(cSide, "cid").join(qSide, "qid")
+      case None => qSide.crossJoin(cSide).where(col("qid") =!= col("cid"))
+    }
+    codec match {
+      case Raw => pairs.get
+      case p: Pq =>
+        val cbSub = table("codebook")
+        val codes = table("codes").select("cid", "s", "codeId")
+        val qTab = pqQueryTable(q, cbSub, p.m, p.subDim)
+        val approx =
+          if (p.residual) {
+            val qcent = q.select(col("qid"), col("qid_v"))
+              .crossJoin(broadcast(cells.get.cent))
+              .select(col("qid"), col("centId"),
+                adotLong(round(dot_product(col("qid_v"), col("cent_v")), 9)).as("qcdot"))
+            pairs.get.join(codes, "cid").join(qTab, Seq("qid", "s", "codeId"))
+              .groupBy("qid", "cid", "centId").agg(sum(col("pdot")).as("rdot"))
+              .join(qcent, Seq("qid", "centId"))
+              .select(col("qid"), col("cid"), (col("rdot") + col("qcdot")).as("adot"))
+          } else (pairs match {
+            // the routed ADC scan never touches unprobed cells
+            case Some(pr) => pr.join(codes, "cid").join(qTab, Seq("qid", "s", "codeId"))
+            case None => qTab.join(codes, Seq("s", "codeId"))
+              .where(col("qid") =!= col("cid"))
+          }).groupBy("qid", "cid").agg(sum(col("pdot")).as("adot"))
+        cut(approx, p.refine)
+      case s: Sq8 =>
+        // the decode runs once per corpus ROW, never per candidate pair
+        val rec = sq8Decode(table("codes"), table("ranges"))
+        cut(paired(q.select(col("qid"), col("qid_v")), rec)
+          .select(col("qid"), col("cid"),
+            adotLong(round(dot_product(col("qid_v"), col("rv")), 9)).as("adot")),
+          s.refine)
+      case p: Projected =>
+        val qp = signProject(queries.select(col("qid"), col("vec")), "qid", "vec",
+            p.outDims, p.firstPlane)
+          .select(col("qid"), col("proj").as("qp"))
+        val cp = table("projected").select(col("cid"), col("proj").as("cp"))
+        cut(paired(qp.withColumn("qp_n", norm(col("qp"))),
+            cp.withColumn("cp_n", norm(col("cp"))))
+          .select(col("qid"), col("cid"),
+            adotLong(when(col("qp_n") * col("cp_n") =!= 0.0,
+              round(dot_product(col("qp"), col("cp")) /
+                (col("qp_n") * col("cp_n")), 9))
+              .otherwise(lit(-2.0))).as("adot")),
+          p.refine)
+    }
   }
 
-  /** Query a [[writeIvfIndexSharded]] layout: rank ALL shards' persisted
-    * centroids together and probe the `nShards·nProbe` globally best
-    * cells (the r20 router — see [[ivfShardedTopK]]), read ONLY the
-    * probed (shard, centId) directories, globally exact-re-rank.
-    * `nProbe = -1` applies [[nprobeShardedForCells]] (the base policy ×
-    * the measured shard-count term) to the PER-SHARD cell count and
-    * nShards stamped at build time; an index without the meta stamp
-    * RAISES (the projected-index rule: guessing a probe policy silently
-    * serves wrong recall).
-    */
-  def ivfTopKIndexedSharded(queries: DataFrame, path: String,
-      k: Int = 10, nProbe: Int = -1): DataFrame = {
-    val spark = queries.sparkSession
-    val metaPath = new org.apache.hadoop.fs.Path(s"$path/meta")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(metaPath),
-      s"sharded IVF index at $path has no meta stamp — rebuild with writeIvfIndexSharded")
-    val cent = SourceLoaders.parquet(spark, s"$path/centroids")
-    // probe-policy integers from the centroid schema stamp — zero jobs
-    // (r21); a pre-r21 index falls back to the one-row meta read
-    val md = cent.schema("centId").metadata
-    val (perShardCells, nShards) =
-      if (md.contains("graft.perShardCells"))
-        (md.getLong("graft.perShardCells").toInt,
-          md.getLong("graft.nShards").toInt)
-      else {
-        val meta = SourceLoaders.parquet(spark, s"$path/meta")
-          .select(col("perShardCells").cast("int"), col("nShards").cast("int"))
-          .head()
-        (meta.getInt(0), meta.getInt(1))
-      }
-    val np =
-      if (nProbe != -1) nProbe
-      else nprobeShardedForCells(perShardCells, nShards)
-    // global allocation over the union of per-shard cells — must match
-    // ivfShardedTopK's router exactly (r20; see the rationale there)
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("csim").desc, col("centId"))
-    val probed = prep(queries, "qid").crossJoin(broadcast(cent))
-      .select(col("qid"), col("shard"), col("centId"),
-        (dot_product(col("qid_v"), col("cent_v")) /
-          (col("qid_n") * col("cent_n"))).as("csim"))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= nShards.toLong * np)
-      .select(col("qid"), col("shard"), col("centId"))
-    val cells = SourceLoaders.parquet(spark, s"$path/cells")
-    // restrict once to the union of probed (shard, cell) directories —
-    // the one store read: candidates carry `vec` straight from this scan
-    // into the rescore, and keep=1 per-shard assignment + the distinct
-    // probe window make (qid, cid) pairs unique without a distinct()
-    // (the ivfTopKIndexed shape, r21)
-    val probedCells = cells.join(
-      broadcast(probed.select("shard", "centId").distinct()),
-      Seq("shard", "centId"))
-    val cand = probedCells.join(probed, Seq("shard", "centId"))
-      .where(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"), col("vec"))
-    rescoreTopKWithVec(cand, queries, k)
-  }
-
-  /** Product-quantization (PQ/ADC) ANN: compress each corpus vector to `m`
-    * one-byte codes — per subspace, the id of its nearest codebook
-    * centroid — then rank candidates by the asymmetric-distance sum of
-    * per-subspace query·centroid dots and exact-rescore only the top
-    * `refine`. THE memory lever at 100 TB: a 64-dim float vector (256 B)
-    * becomes `m` bytes (32× smaller), so the candidate scan touches codes,
-    * not vectors, and the shuffle carries (id, subspace, code) ints only.
-    *
-    * Like [[ivfTopK]], the codebook is SEEDED (centroids = sub-vectors of
-    * the `kCode` smallest-id corpus vectors): deterministic, so the DuckDB
-    * oracle recomputes encode + ADC + refine exactly. A k-means-trained
-    * codebook swaps in by replacing the `cbSub` frame only.
-    *
-    * ADC sums are decimal-accumulated over per-subspace dots rounded to 9
-    * decimals — bit-reproducible across engines, so the refine cutoff can
-    * never drift from the oracle.
-    */
-  /** Per-subspace k-means codebooks for [[pqTopK]] — one joint job trains
+  /** Per-subspace k-means codebooks for [[Pq]] — one joint job trains
     * all `m` codebooks (group key = (s, codeId)), seeded from the
     * deterministic codebook so iters = 0 reproduces the oracle-gated
     * variant. Same Lloyd edge-case handling as [[kmeansCentroids]]; same
@@ -1226,287 +1441,14 @@ object Similarity {
       .select(col("qid"), col("s"), col("codeId"),
         adotLong(round(dot_product(col("q_sub"), col("cb_sub")), 9)).as("pdot"))
 
-  /** ADC-rank candidate pairs and exact-rescore the per-query top `refine`.
-    * `pairs` bounds which (qid, cid) combinations are scored: pqTopK passes
-    * None (exhaustive — every query × every code), ivfPqTopK passes the
-    * IVF-routed subset so the scan never touches unprobed cells.
-    */
-  private def adcRefineRescore(pairs: Option[DataFrame], qTab: DataFrame,
-      codes: DataFrame, queries: DataFrame, corpus: DataFrame,
-      k: Int, refine: Int): DataFrame = {
-    val approx = (pairs match {
-      case Some(p) => p.join(codes, "cid").join(qTab, Seq("qid", "s", "codeId"))
-      case None => qTab.join(codes, Seq("s", "codeId"))
-        .where(col("qid") =!= col("cid"))
-    }).groupBy("qid", "cid").agg(sum(col("pdot")).as("adot"))
-    val cand = approx
-      .withColumn("arn", row_number().over(
-        Window.partitionBy("qid").orderBy(col("adot").desc, col("cid"))))
-      .where(col("arn") <= refine).select("qid", "cid")
-    rescoreTopK(cand, queries, corpus, k) // exact rescore of refined candidates only
-  }
-
-  def pqTopK(
-      queries: DataFrame, // (qid, vec)
-      corpus: DataFrame,  // (cid, vec)
-      k: Int = 10,
-      m: Int = 8,         // subspaces
-      subDim: Int = 8,    // dims per subspace
-      kCode: Int = 16,    // centroids per subspace codebook
-      refine: Int = 30,   // exact-rescore budget per query
-      codebook: Option[DataFrame] = None, // (s, codeId, cb_sub); e.g. pqTrainedCodebook
-  ): DataFrame = {
-    val c = prep(corpus, "cid")
-    val q = prep(queries, "qid")
-    val cbSub = codebook.getOrElse(seededCodebook(c, m, subDim, kCode))
-    val codes = pqEncode(c, cbSub, m, subDim)
-    val qTab = pqQueryTable(q, cbSub, m, subDim)
-    // COMPRESSION-ONLY variant: the ADC join touches every (query, corpus)
-    // pair — memory shrinks 32×, scan work does not. The scan-pruning form
-    // is [[ivfPqTopK]]; keep this one for corpora small enough to ADC-scan.
-    adcRefineRescore(None, qTab, codes, queries, corpus, k, refine)
-  }
-
-  /** Persist a plain-PQ index — the build-offline/serve-online split of
-    * [[pqTopK]] (r19: the kCode-amortization item). Since
-    * [[kCodeForCorpus]] the ENCODE pass (corpus·m·kCode candidate rows,
-    * the one stage that grows with the codebook) dominates the in-flight
-    * form's cost — r18 measured the in-flight rows at 3.5× their own
-    * served twins at one decade up — and encode output is a pure
-    * function of (corpus, codebook), i.e. BUILD state, not query state.
-    * This layout pays it once: codes, full-precision vectors (for the
-    * exact rescore), the codebook, and the (corpusCount, m, subDim)
-    * stamp, so serving never encodes and never runs sizing jobs over the
-    * store. Defaults are the seeded codebook sized by [[kCodeForCorpus]];
-    * pass [[pqTrainedCodebook]]'s frame for the production build.
-    */
-  def writePqIndex(corpus: DataFrame, path: String,
-      m: Int = 8, subDim: Int = 8,
-      codebook: Option[DataFrame] = None): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val c = prep(corpus, "cid")
-    val n = corpus.count()
-    val cbSub = codebook.getOrElse(seededCodebook(c, m, subDim, kCodeForCorpus(n)))
-    pqEncode(c, cbSub, m, subDim).write.parquet(s"$path/codes")
-    corpus.select(col("cid"), col("vec")).write.parquet(s"$path/vectors")
-    // schema-metadata stamp on the codebook (the writeSq8Index
-    // convention): the serve reads its sizing integers with a schema
-    // read instead of a one-row meta job (r21); the meta dataset stays
-    // as the presence marker + pre-r21 fallback
-    val stamp = new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong("graft.corpusCount", n)
-      .putLong("graft.m", m.toLong)
-      .putLong("graft.subDim", subDim.toLong).build()
-    cbSub.select(col("s"), col("codeId").as("codeId", stamp), col("cb_sub"))
-      .write.parquet(s"$path/codebook")
-    Seq((n, m, subDim)).toDF("corpusCount", "m", "subDim")
-      .coalesce(1).write.parquet(s"$path/meta")
-  }
-
-  /** Query a [[writePqIndex]] layout: ADC-rank the PERSISTED codes against
-    * the per-query lookup table (exhaustive pairs — the [[pqTopK]] shape;
-    * the scan touches m-byte codes, never vectors), exact-rescore refine
-    * survivors against the persisted vectors. Encode is deterministic
-    * given the persisted codebook, so results equal [[pqTopK]] with the
-    * same frames and the same DuckDB oracle gates both. `refine = -1`
-    * sizes the budget with [[refineForCandidates]] from the STAMPED
-    * corpus count (the ranked pool here IS the corpus — the exhaustive
-    * tier's rule); an index without the meta stamp RAISES.
-    */
-  def pqTopKIndexed(queries: DataFrame, path: String,
-      k: Int = 10, refine: Int = -1): DataFrame = {
-    val spark = queries.sparkSession
-    val metaPath = new org.apache.hadoop.fs.Path(s"$path/meta")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(metaPath),
-      s"PQ index at $path has no meta stamp — rebuild with writePqIndex")
-    val codes = SourceLoaders.parquet(spark, s"$path/codes")
-    val vectors = SourceLoaders.parquet(spark, s"$path/vectors")
-    val cbSub = SourceLoaders.parquet(spark, s"$path/codebook")
-    // sizing integers from the codebook schema stamp — zero jobs (r21);
-    // a pre-r21 index falls back to the one-row meta read
-    val cmd = cbSub.schema("codeId").metadata
-    val (n, m, subDim) =
-      if (cmd.contains("graft.corpusCount"))
-        (cmd.getLong("graft.corpusCount"), cmd.getLong("graft.m").toInt,
-          cmd.getLong("graft.subDim").toInt)
-      else {
-        val meta = SourceLoaders.parquet(spark, s"$path/meta")
-          .select(col("corpusCount").cast("long"), col("m").cast("int"),
-            col("subDim").cast("int")).head()
-        (meta.getLong(0), meta.getInt(1), meta.getInt(2))
-      }
-    val rf = if (refine != -1) refine else refineForCandidates(n)
-    val qTab = pqQueryTable(prep(queries, "qid"), cbSub, m, subDim)
-    adcRefineRescore(None, qTab, codes,
-      queries, vectors.select(col("cid"), col("vec")), k, rf)
-  }
-
-  /** IVF-PQ: the coarse quantizer routes, PQ compresses, ADC ranks, exact
-    * rescore finishes — the standard composition that makes PQ a real
-    * 100 TB operator. Per query only the `nProbe` nearest of `nCells` cells
-    * are ADC-scanned, so (unlike [[pqTopK]]) the ADC join's corpus side is
-    * the probed subset (~nProbe/nCells of the codes), the per-query ranking
-    * window is bounded by the probed-cell population, and every shuffle
-    * still carries (id, subspace, code) ints only.
-    *
-    * Both quantizers are SEEDED by default (coarse cells = `nCells`
-    * smallest-id vectors, codebook = sub-vectors of the `kCode` smallest) —
-    * deterministic, so the DuckDB oracle mirrors routing + encode + ADC +
-    * refine exactly; trained frames ([[kmeansCentroids]],
-    * [[pqTrainedCodebook]]) swap in without touching the plumbing.
-    *
-    * Non-residual form (codes quantize raw vectors, not vector − centroid):
-    * one codebook serves all cells, so routing changes WHICH codes are
-    * scanned, never the codes themselves — ADC values match [[pqTopK]]'s
-    * for the pairs both scan.
-    */
-  def ivfPqTopK(
-      queries: DataFrame, // (qid, vec)
-      corpus: DataFrame,  // (cid, vec)
-      k: Int = 10,
-      nCells: Int = 16,   // coarse cells
-      nProbe: Int = 4,    // cells ADC-scanned per query
-      m: Int = 8,         // subspaces
-      subDim: Int = 8,    // dims per subspace
-      kCode: Int = 16,    // centroids per subspace codebook
-      refine: Int = 30,   // exact-rescore budget per query
-      centroids: Option[DataFrame] = None, // (centId, cent_v, cent_n)
-      codebook: Option[DataFrame] = None,  // (s, codeId, cb_sub)
-  ): DataFrame = {
-    val c = prep(corpus, "cid")
-    val q = prep(queries, "qid")
-    val cent = centroids.getOrElse(seededCentroids(c, nCells))
-    // routing: (qid, cid) pairs inside probed cells only. keep=1 assignment
-    // means a cid lives in exactly one cell and a qid probes nProbe distinct
-    // cells, so pairs are already unique — no distinct() shuffle needed.
-    val assigned = nearestCells(c, "cid", cent, keep = 1)
-    val probed = nearestCells(q, "qid", cent, keep = nProbe)
-    val routed = probed.join(assigned, "centId")
-      .where(col("qid") =!= col("cid"))
-      .select("qid", "cid")
-    val cbSub = codebook.getOrElse(seededCodebook(c, m, subDim, kCode))
-    val codes = pqEncode(c, cbSub, m, subDim)
-    val qTab = pqQueryTable(q, cbSub, m, subDim)
-    adcRefineRescore(Some(routed), qTab, codes, queries, corpus, k, refine)
-  }
-
-  /** Persist an IVF-PQ index — the build-offline/serve-online split of
-    * [[ivfPqTopK]], the tier where it matters most at 100 TB: what
-    * serving SCANS for ranking is the code table, `m` small ints per
-    * vector laid out `centId=…` (one directory per coarse cell), so an
-    * nProbe/nCells probe reads nProbe/nCells of a 32×-compressed store;
-    * full-precision vectors (also cell-partitioned) are touched only for
-    * refine survivors. The centroid and codebook tables persist alongside
-    * — ROUTING STATE IS INDEX STATE: a serve that re-derived cells or
-    * codes from seeds against a drifted corpus would rank in a different
-    * quantization than the codes were written in, a silent-recall bug, so
-    * [[ivfPqTopKIndexed]] reads everything (plus the corpus count its
-    * refine budget needs) from the stamp and never runs sizing jobs over
-    * the store.
-    *
-    * Pass trained frames ([[kmeansCentroids]], [[pqTrainedCodebook]]) for
-    * the production build; defaults are the seeded quantizers sized by
-    * [[nlistForCorpus]]/[[kCodeForCorpus]].
-    */
-  def writeIvfPqIndex(corpus: DataFrame, path: String,
-      m: Int = 8, subDim: Int = 8,
-      centroids: Option[DataFrame] = None,
-      codebook: Option[DataFrame] = None): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val c = prep(corpus, "cid")
-    val n = corpus.count()
-    val cent = centroids.getOrElse(seededCentroids(c, nlistForCorpus(n)))
-    val nlist = cent.count().toInt
-    val cbSub = codebook.getOrElse(seededCodebook(c, m, subDim, kCode = kCodeForCorpus(n)))
-    val assigned = nearestCells(c, "cid", cent, keep = 1)
-    pqEncode(c, cbSub, m, subDim).join(assigned, "cid")
-      .write.partitionBy("centId").parquet(s"$path/codes")
-    corpus.join(assigned, "cid")
-      .write.partitionBy("centId").parquet(s"$path/vectors")
-    // schema-metadata stamp on the centroid table (the writeSq8Index
-    // convention) so the serve sizes nprobe + refine with a schema read
-    // instead of a one-row meta job (r21); meta stays as the presence
-    // marker + pre-r21 fallback
-    val stamp = new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong("graft.corpusCount", n)
-      .putLong("graft.m", m.toLong)
-      .putLong("graft.subDim", subDim.toLong)
-      .putLong("graft.nlist", nlist.toLong).build()
-    cent.select(col("centId").as("centId", stamp), col("cent_v"),
-        col("cent_n"))
-      .write.parquet(s"$path/centroids")
-    cbSub.write.parquet(s"$path/codebook")
-    Seq((n, m, subDim, nlist)).toDF("corpusCount", "m", "subDim", "nlist")
-      .coalesce(1).write.parquet(s"$path/meta")
-  }
-
-  /** Query a [[writeIvfPqIndex]] layout: route against the persisted
-    * centroids, ADC-rank the persisted codes of probed cells only (the
-    * code and vector reads prune to probed `centId=` directories),
-    * exact-rescore refine survivors against the persisted vectors.
-    * Encode/routing are deterministic given the persisted quantizers, so
-    * results equal [[ivfPqTopK]] with the same frames and the same DuckDB
-    * oracle gates both.
-    *
-    * `nProbe = -1` sizes from the stamped nlist ([[nprobeForCells]]);
-    * `refine = -1` sizes from the stamped corpus count via
-    * [[expectedProbed]] + [[refineForCandidates]] — both reads of the
-    * one-row meta, zero jobs over the store. An index without the meta
-    * stamp RAISES.
-    */
-  def ivfPqTopKIndexed(queries: DataFrame, path: String,
-      k: Int = 10, nProbe: Int = -1, refine: Int = -1): DataFrame = {
-    val spark = queries.sparkSession
-    val metaPath = new org.apache.hadoop.fs.Path(s"$path/meta")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(metaPath),
-      s"IVF-PQ index at $path has no meta stamp — rebuild with writeIvfPqIndex")
-    val cent = SourceLoaders.parquet(spark, s"$path/centroids")
-    // sizing integers from the centroid schema stamp — zero jobs (r21);
-    // a pre-r21 index falls back to the one-row meta read
-    val cmd = cent.schema("centId").metadata
-    val (n, m, subDim, nlist) =
-      if (cmd.contains("graft.corpusCount"))
-        (cmd.getLong("graft.corpusCount"), cmd.getLong("graft.m").toInt,
-          cmd.getLong("graft.subDim").toInt, cmd.getLong("graft.nlist").toInt)
-      else {
-        val meta = SourceLoaders.parquet(spark, s"$path/meta")
-          .select(col("corpusCount").cast("long"), col("m").cast("int"),
-            col("subDim").cast("int"), col("nlist").cast("int")).head()
-        (meta.getLong(0), meta.getInt(1), meta.getInt(2), meta.getInt(3))
-      }
-    val np = if (nProbe != -1) nProbe else nprobeForCells(nlist)
-    val rf = if (refine != -1) refine
-      else refineForCandidates(expectedProbed(n, nlist, np))
-    val cbSub = SourceLoaders.parquet(spark, s"$path/codebook")
-    val q = prep(queries, "qid")
-    val probed = nearestCells(q, "qid", cent, keep = np)
-    val probedCells = broadcast(probed.select("centId").distinct())
-    // both data-sized reads prune to probed cell directories
-    val codes = SourceLoaders.parquet(spark, s"$path/codes").join(probedCells, "centId")
-    val vectors = SourceLoaders.parquet(spark, s"$path/vectors").join(probedCells, "centId")
-    // route against the VECTORS table's (cid, centId) projection — one
-    // row per cid by construction, so no distinct() exchange; the former
-    // shape distinct()-ed the codes table's m rows per cid (r21)
-    val routed = probed
-      .join(vectors.select("cid", "centId"), "centId")
-      .where(col("qid") =!= col("cid"))
-      .select("qid", "cid")
-    val qTab = pqQueryTable(q, cbSub, m, subDim)
-    adcRefineRescore(Some(routed), qTab, codes.select("cid", "s", "codeId"),
-      queries, vectors.select(col("cid"), col("vec")), k, rf)
-  }
-
   /** Per-row residuals against the assigned coarse cell: (cid, centId,
-    * r_v = vec − cell centroid). One broadcast-centroid pass; the only
-    * shuffle is the id-keyed self-join re-attaching vectors to their
-    * assignment.
+    * r_v = vec − cell centroid), from an `(cid, centId)` assignment. One
+    * broadcast-centroid join; the only shuffle is the id-keyed join
+    * re-attaching vectors to their assignment.
     */
-  private def residualFrame(c: DataFrame, cent: DataFrame): DataFrame =
-    nearestCells(c, "cid", cent, keep = 1)
+  private def residualFrame(assigned: DataFrame, c: DataFrame,
+      cent: DataFrame): DataFrame =
+    assigned.select(col("cid"), col("centId"))
       .join(broadcast(cent.select(col("centId"), col("cent_v"))), "centId")
       .join(c.select(col("cid"), col("cid_v")), "cid")
       .select(col("cid"), col("centId"),
@@ -1521,152 +1463,12 @@ object Similarity {
     * as a fixture (tools.TrainPqResidualFixture) and gate the SERVE path.
     */
   def pqResidualCodebook(corpus: DataFrame, centroids: DataFrame,
-      m: Int = 8, subDim: Int = 8, kCode: Int = 16, iters: Int = 5): DataFrame =
+      m: Int = 8, subDim: Int = 8, kCode: Int = 16, iters: Int = 5): DataFrame = {
+    val c = prep(corpus, "cid")
     pqTrainedCodebook(
-      residualFrame(prep(corpus, "cid"), centroids)
+      residualFrame(nearestCells(c, "cid", centroids, keep = 1), c, centroids)
         .select(col("cid"), col("r_v").as("vec")),
       m, subDim, kCode, iters)
-
-  /** RESIDUAL IVF-PQ (IVFADC, Jegou et al. 2011): the coarse quantizer
-    * routes, PQ codes quantize the RESIDUAL vec − centroid, and ADC
-    * exploits dot(q, centroid + Σ_s cb_s) = dot(q, centroid) + Σ_s
-    * dot(q_sub, cb_s) — one broadcast qcent term per (query, cell) plus
-    * the same per-subspace lookup table as the non-residual form. At
-    * equal bits the codebook spans the residual cloud instead of the
-    * whole corpus spread, so ranking is finer and recall ≥ the
-    * non-residual [[ivfPqTopK]] (pinned by OpsSpec on the fixture).
-    *
-    * Scale shape: identical to [[ivfPqTopK]] — centroids and codebooks
-    * broadcast, every shuffle carries (id, subspace, code) ints only, the
-    * ADC scan touches probed cells only, refine survivors join vectors
-    * back by id.
-    */
-  def ivfPqResidualTopK(
-      queries: DataFrame, // (qid, vec)
-      corpus: DataFrame,  // (cid, vec)
-      k: Int = 10,
-      nCells: Int = 16,
-      nProbe: Int = 4,
-      m: Int = 8,
-      subDim: Int = 8,
-      kCode: Int = 16,
-      refine: Int = 30,
-      centroids: Option[DataFrame] = None, // (centId, cent_v, cent_n)
-      codebook: Option[DataFrame] = None,  // RESIDUAL (s, codeId, cb_sub)
-  ): DataFrame = {
-    val c = prep(corpus, "cid")
-    val q = prep(queries, "qid")
-    val cent = centroids.getOrElse(seededCentroids(c, nCells))
-    val res = residualFrame(c, cent) // (cid, centId, r_v)
-    val resAsC = res.select(col("cid"), col("r_v").as("cid_v"))
-    val cbSub = codebook.getOrElse(seededCodebook(resAsC, m, subDim, kCode))
-    val codes = pqEncode(resAsC, cbSub, m, subDim)
-    val probed = nearestCells(q, "qid", cent, keep = nProbe)
-    val routed = probed.join(res.select("cid", "centId"), "centId")
-      .where(col("qid") =!= col("cid"))
-      .select("qid", "cid", "centId")
-    val qTab = pqQueryTable(q, cbSub, m, subDim)
-    val qcent = q.select(col("qid"), col("qid_v"))
-      .crossJoin(broadcast(cent))
-      .select(col("qid"), col("centId"),
-        adotLong(round(dot_product(col("qid_v"), col("cent_v")), 9)).as("qcdot"))
-    val approx = routed.join(codes, "cid").join(qTab, Seq("qid", "s", "codeId"))
-      .groupBy("qid", "cid", "centId").agg(sum(col("pdot")).as("rdot"))
-      .join(qcent, Seq("qid", "centId"))
-      .select(col("qid"), col("cid"), (col("rdot") + col("qcdot")).as("adot"))
-    val cand = approx
-      .withColumn("arn", row_number().over(
-        Window.partitionBy("qid").orderBy(col("adot").desc, col("cid"))))
-      .where(col("arn") <= refine).select("qid", "cid")
-    rescoreTopK(cand, queries, corpus, k)
-  }
-
-  /** Scalar-quantization (SQ8) ANN: compress each corpus dimension to ONE
-    * byte — code = ⌊(x − lo_d) / step_d⌋ clamped to [0, 255], with
-    * per-dimension ranges [lo_d, hi_d) from one corpus aggregate and
-    * step_d = (hi_d − lo_d)/256 — then rank candidates by the exact dot
-    * against the BUCKET-MIDPOINT reconstruction (lo_d + (code+0.5)·step_d,
-    * the asymmetric-distance convention: the query stays full-precision)
-    * and exact-rescore the top `refine`. The compression tier between raw
-    * floats and PQ: 4× (float32→byte) with near-exact ranking — each
-    * dimension keeps 256 levels where PQ's 16-centroid codebook keeps 16
-    * levels per 8-dim SUBSPACE — so SQ8 needs a far smaller refine budget
-    * for the same recall (FAISS's SQ8 vs PQ trade).
-    *
-    * Deterministic end-to-end (min/max are order-independent, floor and
-    * the midpoint decode are exact double arithmetic), so the DuckDB
-    * oracle recomputes ranges → codes → reconstruction → refine
-    * bit-for-bit; the approximate dot rounds to 9 decimals and ranks as
-    * DECIMAL so the refine cutoff can never drift between engines.
-    *
-    * Like [[pqTopK]] this is the COMPRESSION-ONLY variant: the ranking
-    * scan touches every (query, corpus) pair — memory shrinks 4×, scan
-    * work does not (the decode is once per corpus ROW, not per pair, and
-    * the per-pair op is one codegen dot). Routing composes exactly as in
-    * [[ivfPqTopK]]: restrict the cross join to IVF-probed cells and
-    * nothing else changes.
-    */
-  def sq8TopK(
-      queries: DataFrame, // (qid, vec)
-      corpus: DataFrame,  // (cid, vec)
-      k: Int = 10,
-      refine: Int = 30,   // exact-rescore budget per query
-  ): DataFrame = {
-    val c = prep(corpus, "cid")
-    val rec = sq8Reconstructed(c, corpus)
-    val approx = prep(queries, "qid").select(col("qid"), col("qid_v"))
-      .crossJoin(rec)
-      .where(col("qid") =!= col("cid"))
-    sq8RefineRescore(approx, queries, corpus, k, refine)
-  }
-
-  /** IVF-SQ8: coarse cells route, SQ8 codes compress, the midpoint-decode
-    * dot ranks ONLY inside probed cells, exact rescore finishes — the
-    * scan-pruning form of [[sq8TopK]], exactly the [[ivfPqTopK]]
-    * composition one compression tier up. Non-residual (ranges come from
-    * the WHOLE corpus, not per cell), so routing changes WHICH codes are
-    * scanned, never the codes themselves — ranking dots match
-    * [[sq8TopK]]'s for the pairs both scan, and probing every cell
-    * reproduces it exactly (pinned in OpsSpec).
-    */
-  def ivfSq8TopK(
-      queries: DataFrame, // (qid, vec)
-      corpus: DataFrame,  // (cid, vec)
-      k: Int = 10,
-      nCells: Int = 16,   // coarse cells
-      nProbe: Int = 4,    // cells scanned per query
-      refine: Int = 30,   // exact-rescore budget per query
-      centroids: Option[DataFrame] = None, // (centId, cent_v, cent_n)
-  ): DataFrame = {
-    val c = prep(corpus, "cid")
-    val q = prep(queries, "qid")
-    val cent = centroids.getOrElse(seededCentroids(c, nCells))
-    // routing: keep=1 assignment + nProbe distinct probed cells per query
-    // means routed pairs are already unique (the ivfPqTopK argument)
-    val assigned = nearestCells(c, "cid", cent, keep = 1)
-    val probed = nearestCells(q, "qid", cent, keep = nProbe)
-    val routed = probed.join(assigned, "centId")
-      .where(col("qid") =!= col("cid"))
-      .select("qid", "cid")
-    val approx = routed
-      .join(sq8Reconstructed(c, corpus), "cid")
-      .join(q.select(col("qid"), col("qid_v")), "qid")
-    sq8RefineRescore(approx, queries, corpus, k, refine)
-  }
-
-  /** The SQ8 build: per-dimension ranges → byte codes → bucket-midpoint
-    * reconstruction, one row per corpus vector — `(cid, rv)`. ONE
-    * definition shared by the exhaustive and IVF-routed forms, so their
-    * ranking dots agree bit-for-bit. Ranges are d tiny dimension-keyed
-    * aggregates (map-side combined) packed into ONE broadcast row; the
-    * decode runs once per corpus ROW, never per candidate pair. A
-    * constant dimension (step 0) codes to 0 and reconstructs to its lo.
-    */
-  private def sq8Reconstructed(c: DataFrame, corpus: DataFrame): DataFrame = {
-    // derive the dimension from the data (the kmeansCentroids rule)
-    val d = corpus.select(size(col("vec"))).head.getInt(0)
-    val rg = sq8Ranges(c)
-    sq8Decode(sq8Codes(c, rg, d), rg)
   }
 
   /** The ONE per-dimension range aggregate of the SQ8 family — one row,
@@ -1701,111 +1503,6 @@ object Similarity {
             (cd.cast("double") + lit(0.5)) * element_at(col("sts"), i + 1))
           .as("rv"))
 
-  /** Persist an SQ8 index: the byte codes, the one-row range table, and
-    * the raw vectors (the exact-rescore side) written as three parquet
-    * datasets — the build-offline / serve-online split of
-    * [[writeIvfIndex]] at the scalar-quantization tier. What serving
-    * SCANS for ranking is the codes dataset — one byte per dimension on
-    * disk (parquet stores the int array dictionary/byte-packed), 4× less
-    * ranking I/O than raw float32 — while the full-precision vectors are
-    * touched only for the per-query `refine` survivors.
-    */
-  def writeSq8Index(corpus: DataFrame, path: String): Unit = {
-    val c = prep(corpus, "cid")
-    val d = corpus.select(size(col("vec"))).head.getInt(0)
-    val rg = sq8Ranges(c)
-    // stamp the corpus count into the codes column's schema metadata
-    // (the cosineIndexAdaptive convention): it survives the parquet
-    // round-trip at zero row cost, and lets a server size its refine
-    // budget from the INDEX — never a count job over the store
-    val stamp = new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong("graft.corpusCount", corpus.count()).build()
-    sq8Codes(c, rg, d)
-      .select(col("cid"), col("codes").as("codes", stamp))
-      .write.parquet(s"$path/codes")
-    rg.write.parquet(s"$path/ranges")
-    corpus.select(col("cid"), col("vec")).write.parquet(s"$path/vectors")
-  }
-
-  /** Query a [[writeSq8Index]] layout: decode the persisted codes against
-    * the persisted ranges, rank, refine, and exact-rescore against the
-    * persisted vectors. Ranges and codes are byte-identical to the
-    * in-flight build, so results equal [[sq8TopK]] over the same corpus
-    * and the same DuckDB oracle gates both.
-    *
-    * `refine = -1` — the DEFAULT — sizes the budget with
-    * [[refineForCandidates]] from the corpus count STAMPED at build time
-    * (a schema read, zero jobs over the store). An unstamped pre-r17
-    * index must be served with an explicit refine — raising beats
-    * silently guessing a budget. The default was the fixed 30 whose
-    * measured recall decay (0.236 → 0.047 across decades) motivated the
-    * adaptive rule; external callers relying on defaults should get the
-    * measured-good behavior, not the legacy constant.
-    */
-  def sq8TopKIndexed(queries: DataFrame, path: String,
-      k: Int = 10, refine: Int = -1): DataFrame = {
-    val spark = queries.sparkSession
-    val rg = SourceLoaders.parquet(spark, s"$path/ranges")
-    val codes = SourceLoaders.parquet(spark, s"$path/codes")
-    val rf =
-      if (refine != -1) refine
-      else {
-        val md = codes.schema("codes").metadata
-        require(md.contains("graft.corpusCount"),
-          s"SQ8 index at $path has no stamped corpus count (pre-r17 " +
-            "unstamped build?) — since r17 the default refine=-1 sizes " +
-            "from the stamp; pass refine explicitly (e.g. the legacy 30) " +
-            "to serve this index as before, or rebuild it to adopt the stamp")
-        refineForCandidates(md.getLong("graft.corpusCount"))
-      }
-    val rec = sq8Decode(codes, rg)
-    val vectors = SourceLoaders.parquet(spark, s"$path/vectors")
-    val approx = prep(queries, "qid").select(col("qid"), col("qid_v"))
-      .crossJoin(rec)
-      .where(col("qid") =!= col("cid"))
-    sq8RefineRescore(approx, queries, vectors, k, rf)
-  }
-
-  /** Shared SQ8 ranking tail: the 9-decimal DECIMAL-ranked midpoint dot
-    * (the PQ adot convention — the refine cutoff can never drift from the
-    * oracle), per-query refine cut, exact rescore. Input must carry
-    * `qid`, `qid_v`, `cid`, `rv`.
-    */
-  private def sq8RefineRescore(approx: DataFrame, queries: DataFrame,
-      corpus: DataFrame, k: Int, refine: Int): DataFrame = {
-    val cand = approx
-      .select(col("qid"), col("cid"),
-        adotLong(round(dot_product(col("qid_v"), col("rv")), 9)).as("adot"))
-      .withColumn("arn", row_number().over(
-        Window.partitionBy("qid").orderBy(col("adot").desc, col("cid"))))
-      .where(col("arn") <= refine).select("qid", "cid")
-    rescoreTopK(cand, queries, corpus, k)
-  }
-
-  /** ANN top-k via hyperplane LSH: score only same-bucket candidates. With
-    * multi-probe = 0 this trades recall for a ~2^planes candidate cut.
-    */
-  def lshTopK(
-      queries: DataFrame, // (qid, vec)
-      corpus: DataFrame,  // (cid, vec)
-      k: Int = 10,
-      planes: Int = 8,
-  ): DataFrame = {
-    val q = prep(queries, "qid").withColumn("bucket",
-      hyperplaneBucket(col("qid_v"), planes))
-    val c = prep(corpus, "cid").withColumn("bucket",
-      hyperplaneBucket(col("cid_v"), planes))
-    val scored = q.join(c, "bucket")
-      .where(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"),
-        round(dot_product(col("qid_v"), col("cid_v")) /
-          (col("qid_n") * col("cid_n")), 6).as("sim"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("cid"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-  }
-
   /** Hard-negative mining for contrastive embedding training (the
     * ANCE-style "near but wrong" selection, Xiong et al. 2021,
     * arXiv:2007.00808): for each query vector, the top-k most-similar
@@ -1813,12 +1510,12 @@ object Similarity {
     * negatives that actually shape a decision boundary, as opposed to
     * random negatives the model already separates.
     *
-    * Inputs carry (qid|cid, vec, label). The candidate cut is the
-    * [[lshTopKBanded]] machinery (id-only band shuffle, OR-amplified
-    * buckets); labels join in at rescore time with the vectors — int-sized
-    * columns on candidate-count rows — and the mismatch filter runs BEFORE
-    * ranking, so negatives crowded out by same-label neighbors still
-    * surface. Exact cosine, rank ties to cid.
+    * Inputs carry (qid|cid, vec, label). The candidate cut is the [[Lsh]]
+    * router (id-only band shuffle, OR-amplified buckets); labels join in
+    * at rescore time with the vectors — int-sized columns on
+    * candidate-count rows — and the mismatch filter runs BEFORE ranking,
+    * so negatives crowded out by same-label neighbors still surface.
+    * Exact cosine, rank ties to cid.
     */
   def hardNegatives(
       queries: DataFrame, // (qid, vec, label)
@@ -1827,13 +1524,8 @@ object Similarity {
       planesPerBand: Int = 4,
       bands: Int = 4,
   ): DataFrame = {
-    def banded(df: DataFrame, id: String) =
-      prep(df, id).select(col(id), posexplode(
-          graft.functions.BandFunctions.band_buckets(col(s"${id}_v"), planesPerBand, bands)))
-        .withColumnsRenamed(Map("pos" -> "band", "col" -> "bucket"))
-    val cand = banded(queries, "qid").join(banded(corpus, "cid"), Seq("band", "bucket"))
-      .where(col("qid") =!= col("cid"))
-      .select("qid", "cid").distinct()
+    val cand = lshPairs(prep(queries, "qid"), prep(corpus, "cid"),
+      Lsh(planesPerBand, bands))
     val scored = cand
       .join(prep(queries, "qid"), "qid")
       .join(prep(corpus, "cid"), "cid")
@@ -1848,19 +1540,6 @@ object Similarity {
       .where(col("rank") <= k)
   }
 
-  /** Corpus-level embedding feature prep: mean-center every vector on the
-    * corpus centroid, then L2-normalize — the standard conditioning step
-    * before k-means / cosine ANN (removes the common-direction bias that
-    * makes raw embedding cosines cluster near 1). A zero vector after
-    * centering (a vector AT the centroid) stays zero rather than
-    * dividing by its own zero norm.
-    *
-    * Scale shape: the mean is 64 dimension-keyed partial aggregates
-    * (map-side combined, DECIMAL-exact so the centroid is partition-order
-    * independent), collected into ONE broadcast array; the
-    * center+normalize pass is then a row-local projection. Components
-    * round to 6 decimals at output (the cosine-family convention).
-    */
   /** ±1 entry of the JL projection matrix at plane `p`, dimension `i`
     * (1-based). Two modular SQUARES break the affine structure that
     * correlated the original one-step Lehmer generator's rows (measured
@@ -1910,144 +1589,19 @@ object Similarity {
         d => round(d, 6)).as("proj"))
   }
 
-  /** ANN via JL project-then-rescore: candidates rank by PROJECTED-space
-    * cosine — a `outDims/64`-cost ranking dot against [[signProject]]'s
-    * deterministic matrix — the refine best per query rescore exactly in
-    * full space (the [[sq8TopK]] coarse-then-refine composition one
-    * compression family over: quantize bytes vs project dimensions).
-    * Projected vectors are the ROUNDED signProject output, so a serve
-    * path can equally rank against a persisted projected table and land
-    * on identical candidates. A zero-norm projection scores −2 (below
-    * every cosine) instead of NULL-ranking nondeterministically.
-    */
-  def projectedTopK(
-      queries: DataFrame, // (qid, vec)
-      corpus: DataFrame,  // (cid, vec)
-      k: Int = 10,
-      outDims: Int = 16,
-      refine: Int = 30,
-      firstPlane: Int = 100,
-  ): DataFrame = {
-    val cp = signProject(corpus.select(col("cid"), col("vec")), "cid", "vec",
-        outDims, firstPlane)
-      .select(col("cid"), col("proj").as("cp"))
-    val qp = signProject(queries.select(col("qid"), col("vec")), "qid", "vec",
-        outDims, firstPlane)
-      .select(col("qid"), col("proj").as("qp"))
-    rescoreTopK(projectedCandidates(qp, cp, refine), queries, corpus, k)
-  }
-
-  /** Shared projected-space candidate stage: rank corpus projections per
-    * query by projected cosine (9-decimal DECIMAL — the family's no-drift
-    * convention), keep `refine` per query, ids only downstream. Inputs
-    * carry `(qid, qp)` / `(cid, cp)` rounded projections.
-    */
-  private def projectedCandidates(qp: DataFrame, cp: DataFrame,
-      refine: Int): DataFrame =
-    qp.withColumn("qp_n", norm(col("qp")))
-      .crossJoin(cp.withColumn("cp_n", norm(col("cp"))))
-      .where(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"),
-        adotLong(when(col("qp_n") * col("cp_n") =!= 0.0,
-          round(dot_product(col("qp"), col("cp")) /
-            (col("qp_n") * col("cp_n")), 9))
-          .otherwise(lit(-2.0))).as("adot"))
-      .withColumn("arn", row_number().over(
-        Window.partitionBy("qid").orderBy(col("adot").desc, col("cid"))))
-      .where(col("arn") <= refine).select("qid", "cid")
-
-  /** Persist a JL projected index: the ROUNDED `outDims`-dim projections
-    * (what serving ranks against — `outDims/64` of the raw ranking I/O)
-    * plus the raw vectors (the exact-rescore side) — the build-offline /
-    * serve-online split every other ANN tier has ([[writeIvfIndex]],
-    * [[writeSq8Index]], the dedup band indexes). Projections are exactly
-    * [[signProject]]'s output, so a serve over the persisted table lands
-    * on the same candidates as the in-flight [[projectedTopK]].
-    */
-  def writeProjectedIndex(corpus: DataFrame, path: String,
-      outDims: Int = 16, firstPlane: Int = 100): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    signProject(corpus.select(col("cid"), col("vec")), "cid", "vec",
-        outDims, firstPlane)
-      .select(col("cid"), col("proj"))
-      .write.parquet(s"$path/projected")
-    corpus.select(col("cid"), col("vec")).write.parquet(s"$path/vectors")
-    // the projection parameters ARE part of the index: a serve that
-    // re-projects queries with different (outDims, firstPlane) ranks in a
-    // DIFFERENT space and silently returns a wrong candidate set — so
-    // persist them and validate at read time. The corpus count rides
-    // along (the sq8/cosine stamp convention) so a server can size its
-    // refine budget from the meta, never from a count job over the store
-    Seq((outDims, firstPlane, corpus.count()))
-      .toDF("outDims", "firstPlane", "corpusCount")
-      .coalesce(1).write.parquet(s"$path/meta")
-  }
-
-  /** Query a [[writeProjectedIndex]] layout: rank against the persisted
-    * projections, refine, exact-rescore against the persisted vectors.
-    * Bit-identical projections → results equal [[projectedTopK]] over the
-    * same corpus, and the same DuckDB oracle gates both.
+  /** Corpus-level embedding feature prep: mean-center every vector on the
+    * corpus centroid, then L2-normalize — the standard conditioning step
+    * before k-means / cosine ANN (removes the common-direction bias that
+    * makes raw embedding cosines cluster near 1). A zero vector after
+    * centering (a vector AT the centroid) stays zero rather than
+    * dividing by its own zero norm.
     *
-    * `outDims`/`firstPlane` default to the values PERSISTED at build time
-    * (pass -1 = "from meta"); an explicit value that disagrees with the
-    * index's meta raises instead of silently ranking in the wrong
-    * projected space. `refine` likewise defaults to -1 = sized by
-    * [[refineForCandidates]] from the persisted corpus count (a pre-count
-    * meta raises — the sq8TopKIndexed rule), so default callers get the
-    * measured-good adaptive budget, not the legacy fixed 30.
+    * Scale shape: the mean is 64 dimension-keyed partial aggregates
+    * (map-side combined, DECIMAL-exact so the centroid is partition-order
+    * independent), collected into ONE broadcast array; the
+    * center+normalize pass is then a row-local projection. Components
+    * round to 6 decimals at output (the cosine-family convention).
     */
-  def projectedTopKIndexed(queries: DataFrame, path: String,
-      k: Int = 10, outDims: Int = -1, refine: Int = -1,
-      firstPlane: Int = -1): DataFrame = {
-    val spark = queries.sparkSession
-    // pre-meta indexes (written before the meta file existed) stay
-    // servable WHEN the caller supplies both parameters explicitly.
-    // ONLY a genuinely-absent meta directory takes that path — a corrupt
-    // or unreadable meta must STILL raise, or the wrong-projection-space
-    // guard the meta exists for would silently disable itself
-    val metaPath = new org.apache.hadoop.fs.Path(s"$path/meta")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val metaDf =
-      if (!fs.exists(metaPath)) None
-      else Some(SourceLoaders.parquet(spark, s"$path/meta"))
-    val meta = metaDf.map(
-      _.select(col("outDims").cast("int"), col("firstPlane").cast("int"))
-        .head())
-    require(meta.isDefined || (outDims >= 0 && firstPlane >= 0),
-      s"projected index at $path has no meta file and the caller did not " +
-        "pass explicit (outDims, firstPlane) — cannot infer the projection space")
-    val (metaDims, metaPlane) = meta
-      .map(m => (m.getInt(0), m.getInt(1)))
-      .getOrElse((outDims, firstPlane))
-    require(outDims == -1 || outDims == metaDims,
-      s"projected index at $path was built with outDims=$metaDims, caller passed $outDims")
-    require(firstPlane == -1 || firstPlane == metaPlane,
-      s"projected index at $path was built with firstPlane=$metaPlane, caller passed $firstPlane")
-    // refine = -1: size the budget from the corpus count the meta carries
-    // (a one-row read already in hand — zero jobs over the store); a
-    // pre-count meta must be served with an explicit refine
-    val rf =
-      if (refine != -1) refine
-      else {
-        val counted = metaDf.filter(_.schema.fieldNames.contains("corpusCount"))
-        require(counted.isDefined,
-          s"projected index at $path has no persisted corpus count " +
-            "(pre-r17 meta?) — since r17 the default refine=-1 sizes from " +
-            "the stamp; pass refine explicitly (e.g. the legacy 30) to " +
-            "serve this index as before, or rebuild it to adopt the stamp")
-        refineForCandidates(
-          counted.get.select(col("corpusCount").cast("long")).head().getLong(0))
-      }
-    val cp = SourceLoaders.parquet(spark, s"$path/projected")
-      .select(col("cid"), col("proj").as("cp"))
-    val vectors = SourceLoaders.parquet(spark, s"$path/vectors")
-    val qp = signProject(queries.select(col("qid"), col("vec")), "qid", "vec",
-        metaDims, metaPlane)
-      .select(col("qid"), col("proj").as("qp"))
-    rescoreTopK(projectedCandidates(qp, cp, rf), queries, vectors, k)
-  }
-
   def normalizeEmbeddings(corpus: DataFrame, idCol: String,
       vecCol: String): DataFrame = {
     import graft.functions.Exprs
@@ -2087,9 +1641,7 @@ object Similarity {
     val c = prep(corpus, "cid")
     val w = Window.partitionBy(col("cid")).orderBy(col("csim").desc, col("centId"))
     val assigned = c.crossJoin(broadcast(centroids))
-      .select(col("cid"), col("centId"),
-        (dot_product(col("cid_v"), col("cent_v")) /
-          (col("cid_n") * col("cent_n"))).as("csim"))
+      .select(col("cid"), col("centId"), csim("cid"))
       .withColumn("__rn", row_number().over(w))
       .where(col("__rn") === 1)
     assigned.groupBy(col("centId").as("cell"))
@@ -2100,3 +1652,4 @@ object Similarity {
         round(max(col("csim")), 6).as("max_csim"))
   }
 }
+

@@ -4,14 +4,13 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.ops.Similarity
 
-/** Online ANN serving over a persisted IVF index — the serve-online half
-  * of [[graft.ops.Similarity.writeIvfIndex]]'s build-offline split: query
-  * vectors arrive as a stream, and each micro-batch probes the
-  * partitioned index through exactly the batch path
-  * ([[graft.ops.Similarity.ivfTopKIndexed]]), so per-batch results are
-  * identical to the batch operator on the same vectors and per-batch work
-  * is bounded by that batch's probed cell directories (the index is never
-  * scanned whole). `foreachBatch` is the right bridge here: the
+/** Online ANN serving over a persisted index — the serve-online half of
+  * [[graft.ops.Similarity.writeAnnIndex]]'s build-offline split: query
+  * vectors arrive as a stream, and each micro-batch is served through
+  * exactly the batch path ([[graft.ops.Similarity.serveAnnIndex]]), so
+  * per-batch results are identical to the batch operator on the same
+  * vectors, and under a cell router per-batch work is bounded by that
+  * batch's probed cell directories (the index is never scanned whole). `foreachBatch` is the right bridge here: the
   * partition-pruning joins the indexed path relies on are per-batch
   * DataFrame plans, which a continuous stream-static join would replan
   * without the probe-side pruning.
@@ -27,7 +26,7 @@ object AnnStream {
     queryStream.writeStream.outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty)
-          sink(Similarity.ivfTopKIndexed(batch, indexPath, k = k, nProbe = nProbe), batchId)
+          sink(Similarity.serveAnnIndex(batch, indexPath, k = k, nProbe = nProbe), batchId)
       }
       .start()
 }

@@ -4,8 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.Similarity
+import graft.ops.Similarity.{Ivf, IvfSharded, Lsh, Pq, Raw, Sq8}
 
-/** ANN recall at scale — the r15 judge's item 2: [[StressX100]] measures
+/** ANN recall at scale — the r15 judge's item 2: the StressX100 tool measured
   * the DEDUP probes' cost flat across 1×/10×/100× indexes with 100%
   * planted-duplicate recall, but the ANN SERVING tiers (banded LSH, IVF,
   * IVF-PQ) had no recall@k-vs-exact curve as the index grows — the sf0.1
@@ -120,30 +121,30 @@ object RecallX100 {
       // shipped LSH rule: 4 bands, target-32 occupancy
       val planes = Similarity.planesForCorpus(n, targetPerBucket = 32)
       measure(s"banded LSH, constant occupancy (4 bands)",
-        Similarity.lshTopKBanded(queries, corpus, k = K,
-          planesPerBand = planes, bands = 4))
+        Similarity.annTopK(queries, corpus, K,
+          Lsh(planesPerBand = planes, bands = 4), Raw))
       measure(s"banded LSH + 2 multi-probes/band",
-        Similarity.lshTopKBanded(queries, corpus, k = K,
-          planesPerBand = planes, bands = 4, probes = 2))
+        Similarity.annTopK(queries, corpus, K,
+          Lsh(planesPerBand = planes, bands = 4, probes = 2), Raw))
 
       // constant cell size ~125 (16 cells at the sf0.1 base, the shipped
       // s_ann_ivf shape at 1x) — nprobe fixed vs nprobe grown
       val nlist = math.max(16, (n / 125).toInt)
       measure(s"IVF, constant cell size, nprobe 4",
-        Similarity.ivfTopK(queries, corpus, k = K, nCells = nlist, nProbe = 4))
+        Similarity.annTopK(queries, corpus, K, Ivf(nCells = nlist, nProbe = 4), Raw))
       measure(s"IVF, constant probed fraction (nprobe = nlist/4)",
-        Similarity.ivfTopK(queries, corpus, k = K, nCells = nlist,
-          nProbe = math.max(4, nlist / 4)))
+        Similarity.annTopK(queries, corpus, K, Ivf(nCells = nlist,
+          nProbe = math.max(4, nlist / 4)), Raw))
       measure(s"IVF-PQ, constant cell size, nprobe 4, refine 30",
-        Similarity.ivfPqTopK(queries, corpus, k = K, nCells = nlist,
-          nProbe = 4))
+        Similarity.annTopK(queries, corpus, K, Ivf(nCells = nlist,
+          nProbe = 4), Pq()))
 
       // THE SHIPPED RULE (r17): nlistForCorpus + nprobeForCells — the
       // parameters s_ann_ivf/ivfpq/ivfsq8 actually run with
       val nlR = Similarity.nlistForCorpus(n)
       val npR = Similarity.nprobeForCells(nlR)
       measure(s"IVF, SHIPPED rule (seeded)",
-        Similarity.ivfTopK(queries, corpus, k = K, nCells = nlR, nProbe = npR))
+        Similarity.annTopK(queries, corpus, K, Ivf(nCells = nlR, nProbe = npR), Raw))
       // SHARDED IVF (r18): 2 hash shards, per-shard constant-cell index
       // sized from the SHARD population, same probed fraction — the
       // claim this row pins is recall parity with the unsharded seeded
@@ -158,8 +159,8 @@ object RecallX100 {
         .split(",").map(_.trim.toInt).toSeq
       for (ns <- shardCounts) {
         measure(s"IVF sharded x$ns, SHIPPED rule (seeded)",
-          Similarity.ivfShardedTopK(queries, corpus, k = K, nShards = ns,
-            corpusSize = n))
+          Similarity.annTopK(queries, corpus, K, IvfSharded(nShards = ns,
+            corpusSize = n), Raw))
         // probe-scale calibration grid (r20): the equal-budget sharded
         // rows measured BELOW the unsharded router at 100× under BOTH
         // allocation schemes — the loss is the per-shard ASSIGNMENT
@@ -175,8 +176,8 @@ object RecallX100 {
           val npSh = math.ceil(
             Similarity.nprobeForCells(cellsSh) * scale).toInt
           measure(s"IVF sharded x$ns, seeded, probe x$scaleStr",
-            Similarity.ivfShardedTopK(queries, corpus, k = K, nShards = ns,
-              nProbe = npSh, corpusSize = n))
+            Similarity.annTopK(queries, corpus, K, IvfSharded(nShards = ns,
+              nProbe = npSh, corpusSize = n), Raw))
         }
         // SHARDED + TRAINED (r19 — the r18 verdict's gap: sharded was
         // seeded-only while trained cells were both the recall ceiling
@@ -200,8 +201,8 @@ object RecallX100 {
           val shTrained = Similarity.shardedKmeansCentroids(shTrainSet,
             nShards = ns, nCells = nlSh, iters = 3).localCheckpoint(true)
           measure(trainedName,
-            Similarity.ivfShardedTopK(queries, corpus, k = K, nShards = ns,
-              corpusSize = n, centroids = Some(shTrained)))
+            Similarity.annTopK(queries, corpus, K, IvfSharded(nShards = ns,
+              corpusSize = n, centroids = Some(shTrained)), Raw))
           // trained probe-scale rows: scale the BASE policy, like the
           // seeded grid — calibrates the term against the HIGHER
           // unsharded-trained bar, not just the seeded one
@@ -209,8 +210,8 @@ object RecallX100 {
             val npSh = math.ceil(
               Similarity.nprobeForCells(nlSh) * scaleStr.toDouble).toInt
             measure(trainedGridName(scaleStr),
-              Similarity.ivfShardedTopK(queries, corpus, k = K, nShards = ns,
-                nProbe = npSh, corpusSize = n, centroids = Some(shTrained)))
+              Similarity.annTopK(queries, corpus, K, IvfSharded(nShards = ns,
+                nProbe = npSh, corpusSize = n, centroids = Some(shTrained)), Raw))
           }
           shTrainSet.unpersist()
         }
@@ -242,11 +243,11 @@ object RecallX100 {
       val trained = Similarity.kmeansCentroids(trainSet, nCells = nlR,
         iters = 3).localCheckpoint(true)
       measure(s"IVF, SHIPPED rule (trained centroids)",
-        Similarity.ivfTopK(queries, corpus, k = K, nCells = nlR,
-          nProbe = npR, centroids = Some(trained)))
+        Similarity.annTopK(queries, corpus, K, Ivf(nCells = nlR,
+          nProbe = npR, centroids = Some(trained)), Raw))
       measure(s"IVF-PQ, SHIPPED rule (trained centroids), refine 30",
-        Similarity.ivfPqTopK(queries, corpus, k = K, nCells = nlR,
-          nProbe = npR, centroids = Some(trained)))
+        Similarity.annTopK(queries, corpus, K, Ivf(nCells = nlR,
+          nProbe = npR, centroids = Some(trained)), Pq()))
       // ADAPTIVE refine (r17): hold the rescore budget as a FRACTION of
       // the expected probed population instead of the fixed 30 — the
       // refine analogue of constant-fraction nprobe. Two candidate
@@ -258,8 +259,8 @@ object RecallX100 {
       for (den <- Seq(64, 16)) {
         val rf = Similarity.refineForCandidates(probedPop, refineDen = den)
         measure(s"IVF-PQ, SHIPPED rule (trained), adaptive refine 1/$den of probed",
-          Similarity.ivfPqTopK(queries, corpus, k = K, nCells = nlR,
-            nProbe = npR, refine = rf, centroids = Some(trained)))
+          Similarity.annTopK(queries, corpus, K, Ivf(nCells = nlR,
+            nProbe = npR, centroids = Some(trained)), Pq(refine = rf)))
       }
       // ADAPTIVE kCode (r18): the r17 table showed adaptive refine alone
       // plateaus at 0.593 at 100× — rank signal the 16-code ADC never
@@ -269,10 +270,9 @@ object RecallX100 {
       // shipped rule, exactly as the refine rows were for RefineDen.
       val kcR = kcR0
       measure(s"IVF-PQ, SHIPPED rule (trained), adaptive refine 1/16 + adaptive kCode",
-        Similarity.ivfPqTopK(queries, corpus, k = K, nCells = nlR,
-          nProbe = npR, kCode = kcR,
-          refine = Similarity.refineForCandidates(probedPop),
-          centroids = Some(trained)))
+        Similarity.annTopK(queries, corpus, K, Ivf(nCells = nlR,
+          nProbe = npR, centroids = Some(trained)), Pq(kCode = kcR,
+          refine = Similarity.refineForCandidates(probedPop))))
       // ADAPTIVE m (r19): past the kCode = 256 byte ceiling the
       // resolution dial is constant again — mForCorpus doubles the
       // subspace count instead (m·kCode ≥ ceil(n/125)). At 1x/10x/100x
@@ -289,16 +289,15 @@ object RecallX100 {
       // this row vs the adaptive-m row at the same decade is the
       // PQ→SQ8 switchover's first measured data point.
       measure(s"IVF-SQ8, SHIPPED rule (trained), adaptive refine",
-        Similarity.ivfSq8TopK(queries, corpus, k = K, nCells = nlR,
-          nProbe = npR, refine = Similarity.refineForCandidates(probedPop),
-          centroids = Some(trained)))
+        Similarity.annTopK(queries, corpus, K, Ivf(nCells = nlR,
+          nProbe = npR, centroids = Some(trained)),
+          Sq8(refine = Similarity.refineForCandidates(probedPop))))
       val mR = mR0
       if (mR != 8) {
         measure(s"IVF-PQ, SHIPPED rule (trained), adaptive refine + kCode + adaptive m=$mR (mForCorpus)",
-          Similarity.ivfPqTopK(queries, corpus, k = K, nCells = nlR,
-            nProbe = npR, m = mR, subDim = 64 / mR, kCode = kcR,
-            refine = Similarity.refineForCandidates(probedPop),
-            centroids = Some(trained)))
+          Similarity.annTopK(queries, corpus, K, Ivf(nCells = nlR,
+            nProbe = npR, centroids = Some(trained)), Pq(m = mR, subDim = 64 / mR,
+            kCode = kcR, refine = Similarity.refineForCandidates(probedPop))))
       }
       trainSet.unpersist()
       } // unsharded-trained block

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * evidence: run the same queries at two scale points a decade apart and
   * record the observed exponents in BENCH_NOTES.md.
   *
-  * Shape-preserving, join-consistent replication (the StressX10 rules):
+  * Shape-preserving, join-consistent replication (the [[Synth]] rules):
   * every 64-bit id column shifts by `rep · 10⁹`, the SAME shift on both
   * sides of every FK (replica r of lineitem joins replica r of orders —
   * the corpus grows, per-key join fan-out does not); fixed-cardinality

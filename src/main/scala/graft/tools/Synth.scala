@@ -4,10 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The ONE definition of the corpus-replication invariants the scale
-  * tools ([[StressX10]], [[StressX100]], [[ScaleUp]])
-  * build their synthetic decades from. Each tool composes these
-  * primitives its own way (fold-CASE columns vs broadcast mask tables,
-  * 10-rotation classes vs factor-bounded rotations), but the rules
+  * tools ([[ScaleUp]], [[RecallX100]]) build their synthetic decades
+  * from. Each tool composes these primitives its own way (fold-CASE
+  * columns vs broadcast mask tables), but the rules
   * themselves — what a rotation is, what a replica mask is — live here,
   * so a fix to the mask family or rotation alphabet cannot silently
   * diverge one tool's corpus from another's measurements (r15 review:
@@ -25,7 +24,7 @@ import org.apache.spark.sql.functions._
   *    cross-replica dots ~0. NOT the banding family — and NOT any affine
   *    generator: affine masks correlate across replicas (two of 100
   *    measured IDENTICAL) and plant false cross-replica near-dup
-  *    structure (see StressX100's scaladoc);
+  *    structure (measured by the since-removed StressX100 tool);
   *  - replica ids shift by replica × a decade-wide constant, the SAME
   *    shift on both sides of any FK, so join fan-out per key is scale-
   *    invariant.
@@ -59,16 +58,16 @@ private[graft] object Synth {
       graft.ops.Similarity.projSign(1000 + r, i + 1).toFloat)
 
   /** `(__rep, __mask)` table of [[replicaMask]] rows for broadcast-join
-    * replication (the shape StressX100 uses for 100 replicas,
-    * where a 100-branch CASE column would not fold).
+    * replication (100-replica decades, where a 100-branch CASE column
+    * would not fold).
     */
   def maskTable(spark: SparkSession, n: Int): DataFrame = {
     import spark.implicits._
     (0 until n).map(r => (r, replicaMask(r))).toDF("__rep", "__mask")
   }
 
-  /** The broadcast-mask-table embedding replication (the StressX100 shape,
-    * shared with [[RecallX100]]): n replicas, per-replica ±1 dimension
+  /** The broadcast-mask-table embedding replication ([[RecallX100]]'s
+    * decades): n replicas, per-replica ±1 dimension
     * masks, ids shifted by replica × 10M. Checkpointed — the tools time
     * probes, not generation.
     */
@@ -82,7 +81,7 @@ private[graft] object Synth {
       .localCheckpoint()
   }
 
-  /** Fold-CASE mask column for small replica counts (StressX10/ScaleUp). */
+  /** Fold-CASE mask column for small replica counts ([[ScaleUp]]). */
   def maskByRep(v: Column, repCol: Column, n: Int): Column =
     (1 until n).foldLeft(v) { (acc, r) =>
       val mask = array(replicaMask(r).map(lit(_)).toIndexedSeq: _*)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops._
+import graft.ops.Similarity.{Exhaustive, Ivf, IvfSharded, Lsh, Pq, Projected, Raw, Sq8}
 
 /** Unit tests for the LLM-pipeline operators (dedup family, similarity
   * search, text analysis, multimodal plumbing) on hand-built frames with
@@ -135,7 +136,7 @@ class OpsSpec extends AnyFunSuite {
     val c = emb.select($"vec_id".as("cid"), $"embedding".as("vec"))
     val bf = Similarity.bruteForceTopK(q, c, k = 50).select("qid", "cid", "sim")
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val lsh = Similarity.lshTopK(q, c, k = 5, planes = 2).select("qid", "cid", "sim")
+    val lsh = Similarity.annTopK(q, c, 5, Lsh(planesPerBand = 2, bands = 1), Raw).select("qid", "cid", "sim")
       .collect()
     assert(lsh.nonEmpty)
     lsh.foreach { r =>
@@ -153,7 +154,7 @@ class OpsSpec extends AnyFunSuite {
     val bf = Similarity.bruteForceTopK(q, c, k = 5)
       .select("qid", "cid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     def recall(ppb: Int, bands: Int): Double = {
-      val lsh = Similarity.lshTopKBanded(q, c, k = 5, planesPerBand = ppb, bands = bands)
+      val lsh = Similarity.annTopK(q, c, 5, Lsh(planesPerBand = ppb, bands = bands), Raw)
         .select("qid", "cid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       (bf & lsh).size.toDouble / bf.size
     }
@@ -170,8 +171,8 @@ class OpsSpec extends AnyFunSuite {
     // multi-probe: flipping the weakest sign bits recovers recall without
     // touching the corpus index or adding bands
     def recallProbed(probes: Int): Double = {
-      val lsh = Similarity.lshTopKBanded(q, c, k = 5, planesPerBand = 4,
-        bands = 4, probes = probes)
+      val lsh = Similarity.annTopK(q, c, 5, Lsh(planesPerBand = 4,
+        bands = 4, probes = probes), Raw)
         .select("qid", "cid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       (bf & lsh).size.toDouble / bf.size
     }
@@ -197,20 +198,20 @@ class OpsSpec extends AnyFunSuite {
     // the committed Lloyd codebook quantizes the corpus it was trained on
     // at least as faithfully as the seeded one — ADC ranks fewer wrong
     // candidates into the refine set, so recall must not drop
-    val pqSeeded = recallOf(Similarity.pqTopK(q, c, k = 5))
-    val pqTrained = recallOf(Similarity.pqTopK(q, c, k = 5, codebook = Some(cb)))
+    val pqSeeded = recallOf(Similarity.annTopK(q, c, 5, Exhaustive, Pq()))
+    val pqTrained = recallOf(Similarity.annTopK(q, c, 5, Exhaustive, Pq(codebook = Some(cb))))
     assert(pqTrained >= pqSeeded, s"trained PQ $pqTrained < seeded $pqSeeded")
-    val ivfpqSeeded = recallOf(Similarity.ivfPqTopK(q, c, k = 5))
-    val ivfpqTrained = recallOf(Similarity.ivfPqTopK(q, c, k = 5,
-      centroids = Some(cent), codebook = Some(cb)))
+    val ivfpqSeeded = recallOf(Similarity.annTopK(q, c, 5, Ivf(), Pq()))
+    val ivfpqTrained = recallOf(Similarity.annTopK(q, c, 5,
+      Ivf(centroids = Some(cent)), Pq(codebook = Some(cb))))
     assert(ivfpqTrained >= ivfpqSeeded,
       s"trained IVF-PQ $ivfpqTrained < seeded $ivfpqSeeded")
     // residual quantization (IVFADC): at the SAME bits (m=8, kCode=16)
     // the codebook spans the residual cloud, not the corpus spread, so
     // recall must not drop below the non-residual trained form
     val rcb = SparkEntry.fixtureResidualCodebook(TestSpark.session)
-    val ivfpqResidual = recallOf(Similarity.ivfPqResidualTopK(q, c, k = 5,
-      centroids = Some(cent), codebook = Some(rcb)))
+    val ivfpqResidual = recallOf(Similarity.annTopK(q, c, 5,
+      Ivf(centroids = Some(cent)), Pq(codebook = Some(rcb), residual = true)))
     assert(ivfpqResidual >= ivfpqTrained,
       s"residual IVF-PQ $ivfpqResidual < non-residual trained $ivfpqTrained")
   }
@@ -227,7 +228,7 @@ class OpsSpec extends AnyFunSuite {
     // refine ≥ corpus ⇒ every pair reaches the exact rescore ⇒ the whole
     // approximation layer cancels and the result IS brute force
     val n = c.count().toInt
-    val full = key(Similarity.sq8TopK(q, c, k = 5, refine = n))
+    val full = key(Similarity.annTopK(q, c, 5, Exhaustive, Sq8(refine = n)))
     val bf = key(Similarity.bruteForceTopK(q, c, k = 5))
     assert(full == bf && bf.nonEmpty)
     // at the shared refine-30 budget, 256 levels/dim must rank candidates
@@ -238,26 +239,26 @@ class OpsSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       (bfPairs & got).size.toDouble / bfPairs.size
     }
-    val sq8 = recallOf(Similarity.sq8TopK(q, c, k = 5, refine = 30))
-    val pq = recallOf(Similarity.pqTopK(q, c, k = 5, refine = 30))
+    val sq8 = recallOf(Similarity.annTopK(q, c, 5, Exhaustive, Sq8(refine = 30)))
+    val pq = recallOf(Similarity.annTopK(q, c, 5, Exhaustive, Pq(refine = 30)))
     assert(sq8 >= pq, s"SQ8 recall $sq8 < PQ recall $pq at equal refine")
     assert(sq8 >= 0.9, s"SQ8 refine-30 recall@5 = $sq8 < 0.9")
     // persisted index serves byte-identical ranges + codes, so the
     // indexed path must reproduce the in-flight form exactly
     val idxPath = java.nio.file.Files.createTempDirectory("sq8idx").toString + "/index"
-    Similarity.writeSq8Index(c, idxPath)
-    val indexed = key(Similarity.sq8TopKIndexed(q, idxPath, k = 5, refine = 30))
-    val inFlight = key(Similarity.sq8TopK(q, c, k = 5, refine = 30))
+    Similarity.writeAnnIndex(c, idxPath, Exhaustive, Sq8())
+    val indexed = key(Similarity.serveAnnIndex(q, idxPath, k = 5, refine = 30))
+    val inFlight = key(Similarity.annTopK(q, c, 5, Exhaustive, Sq8(refine = 30)))
     assert(indexed == inFlight && inFlight.nonEmpty)
     // non-residual IVF-SQ8: probing EVERY cell covers every (qid, cid)
     // pair with identical codes, so it must reproduce sq8TopK exactly
-    val allCells = key(Similarity.ivfSq8TopK(q, c, k = 5, nCells = 16,
-      nProbe = 16, refine = 30))
-    val exhaustive = key(Similarity.sq8TopK(q, c, k = 5, refine = 30))
+    val allCells = key(Similarity.annTopK(q, c, 5, Ivf(nCells = 16,
+      nProbe = 16), Sq8(refine = 30)))
+    val exhaustive = key(Similarity.annTopK(q, c, 5, Exhaustive, Sq8(refine = 30)))
     assert(allCells == exhaustive && exhaustive.nonEmpty)
     // and the default 4-of-16 probe stays within the candidate-cut trade:
     // nonempty, per-query k rows at most, recall not degenerate
-    val routed = recallOf(Similarity.ivfSq8TopK(q, c, k = 5))
+    val routed = recallOf(Similarity.annTopK(q, c, 5, Ivf(), Sq8()))
     assert(routed >= 0.5, s"IVF-SQ8 4/16-probe recall@5 = $routed")
   }
 
@@ -269,7 +270,7 @@ class OpsSpec extends AnyFunSuite {
     val c = emb.select($"vec_id".as("cid"), $"embedding".as("vec"))
     val bf = Similarity.bruteForceTopK(q, c, k = 5).select("qid", "cid", "sim")
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    def run(nProbe: Int) = Similarity.ivfTopK(q, c, k = 5, nCells = 16, nProbe = nProbe)
+    def run(nProbe: Int) = Similarity.annTopK(q, c, 5, Ivf(nCells = 16, nProbe = nProbe), Raw)
       .select("qid", "cid", "sim").collect()
     val p4 = run(4)
     // soundness: every IVF sim equals the exact cosine brute force computed
@@ -300,8 +301,8 @@ class OpsSpec extends AnyFunSuite {
     val c = emb.select($"vec_id".as("cid"), $"embedding".as("vec"))
     val bf = Similarity.bruteForceTopK(q, c, k = 5).select("qid", "cid")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val got = Similarity.ivfTopK(q, c, k = 5, nCells = 16, nProbe = 4,
-        centroids = Some(SparkEntry.fixtureCentroids(TestSpark.session)))
+    val got = Similarity.annTopK(q, c, 5, Ivf(nCells = 16, nProbe = 4,
+        centroids = Some(SparkEntry.fixtureCentroids(TestSpark.session))), Raw)
       .select("qid", "cid")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (bf & got).size.toDouble / bf.size
@@ -317,8 +318,8 @@ class OpsSpec extends AnyFunSuite {
     val bf = Similarity.bruteForceTopK(q, c, k = 5).select("qid", "cid")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     def recall(cent: Option[org.apache.spark.sql.DataFrame]): Double = {
-      val got = Similarity.ivfTopK(q, c, k = 5, nCells = 16, nProbe = 4,
-        centroids = cent).select("qid", "cid")
+      val got = Similarity.annTopK(q, c, 5, Ivf(nCells = 16, nProbe = 4,
+        centroids = cent), Raw).select("qid", "cid")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       (bf & got).size.toDouble / bf.size
     }
@@ -350,14 +351,25 @@ class OpsSpec extends AnyFunSuite {
     // materialized once and both consumers below see identical float means
     val km = Similarity.kmeansCentroids(c, nCells = 16, iters = 5)
     val path = graft.TempDirs.create("graft-test-ivf").resolve("index").toString
-    Similarity.writeIvfIndex(c, path, nCells = 16, centroids = Some(km))
+    Similarity.writeAnnIndex(c, path, Ivf(nCells = 16, centroids = Some(km)), Raw)
     def rows(df: DataFrame) = df.select("qid", "cid", "sim", "rank").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-    val mem = rows(Similarity.ivfTopK(q, c, k = 5, nCells = 16, nProbe = 4,
-      centroids = Some(km)))
-    val idx = rows(Similarity.ivfTopKIndexed(q, path, k = 5, nProbe = 4))
+    val mem = rows(Similarity.annTopK(q, c, 5, Ivf(nCells = 16, nProbe = 4,
+      centroids = Some(km)), Raw))
+    val idx = rows(Similarity.serveAnnIndex(q, path, k = 5, nProbe = 4))
     assert(mem.nonEmpty && idx == mem,
       s"indexed served ${idx.size} rows, in-memory ${mem.size}")
+    // the same index with its graft.nlist stamp stripped raises instead of
+    // sizing the probe from a count job
+    val vectors = TestSpark.session.read.parquet(s"$path/vectors")
+    val noNlist = new org.apache.spark.sql.types.MetadataBuilder()
+      .withMetadata(vectors.schema("cid").metadata).remove("graft.nlist").build()
+    val stripped = graft.TempDirs.create("graft-test-ivf-nonlist").resolve("index").toString
+    vectors.select($"cid".as("cid", noNlist), $"vec", $"centId")
+      .write.partitionBy("centId").parquet(s"$stripped/vectors")
+    TestSpark.session.read.parquet(s"$path/centroids").write.parquet(s"$stripped/centroids")
+    val e = intercept[IllegalArgumentException](Similarity.serveAnnIndex(q, stripped, k = 5))
+    assert(e.getMessage.contains("meta stamp"), e.getMessage)
   }
 
   test("sharded IVF: probing ALL per-shard cells equals brute force; served equals in-flight") {
@@ -370,22 +382,22 @@ class OpsSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
     // exactness limit: every shard probes all of its own cells → the
     // candidate union is the whole corpus → global re-rank IS brute force
-    val all = rows(Similarity.ivfShardedTopK(q, c, k = 5, nShards = 2,
-      nCells = 8, nProbe = 8))
+    val all = rows(Similarity.annTopK(q, c, 5, IvfSharded(nShards = 2,
+      nCells = 8, nProbe = 8), Raw))
     val bf = rows(Similarity.bruteForceTopK(q, c, k = 5))
     assert(all == bf, "all-cells sharded probe must equal brute force")
     // persisted-layout parity: deterministic assignment → identical rows
-    val inFlight = rows(Similarity.ivfShardedTopK(q, c, k = 5, nShards = 2))
+    val inFlight = rows(Similarity.annTopK(q, c, 5, IvfSharded(nShards = 2), Raw))
     val path = graft.TempDirs.create("graft-test-ivfsh").resolve("index").toString
-    Similarity.writeIvfIndexSharded(c, path, nShards = 2)
-    val served = rows(Similarity.ivfTopKIndexedSharded(q, path, k = 5))
+    Similarity.writeAnnIndex(c, path, IvfSharded(nShards = 2), Raw)
+    val served = rows(Similarity.serveAnnIndex(q, path, k = 5))
     assert(inFlight.nonEmpty && served == inFlight,
       s"sharded index served ${served.size} rows, in-flight ${inFlight.size}")
     // recall sanity at the shipped sizing: the sharded probe covers the
     // same 1/4 fraction per shard, so recall should track unsharded
-    val unsharded = Similarity.ivfTopK(q, c, k = 5,
+    val unsharded = Similarity.annTopK(q, c, 5, Ivf(
       nCells = Similarity.nlistForCorpus(500),
-      nProbe = Similarity.nprobeForCells(Similarity.nlistForCorpus(500)))
+      nProbe = Similarity.nprobeForCells(Similarity.nlistForCorpus(500))), Raw)
     def recall(got: Set[(Long, Long, Double, Int)]) = {
       val bfPairs = bf.map(t => (t._1, t._2))
       (bfPairs & got.map(t => (t._1, t._2))).size.toDouble / bfPairs.size
@@ -401,7 +413,7 @@ class OpsSpec extends AnyFunSuite {
       .select($"vec_id".as("qid"), $"embedding".as("vec"))
     val bare = graft.TempDirs.create("graft-test-ivfsh-bare").toString
     val e = intercept[IllegalArgumentException] {
-      Similarity.ivfTopKIndexedSharded(q, bare, k = 5)
+      Similarity.serveAnnIndex(q, bare, k = 5)
     }
     assert(e.getMessage.contains("meta stamp"))
   }
@@ -418,22 +430,23 @@ class OpsSpec extends AnyFunSuite {
     def rows(df: DataFrame) = df.select("qid", "cid", "sim", "rank").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
     val nProbe = Similarity.nprobeForCells(16)
-    val inFlight = rows(Similarity.ivfPqTopK(q, c, k = 5,
-      nCells = 16, nProbe = nProbe, m = 8, subDim = 8, kCode = 16,
-      refine = Similarity.refineForCandidates(
-        Similarity.expectedProbed(n, 16, nProbe)),
-      centroids = Some(cent), codebook = Some(cb)))
+    val inFlight = rows(Similarity.annTopK(q, c, 5,
+      Ivf(nCells = 16, nProbe = nProbe, centroids = Some(cent)),
+      Pq(m = 8, subDim = 8, kCode = 16,
+        refine = Similarity.refineForCandidates(
+          Similarity.expectedProbed(n, 16, nProbe)),
+        codebook = Some(cb))))
     val path = graft.TempDirs.create("graft-test-ivfpq").resolve("index").toString
-    Similarity.writeIvfPqIndex(c, path, m = 8, subDim = 8,
-      centroids = Some(cent), codebook = Some(cb))
+    Similarity.writeAnnIndex(c, path, Ivf(centroids = Some(cent)),
+      Pq(m = 8, subDim = 8, codebook = Some(cb)))
     // nProbe and refine BOTH default from the stamp — the serve path runs
     // zero sizing jobs and still lands on the in-flight parameters
-    val served = rows(Similarity.ivfPqTopKIndexed(q, path, k = 5))
+    val served = rows(Similarity.serveAnnIndex(q, path, k = 5))
     assert(inFlight.nonEmpty && served == inFlight,
       s"IVF-PQ index served ${served.size} rows, in-flight ${inFlight.size}")
     val bare = graft.TempDirs.create("graft-test-ivfpq-bare").toString
     val e = intercept[IllegalArgumentException] {
-      Similarity.ivfPqTopKIndexed(q, bare, k = 5)
+      Similarity.serveAnnIndex(q, bare, k = 5)
     }
     assert(e.getMessage.contains("meta stamp"))
   }
@@ -448,18 +461,19 @@ class OpsSpec extends AnyFunSuite {
     def rows(df: DataFrame) = df.select("qid", "cid", "sim", "rank").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
     // the s_ann_pq sizing: seeded kCodeForCorpus codebook, corpus-pool refine
-    val inFlight = rows(Similarity.pqTopK(q, c, k = 5, m = 8, subDim = 8,
+    val inFlight = rows(Similarity.annTopK(q, c, 5, Exhaustive, Pq(m = 8, subDim = 8,
       kCode = Similarity.kCodeForCorpus(n),
-      refine = Similarity.refineForCandidates(n)))
+      refine = Similarity.refineForCandidates(n))))
     val path = graft.TempDirs.create("graft-test-pq").resolve("index").toString
-    Similarity.writePqIndex(c, path, m = 8, subDim = 8)
+    Similarity.writeAnnIndex(c, path, Exhaustive,
+      Pq(m = 8, subDim = 8, kCode = Similarity.kCodeForCorpus(n)))
     // refine defaults from the stamped corpus count — zero sizing jobs
-    val served = rows(Similarity.pqTopKIndexed(q, path, k = 5))
+    val served = rows(Similarity.serveAnnIndex(q, path, k = 5))
     assert(inFlight.nonEmpty && served == inFlight,
       s"PQ index served ${served.size} rows, in-flight ${inFlight.size}")
     val bare = graft.TempDirs.create("graft-test-pq-bare").toString
     val e = intercept[IllegalArgumentException] {
-      Similarity.pqTopKIndexed(q, bare, k = 5)
+      Similarity.serveAnnIndex(q, bare, k = 5)
     }
     assert(e.getMessage.contains("meta stamp"))
   }
@@ -473,11 +487,11 @@ class OpsSpec extends AnyFunSuite {
     val cent = SparkEntry.fixtureShardedCentroids(spark)
     def rows(df: DataFrame) = df.select("qid", "cid", "sim", "rank").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-    val inFlight = rows(Similarity.ivfShardedTopK(q, c, k = 5, nShards = 2,
-      centroids = Some(cent)))
+    val inFlight = rows(Similarity.annTopK(q, c, 5, IvfSharded(nShards = 2,
+      centroids = Some(cent)), Raw))
     val path = graft.TempDirs.create("graft-test-ivfsh-tr").resolve("index").toString
-    Similarity.writeIvfIndexSharded(c, path, nShards = 2, centroids = Some(cent))
-    val served = rows(Similarity.ivfTopKIndexedSharded(q, path, k = 5))
+    Similarity.writeAnnIndex(c, path, IvfSharded(nShards = 2, centroids = Some(cent)), Raw)
+    val served = rows(Similarity.serveAnnIndex(q, path, k = 5))
     assert(inFlight.nonEmpty && served == inFlight,
       s"trained sharded served ${served.size} rows, in-flight ${inFlight.size}")
     // recall: trained per-shard cells must not fall below the seeded deal
@@ -486,7 +500,7 @@ class OpsSpec extends AnyFunSuite {
       .map(t => (t._1, t._2))
     def recall(got: Set[(Long, Long, Double, Int)]) =
       (bf & got.map(t => (t._1, t._2))).size.toDouble / bf.size
-    val seeded = recall(rows(Similarity.ivfShardedTopK(q, c, k = 5, nShards = 2)))
+    val seeded = recall(rows(Similarity.annTopK(q, c, 5, IvfSharded(nShards = 2), Raw)))
     val trained = recall(inFlight)
     assert(trained >= seeded - 0.02,
       s"trained sharded recall $trained below seeded $seeded")
@@ -502,7 +516,7 @@ class OpsSpec extends AnyFunSuite {
     val q = emb.where($"vec_id" < 5)
       .select($"vec_id".as("qid"), $"embedding".as("vec"))
     val e = intercept[IllegalArgumentException] {
-      Similarity.ivfShardedTopK(q, c, k = 5, nShards = 2).collect()
+      Similarity.annTopK(q, c, 5, IvfSharded(nShards = 2), Raw).collect()
     }
     assert(e.getMessage.contains("non-contiguous"), s"got: ${e.getMessage}")
   }
@@ -518,14 +532,14 @@ class OpsSpec extends AnyFunSuite {
       .select($"vec_id".as("cid"), $"embedding".as("vec"))
     val q = emb.where($"vec_id" < 3)
       .select($"vec_id".as("qid"), $"embedding".as("vec"))
-    val got = Similarity.ivfShardedTopK(q, c, k = 5, nShards = 2).collect()
+    val got = Similarity.annTopK(q, c, 5, IvfSharded(nShards = 2), Raw).collect()
     assert(got.nonEmpty, "clamped small-corpus sharded serve returned no rows")
     // and a corpus that cannot seed even one centroid per shard names
     // THAT case, not contiguity
     val tiny = emb.where($"vec_id" < 1)
       .select($"vec_id".as("cid"), $"embedding".as("vec"))
     val e2 = intercept[IllegalArgumentException] {
-      Similarity.ivfShardedTopK(q, tiny, k = 5, nShards = 2).collect()
+      Similarity.annTopK(q, tiny, 5, IvfSharded(nShards = 2), Raw).collect()
     }
     assert(e2.getMessage.contains("cannot seed one centroid per shard"),
       s"got: ${e2.getMessage}")
@@ -540,7 +554,7 @@ class OpsSpec extends AnyFunSuite {
     val bf = Similarity.bruteForceTopK(q, c, k = 5).select("qid", "cid", "sim")
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     val nCorpus = c.count().toInt
-    def run(refine: Int) = Similarity.pqTopK(q, c, k = 5, refine = refine)
+    def run(refine: Int) = Similarity.annTopK(q, c, 5, Exhaustive, Pq(refine = refine))
       .select("qid", "cid", "sim").collect()
     val p30 = run(30)
     // soundness: every emitted sim is the exact cosine (rescore is exact)
@@ -561,8 +575,8 @@ class OpsSpec extends AnyFunSuite {
     assert(r80 >= 0.75, s"8x8 codebook ADC recall@5 with refine=80 is $r80 < 0.75")
     // trained per-subspace codebooks tighten the ADC ranking at the same
     // refine budget (measured 0.488 seeded → 0.616 trained at refine=30)
-    val trained = recall(Similarity.pqTopK(q, c, k = 5, refine = 30,
-      codebook = Some(Similarity.pqTrainedCodebook(c)))
+    val trained = recall(Similarity.annTopK(q, c, 5, Exhaustive, Pq(refine = 30,
+      codebook = Some(Similarity.pqTrainedCodebook(c))))
       .select("qid", "cid", "sim").collect())
     assert(trained >= r30 + 0.05, s"trained $trained not better than seeded $r30")
   }
@@ -578,7 +592,7 @@ class OpsSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     def keyset(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(r => (r.getLong(0), r.getLong(1))).toSet
-    val p30 = Similarity.ivfPqTopK(q, c, k = 5, nProbe = 4, refine = 30)
+    val p30 = Similarity.annTopK(q, c, 5, Ivf(nProbe = 4), Pq(refine = 30))
       .select("qid", "cid", "sim").collect()
     // soundness: the rescore tail is exact — every emitted sim is the true cosine
     p30.foreach { r =>
@@ -588,13 +602,13 @@ class OpsSpec extends AnyFunSuite {
     // is rescored away entirely, so IVF-PQ must return EXACTLY ivfTopK's
     // result for the same cells/probes — proves the candidate set is the
     // probed-cell population, nothing more, nothing less
-    val ivfpqAll = keyset(Similarity.ivfPqTopK(q, c, k = 5, nProbe = 4, refine = nCorpus)
+    val ivfpqAll = keyset(Similarity.annTopK(q, c, 5, Ivf(nProbe = 4), Pq(refine = nCorpus))
       .select("qid", "cid").collect())
-    val ivfAll = keyset(Similarity.ivfTopK(q, c, k = 5, nCells = 16, nProbe = 4)
+    val ivfAll = keyset(Similarity.annTopK(q, c, 5, Ivf(nCells = 16, nProbe = 4), Raw)
       .select("qid", "cid").collect())
     assert(ivfpqAll == ivfAll, "IVF-PQ at full refine must equal plain IVF")
     // probing every cell + full refine degenerates to brute force
-    val full = keyset(Similarity.ivfPqTopK(q, c, k = 5, nProbe = 16, refine = nCorpus)
+    val full = keyset(Similarity.annTopK(q, c, 5, Ivf(nProbe = 16), Pq(refine = nCorpus))
       .select("qid", "cid").collect())
     assert(full == bf.keySet, "all-cells + full-refine IVF-PQ must equal brute force")
     // ADC refine inside probed cells keeps most of IVF's recall at 3% of
@@ -1240,15 +1254,15 @@ class OpsSpec extends AnyFunSuite {
     val bf = Similarity.bruteForceTopK(q, c, k = 5)
       .select("qid", "cid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     def recall(dims: Int): Double = {
-      val got = Similarity.projectedTopK(q, c, k = 5, outDims = dims,
-          refine = 30, firstPlane = 100)
+      val got = Similarity.annTopK(q, c, 5, Exhaustive, Projected(outDims = dims,
+          refine = 30, firstPlane = 100))
         .select("qid", "cid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       (bf & got).size.toDouble / bf.size
     }
     val r16 = recall(16); val r32 = recall(32)
     val r16w = {
-      val got = Similarity.projectedTopK(q, c, k = 5, outDims = 16,
-          refine = 60, firstPlane = 100)
+      val got = Similarity.annTopK(q, c, 5, Exhaustive, Projected(outDims = 16,
+          refine = 60, firstPlane = 100))
         .select("qid", "cid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       (bf & got).size.toDouble / bf.size
     }
@@ -1269,28 +1283,40 @@ class OpsSpec extends AnyFunSuite {
       .select($"vec_id".as("qid"), $"embedding".as("vec"))
     val c = emb.select($"vec_id".as("cid"), $"embedding".as("vec"))
     val path = graft.TempDirs.create("graft-test-projidx").resolve("index").toString
-    Similarity.writeProjectedIndex(c, path, outDims = 24, firstPlane = 300)
+    Similarity.writeAnnIndex(c, path, Exhaustive, Projected(outDims = 24, firstPlane = 300))
     def pairs(df: DataFrame) =
       df.select("qid", "cid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // defaults (-1) resolve from the meta written at build time — no
     // caller-side duplication of (outDims, firstPlane) needed
-    val served = pairs(Similarity.projectedTopKIndexed(q, path, k = 5, refine = 20))
-    val inflight = pairs(Similarity.projectedTopK(q, c, k = 5, outDims = 24,
-      refine = 20, firstPlane = 300))
+    val served = pairs(Similarity.serveAnnIndex(q, path, k = 5, refine = 20))
+    val inflight = pairs(Similarity.annTopK(q, c, 5, Exhaustive, Projected(outDims = 24,
+      refine = 20, firstPlane = 300)))
     assert(served == inflight, "meta-defaulted serve must equal the in-flight build")
     // explicit params matching meta are accepted
-    assert(pairs(Similarity.projectedTopKIndexed(q, path, k = 5, outDims = 24,
-      refine = 20, firstPlane = 300)) == inflight)
+    assert(pairs(Similarity.serveAnnIndex(q, path, k = 5,
+      refine = 20, expect = Some(Projected(outDims = 24, firstPlane = 300)))) == inflight)
     // a mismatch means ranking in a DIFFERENT projected space — raise, not
     // silently-wrong candidates
     val e1 = intercept[IllegalArgumentException] {
-      Similarity.projectedTopKIndexed(q, path, k = 5, outDims = 16, refine = 20)
+      Similarity.serveAnnIndex(q, path, k = 5, refine = 20, expect = Some(Projected(outDims = 16)))
     }
     assert(e1.getMessage.contains("outDims=24"))
     val e2 = intercept[IllegalArgumentException] {
-      Similarity.projectedTopKIndexed(q, path, k = 5, firstPlane = 100, refine = 20)
+      Similarity.serveAnnIndex(q, path, k = 5, refine = 20, expect = Some(Projected(firstPlane = 100)))
     }
     assert(e2.getMessage.contains("firstPlane=300"))
+    // an unstamped index raises even when the caller names the projection
+    // space: the space is never taken on the caller's word
+    val bare = graft.TempDirs.create("graft-test-projidx-bare").resolve("index").toString
+    TestSpark.session.read.parquet(s"$path/vectors")
+      .select($"cid".as("cid", org.apache.spark.sql.types.Metadata.empty), $"vec")
+      .write.parquet(s"$bare/vectors")
+    TestSpark.session.read.parquet(s"$path/projected").write.parquet(s"$bare/projected")
+    val e3 = intercept[IllegalArgumentException] {
+      Similarity.serveAnnIndex(q, bare, k = 5, refine = 20,
+        expect = Some(Projected(outDims = 24, firstPlane = 300)))
+    }
+    assert(e3.getMessage.contains("meta stamp"), e3.getMessage)
   }
 
   test("indexed ANN refine = -1 serves from the persisted corpus count") {
@@ -1307,29 +1333,29 @@ class OpsSpec extends AnyFunSuite {
     // projected: refine = -1 resolves refineForCandidates(corpusCount)
     // from the meta written at build time — equal to the explicit call
     val pPath = graft.TempDirs.create("graft-test-projrf").resolve("index").toString
-    Similarity.writeProjectedIndex(c, pPath, outDims = 16, firstPlane = 100)
-    assert(pairs(Similarity.projectedTopKIndexed(q, pPath, k = 5, refine = -1)) ==
-      pairs(Similarity.projectedTopKIndexed(q, pPath, k = 5,
+    Similarity.writeAnnIndex(c, pPath, Exhaustive, Projected(outDims = 16, firstPlane = 100))
+    assert(pairs(Similarity.serveAnnIndex(q, pPath, k = 5, refine = -1)) ==
+      pairs(Similarity.serveAnnIndex(q, pPath, k = 5,
         refine = Similarity.refineForCandidates(n))))
 
     // sq8: same contract via the codes-column schema stamp
     val sPath = graft.TempDirs.create("graft-test-sq8rf").resolve("index").toString
-    Similarity.writeSq8Index(c, sPath)
-    assert(pairs(Similarity.sq8TopKIndexed(q, sPath, k = 5, refine = -1)) ==
-      pairs(Similarity.sq8TopKIndexed(q, sPath, k = 5,
+    Similarity.writeAnnIndex(c, sPath, Exhaustive, Sq8())
+    assert(pairs(Similarity.serveAnnIndex(q, sPath, k = 5, refine = -1)) ==
+      pairs(Similarity.serveAnnIndex(q, sPath, k = 5,
         refine = Similarity.refineForCandidates(n))))
 
     // an index without the count (pre-r17 build) must raise on -1, not
-    // silently guess a budget: strip the stamp by rewriting the codes
-    val bare = TestSpark.session.read.parquet(s"$sPath/codes")
-      .select($"cid", $"codes".as("codes",
-        org.apache.spark.sql.types.Metadata.empty)) // strip the stamp
+    // silently guess a budget: strip the stamp by rewriting the vectors
+    val bare = TestSpark.session.read.parquet(s"$sPath/vectors")
+      .select($"cid".as("cid",
+        org.apache.spark.sql.types.Metadata.empty), $"vec") // strip the stamp
     val bPath = graft.TempDirs.create("graft-test-sq8bare").resolve("index").toString
-    bare.write.parquet(s"$bPath/codes")
+    bare.write.parquet(s"$bPath/vectors")
     TestSpark.session.read.parquet(s"$sPath/ranges").write.parquet(s"$bPath/ranges")
-    TestSpark.session.read.parquet(s"$sPath/vectors").write.parquet(s"$bPath/vectors")
+    TestSpark.session.read.parquet(s"$sPath/codes").write.parquet(s"$bPath/codes")
     val err = intercept[IllegalArgumentException] {
-      Similarity.sq8TopKIndexed(q, bPath, k = 5, refine = -1)
+      Similarity.serveAnnIndex(q, bPath, k = 5, refine = -1)
     }
     assert(err.getMessage.contains("no stamped corpus count"))
   }

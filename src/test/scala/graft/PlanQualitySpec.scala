@@ -92,13 +92,21 @@ class PlanQualitySpec extends AnyFunSuite {
     var served: org.apache.spark.sql.DataFrame = null
     // a missing stamp would fall back to a count job over the centroids
     assert(TestSpark.jobsDuring { served = SparkEntry.queries("s_ann_ivf_indexed")(spark, dir) } == 0)
-    val centroids = served.queryExecution.analyzed.collect {
+    val vectors = served.queryExecution.analyzed.collect {
       case r @ LogicalRelation(fs: HadoopFsRelation, _, _, _, _)
-          if fs.location.rootPaths.exists(_.getName == "centroids") => r
+          if fs.location.rootPaths.exists(_.getName == "vectors") => r
     }
-    assert(centroids.nonEmpty)
-    centroids.foreach(r => assert(
-      r.output.find(_.name == "centId").get.metadata.contains("graft.nlist"), r.output))
+    assert(vectors.nonEmpty)
+    vectors.foreach(r => assert(
+      r.output.find(_.name == "cid").get.metadata.contains("graft.nlist"), r.output))
+    // every persisted-index row: a second construction runs no Spark job
+    Seq("s_ann_ivf_trained_indexed", "s_ann_ivf_sharded_indexed",
+        "s_ann_ivf_sharded_trained_indexed", "s_ann_pq", "s_ann_ivfpq",
+        "s_ann_ivfpq_trained_indexed", "s_ann_sq8_indexed", "s_ann_projected_indexed")
+      .foreach { row =>
+        SparkEntry.queries(row)(spark, dir).collect()
+        assert(TestSpark.jobsDuring(SparkEntry.queries(row)(spark, dir)) == 0, row)
+      }
   }
 
   test("final sort: a small result sorts in one partition, a 1-byte advisory size keeps the range exchange") {

@@ -831,7 +831,8 @@ class StreamingSpec extends AnyFunSuite {
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val corpus = emb.select($"vec_id".as("cid"), $"embedding".as("vec"))
     val path = graft.TempDirs.create("graft-test-annserve").resolve("index").toString
-    graft.ops.Similarity.writeIvfIndex(corpus, path, nCells = 8)
+    graft.ops.Similarity.writeAnnIndex(corpus, path,
+      graft.ops.Similarity.Ivf(nCells = 8), graft.ops.Similarity.Raw)
     val qvecs = emb.where($"vec_id" < 12)
       .select($"vec_id".as("qid"), $"embedding".as("vec")).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1)))
@@ -850,7 +851,7 @@ class StreamingSpec extends AnyFunSuite {
       input.addData(qvecs.drop(6).toSeq)
       q.processAllAvailable()
     } finally q.stop()
-    val batch = graft.ops.Similarity.ivfTopKIndexed(
+    val batch = graft.ops.Similarity.serveAnnIndex(
         emb.where($"vec_id" < 12).select($"vec_id".as("qid"), $"embedding".as("vec")),
         path, k = 3, nProbe = 3)
       .select("qid", "cid", "rank").collect()
