@@ -258,7 +258,7 @@ object SparkEntry {
     */
   private def pqSeededIndex(s: SparkSession, dir: String): String =
     annIndex(s, dir, "graft_pq")(ops.Similarity.writeAnnIndex(_, _, Exhaustive,
-      Pq(m = 8, subDim = 8, kCode = ops.Similarity.kCodeForCorpus(embCount(s, dir)))))
+      Pq(m = 8, subDim = 8, kCode = -1)))
 
   /** Per-JVM persisted IVF-PQ index under the SEEDED corpus-sized
     * quantizers (nlistForCorpus cells, kCodeForCorpus codebook — the
@@ -269,11 +269,8 @@ object SparkEntry {
     * oracle are unchanged.
     */
   private def ivfPqSeededIndex(s: SparkSession, dir: String): String =
-    annIndex(s, dir, "graft_ivfpq") { (corpus, path) =>
-      val n = embCount(s, dir)
-      ops.Similarity.writeAnnIndex(corpus, path, Ivf(nCells = ops.Similarity.nlistForCorpus(n)),
-        Pq(m = 8, subDim = 8, kCode = ops.Similarity.kCodeForCorpus(n)))
-    }
+    annIndex(s, dir, "graft_ivfpq")(ops.Similarity.writeAnnIndex(_, _, Ivf(nCells = -1),
+      Pq(m = 8, subDim = 8, kCode = -1)))
 
   /** Per-JVM persisted IVF-PQ index under the TRAINED fixtures (k-means
     * centroids route, k-means codebook compresses) — codes and vectors

@@ -546,6 +546,9 @@ object Similarity {
     * fixture) without touching the plumbing (a trained quantizer is not
     * oracle-expressible, which is why the seeded one is the gated
     * variant); `nCells` then sizes only the probe and refine policies.
+    * `nCells = -1` sizes the cells from the corpus count by
+    * [[nlistForCorpus]] (one count job, which an index build takes for its
+    * stamp anyway).
     */
   final case class Ivf(nCells: Int = 16, nProbe: Int = 4,
       centroids: Option[DataFrame] = None) extends Router
@@ -634,6 +637,10 @@ object Similarity {
     * oracle recomputes encode + ADC + refine exactly; `codebook` swaps in a
     * trained `(s, codeId, cb_sub)` frame ([[pqTrainedCodebook]]).
     *
+    * `kCode = -1` sizes the seeded codebook from the corpus count by
+    * [[kCodeForCorpus]] (one count job, which an index build takes for its
+    * stamp anyway).
+    *
     * ADC sums are decimal-accumulated over per-subspace dots rounded to 9
     * decimals — bit-reproducible across engines, so the refine cutoff can
     * never drift from the oracle.
@@ -706,7 +713,7 @@ object Similarity {
       case _ => cells.map(cl => probe(q, cl).join(assigned.get, cl.keys)
         .where(col("qid") =!= col("cid")).select("qid", "cid", "centId"))
     }
-    val tables = encode(codec, c, corpus, cells, assigned)
+    val tables = encode(codec, c, corpus, cells, assigned, n)
     rescoreTopK(rankAndCut(codec, q, queries, pairs, cells, tables, n),
       queries, corpus, k)
   }
@@ -755,7 +762,7 @@ object Similarity {
         .write.partitionBy(keys: _*).parquet(s"$path/$name")
     write("vectors", corpus.select(col("cid").as("cid", stamp), col("vec")))
     cells.foreach(cl => write("centroids", cl.cent))
-    encode(codec, c, corpus, cells, assigned).foreach { case (name, t) => write(name, t) }
+    encode(codec, c, corpus, cells, assigned, n).foreach { case (name, t) => write(name, t) }
   }
 
   /** Serve a [[writeAnnIndex]] layout: rebuild the spec from the index's
@@ -896,9 +903,9 @@ object Similarity {
       }
     val md = vectors.schema("cid").metadata
     def stamped(key: String): String = {
+      val missing = if (key == "corpusCount") "no stamped corpus count" else "no meta stamp"
       require(md.contains(s"graft.$key"),
-        s"ANN index at $path has no meta stamp graft.$key on vectors.cid (an " +
-          "unstamped index: no stamped corpus count or spec) — rebuild it with writeAnnIndex")
+        s"ANN index at $path has $missing (graft.$key on vectors.cid) — rebuild it with writeAnnIndex")
       s"graft.$key"
     }
     def int(key: String): Int = md.getLong(stamped(key)).toInt
@@ -1164,8 +1171,9 @@ object Similarity {
   private def resolveCells(router: Router, c: DataFrame, n: => Long): Option[Cells] =
     router match {
       case r: Ivf =>
-        Some(Cells(r.centroids.getOrElse(seededCentroids(c, r.nCells)), 1,
-          r.nCells, r.nProbe, sharded = false))
+        val nc = if (r.nCells != -1) r.nCells else nlistForCorpus(n)
+        Some(Cells(r.centroids.getOrElse(seededCentroids(c, nc)), 1,
+          nc, r.nProbe, sharded = false))
       case r: IvfSharded =>
         require(r.nShards >= 1, s"nShards must be >= 1: ${r.nShards}")
         val seededCells = if (r.centroids.isDefined) -1 else {
@@ -1245,7 +1253,7 @@ object Similarity {
   /** A codec's build state, keyed by the index directory it persists to:
     * `codebook` + `codes` (Pq), `ranges` + `codes` (Sq8), `projected`. */
   private def encode(codec: Codec, c: DataFrame, corpus: DataFrame,
-      cells: Option[Cells], assigned: Option[DataFrame]): Map[String, DataFrame] =
+      cells: Option[Cells], assigned: Option[DataFrame], n: => Long): Map[String, DataFrame] =
     codec match {
       case Raw => Map.empty
       case p: Pq =>
@@ -1253,7 +1261,8 @@ object Similarity {
           if (!p.residual) c
           else residualFrame(assigned.get, c, cells.get.cent)
             .select(col("cid"), col("r_v").as("cid_v"))
-        val cbSub = p.codebook.getOrElse(seededCodebook(base, p.m, p.subDim, p.kCode))
+        val cbSub = p.codebook.getOrElse(seededCodebook(base, p.m, p.subDim,
+          if (p.kCode != -1) p.kCode else kCodeForCorpus(n)))
         Map("codebook" -> cbSub, "codes" -> pqEncode(base, cbSub, p.m, p.subDim))
       case _: Sq8 =>
         // derive the dimension from the data (the kmeansCentroids rule)

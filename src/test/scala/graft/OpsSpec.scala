@@ -465,8 +465,7 @@ class OpsSpec extends AnyFunSuite {
       kCode = Similarity.kCodeForCorpus(n),
       refine = Similarity.refineForCandidates(n))))
     val path = graft.TempDirs.create("graft-test-pq").resolve("index").toString
-    Similarity.writeAnnIndex(c, path, Exhaustive,
-      Pq(m = 8, subDim = 8, kCode = Similarity.kCodeForCorpus(n)))
+    Similarity.writeAnnIndex(c, path, Exhaustive, Pq(m = 8, subDim = 8, kCode = -1))
     // refine defaults from the stamped corpus count — zero sizing jobs
     val served = rows(Similarity.serveAnnIndex(q, path, k = 5))
     assert(inFlight.nonEmpty && served == inFlight,
@@ -1298,11 +1297,13 @@ class OpsSpec extends AnyFunSuite {
     // a mismatch means ranking in a DIFFERENT projected space — raise, not
     // silently-wrong candidates
     val e1 = intercept[IllegalArgumentException] {
-      Similarity.serveAnnIndex(q, path, k = 5, refine = 20, expect = Some(Projected(outDims = 16)))
+      Similarity.serveAnnIndex(q, path, k = 5, refine = 20,
+        expect = Some(Projected(outDims = 16, firstPlane = 300)))
     }
     assert(e1.getMessage.contains("outDims=24"))
     val e2 = intercept[IllegalArgumentException] {
-      Similarity.serveAnnIndex(q, path, k = 5, refine = 20, expect = Some(Projected(firstPlane = 100)))
+      Similarity.serveAnnIndex(q, path, k = 5, refine = 20,
+        expect = Some(Projected(outDims = 24, firstPlane = 100)))
     }
     assert(e2.getMessage.contains("firstPlane=300"))
     // an unstamped index raises even when the caller names the projection
@@ -1346,10 +1347,11 @@ class OpsSpec extends AnyFunSuite {
         refine = Similarity.refineForCandidates(n))))
 
     // an index without the count (pre-r17 build) must raise on -1, not
-    // silently guess a budget: strip the stamp by rewriting the vectors
-    val bare = TestSpark.session.read.parquet(s"$sPath/vectors")
-      .select($"cid".as("cid",
-        org.apache.spark.sql.types.Metadata.empty), $"vec") // strip the stamp
+    // silently guess a budget: strip the count by rewriting the vectors
+    val vectors = TestSpark.session.read.parquet(s"$sPath/vectors")
+    val noCount = new org.apache.spark.sql.types.MetadataBuilder()
+      .withMetadata(vectors.schema("cid").metadata).remove("graft.corpusCount").build()
+    val bare = vectors.select($"cid".as("cid", noCount), $"vec") // strip the count
     val bPath = graft.TempDirs.create("graft-test-sq8bare").resolve("index").toString
     bare.write.parquet(s"$bPath/vectors")
     TestSpark.session.read.parquet(s"$sPath/ranges").write.parquet(s"$bPath/ranges")
