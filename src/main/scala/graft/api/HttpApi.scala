@@ -16,10 +16,19 @@ import graft.types._
   * Requests are served concurrently by a fixed pool with one thread per
   * task slot of the session (`defaultParallelism`), so the server admits
   * no more queries at once than Spark has slots to run their tasks.
+  *
+  * Connections are accepted with `TCP_NODELAY` on. The JDK server writes a
+  * reply's headers and its body as two TCP writes; under Nagle's algorithm
+  * the body then waits for the client's delayed ACK, about 40 ms on every
+  * request. The JDK reads the option from the system property
+  * `sun.net.httpserver.nodelay` once, when the first `HttpServer` of the
+  * JVM is created; the companion sets it before this class creates its
+  * server, unless the user set it. A JDK `HttpServer` created in the JVM
+  * before the first `MultiDbHttpServer` fixes the setting for all of them.
   */
 final class MultiDbHttpServer(db: MultiDb, port: Int = 0) {
 
-  private val server = HttpServer.create(new InetSocketAddress(port), 0)
+  private val server = MultiDbHttpServer.create(port)
   private val pool = {
     val n = new AtomicInteger()
     Executors.newFixedThreadPool(math.max(1, db.spark.sparkContext.defaultParallelism), { r =>
@@ -132,6 +141,18 @@ final class MultiDbHttpServer(db: MultiDb, port: Int = 0) {
     ex.getResponseBody.write(bytes)
     ex.close()
   }
+}
+
+object MultiDbHttpServer {
+
+  /** The JDK server's switch for `TCP_NODELAY` on accepted connections. */
+  val NoDelayProperty = "sun.net.httpserver.nodelay"
+
+  // runs when the companion is first used, so before the first create below;
+  // a value the user set explicitly wins
+  if (System.getProperty(NoDelayProperty) == null) System.setProperty(NoDelayProperty, "true")
+
+  private def create(port: Int): HttpServer = HttpServer.create(new InetSocketAddress(port), 0)
 }
 
 /** HTTP client implementing the same query surface as in-process MultiDb

@@ -128,14 +128,23 @@ final class MultiDb(
     * point — lets callers keep the plan lazy, write it out, or chain it; the
     * 100 TB path never materializes on the driver).
     */
-  def frame(q: QueryDefinition, context: ExecutionContext = ExecutionContext()): DataFrame =
-    resolveTimed(state, q, context)._1._1.frame
+  def frame(q: QueryDefinition, context: ExecutionContext = ExecutionContext()): DataFrame = {
+    val ((resolved, plan, _), _) = resolveTimed(state, q, context)
+    failedAsQuery(plan)(resolved.frame)
+  }
 
   /** Full reference-shaped query lifecycle. An `execute` or `count` query
     * without `debug` is first looked up in the result cache; a hit skips
     * validation, access control, planning and resolution and runs no Spark
     * job. Its meta carries the stored strategy, tables and columns and the
     * timing of this call.
+    *
+    * A query builds its DataFrame only if it runs one: sql-only returns the
+    * generated text and a P0 cache-provider hit is served by MGET, so
+    * neither loads a table; a P0 partial hit builds only the refetch of the
+    * missed ids, and only when the result cache does not hold it. Frames
+    * are built inside the query's timeout, so a loader that fails there is
+    * a QUERY_FAILED and one that hangs is a QUERY_TIMEOUT.
     */
   def query(q: QueryDefinition, context: ExecutionContext = ExecutionContext()): QueryResult = {
     ensureOpen()
@@ -267,9 +276,10 @@ final class MultiDb(
 
   /** Validate, ACL, plan and resolve `q` against one config snapshot,
     * also returning the nanoTime boundary between planning (validate + ACL
-    * + strategy selection) and generation (Catalyst resolution) so
+    * + strategy selection) and generation (result columns and SQL text) so
     * `timing.planningMs` and `generationMs` are distinct real measurements,
-    * not one duplicated value.
+    * not one duplicated value. Building and analyzing the DataFrame counts
+    * toward execution: it happens when the query runs it.
     */
   private def resolveTimed(
       snapshot: Snapshot,
@@ -286,22 +296,26 @@ final class MultiDb(
     val plan = Planner.plan(index, registry, q)
     log.foreach(_("planning", s"strategy=${plan.strategy} target=${plan.targetDatabase}"))
     val tPlanned = System.nanoTime()
-    log.foreach(_("name-resolution", s"compiling '${q.from}' to a DataFrame plan"))
-    // a source loader that fails here (missing files, dead connection) is a
-    // runtime database failure → typed QUERY_FAILED (reference C1262), not
-    // a raw AnalysisException escaping to the caller
-    val resolved =
-      try Resolver.resolve(index, plan, access, q)
-      catch {
-        case m: MultiDbError => throw m
-        case e: Exception => throw ExecutionError("QUERY_FAILED",
-          Map("database" -> plan.targetDatabase), Some(e))
-      }
+    log.foreach(_("name-resolution", s"resolving '${q.from}'; its DataFrame is built when run"))
+    val resolved = failedAsQuery(plan)(Resolver.resolve(index, plan, access, q))
     log.foreach(_("sql-generation", "parameterized SQL text generated"))
     val columnsMeta = resolved.mappings.map(m => ResultColumnMeta(
       m.finalKey, m.columnType, m.nullable, m.fromTable, m.masked))
     ((resolved, plan, columnsMeta), tPlanned)
   }
+
+  /** Runs `body`, reporting its failure as a runtime database failure: a
+    * source loader that fails (missing files, dead connection) is a typed
+    * QUERY_FAILED (reference C1262), not a raw AnalysisException escaping
+    * to the caller.
+    */
+  private def failedAsQuery[T](plan: Plan)(body: => T): T =
+    try body
+    catch {
+      case m: MultiDbError => throw m
+      case e: Exception => throw ExecutionError("QUERY_FAILED",
+        Map("database" -> plan.targetDatabase), Some(e))
+    }
 
   /** Per-query timeout at the driver boundary (reference: executor-level
     * timeoutMs, README.md:523) → ExecutionError QUERY_TIMEOUT. The body runs

@@ -24,6 +24,10 @@ import graft.types._
   * parents for `<`/`<=`/`=`/`!=` (CROSS_DB_NORMALIZATION.md:14-44), and lets
   * Catalyst pick broadcast vs shuffle. Plain top-level EXISTS/NOT-EXISTS under
   * the implicit AND is optimized to a LEFT SEMI / LEFT ANTI join instead.
+  *
+  * The result columns and the sql-only text ([[SqlText]]) come from
+  * metadata alone; the frames load tables and build plans only on first
+  * use ([[ResolvedQuery]]).
   */
 final case class ColumnMapping(
     internalName: String,
@@ -35,13 +39,24 @@ final case class ColumnMapping(
     maskingFn: Option[String],
 )
 
-final case class ResolvedQuery(
-    frame: DataFrame,            // projected + renamed to final keys, ordered, limited
-    countFrame: DataFrame,       // joined + filtered, pre-projection (for count mode)
-    mappings: Seq[ColumnMapping],
-    sql: String,
-    params: Seq[Any],
-)
+/** A resolved query. `mappings`, `sql` and `params` come from metadata
+  * alone; `frame` and `countFrame` load their tables and build their plans
+  * on first use, so a request that runs neither (sql-only, a P0 cache hit)
+  * loads no table and builds no DataFrame. A failing source loader
+  * therefore throws from `frame`/`countFrame`, not from `Resolver.resolve`.
+  */
+final class ResolvedQuery(
+    val mappings: Seq[ColumnMapping],
+    val sql: String,
+    val params: Seq[Any],
+    buildFrame: => DataFrame,
+    buildCountFrame: => DataFrame,
+) {
+  /** Projected + renamed to final keys, ordered, limited. */
+  lazy val frame: DataFrame = buildFrame
+  /** The rows count mode counts: joined + filtered, pre-projection. */
+  lazy val countFrame: DataFrame = buildCountFrame
+}
 
 object Resolver {
 
@@ -60,7 +75,6 @@ private final class Resolver(
     q: QueryDefinition,
 ) {
   private var subqueryCounter = 0
-  private val sqlParams = Seq.newBuilder[Any]
 
   private def internal(alias: String, colApi: String) = s"${alias}__$colApi"
 
@@ -84,8 +98,7 @@ private final class Resolver(
   // literals
   // ---------------------------------------------------------------------
 
-  private def toLiteral(v: Any, declared: String): Column = {
-    sqlParams += v
+  private def toLiteral(v: Any, declared: String): Column =
     declared match {
       case "timestamp" => v match {
         case s: String =>
@@ -100,10 +113,8 @@ private final class Resolver(
       }
       case _ => lit(v)
     }
-  }
 
-  private def toLiteralArray(vs: Seq[Any], elemType: String): Column = {
-    sqlParams += vs
+  private def toLiteralArray(vs: Seq[Any], elemType: String): Column =
     array(vs.map {
       case s: String if elemType == "timestamp" =>
         lit(java.sql.Timestamp.from(graft.validation.Validator.parseTimestamp(s).get))
@@ -111,7 +122,6 @@ private final class Resolver(
         lit(java.sql.Date.valueOf(java.time.LocalDate.parse(s)))
       case v => lit(v)
     }: _*)
-  }
 
   // ---------------------------------------------------------------------
   // filter compilation — returns (frame', predicate)
@@ -136,24 +146,20 @@ private final class Resolver(
       case "<"  => c < l(f.value.get)
       case ">=" => c >= l(f.value.get)
       case "<=" => c <= l(f.value.get)
-      case "in" =>
-        val vs = f.value.get.asInstanceOf[Seq[Any]]
-        sqlParams += vs; c.isin(vs: _*)
-      case "notIn" =>
-        val vs = f.value.get.asInstanceOf[Seq[Any]]
-        sqlParams += vs; !c.isin(vs: _*)
-      case "like"     => { sqlParams += strRaw(f); c.like(strRaw(f)) }
-      case "notLike"  => { sqlParams += strRaw(f); !c.like(strRaw(f)) }
-      case "ilike"    => { sqlParams += strRaw(f); c.ilike(strRaw(f)) }
-      case "notIlike" => { sqlParams += strRaw(f); !c.ilike(strRaw(f)) }
-      case "contains"     => c.contains(str(f))
-      case "notContains"  => !c.contains(str(f))
-      case "icontains"    => lower(c).contains(lower(lit(strRaw(f))))
-      case "notIcontains" => !lower(c).contains(lower(lit(strRaw(f))))
-      case "startsWith"   => c.startsWith(str(f))
-      case "istartsWith"  => lower(c).startsWith(lower(lit(strRaw(f))))
-      case "endsWith"     => c.endsWith(str(f))
-      case "iendsWith"    => lower(c).endsWith(lower(lit(strRaw(f))))
+      case "in"    => c.isin(f.value.get.asInstanceOf[Seq[Any]]: _*)
+      case "notIn" => !c.isin(f.value.get.asInstanceOf[Seq[Any]]: _*)
+      case "like"     => c.like(str(f))
+      case "notLike"  => !c.like(str(f))
+      case "ilike"    => c.ilike(str(f))
+      case "notIlike" => !c.ilike(str(f))
+      case "contains"     => c.contains(lit(str(f)))
+      case "notContains"  => !c.contains(lit(str(f)))
+      case "icontains"    => lower(c).contains(lower(lit(str(f))))
+      case "notIcontains" => !lower(c).contains(lower(lit(str(f))))
+      case "startsWith"   => c.startsWith(lit(str(f)))
+      case "istartsWith"  => lower(c).startsWith(lower(lit(str(f))))
+      case "endsWith"     => c.endsWith(lit(str(f)))
+      case "iendsWith"    => lower(c).endsWith(lower(lit(str(f))))
       case "isNull"    => c.isNull
       case "isNotNull" => c.isNotNull
       case "between" =>
@@ -164,7 +170,6 @@ private final class Resolver(
         !c.between(toLiteral(from, t), toLiteral(to, t))
       case "levenshteinLte" =>
         val (text, maxD) = f.value.get.asInstanceOf[(String, Int)]
-        sqlParams += text; sqlParams += maxD
         levenshtein(c, lit(text)) <= lit(maxD)
       case "arrayContains"    => array_contains(c, toLiteral(f.value.get, elem))
       case "arrayContainsAll" =>
@@ -177,8 +182,7 @@ private final class Resolver(
     }
   }
 
-  private def strRaw(f: QueryFilter): String = f.value.get.asInstanceOf[String]
-  private def str(f: QueryFilter): Column = { sqlParams += strRaw(f); lit(strRaw(f)) }
+  private def str(f: QueryFilter): String = f.value.get.asInstanceOf[String]
 
   private def compileColumnFilter(cf: QueryColumnFilter, defaultTable: String,
       resolveAlias: String => String): Column = {
@@ -304,12 +308,7 @@ private final class Resolver(
   private def existsCountJoin(frame: DataFrame, e: QueryExistsFilter,
       parentApi: String, parentAlias: String): DataFrame = {
     val CountCond(op, v) = e.count.get
-    // the child compiles FIRST: its filter params precede the count
-    // placeholder in the generated sql-only text (TESTS.md #225 pins that
-    // params match the placeholders), and the tautological cases below
-    // still owe the child's params to that ordering
     val (child, alias, fkChild, pkParent) = existsChild(e, parentApi)
-    sqlParams += v
     val corr = col(internal(parentAlias, pkParent)) === child(internal(alias, fkChild))
     (op, v) match {
       case (">=", 0L) => return frame                    // cnt >= 0: tautology
@@ -350,7 +349,6 @@ private final class Resolver(
     val n = coalesce(col(cntCol), lit(0L))
     val pred = e.count match {
       case Some(CountCond(op, v)) =>
-        sqlParams += v
         op match {
           case "="  => n === v
           case "!=" => n =!= v
@@ -365,12 +363,79 @@ private final class Resolver(
   }
 
   // ---------------------------------------------------------------------
-  // main build
+  // result columns (metadata only)
   // ---------------------------------------------------------------------
 
-  def run(): ResolvedQuery = {
-    val fromTable = tableOf(q.from)
+  private val aggPresent = q.aggregations.nonEmpty || q.groupBy.nonEmpty
 
+  /** Selected columns as (tableApi, alias, colApi), ACL-trimmed defaults. */
+  private val selected: Seq[(String, String, String)] = {
+    def defaultCols(tableApi: String): Seq[String] =
+      if (aggPresent) q.groupBy.filter(_.table.getOrElse(q.from) == tableApi).map(_.column)
+      else access.allowedColumnsOf(tableOf(tableApi))
+    val fromCols = q.columns.getOrElse(defaultCols(q.from)).map(c => (q.from, "t0", c))
+    val joinCols = q.joins.zipWithIndex.flatMap { case (j, i) =>
+      j.columns.getOrElse(defaultCols(j.table)).map(c => (j.table, s"t${i + 1}", c))
+    }
+    fromCols ++ joinCols
+  }
+
+  // column-collision qualification (README.md:522): colliding apiNames
+  // after a join → result keys "table.column"
+  private val collisions: Set[String] = selected.groupBy(_._3).collect {
+    case (api, xs) if xs.size > 1 => api
+  }.toSet
+
+  private def finalKey(tableApi: String, colApi: String): String =
+    if (collisions.contains(colApi)) s"$tableApi.$colApi" else colApi
+
+  /** The result columns in order: selected table columns, then aggregation
+    * aliases (never masked, QUERY.md:197).
+    */
+  private val mappings: Seq[ColumnMapping] = {
+    val columns = selected.map { case (tableApi, alias, colApi) =>
+      val cm = colMeta(tableApi, colApi)
+      val masked = access.maskedColumns(tableApi).contains(colApi)
+      ColumnMapping(internal(alias, colApi), finalKey(tableApi, colApi), tableApi,
+        cm.columnType, cm.nullable, masked,
+        if (masked) cm.maskingFn.orElse(Some("full")) else None)
+    }
+    val aggregations = q.aggregations.map { a =>
+      val (srcType, srcNullable, srcTable) =
+        if (a.column == "*") ("int", false, q.from)
+        else {
+          val tApi = a.table.getOrElse(q.from)
+          val cm = colMeta(tApi, a.column)
+          (cm.columnType, cm.nullable, tApi)
+        }
+      val resultType = a.fn match {
+        case "count" => "int"
+        case "avg"   => "decimal"
+        case _       => srcType
+      }
+      ColumnMapping(a.alias, a.alias, srcTable, resultType,
+        a.fn != "count" && srcNullable, masked = false, None)
+    }
+    columns ++ aggregations
+  }
+
+  private val selectedKeys: Set[String] = mappings.map(_.finalKey).toSet
+
+  def run(): ResolvedQuery = {
+    val (sql, params) = SqlText.generate(index, plan, q, mappings, aliasOf)
+    // count mode counts matching rows pre-limit — but DISTINCT projects
+    // first: `distinct: true` + count = number of distinct projected rows
+    // (reference C1713), not the pre-projection row count
+    new ResolvedQuery(mappings, sql, params, resultFrame,
+      if (q.distinct) projected.distinct() else filtered)
+  }
+
+  // ---------------------------------------------------------------------
+  // frames, built on first use
+  // ---------------------------------------------------------------------
+
+  /** FROM + JOINs + byIds + WHERE: joined and filtered, pre-projection. */
+  private lazy val filtered: DataFrame = {
     // --- FROM + JOINs (declaration order; ON from relation metadata,
     //     bidirectional + transitive lookup)
     var frame = baseFrame(q.from, "t0")
@@ -388,8 +453,7 @@ private final class Resolver(
 
     // --- byIds fast filter (pk IN ids)
     q.byIds.foreach { ids =>
-      val pk = fromTable.primaryKey.head
-      sqlParams += ids
+      val pk = tableOf(q.from).primaryKey.head
       frame = frame.where(col(internal("t0", pk)).isin(ids: _*))
     }
 
@@ -407,41 +471,41 @@ private final class Resolver(
       frame = fr2
       p.foreach(x => frame = frame.where(x))
     }
+    frame
+  }
 
-    val countFrame = frame // pre-projection snapshot for count mode
+  /** ORDER BY may reference unselected columns (valid SQL when not
+    * DISTINCT/grouped): they ride through the projection under hidden
+    * names and are dropped after sort+limit. internalName -> hiddenKey.
+    */
+  private val hiddenSortCols: Seq[(String, String)] =
+    if (q.distinct) Nil
+    else if (aggPresent)
+      // grouped query: an unselected GROUP BY key still exists on the
+      // grouped frame under its internal name (contract C204 orders by a
+      // joined groupBy column the join's columns:[] excluded from SELECT)
+      q.orderBy.flatMap { o =>
+        val tApi = o.table.getOrElse(q.from)
+        if (selectedKeys.contains(finalKey(tApi, o.column)) ||
+          (o.table.isEmpty && q.aggregations.exists(_.alias == o.column))) None
+        else if (q.groupBy.exists(g =>
+          g.table.getOrElse(q.from) == tApi && g.column == o.column)) {
+          val in = internal(aliasOf(tApi), o.column)
+          Some(in -> s"__ord_$in")
+        } else None
+      }.distinct
+    else q.orderBy.flatMap { o =>
+      val key = finalKey(o.table.getOrElse(q.from), o.column)
+      if (selectedKeys.contains(key)) None
+      else {
+        val in = internal(aliasOf(o.table.getOrElse(q.from)), o.column)
+        Some(in -> s"__ord_$in")
+      }
+    }.distinct
 
-    // --- selected columns (ACL-trimmed defaults)
-    val aggPresent = q.aggregations.nonEmpty || q.groupBy.nonEmpty
-    def defaultCols(tableApi: String): Seq[String] = {
-      val t = tableOf(tableApi)
-      if (aggPresent) q.groupBy.filter(_.table.getOrElse(q.from) == tableApi).map(_.column)
-      else access.allowedColumnsOf(t)
-    }
-    val fromCols = q.columns.getOrElse(defaultCols(q.from)).map(c => (q.from, "t0", c))
-    val joinCols = q.joins.zipWithIndex.flatMap { case (j, i) =>
-      j.columns.getOrElse(defaultCols(j.table)).map(c => (j.table, s"t${i + 1}", c))
-    }
-    val selected = fromCols ++ joinCols
-
-    // column-collision qualification (README.md:522): colliding apiNames
-    // after a join → result keys "table.column"
-    val collisions = selected.groupBy(_._3).collect {
-      case (api, xs) if xs.size > 1 => api
-    }.toSet
-    def finalKey(tableApi: String, colApi: String): String =
-      if (collisions.contains(colApi)) s"$tableApi.$colApi" else colApi
-
-    def mappingFor(tableApi: String, alias: String, colApi: String): ColumnMapping = {
-      val cm = colMeta(tableApi, colApi)
-      val masked = access.maskedColumns(tableApi).contains(colApi)
-      ColumnMapping(internal(alias, colApi), finalKey(tableApi, colApi), tableApi,
-        cm.columnType, cm.nullable, masked,
-        if (masked) cm.maskingFn.orElse(Some("full")) else None)
-    }
-
-    var mappings: Seq[ColumnMapping] = selected.map((mappingFor _).tupled)
-
-    // --- aggregations / groupBy
+  /** Grouped (+ HAVING) and projected to final keys plus hidden sort keys. */
+  private lazy val projected: DataFrame = {
+    var frame = filtered
     if (aggPresent) {
       val groupCols = q.groupBy.map { g =>
         val tApi = g.table.getOrElse(q.from)
@@ -454,65 +518,17 @@ private final class Resolver(
         if (aggExprs.isEmpty) frame.select(groupCols: _*).distinct()
         else if (groupCols.isEmpty) frame.agg(aggExprs.head, aggExprs.tail: _*)
         else frame.groupBy(groupCols: _*).agg(aggExprs.head, aggExprs.tail: _*)
-      val aggMappings = q.aggregations.map { a =>
-        val (srcType, srcNullable, srcTable) =
-          if (a.column == "*") ("int", false, q.from)
-          else {
-            val tApi = a.table.getOrElse(q.from)
-            val cm = colMeta(tApi, a.column)
-            (cm.columnType, cm.nullable, tApi)
-          }
-        val resultType = a.fn match {
-          case "count" => "int"
-          case "avg"   => "decimal"
-          case _       => srcType
-        }
-        // aggregation aliases are never masked (QUERY.md:197)
-        ColumnMapping(a.alias, a.alias, srcTable, resultType,
-          a.fn != "count" && srcNullable, masked = false, None)
-      }
-      mappings = mappings ++ aggMappings
-
       // HAVING: predicates over aggregation aliases only
-      if (q.having.nonEmpty) {
-        val (fr2, preds) = (frame, q.having.map(havingPredicate))
-        frame = fr2.where(preds.reduce(_ && _))
-      }
+      if (q.having.nonEmpty) frame = frame.where(q.having.map(havingPredicate).reduce(_ && _))
     }
-
-    // --- projection to final keys. ORDER BY may reference unselected
-    // columns (valid SQL when not DISTINCT/grouped): carry them through the
-    // projection under hidden names and drop them after sort+limit.
-    val selectedKeys = mappings.map(_.finalKey).toSet
-    val hiddenSortCols: Seq[(String, String)] = // internalName -> hiddenKey
-      if (q.distinct) Nil
-      else if (aggPresent)
-        // grouped query: an unselected GROUP BY key still exists on the
-        // grouped frame under its internal name (contract C204 orders by a
-        // joined groupBy column the join's columns:[] excluded from SELECT)
-        q.orderBy.flatMap { o =>
-          val tApi = o.table.getOrElse(q.from)
-          if (selectedKeys.contains(finalKey(tApi, o.column)) ||
-            (o.table.isEmpty && q.aggregations.exists(_.alias == o.column))) None
-          else if (q.groupBy.exists(g =>
-            g.table.getOrElse(q.from) == tApi && g.column == o.column)) {
-            val in = internal(aliasOf(tApi), o.column)
-            Some(in -> s"__ord_$in")
-          } else None
-        }.distinct
-      else q.orderBy.flatMap { o =>
-        val key = finalKey(o.table.getOrElse(q.from), o.column)
-        if (selectedKeys.contains(key)) None
-        else {
-          val in = internal(aliasOf(o.table.getOrElse(q.from)), o.column)
-          Some(in -> s"__ord_$in")
-        }
-      }.distinct
     // exactCol: an aggregation mapping's internalName is the user-supplied
     // alias — must be referenced as an exact name, never parsed
-    val projCols = mappings.map(m => exactCol(m.internalName).as(m.finalKey)) ++
-      hiddenSortCols.map { case (in, hid) => col(in).as(hid) }
-    val projected = frame.select(projCols: _*)
+    frame.select(mappings.map(m => exactCol(m.internalName).as(m.finalKey)) ++
+      hiddenSortCols.map { case (in, hid) => col(in).as(hid) }: _*)
+  }
+
+  /** The result frame: distinct, ordered, offset, limited, masked. */
+  private def resultFrame: DataFrame = {
     var result = if (q.distinct) projected.distinct() else projected
 
     // --- ORDER BY (columns or aggregation aliases)
@@ -551,13 +567,7 @@ private final class Resolver(
           case None     => c
         }
       }: _*)
-
-    val sqlText = SqlText.generate(index, plan, q, mappings, aliasOf)
-    // count mode counts matching rows pre-limit — but DISTINCT projects
-    // first: `distinct: true` + count = number of distinct projected rows
-    // (reference C1713), not the pre-projection row count
-    val countF = if (q.distinct) projected.distinct() else countFrame
-    ResolvedQuery(result, countF, mappings, sqlText, sqlParams.result())
+    result
   }
 
   /** Aggregate expression with deterministic numeric accumulation: columns
@@ -618,20 +628,20 @@ private final class Resolver(
   private def havingPredicate(node: QueryFilterNode): Column = node match {
     case f: QueryFilter =>
       val c = exactCol(f.column)
-      def l(v: Any) = { sqlParams += v; lit(v) }
+      def v = f.value.get
       f.operator match {
-        case "="  => c === l(f.value.get)
-        case "!=" => !(c <=> l(f.value.get)) // NULL-inclusive != (C107), e.g. a NULL SUM group
-        case ">"  => c > l(f.value.get)
-        case "<"  => c < l(f.value.get)
-        case ">=" => c >= l(f.value.get)
-        case "<=" => c <= l(f.value.get)
-        case "in"    => val vs = f.value.get.asInstanceOf[Seq[Any]]; sqlParams += vs; c.isin(vs: _*)
-        case "notIn" => val vs = f.value.get.asInstanceOf[Seq[Any]]; sqlParams += vs; !c.isin(vs: _*)
+        case "="  => c === lit(v)
+        case "!=" => !(c <=> lit(v)) // NULL-inclusive != (C107), e.g. a NULL SUM group
+        case ">"  => c > lit(v)
+        case "<"  => c < lit(v)
+        case ">=" => c >= lit(v)
+        case "<=" => c <= lit(v)
+        case "in"    => c.isin(v.asInstanceOf[Seq[Any]]: _*)
+        case "notIn" => !c.isin(v.asInstanceOf[Seq[Any]]: _*)
         case "between" =>
-          val (a, b) = f.value.get.asInstanceOf[(Any, Any)]; c.between(l(a), l(b))
+          val (a, b) = v.asInstanceOf[(Any, Any)]; c.between(lit(a), lit(b))
         case "notBetween" =>
-          val (a, b) = f.value.get.asInstanceOf[(Any, Any)]; !c.between(l(a), l(b))
+          val (a, b) = v.asInstanceOf[(Any, Any)]; !c.between(lit(a), lit(b))
         case "isNull"    => c.isNull
         case "isNotNull" => c.isNotNull
       }

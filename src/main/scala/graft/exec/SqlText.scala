@@ -7,10 +7,16 @@ import graft.types._
 /** Parameterized ANSI-SQL text for sql-only mode (reference: QUERY.md:133-139,
   * SQL_DIALECTS.md:250-259). Our engine executes Catalyst plans, not SQL
   * strings, but the sql-only contract survives: the text below is a faithful
-  * dialect-agnostic rendering of the resolved query with `?` placeholders in
-  * the same traversal order the resolver binds its literals (SQL formatting
-  * may differ between implementations; params must match — TESTS.md #225).
-  * Values are NEVER interpolated into the text (SECURITY.md layer 2).
+  * dialect-agnostic rendering of the resolved query with `?` placeholders
+  * (SQL formatting may differ between implementations; params must match —
+  * TESTS.md #225). Values are NEVER interpolated into the text (SECURITY.md
+  * layer 2).
+  *
+  * Text and params come from one walk: every placeholder is written by
+  * `bind`, which appends its value in the same step, so the params are the
+  * placeholders' values in text order by construction. The walk reads only
+  * metadata: no table is loaded and no DataFrame is built, so a sql-only
+  * request costs no Spark work.
   */
 object SqlText {
 
@@ -20,7 +26,14 @@ object SqlText {
       q: QueryDefinition,
       mappings: Seq[ColumnMapping],
       aliasOf: Map[String, String],
-  ): String = {
+  ): (String, Seq[Any]) = {
+    val params = Seq.newBuilder[Any]
+    def bind(v: Any): String = { params += v; "?" }
+    // the two placeholders of a pair operand (between, levenshteinLte)
+    def bindPair(v: Any): (String, String) = {
+      val (a, b) = v.asInstanceOf[(Any, Any)]
+      (bind(a), bind(b))
+    }
     var subCounter = 0
     def tbl(api: String) = index.tablesByApi(api)
     def phys(api: String, colApi: String): String =
@@ -37,32 +50,34 @@ object SqlText {
         case f: QueryFilter =>
           val a = aliasFor(f.table.getOrElse(defaultTable))
           val c = s"$a.${ident(phys(f.table.getOrElse(defaultTable), f.column))}"
+          def v = f.value.get
           f.operator match {
             // != is NULL-inclusive engine-wide (C107) — the text must carry
             // the same semantics the engine executes
-            case "=" => s"$c = ?"         case "!=" => s"$c IS DISTINCT FROM ?"
-            case ">" => s"$c > ?"         case "<" => s"$c < ?"
-            case ">=" => s"$c >= ?"       case "<=" => s"$c <= ?"
-            case "in" => s"$c IN (?)"     case "notIn" => s"$c NOT IN (?)"
-            case "like" => s"$c LIKE ?"   case "notLike" => s"$c NOT LIKE ?"
-            case "ilike" => s"LOWER($c) LIKE LOWER(?)"
-            case "notIlike" => s"LOWER($c) NOT LIKE LOWER(?)"
-            case "contains" => s"$c LIKE '%' || ? || '%'"
-            case "notContains" => s"$c NOT LIKE '%' || ? || '%'"
-            case "icontains" => s"LOWER($c) LIKE '%' || LOWER(?) || '%'"
-            case "notIcontains" => s"LOWER($c) NOT LIKE '%' || LOWER(?) || '%'"
-            case "startsWith" => s"$c LIKE ? || '%'"
-            case "istartsWith" => s"LOWER($c) LIKE LOWER(?) || '%'"
-            case "endsWith" => s"$c LIKE '%' || ?"
-            case "iendsWith" => s"LOWER($c) LIKE '%' || LOWER(?)"
+            case "=" => s"$c = ${bind(v)}"
+            case "!=" => s"$c IS DISTINCT FROM ${bind(v)}"
+            case ">" => s"$c > ${bind(v)}"        case "<" => s"$c < ${bind(v)}"
+            case ">=" => s"$c >= ${bind(v)}"      case "<=" => s"$c <= ${bind(v)}"
+            case "in" => s"$c IN (${bind(v)})"    case "notIn" => s"$c NOT IN (${bind(v)})"
+            case "like" => s"$c LIKE ${bind(v)}"  case "notLike" => s"$c NOT LIKE ${bind(v)}"
+            case "ilike" => s"LOWER($c) LIKE LOWER(${bind(v)})"
+            case "notIlike" => s"LOWER($c) NOT LIKE LOWER(${bind(v)})"
+            case "contains" => s"$c LIKE '%' || ${bind(v)} || '%'"
+            case "notContains" => s"$c NOT LIKE '%' || ${bind(v)} || '%'"
+            case "icontains" => s"LOWER($c) LIKE '%' || LOWER(${bind(v)}) || '%'"
+            case "notIcontains" => s"LOWER($c) NOT LIKE '%' || LOWER(${bind(v)}) || '%'"
+            case "startsWith" => s"$c LIKE ${bind(v)} || '%'"
+            case "istartsWith" => s"LOWER($c) LIKE LOWER(${bind(v)}) || '%'"
+            case "endsWith" => s"$c LIKE '%' || ${bind(v)}"
+            case "iendsWith" => s"LOWER($c) LIKE '%' || LOWER(${bind(v)})"
             case "isNull" => s"$c IS NULL"
             case "isNotNull" => s"$c IS NOT NULL"
-            case "between" => s"$c BETWEEN ? AND ?"
-            case "notBetween" => s"$c NOT BETWEEN ? AND ?"
-            case "levenshteinLte" => s"LEVENSHTEIN($c, ?) <= ?"
-            case "arrayContains" => s"ARRAY_CONTAINS($c, ?)"
-            case "arrayContainsAll" => s"ARRAY_CONTAINS_ALL($c, ?)"
-            case "arrayContainsAny" => s"ARRAYS_OVERLAP($c, ?)"
+            case "between" => val (a, b) = bindPair(v); s"$c BETWEEN $a AND $b"
+            case "notBetween" => val (a, b) = bindPair(v); s"$c NOT BETWEEN $a AND $b"
+            case "levenshteinLte" => val (t, d) = bindPair(v); s"LEVENSHTEIN($c, $t) <= $d"
+            case "arrayContains" => s"ARRAY_CONTAINS($c, ${bind(v)})"
+            case "arrayContainsAll" => s"ARRAY_CONTAINS_ALL($c, ${bind(v)})"
+            case "arrayContainsAny" => s"ARRAYS_OVERLAP($c, ${bind(v)})"
             case "arrayIsEmpty" => s"CARDINALITY($c) = 0"
             case "arrayIsNotEmpty" => s"CARDINALITY($c) > 0"
             case other => other
@@ -89,8 +104,8 @@ object SqlText {
           val where = (corr +: sub).mkString(" AND ")
           val fromSql = s"${qualified(e.table)} AS $sAlias"
           e.count match {
-            case Some(CountCond(op, _)) =>
-              s"(SELECT COUNT(*) FROM $fromSql WHERE $where) $op ?"
+            case Some(CountCond(op, n)) =>
+              s"(SELECT COUNT(*) FROM $fromSql WHERE $where) $op ${bind(n)}"
             case None =>
               val kw = if (e.exists) "EXISTS" else "NOT EXISTS"
               s"$kw (SELECT 1 FROM $fromSql WHERE $where)"
@@ -132,9 +147,9 @@ object SqlText {
     }
 
     val whereParts = Seq.newBuilder[String]
-    q.byIds.foreach { _ =>
+    q.byIds.foreach { ids =>
       val pk = tbl(q.from).primaryKey.head
-      whereParts += s"$fromAlias.${ident(phys(q.from, pk))} IN (?)"
+      whereParts += s"$fromAlias.${ident(phys(q.from, pk))} IN (${bind(ids)})"
     }
     q.filters.foreach(f =>
       whereParts += filterSql(f, q.from, aliasOf, q.from, fromAlias))
@@ -153,13 +168,14 @@ object SqlText {
         def havingSql(n: QueryFilterNode): String = n match {
           case f: QueryFilter =>
             val c = ident(f.column)
+            def v = f.value.get
             f.operator match {
-              case "in" => s"$c IN (?)"   case "notIn" => s"$c NOT IN (?)"
-              case "between" => s"$c BETWEEN ? AND ?"
-              case "notBetween" => s"$c NOT BETWEEN ? AND ?"
+              case "in" => s"$c IN (${bind(v)})"   case "notIn" => s"$c NOT IN (${bind(v)})"
+              case "between" => val (a, b) = bindPair(v); s"$c BETWEEN $a AND $b"
+              case "notBetween" => val (a, b) = bindPair(v); s"$c NOT BETWEEN $a AND $b"
               case "isNull" => s"$c IS NULL" case "isNotNull" => s"$c IS NOT NULL"
-              case "!=" => s"$c IS DISTINCT FROM ?"
-              case op => s"$c $op ?"
+              case "!=" => s"$c IS DISTINCT FROM ${bind(v)}"
+              case op => s"$c $op ${bind(v)}"
             }
           case g: QueryFilterGroup =>
             val inner = g.conditions.map(havingSql).mkString(s" ${g.logic.toUpperCase} ")
@@ -178,6 +194,6 @@ object SqlText {
       q.limit.foreach(l => sb.append(s"\nLIMIT $l"))
       q.offset.foreach(o => sb.append(s"\nOFFSET $o"))
     }
-    sb.toString
+    (sb.toString, params.result())
   }
 }

@@ -1265,10 +1265,8 @@ object Similarity {
           if (p.kCode != -1) p.kCode else kCodeForCorpus(n)))
         Map("codebook" -> cbSub, "codes" -> pqEncode(base, cbSub, p.m, p.subDim))
       case _: Sq8 =>
-        // derive the dimension from the data (the kmeansCentroids rule)
-        val d = corpus.select(size(col("vec"))).head.getInt(0)
         val rg = sq8Ranges(c)
-        Map("ranges" -> rg, "codes" -> sq8Codes(c, rg, d))
+        Map("ranges" -> rg, "codes" -> sq8Codes(c, rg))
       case p: Projected =>
         Map("projected" -> signProject(corpus.select(col("cid"), col("vec")),
           "cid", "vec", p.outDims, p.firstPlane))
@@ -1491,12 +1489,13 @@ object Similarity {
       .select(transform(col("ps"), p => p.getField("lo")).as("los"),
         transform(col("ps"), p => p.getField("st")).as("sts"))
 
-  /** The ONE floor-encode: byte codes per corpus vector — `(cid, codes)`. */
-  private def sq8Codes(c: DataFrame, rg: DataFrame, d: Int): DataFrame =
+  /** The ONE floor-encode: byte codes per corpus vector — `(cid, codes)`.
+    * One code per element of the vector itself, so building the codes
+    * needs no width and runs no Spark job. */
+  private def sq8Codes(c: DataFrame, rg: DataFrame): DataFrame =
     c.crossJoin(broadcast(rg))
       .select(col("cid"),
-        transform(sequence(lit(0), lit(d - 1)), i => {
-          val x = element_at(col("cid_v"), i + 1)
+        transform(col("cid_v"), (x, i) => {
           val lo = element_at(col("los"), i + 1)
           val st = element_at(col("sts"), i + 1)
           when(st === 0.0, lit(0))

@@ -263,8 +263,28 @@ class HttpApiSpec extends AnyFunSuite {
       c.healthCheck().executors("pg-main").healthy)
   }
 
+  test("sequential round trips pay no Nagle delayed-ACK stall") {
+    // the JDK server writes headers and body separately; without
+    // TCP_NODELAY the body waits for the client's delayed ACK (~40 ms)
+    val c = new graft.api.MultiDbHttpClient(s"http://127.0.0.1:$port")
+    val q = QueryDefinition("orders", columns = Some(Seq("id")))
+    (1 to 5).foreach(_ => c.validateQuery(q))
+    val ms = (1 to 30).map { _ =>
+      val t0 = System.nanoTime()
+      c.validateQuery(q)
+      (System.nanoTime() - t0) / 1e6
+    }.sorted
+    val median = ms(ms.size / 2)
+    assert(median < 15.0, f"median /validate/query round trip $median%.1f ms: ${ms.mkString(", ")}")
+  }
+
   test("client timeout → ConnectionError(REQUEST_TIMEOUT); unreachable → NETWORK_ERROR") {
-    // slow server: sleeps past the client deadline (C1205)
+    // slow server: sleeps past the client deadline (C1205). It is a raw JDK
+    // HttpServer, and the JDK reads TCP_NODELAY once, when the JVM's first
+    // HttpServer is created: the property must be in force before any JDK
+    // HttpServer exists in the JVM, so the MultiDbHttpServer companion
+    // (which sets it) is touched first, in case this test runs alone
+    assert(System.getProperty(MultiDbHttpServer.NoDelayProperty) == "true")
     val slow = com.sun.net.httpserver.HttpServer.create(
       new java.net.InetSocketAddress(0), 0)
     slow.createContext("/query", (ex: com.sun.net.httpserver.HttpExchange) => {

@@ -143,6 +143,14 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(small == large)
   }
 
+  test("SQ8: a second construction of s_ann_sq8 and s_ann_ivfsq8 runs no Spark job") {
+    // the codes are one byte per element of each vector: no width job
+    Seq("s_ann_sq8", "s_ann_ivfsq8").foreach { row =>
+      SparkEntry.queries(row)(spark, dir).collect()
+      assert(TestSpark.jobsDuring(SparkEntry.queries(row)(spark, dir)) == 0, row)
+    }
+  }
+
   test("final sort: a second construction of d_text_analysis runs no Spark job") {
     SparkEntry.queries("d_text_analysis")(spark, dir)
     assert(TestSpark.jobsDuring(SparkEntry.queries("d_text_analysis")(spark, dir)) == 0)

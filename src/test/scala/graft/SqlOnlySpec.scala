@@ -164,6 +164,47 @@ class SqlOnlySpec extends AnyFunSuite {
     assert(colcmp.params.isEmpty)
   }
 
+  test("sql-only binds one param per placeholder, for every operator and clause") {
+    def r(d: QueryDefinition): SqlResult =
+      db.query(d.copy(executeMode = "sql-only")).asInstanceOf[SqlResult]
+    def placeholders(sql: String): Int = sql.count(_ == '?')
+    val filters: Seq[QueryFilterNode] = Seq(
+      QueryFilter("status", "=", Some("active")), QueryFilter("isActive", "!=", Some(true)),
+      QueryFilter("amount", ">", Some(10)), QueryFilter("amount", "<=", Some(10)),
+      QueryFilter("id", "in", Some(Seq(1))), QueryFilter("id", "notIn", Some(Seq(1))),
+      QueryFilter("email", "like", Some("%a%")), QueryFilter("email", "notIlike", Some("%A%")),
+      QueryFilter("email", "contains", Some("a")), QueryFilter("email", "icontains", Some("A")),
+      QueryFilter("email", "notIcontains", Some("A")), QueryFilter("name", "startsWith", Some("A")),
+      QueryFilter("name", "istartsWith", Some("a")), QueryFilter("email", "endsWith", Some("m")),
+      QueryFilter("email", "iendsWith", Some("M")), QueryFilter("discount", "isNull", None),
+      QueryFilter("amount", "between", Some((1, 2))), QueryFilter("amount", "notBetween", Some((1, 2))),
+      QueryFilter("name", "levenshteinLte", Some(("Al", 1))), QueryFilter("scores", "arrayContains", Some(1)),
+      QueryFilter("tags", "arrayContainsAll", Some(Seq("a"))),
+      QueryFilter("tags", "arrayContainsAny", Some(Seq("a"))), QueryFilter("scores", "arrayIsEmpty", None),
+      QueryExistsFilter("sampleItems", filters = Seq(QueryFilter("status", "=", Some("paid"))),
+        count = Some(CountCond("<", 2))))
+    filters.foreach { f =>
+      val res = r(QueryDefinition("samples", columns = Some(Seq("id")), filters = Seq(f)))
+      assert(placeholders(res.sql) == res.params.size, s"$f:\n${res.sql}\n${res.params}")
+    }
+    // the case-insensitive pattern operators bind their value like the others
+    assert(r(QueryDefinition("samples", columns = Some(Seq("id")),
+      filters = Seq(QueryFilter("email", "icontains", Some("A"))))).params == Seq("A"))
+    // clauses together: byIds, a group and EXISTS; then WHERE and HAVING
+    val byIds = r(QueryDefinition("samples", columns = Some(Seq("id")),
+      byIds = Some(Seq(1, 2)),
+      filters = Seq(QueryFilterGroup("or", filters.take(4)), filters.last)))
+    assert(placeholders(byIds.sql) == byIds.params.size, s"${byIds.sql}\n${byIds.params}")
+    assert(byIds.params == Seq(Seq(1, 2), "active", true, 10, 10, "paid", 2L))
+    val grouped = r(QueryDefinition("samples", columns = Some(Seq("status")),
+      groupBy = Seq(QueryGroupBy("status")),
+      aggregations = Seq(QueryAggregation("amount", "sum", "totalAmt")),
+      filters = Seq(QueryFilterGroup("or", filters.take(4))),
+      having = Seq(QueryFilter("totalAmt", "between", Some((100, 300))))))
+    assert(placeholders(grouped.sql) == grouped.params.size, s"${grouped.sql}\n${grouped.params}")
+    assert(grouped.params == Seq("active", true, 10, 10, 100, 300))
+  }
+
   test("sql-only never interpolates a hostile value into the text") {
     val hostile = "x'; DROP TABLE samples; --"
     val r = db.query(QueryDefinition("samples", columns = Some(Seq("id")),
