@@ -4,7 +4,7 @@ import java.util.concurrent.{Executors, TimeUnit, TimeoutException, FutureTask}
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import graft.access.{AccessControl, Masking}
-import graft.exec.{Resolver, ResolvedQuery}
+import graft.exec.{LiteralStable, Resolver, ResolvedQuery}
 import graft.meta._
 import graft.planner.{Plan, Planner, SourceRegistry}
 import graft.types._
@@ -203,7 +203,7 @@ final class MultiDb(
           if (q.debug) Some(debug.result()) else None)
       case "count" =>
         val t2 = System.nanoTime()
-        val n = withTimeout(plan, resolved.countFrame.count())
+        val n = withTimeout(plan, countRows(resolved.countFrame))
         log("execution", s"count = $n")
         val result = CountResult(n, metaOf(Some((System.nanoTime() - t2) / 1000000), Nil),
           if (q.debug) Some(debug.result()) else None)
@@ -240,7 +240,7 @@ final class MultiDb(
               case None =>
                 log("cache", s"fetching ${missing.size} missed ids from database")
                 val ((res2, _, _), _) = resolveTimed(snapshot, refetch, context)
-                val data = assemble(withTimeout(plan, res2.frame.collect()), res2)
+                val data = assemble(withTimeout(plan, collectRows(res2.frame)), res2)
                 refetchKey.foreach(store(snapshot, _, DataResult(data, metaOf(None, Nil)), res2.frame))
                 data
             }
@@ -250,7 +250,7 @@ final class MultiDb(
           if (q.debug) Some(debug.result()) else None)
       case _ =>
         val t2 = System.nanoTime()
-        val rows = withTimeout(plan, resolved.frame.collect())
+        val rows = withTimeout(plan, collectRows(resolved.frame))
         log("execution", s"fetched ${rows.length} rows")
         val data = assemble(rows, resolved)
         val result = DataResult(data,
@@ -350,6 +350,17 @@ final class MultiDb(
         }
     }
   }
+
+  /** The rows of `df`, run literal-stable ([[LiteralStable]]): a query that
+    * differs from an earlier one only in its parameter values reuses that
+    * query's compiled classes. These two are the only places `query` runs a
+    * frame; `frame()` results run as the caller runs them.
+    */
+  private def collectRows(df: DataFrame): Array[Row] = LiteralStable(df).collect()
+
+  /** `df.count()`, run literal-stable like [[collectRows]]. */
+  private def countRows(df: DataFrame): Long =
+    LiteralStable(df.groupBy().count()).collect().head.getLong(0)
 
   /** Row → apiName-keyed map with masking applied (post-query, reference-
     * faithful: METADATA.md:116); null passes through unmasked.
