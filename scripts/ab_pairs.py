@@ -4,13 +4,15 @@
 Runs `perfbench/run.py` in checkout A and in checkout B, N times each, as
 pairs: pair i uses seed S+i for both sides, and the side that runs first
 alternates (A first in even pairs, B first in odd ones), so a drift of the
-host over the session does not favour one side. Every run's result line is
-appended to a JSON-lines log as soon as it finishes; the summary is
+host over the session does not favour one side. Every run lasts the
+`run_seconds` that checkout A's `BENCHMARK.json` sets. Every run's result
+line is written to a new JSON-lines log as soon as it finishes (an existing
+log is refused, so one log holds one session's pairs); the summary is
 computed from that log alone.
 
 Usage (from anywhere):
   python3 scripts/ab_pairs.py run --a PARENT_DIR --b CHANGE_DIR \
-      --workload api_point --pairs 10 --seed 101 --seconds 24 --log ab.jsonl
+      --workload api_point --pairs 10 --seed 101 --log ab.jsonl
   python3 scripts/ab_pairs.py summary ab.jsonl
 
 For every end-to-end metric the summary prints the per-pair values, each
@@ -46,14 +48,12 @@ def parse_result(stdout):
     return result, canary
 
 
-def directions(checkout):
-    """metric name -> "higher"/"lower", from the checkout's BENCHMARK.json."""
-    path = os.path.join(checkout, "BENCHMARK.json")
-    if not os.path.exists(path):
-        return {}
-    with open(path) as f:
+def benchmark(checkout):
+    """(run length in seconds, metric name -> "higher"/"lower"), from the
+    checkout's BENCHMARK.json."""
+    with open(os.path.join(checkout, "BENCHMARK.json")) as f:
         spec = json.load(f)
-    return {m["name"]: m["better"] for m in spec.get("end_to_end", [])}
+    return spec["run_seconds"], {m["name"]: m["better"] for m in spec.get("end_to_end", [])}
 
 
 def run_one(checkout, workload, seed, seconds):
@@ -73,14 +73,19 @@ def run_one(checkout, workload, seed, seconds):
 
 
 def run_pairs(args):
-    better = directions(args.a)
-    with open(args.log, "a") as log:
+    seconds, better = benchmark(args.a)
+    try:
+        log = open(args.log, "x")
+    except FileExistsError:
+        sys.exit(f"ab_pairs: {args.log} exists; pairs are numbered from 1 in every "
+                 "session, so each session needs a new log")
+    with log:
         for i in range(args.pairs):
             seed = args.seed + i
             order = ["A", "B"] if i % 2 == 0 else ["B", "A"]
             for pos, side in enumerate(order):
                 checkout = args.a if side == "A" else args.b
-                rec = run_one(checkout, args.workload, seed, args.seconds)
+                rec = run_one(checkout, args.workload, seed, seconds)
                 rec.update(workload=args.workload, pair=i + 1, seed=seed, side=side,
                            first=order[0], position=pos, checkout=os.path.abspath(checkout),
                            better=better)
@@ -170,8 +175,7 @@ def main():
     r.add_argument("--workload", required=True)
     r.add_argument("--pairs", type=int, required=True)
     r.add_argument("--seed", type=int, required=True, help="seed of pair 1; pair i uses seed+i-1")
-    r.add_argument("--seconds", type=float, default=24)
-    r.add_argument("--log", required=True, help="JSON-lines log, appended to")
+    r.add_argument("--log", required=True, help="JSON-lines log to create (must not exist)")
     s = sub.add_parser("summary", help="summarize an existing log")
     s.add_argument("log")
     args = ap.parse_args()

@@ -3,8 +3,9 @@
 
 Builds two stand-in checkouts whose perfbench/run.py prints a canned
 result line (a value per seed), runs ab_pairs.py over them and checks the
-run order, the log and the summary: medians, quartiles, wins, the IQR rule
-and the handling of a run that prints no result.
+run order, the run length, the log and the summary: medians, quartiles,
+wins, the IQR rule, the handling of a run that prints no result, and the
+refusal of a log that already exists.
 
 Usage: python3 scripts/ab_pairs_selftest.py   (exit 0 = ab_pairs behaves)
 """
@@ -22,12 +23,15 @@ import ab_pairs  # noqa: E402
 # A's qps by seed, and B's: B is better in 3 of 4 pairs
 QPS = {"A": {1: 20.0, 2: 22.0, 3: 24.0, 4: 30.0}, "B": {1: 30.0, 2: 31.0, 3: 32.0, 4: 29.0}}
 P50 = {"A": 10.0, "B": 9.0}
+# the run length the stand-in BENCHMARK.json sets; every run must get it
+RUN_SECONDS = 7
 
 FAKE_RUN = '''import json, sys
 side, qps, p50, order_log = {side!r}, {qps!r}, {p50!r}, {order_log!r}
 seed = int(sys.argv[sys.argv.index("--seed") + 1])
+seconds = sys.argv[sys.argv.index("--seconds") + 1]
 with open(order_log, "a") as f:
-    f.write(f"{{side}}{{seed}}\\n")
+    f.write(f"{{side}}{{seed}}:{{seconds}}\\n")
 if side == "B" and seed == 5:
     print("perfbench: build failed", file=sys.stderr)
     sys.exit(2)
@@ -46,7 +50,7 @@ def checkout(root, side, order_log):
     with open(os.path.join(d, "perfbench", "run.py"), "w") as f:
         f.write(FAKE_RUN.format(side=side, qps=qps, p50=P50[side], order_log=order_log))
     with open(os.path.join(d, "BENCHMARK.json"), "w") as f:
-        json.dump({"end_to_end": [{"name": "qps", "better": "higher"},
+        json.dump({"run_seconds": RUN_SECONDS, "end_to_end": [{"name": "qps", "better": "higher"},
                                   {"name": "latency_p50_ms", "better": "lower"}]}, f)
     return d
 
@@ -69,8 +73,10 @@ def main():
         assert p.returncode == 0, p.stderr
         with open(order_log) as f:
             order = f.read().split()
-        # the first side alternates pair by pair
-        assert order == ["A1", "B1", "B2", "A2", "A3", "B3", "B4", "A4", "A5", "B5"], order
+        # the first side alternates pair by pair, and every run lasts the
+        # benchmark's run_seconds
+        expected = ["A1", "B1", "B2", "A2", "A3", "B3", "B4", "A4", "A5", "B5"]
+        assert order == [f"{r}:{RUN_SECONDS}" for r in expected], order
 
         recs = ab_pairs.read_log(log)
         assert len(recs) == 10
@@ -96,6 +102,19 @@ def main():
         # the summary subcommand reads the same log to the same text
         s = subprocess.run([sys.executable, AB, "summary", log], capture_output=True, text=True)
         assert s.returncode == 0 and s.stdout == out, s.stdout
+
+        # a second session on the same log is refused before it runs anything:
+        # its pair numbers would collide with the first session's
+        with open(log) as f:
+            before = f.read()
+        again = subprocess.run([sys.executable, AB, "run", "--a", a, "--b", b, "--workload",
+                                "api_point", "--pairs", "2", "--seed", "50", "--log", log],
+                               capture_output=True, text=True)
+        assert again.returncode != 0 and "exists" in again.stderr, again.stderr
+        with open(log) as f:
+            assert f.read() == before
+        with open(order_log) as f:
+            assert f.read().split() == order
     print("ab_pairs_selftest: all cases pass")
 
 

@@ -358,9 +358,10 @@ final class MultiDb(
     */
   private def collectRows(df: DataFrame): Array[Row] = LiteralStable(df).collect()
 
-  /** `df.count()`, run literal-stable like [[collectRows]]. */
-  private def countRows(df: DataFrame): Long =
-    LiteralStable(df.groupBy().count()).collect().head.getLong(0)
+  /** `df.count()`, run literal-stable like [[collectRows]]: the aggregate
+    * `count()` adds holds only the constant `count(1)`.
+    */
+  private def countRows(df: DataFrame): Long = LiteralStable(df).count()
 
   /** Row → apiName-keyed map with masking applied (post-query, reference-
     * faithful: METADATA.md:116); null passes through unmasked.

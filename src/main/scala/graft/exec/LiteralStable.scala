@@ -17,12 +17,11 @@ import org.apache.spark.sql.types._
   * Everything but code generation is `Literal`'s: it equals, hashes, prints,
   * evaluates and folds as the plain literal of its value, matches the
   * `Literal(v, t)` pattern (so parquet `PushedFilters` carry the real value
-  * and `TakeOrderedAndProject` still plans), and canonicalizes to that plain
-  * literal, so `semanticEquals` holds in both directions.
+  * and `TakeOrderedAndProject` still plans). A leaf canonicalizes to itself,
+  * so with `Literal`'s symmetric equality `semanticEquals` holds in both
+  * directions.
   */
 final class ParamLiteral(v: Any, t: DataType) extends Literal(v, t) {
-
-  override lazy val canonicalized: Expression = Literal(value, dataType)
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("param", value, CodeGenerator.boxedType(dataType))

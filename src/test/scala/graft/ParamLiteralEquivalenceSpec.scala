@@ -155,7 +155,6 @@ class ParamLiteralEquivalenceSpec extends AnyFunSuite {
       assert(p.isInstanceOf[ParamLiteral], s"$l was not swapped")
       assert(p == l && l == p && p.hashCode == l.hashCode, s"$l")
       assert(p.semanticEquals(l) && l.semanticEquals(p), s"$l")
-      assert(p.canonicalized.getClass == classOf[Literal])
       assert(p.eval() == l.eval() || (p.eval() != p.eval() && l.eval() != l.eval()), s"$l")
       assert(p.toString == l.toString && p.sql == l.sql)
     }
