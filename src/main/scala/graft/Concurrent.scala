@@ -1,6 +1,6 @@
 package graft
 
-import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
+import java.util.concurrent.{ConcurrentLinkedQueue, ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicLong
 import java.util.concurrent.locks.LockSupport
 import org.apache.spark.sql.SparkSession
@@ -36,9 +36,11 @@ object Concurrent {
   def all[T](spark: SparkSession)(branches: Seq[() => T]): Seq[T] = {
     val sc = spark.sparkContext
     val tag = s"graft-branch-${calls.incrementAndGet()}"
+    val threads = new ConcurrentLinkedQueue[Thread]()
     val pool = Executors.newFixedThreadPool(math.max(1, branches.size), { r =>
       val th = new Thread(r, tag)
       th.setDaemon(true)
+      threads.add(th)
       th
     })
     val done = new ExecutorCompletionService[T](pool)
@@ -63,6 +65,9 @@ object Concurrent {
     } finally {
       pool.shutdown()
       pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+      // the pool reports termination just before its last worker thread
+      // exits: join them, so no branch thread outlives the call
+      threads.forEach(_.join())
     }
   }
 }

@@ -1498,12 +1498,9 @@ object SparkEntry {
         t(s, dir, "documents").count(), maxHamming = 4, bits = 64)
       val hashes = ops.Multimodal.imageHashes(imageDedupAssetTable(s, dir))
         .localCheckpoint() // 3 scans (pair sides + survivor join), 1 decode
-      val pairs = ops.Dedup.pairsFromHash(hashes, maxHamming = 4,
-        blocks = 4 + kDup, bits = 64, comboWidth = kDup)
-      val comps = ops.Dedup.connectedComponentsStar(pairs, "idA", "idB")
-      val losers = comps.where(col("node") =!= col("comp"))
-        .select(col("node").as("__dup_id"))
-      hashes.join(losers, col("id") === col("__dup_id"), "left_anti")
+      ops.Dedup.removeByClosure(hashes, "id",
+          ops.Dedup.pairsFromHash(hashes, maxHamming = 4,
+            blocks = 4 + kDup, bits = 64, comboWidth = kDup))
         .select(col("id").as("assetId")).orderBy("assetId")
     },
     // ---- image near-dup INDEX PROBE: a batch of new assets against the
@@ -2865,7 +2862,7 @@ object SparkEntry {
       val idx = ops.Dedup.cdcChunkIndex(docs.where(col("doc_id") < 250),
         "doc_id", "text", k = 16, maskBits = 6)
       ops.Dedup.cdcIndexMatches(docs.where(col("doc_id") >= 250), idx,
-          "doc_id", "text", k = 16, maskBits = 6, indexIsDistinct = true)
+          "doc_id", "text", k = 16, maskBits = 6)
         .orderBy("doc_id")
     },
     // ---- ANN via JL project-then-rescore: 16-dim projected cosine ranks
@@ -2918,12 +2915,9 @@ object SparkEntry {
     //      near-dup removal under the alignment-robust criterion
     "d_dedup_winnow_removal" -> { (s, dir) =>
       val docs = t(s, dir, "documents")
-      val pairs = ops.Dedup.winnowedPassagePairs(docs, "doc_id", "text",
-        k = 30, w = 10, maxDf = 50, minShared = 2)
-      val comps = ops.Dedup.connectedComponentsStar(pairs, "idA", "idB")
-      val losers = comps.where(col("node") =!= col("comp"))
-        .select(col("node").as("__dup_id"))
-      docs.join(losers, docs("doc_id") === col("__dup_id"), "left_anti")
+      ops.Dedup.removeByClosure(docs, "doc_id",
+          ops.Dedup.winnowedPassagePairs(docs, "doc_id", "text",
+            k = 30, w = 10, maxDf = 50, minShared = 2))
         .select(col("doc_id"), col("source"), col("n_chars"))
         .orderBy("doc_id")
     },
@@ -2963,14 +2957,15 @@ object SparkEntry {
         .orderBy("idA", "idB")
     },
     // ---- dedup clusters: minhash LSH pairs (same params as
-    //      d_dedup_minhash) closed into connected components by iterative
-    //      min-label propagation — the oracle recomputes the transitive
-    //      closure recursively, so the distributed fixpoint is proven
+    //      d_dedup_minhash) closed into connected components by the one
+    //      closure (driver union-find below the edge cap, distributed
+    //      large-star/small-star past it) — the oracle recomputes the
+    //      transitive closure recursively, so the closure is proven
     //      equal to true reachability, not just plausible
     "d_dedup_clusters" -> { (s, dir) =>
       val pairs = ops.Dedup.minhashLshPairs(t(s, dir, "documents"), "doc_id", "text",
         numHashes = 32, bands = 8, threshold = 0.3)
-      ops.Dedup.connectedComponents(pairs, "idA", "idB")
+      ops.Dedup.connectedComponentsStar(pairs, "idA", "idB")
         .select(col("node").as("doc_id"), col("comp").as("component"))
         .orderBy("doc_id")
     },
@@ -5657,8 +5652,8 @@ object SparkEntry {
          |FROM p WHERE ns >= 2 ORDER BY 1, 2""".stripMargin,
     // The pair CTEs are d_dedup_minhash's verbatim; the closure is a
     // RECURSIVE reachability fixpoint — true transitive components, which
-    // BOTH distributed algorithms (label propagation and the
-    // large-star/small-star form) must reproduce exactly.
+    // the one closure must reproduce exactly on both sides of its edge
+    // cap (driver union-find and distributed large-star/small-star).
     "d_dedup_clusters" -> clustersOracleSql,
     "d_dedup_clusters_star" -> clustersOracleSql,
     "d_dedup_removal" -> removalOracleSql,

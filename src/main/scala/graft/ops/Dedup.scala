@@ -235,7 +235,7 @@ object Dedup {
     * to the index, self-identity excluded, estimated Jaccard attached per
     * colliding band. Callers collapse multi-band collisions their own way
     * (batch `.distinct()`, streaming `dropDuplicatesWithinWatermark`) —
-    * the [[indexMatchCore]] contract, est-Jaccard flavored.
+    * the [[hashIndexMatchCore]] contract, est-Jaccard flavored.
     */
   private[graft] def minhashMatchCore(banded: DataFrame, index: DataFrame,
       numHashes: Int): DataFrame =
@@ -278,50 +278,28 @@ object Dedup {
   /** Hamming distance between two packed simhashes. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
-  /** Bit range [lo, hi) of block `i` when 31 bits are split into `blocks`
-    * near-equal parts.
-    */
-  private[graft] def blockBounds(blocks: Int, i: Int): (Int, Int) =
-    blockBoundsBits(31, blocks, i)
-
   /** Bit range [lo, hi) of block `i` when `bits` bits are split into
-    * `blocks` near-equal parts — the width-generic form (31-bit text
-    * simhash, 64-bit image dHash).
+    * `blocks` near-equal parts (31-bit text simhash, 64-bit image dHash).
     */
   private[graft] def blockBoundsBits(bits: Int, blocks: Int, i: Int): (Int, Int) =
     ((bits * i) / blocks, (bits * (i + 1)) / blocks)
 
-  /** The per-block key columns of a packed simhash column — the ONE
-    * definition of the blocking scheme (also used by the streaming index;
-    * change here + the oracle SQL in lockstep).
-    */
-  private[graft] def blockKeyCols(sim: Column, blocks: Int): Column =
-    blockKeyColsBits(sim, blocks, 31)
-
-  /** Width-generic block keys. `shiftrightunsigned` (not arithmetic
-    * shift) so a 64-bit hash with the sign bit set still yields clean
-    * block keys; identical to `shiftright` for the non-negative 31-bit
-    * simhash.
-    */
-  private[graft] def blockKeyColsBits(sim: Column, blocks: Int, bits: Int): Column =
-    array((0 until blocks).map { i =>
-      val (lo, hi) = blockBoundsBits(bits, blocks, i)
-      val masked = shiftrightunsigned(sim, lo)
-      if (hi - lo >= 64) masked
-      else masked.bitwiseAND(lit((1L << (hi - lo)) - 1))
-    }: _*)
-
   /** Combination block keys (Manku et al.'s permuted-table scheme, the
-    * Hamming family's constant-occupancy rule): one packed key per
+    * Hamming family's constant-occupancy rule) — the ONE definition of
+    * the blocking scheme, shared by the batch pairing, every index and
+    * every prober, streaming included (change here + the oracle SQL in
+    * lockstep): one packed key per
     * `comboWidth`-subset of the `blocks` bit ranges — C(blocks, k)
     * tables whose key width is the SUM of the chosen blocks' widths, so
     * the bucket space grows exponentially with k while losslessness
     * holds whenever `blocks - maxHamming >= comboWidth` (≤ maxHamming
     * damaged blocks leave ≥ blocks − maxHamming intact ones, hence some
-    * all-intact k-subset). k = 1 is exactly [[blockKeyColsBits]] (the
-    * classic pigeonhole blocking); the fold packs each block's exact
+    * all-intact k-subset). k = 1 is the classic pigeonhole blocking, one
+    * key per block; the fold packs each block's exact
     * width, and any subset's widths sum to ≤ `bits` ≤ 64, so the packed
-    * key always fits one long.
+    * key always fits one long. `shiftrightunsigned` (not arithmetic
+    * shift) so a 64-bit hash with the sign bit set still yields clean
+    * block keys.
     */
   private[graft] def comboKeyCols(sim: Column, blocks: Int, bits: Int,
       comboWidth: Int): Column = {
@@ -385,33 +363,21 @@ object Dedup {
       .select(col(idCol).as("id"), TextFunctions.simhash31(col(textCol)).as("sim"))
       .where(col("sim") >= 0) // -1 marks no-word docs
       .materialized
-    pairsFromSimhash(sims, maxHamming, blocks, comboWidth)
+    pairsFromHash(sims, maxHamming, blocks, bits = 31, comboWidth)
   }
 
-  /** Blocked pair generation over precomputed (id, sim) rows — split out so
-    * the pigeonhole-completeness property is testable on constructed
-    * hashes (TextHashSpec).
-    */
-  def pairsFromSimhash(sims: DataFrame, maxHamming: Int, blocks: Int,
-      comboWidth: Int = 1): DataFrame =
-    pairsFromHash(sims, maxHamming, blocks, bits = 31, comboWidth)
-
-  /** Width-generic blocked pair generation — the same lossless pigeonhole
-    * scheme over any packed hash width (31-bit text simhash, 64-bit image
-    * dHash from [[graft.ops.Multimodal.imageHashes]]). Never all-pairs:
-    * candidates meet only inside a (block, blockKey) bucket.
+  /** Blocked pair generation over precomputed `(id, sim)` rows — the same
+    * lossless pigeonhole scheme over any packed hash width (31-bit text
+    * simhash, 64-bit image dHash from [[graft.ops.Multimodal.imageHashes]]);
+    * split out so the pigeonhole-completeness property is testable on
+    * constructed hashes (TextHashSpec). Never all-pairs: candidates meet
+    * only inside a (block, blockKey) bucket.
     */
   def pairsFromHash(sims: DataFrame, maxHamming: Int, blocks: Int,
       bits: Int, comboWidth: Int = 1): DataFrame = {
-    require(comboWidth >= 1, s"comboWidth must be >= 1: $comboWidth")
-    require(blocks - maxHamming >= comboWidth,
-      s"pigeonhole: blocks ($blocks) - maxHamming ($maxHamming) must be " +
-        s">= comboWidth ($comboWidth) — a pair at the distance bound " +
-        "keeps only blocks - maxHamming intact blocks, and losslessness " +
-        "needs an all-intact combination among them")
-    val blocked = sims.select(col("id"), col("sim"),
-      posexplode(comboKeyCols(col("sim"), blocks, bits, comboWidth)))
-      .withColumnsRenamed(Map("pos" -> "block", "col" -> "blockKey"))
+    requirePigeonhole(maxHamming, blocks, comboWidth)
+    val blocked = blockRows(sims, Seq(col("id"), col("sim")), blocks, bits,
+      comboWidth)
     val l = blocked.select(col("block"), col("blockKey"),
       col("id").as("idA"), col("sim").as("simA"))
     val r = blocked.select(col("block"), col("blockKey"),
@@ -430,15 +396,38 @@ object Dedup {
     */
   def hashIndex(sims: DataFrame, blocks: Int, bits: Int,
       comboWidth: Int = 1): DataFrame =
-    sims.select(col("id").as("corpusId"), col("sim").as("corpusSim"),
-        posexplode(comboKeyCols(col("sim"), blocks, bits, comboWidth)))
+    blockRows(sims, Seq(col("id").as("corpusId"), col("sim").as("corpusSim")),
+      blocks, bits, comboWidth)
+
+  /** `keep` columns + `(block, blockKey)`, one row per [[comboKeyCols]]
+    * key of the input's `sim` — the ONE blocking step of the pairing, the
+    * index and every prober. */
+  private def blockRows(df: DataFrame, keep: Seq[Column], blocks: Int,
+      bits: Int, comboWidth: Int): DataFrame =
+    df.select(keep :+ posexplode(comboKeyCols(col("sim"), blocks, bits,
+        comboWidth)): _*)
       .withColumnsRenamed(Map("pos" -> "block", "col" -> "blockKey"))
+
+  /** Losslessness of the blocked pairing and probe: a pair at Hamming
+    * distance `maxHamming` keeps only `blocks - maxHamming` intact blocks,
+    * and candidacy needs an all-intact `comboWidth`-combination among
+    * them. */
+  private def requirePigeonhole(maxHamming: Int, blocks: Int,
+      comboWidth: Int): Unit = {
+    require(comboWidth >= 1, s"comboWidth must be >= 1: $comboWidth")
+    require(blocks - maxHamming >= comboWidth,
+      s"pigeonhole: blocks ($blocks) - maxHamming ($maxHamming) must be " +
+        s">= comboWidth ($comboWidth) — a pair at the distance bound " +
+        "keeps only blocks - maxHamming intact blocks, and losslessness " +
+        "needs an all-intact combination among them (a probe must also " +
+        "use its index's combination scheme)")
+  }
 
   /** Probe `(id, sim)` rows against a [[hashIndex]]: exact Hamming ≤
     * maxHamming matches, one row per (id, corpusId). Lossless by the
     * same pigeonhole argument as [[pairsFromHash]]; no broadcast forced
     * (the accumulated index side can dwarf the batch — the
-    * [[indexMatchCore]] convention).
+    * [[hashIndexMatchCore]] convention).
     */
   def hashIndexMatches(batch: DataFrame, index: DataFrame, maxHamming: Int,
       blocks: Int, bits: Int, comboWidth: Int = 1): DataFrame =
@@ -447,25 +436,31 @@ object Dedup {
       .select("id", "corpusId", "dist")
       .distinct()
 
-  /** Shared probe core against a [[hashIndex]] — one row per (id,
-    * corpusId, matching block), extra input columns (a stream's
-    * `ingestTs`) ride through; callers collapse multi-block collisions
-    * their own way (batch `.distinct()`, streaming
-    * `dropDuplicatesWithinWatermark`) — the [[indexMatchCore]]
-    * convention at generic width. No broadcast forced here.
+  /** Shared candidate-match core against a [[hashIndex]] /
+    * [[simhashIndex]] — ONE definition of the probe across widths and id
+    * conventions, so batch and stream semantics cannot drift. The input
+    * must carry `idName` and `sim`; any extra columns (e.g. a stream's
+    * `ingestTs`) ride through. Emits input columns + `corpusId` + exact
+    * `dist`, one row per (doc, corpusDoc, matching block) — callers
+    * collapse multi-block collisions their own way (batch `.distinct()`,
+    * streaming `dropDuplicatesWithinWatermark`).
+    *
+    * No broadcast hint here: batch callers pass the index plain and let
+    * Catalyst pick by stats (an accumulated-corpus index can be hundreds
+    * of millions of rows — a forced broadcast would OOM the driver at
+    * exactly the scale the increment targets); the streaming caller
+    * passes `broadcast(index)` itself, where the static side must be the
+    * build side. A row whose id EQUALS a `corpusId` never matches
+    * itself — the id is the document's identity across corpus and batch,
+    * the property that makes probing a frame against an index built from
+    * that same frame (a backfill) sane; re-crawls of already-released
+    * ids are the EXACT increment's job ([[dedupIncremental]]), run first.
     */
   private[graft] def hashIndexMatchCore(batch: DataFrame, index: DataFrame,
       maxHamming: Int, blocks: Int, bits: Int,
       idName: String = "id", comboWidth: Int = 1): DataFrame = {
-    require(comboWidth >= 1, s"comboWidth must be >= 1: $comboWidth")
-    require(blocks - maxHamming >= comboWidth,
-      s"pigeonhole: blocks ($blocks) - maxHamming ($maxHamming) must be " +
-        s">= comboWidth ($comboWidth) — the probe must use the index's " +
-        "combination scheme, and losslessness needs an all-intact " +
-        "combination at the distance bound")
-    batch.select(col("*"),
-        posexplode(comboKeyCols(col("sim"), blocks, bits, comboWidth)))
-      .withColumnsRenamed(Map("pos" -> "block", "col" -> "blockKey"))
+    requirePigeonhole(maxHamming, blocks, comboWidth)
+    blockRows(batch, Seq(col("*")), blocks, bits, comboWidth)
       .join(index, Seq("block", "blockKey"))
       .where(col(idName) =!= col("corpusId"))
       .withColumn("dist", hamming(col("sim"), col("corpusSim")))
@@ -477,7 +472,7 @@ object Dedup {
     * blockKey, corpusId, corpusSim)` — the join side for incremental
     * near-dup lookups, batch ([[simhashIndexMatches]]) and streaming
     * (`DocumentStream.nearDupsAgainstCorpus`) alike. ONE builder and ONE
-    * blocking scheme ([[blockKeyCols]]), so the persisted index and every
+    * blocking scheme ([[comboKeyCols]]), so the persisted index and every
     * prober agree byte-for-byte. Index size = `blocks` rows per corpus
     * document — signature-sized, not corpus-sized; the accumulated corpus
     * text is never rescanned by an increment.
@@ -486,32 +481,6 @@ object Dedup {
       blocks: Int = 4): DataFrame =
     hashIndex(guardedSims(corpus, idCol, textCol)
       .select(col("doc_id").as("id"), col("sim")), blocks, bits = 31)
-
-  /** Shared candidate-match core against a [[simhashIndex]]: the input
-    * must carry `doc_id` and `sim`; any extra columns (e.g. a stream's
-    * `ingestTs`) ride through. Emits input columns + `corpusId` + exact
-    * `dist`, one row per (doc, corpusDoc, matching block) — callers
-    * collapse multi-block collisions their own way (batch `.distinct()`,
-    * streaming `dropDuplicatesWithinWatermark`). ONE definition of the
-    * probe, so batch and stream semantics cannot drift.
-    *
-    * No broadcast hint here: batch callers pass the index plain and let
-    * Catalyst pick by stats (an accumulated-corpus index can be hundreds
-    * of millions of rows — a forced broadcast would OOM the driver at
-    * exactly the scale the increment targets); the streaming caller
-    * passes `broadcast(index)` itself, where the static side must be the
-    * build side. A row whose `doc_id` EQUALS a `corpusId` never matches
-    * itself — the id is the document's identity across corpus and batch,
-    * the property that makes probing a frame against an index built from
-    * that same frame (a backfill) sane; re-crawls of already-released
-    * ids are the EXACT increment's job ([[dedupIncremental]]), run first.
-    */
-  private[graft] def indexMatchCore(withSim: DataFrame, index: DataFrame,
-      maxHamming: Int, blocks: Int): DataFrame =
-    // ONE probe definition across widths and id conventions: the 31-bit
-    // text probe is the generic core at bits = 31, keyed by doc_id
-    hashIndexMatchCore(withSim, index, maxHamming, blocks, bits = 31,
-      idName = "doc_id")
 
   /** Null-guarded (id, sim) projection shared by the batch near-dup
     * probes: NULL ids raise (the guard-before-use convention — a NULL id
@@ -542,8 +511,8 @@ object Dedup {
     */
   def simhashIndexMatches(batch: DataFrame, index: DataFrame, idCol: String,
       textCol: String, maxHamming: Int = 3, blocks: Int = 4): DataFrame =
-    indexMatchCore(guardedSims(ensureParallelism(batch), idCol, textCol),
-        index, maxHamming, blocks)
+    hashIndexMatchCore(guardedSims(ensureParallelism(batch), idCol, textCol),
+        index, maxHamming, blocks, bits = 31, idName = "doc_id")
       .select(col("doc_id"), col("corpusId"), col("dist"))
       .distinct()
 
@@ -566,43 +535,40 @@ object Dedup {
     * never rescanned: it contributes only the signature-sized index.
     * Ids are document IDENTITY across corpus and batch: a batch row
     * sharing an id with an indexed row never matches itself (see
-    * [[indexMatchCore]]) — compose with [[dedupIncremental]] first when
+    * [[hashIndexMatchCore]]) — compose with [[dedupIncremental]] first when
     * re-crawls of already-released ids can appear in a batch.
     */
   def dedupIncrementalNear(batch: DataFrame, index: DataFrame, idCol: String,
-      textCol: String, maxHamming: Int = 3, blocks: Int = 4,
-      maxIters: Int = 30): DataFrame = {
+      textCol: String, maxHamming: Int = 3, blocks: Int = 4): DataFrame = {
     // checkpoint: sims feeds both the index probe and the within-batch
     // pairing — without it the batch is re-scanned and re-hashed per use
     val sims = guardedSims(ensureParallelism(batch), idCol, textCol)
       .localCheckpoint(true)
-    // the probe and the closure are independent consumers of the
-    // checkpointed sims: build them CONCURRENTLY ([[graft.Concurrent]]);
-    // matched is checkpointed too — id-sized, consumed twice by
-    // incrementalCut (touched + losers), so the probe runs once
-    val Seq(matched, comps) = graft.Concurrent.all(batch.sparkSession)(Seq(
-      () => indexMatchCore(sims, index, maxHamming, blocks)
-        .select(col("doc_id")).distinct().localCheckpoint(true),
-      // comps feeds touched + two loser branches: checkpoint (node-sized)
-      // so the CC assembly doesn't replay per consumer
-      () => connectedComponentsStar(
-        pairsFromSimhash(sims.withColumnRenamed("doc_id", "id"), maxHamming, blocks),
-        "idA", "idB", maxIters).localCheckpoint(true)))
-    incrementalCut(batch, idCol, matched, comps)
+    incrementalCut(batch, idCol,
+      hashIndexMatchCore(sims, index, maxHamming, blocks, bits = 31,
+        idName = "doc_id").select(col("doc_id")).distinct(),
+      pairsFromHash(sims.withColumnRenamed("doc_id", "id"), maxHamming,
+        blocks, bits = 31))
   }
 
-  /** The shared loser assembly of the incremental near-dedup family —
-    * `matched` = batch ids whose near-original is already in the corpus
-    * (`doc_id` column), `comps` = within-batch components (`node`/`comp`,
-    * pre-checkpointed by the caller). Drops (1) index-matched docs,
-    * (2) whole corpus-touching components, (3) non-representatives of
-    * untouched components — ONE definition, so the three criteria
-    * (Hamming, est-Jaccard, cosine) cannot drift in their composition
-    * semantics. The final cut is one id-keyed LEFT ANTI join against a
-    * loser list that is dup-count-sized, ≪ batch.
+  /** The ONE driver of the incremental near-dedup family: the index probe
+    * (`matched` = batch ids whose near-original is already in the corpus,
+    * one `doc_id` row each) and the within-batch closure (`pairs` `(idA,
+    * idB)` → [[connectedComponentsStar]]) are independent consumers of the
+    * caller's checkpointed batch signatures, so they run CONCURRENTLY
+    * ([[graft.Concurrent]]); both results are checkpointed — id-sized,
+    * each consumed more than once below, so neither replays. Then drops
+    * (1) index-matched docs, (2) whole corpus-touching components,
+    * (3) non-representatives of untouched components — ONE definition,
+    * so the criteria (Hamming, est-Jaccard, cosine, CDC chunks) cannot
+    * drift in their composition semantics. The final cut is one id-keyed
+    * LEFT ANTI join against a loser list that is dup-count-sized, ≪ batch.
     */
   private def incrementalCut(batch: DataFrame, idCol: String,
-      matched: DataFrame, comps: DataFrame): DataFrame = {
+      probe: DataFrame, pairs: DataFrame): DataFrame = {
+    val Seq(matched, comps) = graft.Concurrent.all(batch.sparkSession)(Seq(
+      () => probe.localCheckpoint(true),
+      () => connectedComponentsStar(pairs, "idA", "idB").localCheckpoint(true)))
     val touched = comps
       .join(matched.withColumnRenamed("doc_id", "node"), Seq("node"))
       .select(col("comp")).distinct()
@@ -636,21 +602,16 @@ object Dedup {
     */
   def dedupIncrementalMinhash(batch: DataFrame, index: DataFrame,
       idCol: String, textCol: String, numHashes: Int = 32, bands: Int = 8,
-      threshold: Double = 0.3, maxIters: Int = 30): DataFrame = {
+      threshold: Double = 0.3): DataFrame = {
     // checkpoint: the banded signatures feed both the index probe and the
     // within-batch pairing — without it the batch is re-shingled per use
     val banded = bandedMinhash(batch, idCol, textCol, numHashes, bands)
       .localCheckpoint(true)
-    // concurrent probe + closure over the shared banded checkpoint —
-    // see [[graft.Concurrent]]; matched is id-sized and consumed twice
-    val Seq(matched, comps) = graft.Concurrent.all(batch.sparkSession)(Seq(
-      () => minhashMatchCore(banded, index, numHashes)
+    incrementalCut(batch, idCol,
+      minhashMatchCore(banded, index, numHashes)
         .where(col("estJaccard") >= threshold)
-        .select(col("doc_id")).distinct().localCheckpoint(true),
-      () => connectedComponentsStar(
-        minhashPairsFromBanded(banded, numHashes, threshold),
-        "idA", "idB", maxIters).localCheckpoint(true)))
-    incrementalCut(batch, idCol, matched, comps)
+        .select(col("doc_id")).distinct(),
+      minhashPairsFromBanded(banded, numHashes, threshold))
   }
 
   /** Exact n-gram Jaccard near-dup pairs via an inverted shingle index.
@@ -758,18 +719,11 @@ object Dedup {
       threshold: Double = 0.95,
       planesPerBand: Int = 4,
       bands: Int = 8,
-  ): DataFrame =
-    cosinePairsFromVecs(guardedVecs(ensureParallelism(emb), idCol, vecCol),
-      threshold, planesPerBand, bands)
-
-  /** Within-batch pairing over a prepped (doc_id, v, nrm) frame — split out
-    * so [[dedupIncrementalCosine]] can share one checkpointed projection
-    * between the index probe and the pairing.
-    */
-  private[graft] def cosinePairsFromVecs(withVec: DataFrame, threshold: Double,
-      planesPerBand: Int, bands: Int): DataFrame =
+  ): DataFrame = {
+    val withVec = guardedVecs(ensureParallelism(emb), idCol, vecCol)
     cosinePairsFromBanded(cosineBandRows(withVec, planesPerBand, bands),
       withVec, threshold)
+  }
 
   /** Within-batch pairing over an ALREADY-BANDED `(doc_id, band, bucket)`
     * frame — the shape [[dedupIncrementalCosine]] shares between the
@@ -848,26 +802,38 @@ object Dedup {
   /** The band parameters a stamped index was built with —
     * `(planesPerBand, bands)` read from the schema metadata
     * ([[cosineIndex]]'s stamp): a SERVE-side sizing source that costs a
-    * schema read, not a count job over the corpus-sized store. Raises on
-    * an unstamped index (unknown provenance — the [[requireBandCompat]]
-    * argument); a caller that positively knows the parameters asserts
-    * them with [[stampCosineIndex]] first.
+    * schema read, not a count job over the corpus-sized store, and the
+    * ONE stamp reader the probers' [[requireBandCompat]] guard compares
+    * against. Raises on an unstamped index and on one banded by another
+    * formula generation (see [[requireBandCompat]]).
     */
   def stampedBandParams(index: DataFrame): (Int, Int) = {
     val f = index.schema.fields.find(_.name == "bucket").getOrElse(
       throw new IllegalArgumentException(
         "stampedBandParams: no bucket column — not a cosine band index"))
+    // STRICT on missing provenance: an unstamped index is exactly the
+    // population the stamp exists to catch — every index the pre-stamp
+    // (affine-generator v1) cosineIndex ever persisted is unstamped, and
+    // probing one under the current formula matches buckets only by
+    // 2^-planes chance (silent recall collapse, not an error). A pass-
+    // through here would defend only against FUTURE drift while waving
+    // the known-bad past generation straight through.
     require(f.metadata.contains("graft.bandFormat") &&
         f.metadata.contains("graft.planesPerBand") &&
         f.metadata.contains("graft.bands"),
-      "stampedBandParams: index carries no band stamp — its banding " +
-        "generation/width is unknown; re-band it (cosineIndex over its " +
-        "vector store) or assert known provenance with stampCosineIndex")
+      "cosine index carries no band-format stamp: its banding " +
+        "generation is unknown (every pre-v2 persisted index is " +
+        "unstamped, and the v1 formula's buckets match v2's only by " +
+        "chance — silent recall collapse). Re-band it (cosineIndex " +
+        "over its vector store), or — if its provenance is KNOWN to " +
+        "be the current formula and these parameters — assert that " +
+        "explicitly with stampCosineIndex")
     require(f.metadata.getLong("graft.bandFormat") ==
         Similarity.BandFormatVersion,
-      s"stampedBandParams: index was banded by formula generation " +
-        s"${f.metadata.getLong("graft.bandFormat")}, this build probes " +
-        s"with ${Similarity.BandFormatVersion} — re-band the index")
+      s"cosine index band-formula version mismatch: index banded by " +
+        s"generation ${f.metadata.getLong("graft.bandFormat")}, this build " +
+        s"probes with ${Similarity.BandFormatVersion} — re-band the index " +
+        "(cosineIndex over its vector store)")
     (f.metadata.getLong("graft.planesPerBand").toInt,
       f.metadata.getLong("graft.bands").toInt)
   }
@@ -881,48 +847,25 @@ object Dedup {
       .filter(_.metadata.contains("graft.corpusCount"))
       .map(_.metadata.getLong("graft.corpusCount"))
 
-  /** Guard-before-probe for a [[cosineIndex]]: if the index schema carries
-    * the build stamp, the probe's formula generation and planes/bands MUST
-    * match it — a cross-generation or cross-width probe matches buckets
-    * only by 2^-planes chance and silently re-admits near-duplicates. An
-    * unstamped index (built externally, or by cosineIndex predating the
-    * stamp) passes; its compatibility is the caller's contract, and
-    * pre-v2 indexes must be re-banded (one [[cosineIndex]] pass over the
-    * stored vectors) after any banding-formula change.
+  /** Guard-before-probe for a [[cosineIndex]]: the index must carry the
+    * build stamp ([[stampedBandParams]]), and the probe's formula
+    * generation and planes/bands MUST match it — a cross-generation or
+    * cross-width probe matches buckets only by 2^-planes chance and
+    * silently re-admits near-duplicates. An unstamped index (built
+    * externally, or by cosineIndex predating the stamp) raises: re-band
+    * it (one [[cosineIndex]] pass over the stored vectors), or assert its
+    * provenance with [[stampCosineIndex]].
     */
   private def requireBandCompat(index: DataFrame, planesPerBand: Int,
-      bands: Int): Unit =
-    index.schema.fields.find(_.name == "bucket").foreach { f =>
-      def check(key: String, expect: Long, what: String): Unit =
-        if (f.metadata.contains(key) && f.metadata.getLong(key) != expect)
-          throw new IllegalArgumentException(
-            s"cosine index $what mismatch: index built with " +
-              s"${f.metadata.getLong(key)}, probe uses $expect — probing " +
-              "across band generations/widths matches buckets only by " +
-              "chance (silent recall collapse). Re-band the index " +
-              "(cosineIndex over its vector store) or probe with the " +
-              "build parameters")
-      // STRICT on missing provenance: an unstamped index is exactly the
-      // population the stamp exists to catch — every index the pre-stamp
-      // (affine-generator v1) cosineIndex ever persisted is unstamped, and
-      // probing one under the current formula matches buckets only by
-      // 2^-planes chance (silent recall collapse, not an error). A pass-
-      // through here would defend only against FUTURE drift while waving
-      // the known-bad past generation straight through.
-      if (!f.metadata.contains("graft.bandFormat"))
-        throw new IllegalArgumentException(
-          "cosine index carries no band-format stamp: its banding " +
-            "generation is unknown (every pre-v2 persisted index is " +
-            "unstamped, and the v1 formula's buckets match v2's only by " +
-            "chance — silent recall collapse). Re-band it (cosineIndex " +
-            "over its vector store), or — if its provenance is KNOWN to " +
-            "be the current formula and these parameters — assert that " +
-            "explicitly with stampCosineIndex")
-      check("graft.bandFormat", Similarity.BandFormatVersion,
-        "band-formula version")
-      check("graft.planesPerBand", planesPerBand.toLong, "planesPerBand")
-      check("graft.bands", bands.toLong, "bands")
-    }
+      bands: Int): Unit = {
+    val (p, b) = stampedBandParams(index)
+    require(p == planesPerBand && b == bands,
+      s"cosine index planesPerBand/bands mismatch: index built with " +
+        s"($p, $b), probe uses ($planesPerBand, $bands) — probing across " +
+        "band widths matches buckets only by chance (silent recall " +
+        "collapse). Re-band the index (cosineIndex over its vector store) " +
+        "or probe with the build parameters")
+  }
 
   /** Explicit provenance assertion for an UNSTAMPED index (externally
     * built, or persisted by cosineIndex before stamping existed): attaches
@@ -964,13 +907,13 @@ object Dedup {
   /** Shared candidate core against a [[cosineIndex]]: band rows of the
     * input joined to the index on (band, bucket), self-identity excluded —
     * one row per (doc, corpusDoc, matching band), extra input columns ride
-    * through, NO vectors shipped ([[indexMatchCore]]'s contract, cosine
+    * through, NO vectors shipped ([[hashIndexMatchCore]]'s contract, cosine
     * flavored). Callers collapse multi-band collisions and exact-verify
     * their own way: the batch probe dedups pairs BEFORE the vector joins;
     * the streaming twin verifies against a broadcast [[cosineVecStore]]
     * and collapses within its watermark. No broadcast hint here — an
     * accumulated-corpus index can be billions of rows; Catalyst picks by
-    * stats (the [[indexMatchCore]] rule).
+    * stats (the [[hashIndexMatchCore]] rule).
     */
   private[graft] def cosineCandidateCore(withVec: DataFrame, index: DataFrame,
       planesPerBand: Int, bands: Int): DataFrame = {
@@ -981,23 +924,10 @@ object Dedup {
       .drop("band", "bucket")
   }
 
-  /** Batch matches over a prepped (doc_id, v, nrm) frame — candidate pairs
-    * deduped id-only, then one vector join per side and the shared exact
-    * verify. Split out so [[dedupIncrementalCosine]] reuses the
-    * checkpointed projection.
-    */
-  private def cosineMatchesFromVecs(withVec: DataFrame, index: DataFrame,
-      vecStore: DataFrame, threshold: Double, planesPerBand: Int,
-      bands: Int): DataFrame = {
-    requireBandCompat(index, planesPerBand, bands)
-    cosineMatchesFromBanded(
-      cosineBandRows(withVec.select("doc_id", "v", "nrm"), planesPerBand, bands),
-      withVec, index, vecStore, threshold)
-  }
-
   /** Index probe over an ALREADY-BANDED `(doc_id, band, bucket)` frame —
-    * [[cosineCandidateCore]]'s join/verify with the banding factored out
-    * so [[dedupIncrementalCosine]] can share one banded frame with the
+    * candidate pairs deduped id-only, then one vector join per side and
+    * the shared exact verify. The banding is factored out so
+    * [[dedupIncrementalCosine]] can share one banded frame with the
     * within-batch pairing.
     */
   private def cosineMatchesFromBanded(banded: DataFrame, withVec: DataFrame,
@@ -1026,9 +956,12 @@ object Dedup {
   def cosineIndexMatches(batch: DataFrame, index: DataFrame,
       vecStore: DataFrame, idCol: String, vecCol: String,
       threshold: Double = 0.95, planesPerBand: Int = 4,
-      bands: Int = 8): DataFrame =
-    cosineMatchesFromVecs(guardedVecs(ensureParallelism(batch), idCol, vecCol),
-      index, vecStore, threshold, planesPerBand, bands)
+      bands: Int = 8): DataFrame = {
+    requireBandCompat(index, planesPerBand, bands)
+    val withVec = guardedVecs(ensureParallelism(batch), idCol, vecCol)
+    cosineMatchesFromBanded(cosineBandRows(withVec, planesPerBand, bands),
+      withVec, index, vecStore, threshold)
+  }
 
   /** Incremental EMBEDDING-SPACE near-dedup — the cosine criterion of the
     * daily-increment family ([[dedupIncremental]] = exact,
@@ -1054,8 +987,8 @@ object Dedup {
     */
   def dedupIncrementalCosine(batch: DataFrame, index: DataFrame,
       vecStore: DataFrame, idCol: String, vecCol: String,
-      threshold: Double = 0.95, planesPerBand: Int = 4, bands: Int = 8,
-      maxIters: Int = 30): DataFrame = {
+      threshold: Double = 0.95, planesPerBand: Int = 4,
+      bands: Int = 8): DataFrame = {
     requireBandCompat(index, planesPerBand, bands)
     // checkpoint: the prepped vectors feed both the index probe and the
     // within-batch pairing — without it the batch is re-projected per use
@@ -1067,16 +1000,10 @@ object Dedup {
     // run — the r14 plan audit measured it paid twice, once per consumer
     val banded = cosineBandRows(withVec.select("doc_id", "v", "nrm"),
       planesPerBand, bands).localCheckpoint(true)
-    // concurrent probe + closure over the shared banded checkpoint —
-    // see [[graft.Concurrent]]; matched is id-sized and consumed twice by
-    // incrementalCut, comps feeds touched + two loser branches
-    val Seq(matched, comps) = graft.Concurrent.all(batch.sparkSession)(Seq(
-      () => cosineMatchesFromBanded(banded, withVec, index, vecStore, threshold)
-        .select(col("doc_id")).distinct().localCheckpoint(true),
-      () => connectedComponentsStar(
-        cosinePairsFromBanded(banded, withVec, threshold),
-        "idA", "idB", maxIters).localCheckpoint(true)))
-    incrementalCut(batch, idCol, matched, comps)
+    incrementalCut(batch, idCol,
+      cosineMatchesFromBanded(banded, withVec, index, vecStore, threshold)
+        .select(col("doc_id")).distinct(),
+      cosinePairsFromBanded(banded, withVec, threshold))
   }
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023,
@@ -1417,19 +1344,34 @@ object Dedup {
       k: Int = 30, w: Int = 10, maxDf: Int = 50,
       minShared: Int = 2): DataFrame = {
     require(k > 0 && w > 0, s"k/w must be positive: $k/$w")
-    require(minShared >= 1, s"minShared must be >= 1: $minShared")
     // materialized like repeatedPassagePairs' stream, same 3× reason
-    val exploded = ensureParallelism(docs)
+    sharedKeyPairs(ensureParallelism(docs)
       .select(col(idCol).as("id"),
         explode(TextFunctions.winnow_hashes(col(textCol), k, w)).as("f"))
       .select(col("id"), col("f").getField("h").as("h"))
       .distinct()
-      .materialized
-    val rare = exploded.groupBy("h").agg(count(lit(1)).as("__df"))
-      .where(col("__df").between(2, maxDf)).select("h")
-    val pruned = exploded.join(rare, Seq("h"))
-    pruned.select(col("h"), col("id").as("idA"))
-      .join(pruned.select(col("h"), col("id").as("idB")), Seq("h"))
+      .materialized, Seq("h"), maxDf, minShared)
+  }
+
+  /** The ONE shared-key pair kernel of the fingerprint criteria (winnow
+    * fingerprints, CDC chunk identities): over DISTINCT `(id, key…)`
+    * rows, keys whose document frequency lies in [2, `maxDf`] are kept
+    * (a hub key shared by thousands of documents would explode
+    * quadratically, and a df-1 key can't pair anything), self-joined on
+    * the key into `idA < idB` pairs, and a pair survives when it shares
+    * ≥ `minShared` keys: `(idA, idB, n_shared)`. The self-join runs only
+    * over pruned (rare) key rows and shuffles ids and keys only.
+    */
+  private def sharedKeyPairs(rows: DataFrame, keys: Seq[String], maxDf: Int,
+      minShared: Int): DataFrame = {
+    require(minShared >= 1, s"minShared must be >= 1: $minShared")
+    require(maxDf >= 2, s"maxDf must be >= 2: $maxDf")
+    val keyCols = keys.map(col)
+    val rare = rows.groupBy(keyCols: _*).agg(count(lit(1)).as("__df"))
+      .where(col("__df").between(2, maxDf)).select(keyCols: _*)
+    val pruned = rows.join(rare, keys)
+    pruned.select(keyCols :+ col("id").as("idA"): _*)
+      .join(pruned.select(keyCols :+ col("id").as("idB"): _*), keys)
       .where(col("idA") < col("idB"))
       .groupBy("idA", "idB")
       .agg(count(lit(1)).as("n_shared"))
@@ -1494,9 +1436,9 @@ object Dedup {
     * distributed loop's per-round job train (2 stars × shuffles +
     * checkpoint + potential + fixpoint confirm ≈ 8-12 AQE jobs/round,
     * measured 50-90 jobs per closure at sf0.1, r20 PlanProfile) collapses
-    * to one bounded collect. Above the cap nothing changes: the star /
-    * label-prop loops run exactly as before, so the 100 TB shape (edge
-    * lists past driver memory) is untouched. Runtime-settable
+    * to one bounded collect. Above the cap nothing changes: the star
+    * loop runs exactly as before, so the 100 TB shape (edge lists past
+    * driver memory) is untouched. Runtime-settable
     * (`spark.graft.cc.localEdgeCap`; env `GRAFT_CC_LOCAL_EDGES` as the
     * deploy-level default) so tests pin BOTH paths and a cluster with a
     * small driver can lower it. Default 2M edges ≈ 32 MB of collected
@@ -1509,16 +1451,23 @@ object Dedup {
       .map(_.toInt).getOrElse(2000000)
 
   /** Bounded collect of an edge frame: `Some(edges)` when the frame has
-    * at most `cap` rows, `None` past it. Gates on a COUNT over the
-    * (already eagerly checkpointed) edge frame first — the former
-    * `limit(cap+1).collect()` probe shipped cap+1 rows (~32 MB of ids at
-    * the default cap) to the driver just to DISCARD them whenever the
-    * closure takes the distributed path (VERDICT r20 item #3); the count
-    * is a map-side aggregate over cached blocks, and the collect now
+    * at most `cap` rows, `None` past it. Gates on a COUNT first — the
+    * former `limit(cap+1).collect()` probe shipped cap+1 rows (~32 MB of
+    * ids at the default cap) to the driver just to DISCARD them whenever
+    * the closure takes the distributed path (VERDICT r20 item #3); the
+    * count is a map-side aggregate over cached blocks, and the collect
     * runs only when the frame is the broadcast-sized data the fast path
-    * needs anyway.
+    * needs anyway. Count-then-collect is sound only over an eagerly
+    * CHECKPOINTED frame (a `LogicalRDD`): a lazy plan would run twice,
+    * and a nondeterministic one could collect more rows than it counted,
+    * so anything else is refused.
     */
-  private def collectEdgesUnder(edges: DataFrame, cap: Int): Option[Array[(Long, Long)]] = {
+  private[graft] def collectEdgesUnder(edges: DataFrame,
+      cap: Int): Option[Array[(Long, Long)]] = {
+    require(edges.queryExecution.analyzed
+        .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD],
+      "collectEdgesUnder: the edge frame must be an eager checkpoint " +
+        "(count and collect must read the same materialized rows)")
     if (cap <= 0) return None
     if (edges.count() > cap) return None
     Some(edges.collect().map(r => (r.getLong(0), r.getLong(1))))
@@ -1526,9 +1475,10 @@ object Dedup {
 
   /** Driver union-find with path compression + union-by-min over a
     * collected edge array: returns one `(node, minReachableId)` per
-    * distinct endpoint — the exact contract of both distributed closures
-    * (StarCCProps pins all three against each other). Self-loops are
-    * harmless (they only register the node).
+    * distinct endpoint — the exact contract of the distributed star
+    * closure (StarCCProps pins the two against a reference union-find on
+    * both sides of the size gate). Self-loops are harmless (they only
+    * register the node).
     */
   private[ops] def unionFindMinLabels(edges: Array[(Long, Long)]): Array[(Long, Long)] = {
     val idToIx = new java.util.HashMap[Long, Integer](edges.length * 2)
@@ -1575,74 +1525,21 @@ object Dedup {
       schema)
   }
 
-  /** Connected components over a near-dup PAIR list — the step that turns
-    * pairwise collisions into dedup GROUPS: near-duplication is transitive
-    * in practice (A~B, B~C ⇒ same content family), so a pipeline keeps ONE
-    * representative per component, not one per pair. Returns
-    * `(node, comp)` for every id in the pair list, `comp` = the smallest
-    * id reachable from it; representatives are `node == comp` rows, and
-    * ids with no pair simply don't appear (they are their own singleton).
+  /** Connected components over a near-dup PAIR list — the ONE closure
+    * that turns pairwise collisions into dedup GROUPS: near-duplication
+    * is transitive in practice (A~B, B~C ⇒ same content family), so a
+    * pipeline keeps ONE representative per component, not one per pair.
+    * Returns `(node, comp)` for every id in the pair list, `comp` = the
+    * smallest id reachable from it; representatives are `node == comp`
+    * rows, ids appearing only in self-pairs label themselves, and ids
+    * with no pair simply don't appear (they are their own singleton).
     *
-    * Algorithm: iterative min-label propagation. Each round every node
-    * takes the min label over its closed neighborhood — one edge-keyed
-    * shuffle (labels joined to the static edge list + a min-aggregate),
-    * no driver-side graph. The min label spreads one hop per round, so
-    * rounds = eccentricity of each component's min node ≤ graph diameter;
-    * near-dup components are cliques/short chains (diameter a few hops),
-    * so convergence is fast and checked per round (a round that lowers no
-    * label ends the loop). Lineage is truncated each round
-    * (localCheckpoint) — without it the plan nests every prior iteration.
-    * For adversarially long-diameter graphs the same join/agg primitive
-    * extends to large-star/small-star (O(log n) rounds); dedup clustering
-    * doesn't need it, and `maxIters` makes non-convergence an ERROR
-    * rather than a silently half-merged clustering.
-    */
-  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-      maxIters: Int = 20): DataFrame = {
-    require(maxIters > 0, s"maxIters must be positive: $maxIters")
-    val fwd = pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
-    val edges = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint(true) // static — reused every round
-    // size-gated fast path (see ccLocalEdgeCap): the bidirectional edge
-    // set doubles |E|, and every node — self-loop-only ones included —
-    // appears as a src, so the driver labels ARE the full result.
-    // `maxIters` bounds the distributed loop only; below the cap the
-    // closure is exact in one pass.
-    val fast = collectEdgesUnder(edges, ccLocalEdgeCap(pairs))
-    if (fast.isDefined)
-      return labelsFrame(pairs.sparkSession, unionFindMinLabels(fast.get))
-    var labels = edges.select(col("src").as("node")).distinct()
-      .withColumn("comp", col("node")).localCheckpoint(true)
-    var changed = 1L
-    var it = 0
-    while (changed > 0) {
-      it += 1
-      if (it > maxIters) throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIters rounds — " +
-          "component diameter exceeds the bound; raise maxIters or switch " +
-          "to a large-star/small-star variant for this graph")
-      val nbrMin = edges
-        .join(labels.select(col("node").as("dst"), col("comp").as("ncomp")), "dst")
-        .groupBy("src").agg(min("ncomp").as("nmin"))
-        .withColumnRenamed("src", "node")
-      val next = labels.join(nbrMin, Seq("node"), "left")
-        .select(col("node"),
-          least(col("comp"), coalesce(col("nmin"), col("comp"))).as("comp"),
-          (coalesce(col("nmin"), col("comp")) < col("comp")).as("__chg"))
-        .localCheckpoint(true)
-      changed = next.where(col("__chg")).count()
-      labels = next.drop("__chg")
-    }
-    labels
-  }
-
-  /** Alternating large-star/small-star connected components — the
-    * O(log n)-round algorithm (Kiveris et al., "Connected Components in
-    * MapReduce and Beyond", public) for graphs where
-    * [[connectedComponents]]' O(diameter) label propagation would crawl:
+    * Below [[ccLocalEdgeCap]] the closure is one driver union-find over
+    * the collected edges. Past it runs the alternating
+    * large-star/small-star algorithm (Kiveris et al., "Connected
+    * Components in MapReduce and Beyond", public): O(log n) rounds, so
     * long chains of pairwise near-dups (serial plagiarism, shingled crawl
-    * snapshots). Same contract: `(node, comp)` with `comp` = min reachable
-    * id; ids appearing only in self-pairs label themselves.
+    * snapshots) close as fast as cliques:
     *
     *  - large-star: every node points its LARGER neighbors at the min of
     *    its closed neighborhood — doubles star depth collapse per round;
@@ -1655,8 +1552,8 @@ object Dedup {
     *    one exact `exceptAll` check per candidate confirms them.
     *
     * At the fixpoint the edge list IS the component star (every non-root
-    * points directly at its root). Convergence past `maxIters` throws,
-    * like the label-propagation form.
+    * points directly at its root). Non-convergence within `maxIters`
+    * rounds is an ERROR, never a silently half-merged clustering.
     */
   def connectedComponentsStar(pairs: DataFrame, aCol: String, bCol: String,
       maxIters: Int = 30): DataFrame = {
@@ -1751,25 +1648,31 @@ object Dedup {
   /** End-to-end near-duplicate REMOVAL — the composition a pipeline
     * actually runs: LSH near-dup pairs → connected components → keep each
     * component's min-id representative (documents in no component keep
-    * themselves). Removing only pairwise losers would over-delete on
-    * chains (a–b, b–c: who survives?); closing components first makes
-    * exactly one survivor per transitive dup group, deterministically.
-    *
-    * Scale shape: pairs and clustering as documented on
-    * [[minhashLshPairs]] / [[connectedComponentsStar]]; the final cut is
-    * one id-keyed LEFT ANTI join of the corpus against the
-    * non-representative id list (dup-count-sized, ≪ corpus; left to the
-    * planner — broadcastable when small, a plain id shuffle when a crawl
-    * is 50% duplicates).
+    * themselves) — [[removeByClosure]] over [[minhashLshPairs]].
     */
   def removeNearDuplicates(docs: DataFrame, idCol: String, textCol: String,
-      numHashes: Int = 32, bands: Int = 8, threshold: Double = 0.3,
-      maxIters: Int = 30): DataFrame = {
-    val pairs = minhashLshPairs(docs, idCol, textCol, numHashes, bands, threshold)
-    val comps = connectedComponentsStar(pairs, "idA", "idB", maxIters)
+      numHashes: Int = 32, bands: Int = 8, threshold: Double = 0.3): DataFrame =
+    removeByClosure(docs, idCol,
+      minhashLshPairs(docs, idCol, textCol, numHashes, bands, threshold))
+
+  /** The ONE near-duplicate removal of every criterion: `pairs` (`idA`,
+    * `idB`) → [[connectedComponentsStar]] → one LEFT ANTI of `docs`
+    * against the non-representatives (node ≠ its component's min id).
+    * Removing only pairwise losers would over-delete on chains (a–b, b–c:
+    * who survives?); closing components first makes exactly one survivor
+    * per transitive dup group, deterministically.
+    *
+    * Scale shape: the cut is one id-keyed LEFT ANTI join of the corpus
+    * against the non-representative id list (dup-count-sized, ≪ corpus;
+    * left to the planner — broadcastable when small, a plain id shuffle
+    * when a crawl is 50% duplicates).
+    */
+  private[graft] def removeByClosure(docs: DataFrame, idCol: String,
+      pairs: DataFrame): DataFrame = {
     // reserved __-prefixed name so the anti-join can't capture a caller
     // column that happens to be called `node`
-    val losers = comps.where(col("node") =!= col("comp"))
+    val losers = connectedComponentsStar(pairs, "idA", "idB")
+      .where(col("node") =!= col("comp"))
       .select(col("node").as("__dup_id"))
     docs.join(losers, docs(idCol) === losers("__dup_id"), "left_anti")
   }
@@ -1788,13 +1691,13 @@ object Dedup {
     */
   def removeNearDuplicatesKeepBest(docs: DataFrame, idCol: String,
       textCol: String, scoreCol: String, numHashes: Int = 32,
-      bands: Int = 8, threshold: Double = 0.3, maxIters: Int = 30): DataFrame = {
+      bands: Int = 8, threshold: Double = 0.3): DataFrame = {
     val scoreField = docs.schema(scoreCol)
     require(scoreField.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType],
       s"scoreCol '$scoreCol' must be numeric (got ${scoreField.dataType.simpleString}) — " +
         "the representative choice orders by score DESC")
     val pairs = minhashLshPairs(docs, idCol, textCol, numHashes, bands, threshold)
-    val comps = connectedComponentsStar(pairs, "idA", "idB", maxIters)
+    val comps = connectedComponentsStar(pairs, "idA", "idB")
     // a NULL score must fail loudly: under min_by's struct ordering the
     // negated null would sort FIRST and the unscored doc would silently
     // win as the kept representative. Guarded AFTER the comps join, so
@@ -1901,50 +1804,31 @@ object Dedup {
 
   /** CDC near-dup pairs: documents sharing ≥ `minShared` distinct chunk
     * identities — the chunk-granularity member of the near-dup criterion
-    * family (pairs/removal/index, like minhash/simhash/winnow/passages).
-    * Chunk identities are df-pruned to `[2, maxDf]` before the pair
-    * expansion, exactly the winnow recipe: a boilerplate chunk shared by
-    * thousands of documents would otherwise explode quadratically, and a
-    * df-1 chunk can't pair anything.
+    * family (pairs/removal/index, like minhash/simhash/winnow/passages),
+    * through the winnow recipe's [[sharedKeyPairs]] kernel keyed on the
+    * chunk identity `(h, len)`.
     *
     * Scale shape: chunking row-local; one distinct; one df aggregate;
     * the self-join runs only over pruned (rare) chunk rows.
     */
   def cdcPairs(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 16, maskBits: Int = 6, maxDf: Int = 50,
-      minShared: Int = 2): DataFrame = {
-    require(minShared >= 1, s"minShared must be >= 1: $minShared")
-    require(maxDf >= 2, s"maxDf must be >= 2: $maxDf")
+      minShared: Int = 2): DataFrame =
     // materialized: the df prune and both pair-join sides each embedded
     // the rolling-hash chunking kernel (the repeatedPassagePairs rule)
-    val exploded = cdcChunks(docs, idCol, textCol, k, maskBits)
+    sharedKeyPairs(cdcChunks(docs, idCol, textCol, k, maskBits)
       .select(col("id"), col("h"), col("len")).distinct()
-      .materialized
-    val rare = exploded.groupBy("h", "len").agg(count(lit(1)).as("__df"))
-      .where(col("__df").between(2, maxDf)).select("h", "len")
-    val pruned = exploded.join(rare, Seq("h", "len"))
-    pruned.select(col("h"), col("len"), col("id").as("idA"))
-      .join(pruned.select(col("h"), col("len"), col("id").as("idB")),
-        Seq("h", "len"))
-      .where(col("idA") < col("idB"))
-      .groupBy("idA", "idB")
-      .agg(count(lit(1)).as("n_shared"))
-      .where(col("n_shared") >= minShared)
-  }
+      .materialized, Seq("h", "len"), maxDf, minShared)
 
-  /** CDC-criterion near-dup removal: [[cdcPairs]] → star-CC → one LEFT
-    * ANTI keeping each component's smallest id — the same closure every
-    * other criterion's removal uses.
+  /** CDC-criterion near-dup removal: [[cdcPairs]] → [[removeByClosure]],
+    * keeping each component's smallest id — the same closure every other
+    * criterion's removal uses.
     */
   def cdcRemoveNearDuplicates(docs: DataFrame, idCol: String,
       textCol: String, k: Int = 16, maskBits: Int = 6, maxDf: Int = 50,
-      minShared: Int = 2, maxIters: Int = 30): DataFrame = {
-    val pairs = cdcPairs(docs, idCol, textCol, k, maskBits, maxDf, minShared)
-    val comps = connectedComponentsStar(pairs, "idA", "idB", maxIters)
-    val losers = comps.where(col("node") =!= col("comp"))
-      .select(col("node").as("__dup_id"))
-    docs.join(losers, docs(idCol) === losers("__dup_id"), "left_anti")
-  }
+      minShared: Int = 2): DataFrame =
+    removeByClosure(docs, idCol,
+      cdcPairs(docs, idCol, textCol, k, maskBits, maxDf, minShared))
 
   /** Incremental CDC near-dedup — the chunk criterion joins the composed
     * daily-increment family ([[dedupIncremental]] exact,
@@ -1963,34 +1847,17 @@ object Dedup {
     */
   def dedupIncrementalCdc(batch: DataFrame, index: DataFrame, idCol: String,
       textCol: String, k: Int = 16, maskBits: Int = 6, maxDf: Int = 50,
-      minShared: Int = 2, maxIters: Int = 30): DataFrame = {
-    require(minShared >= 1, s"minShared must be >= 1: $minShared")
+      minShared: Int = 2): DataFrame = {
     val chunks = cdcChunks(ensureParallelism(batch), idCol, textCol, k, maskBits)
       .select(col("id"), col("h"), col("len")).distinct()
       .localCheckpoint(true)
-    def pairs = {
-      val rare = chunks.groupBy("h", "len").agg(count(lit(1)).as("__df"))
-        .where(col("__df").between(2, maxDf)).select("h", "len")
-      val pruned = chunks.join(rare, Seq("h", "len"))
-      pruned.select(col("h"), col("len"), col("id").as("idA"))
-        .join(pruned.select(col("h"), col("len"), col("id").as("idB")),
-          Seq("h", "len"))
-        .where(col("idA") < col("idB"))
-        .groupBy("idA", "idB")
-        .agg(count(lit(1)).as("n_shared"))
-        .where(col("n_shared") >= minShared)
-    }
-    // concurrent probe + closure over the shared chunk checkpoint —
-    // see [[graft.Concurrent]]; matched is id-sized and consumed twice
-    val Seq(matched, comps) = graft.Concurrent.all(batch.sparkSession)(Seq(
-      () => chunks
+    incrementalCut(batch, idCol,
+      chunks
         .join(index.select(col("h"), col("len")).distinct(), Seq("h", "len"))
         .groupBy("id").agg(count(lit(1)).as("__ns"))
         .where(col("__ns") >= minShared)
-        .select(col("id").as("doc_id")).localCheckpoint(true),
-      () => connectedComponentsStar(pairs, "idA", "idB", maxIters)
-        .localCheckpoint(true)))
-    incrementalCut(batch, idCol, matched, comps)
+        .select(col("id").as("doc_id")),
+      sharedKeyPairs(chunks, Seq("h", "len"), maxDf, minShared))
   }
 
   /** Distinct chunk-identity index `(h, len)` of a corpus — the
@@ -2007,23 +1874,21 @@ object Dedup {
     * incremental form (what would this batch really cost to ingest?).
     * Output `(id, n_chunks, n_dup, bytes, bytes_dup)`.
     *
+    * Contract: `index` IS [[cdcChunkIndex]] output, distinct by
+    * construction. A non-distinct one (concatenated daily indexes, raw
+    * chunk rows) would fan out EVERY join row and inflate n_chunks/bytes
+    * too — take its `distinct()` first; the probe itself never re-shuffles
+    * the corpus-sized index on the hot path.
+    *
     * Scale shape: one hash-keyed join of batch chunk rows against the
     * chunk-identity index (the small side by construction — AQE picks
     * the build side, never forced), then one per-doc aggregate.
     */
   def cdcIndexMatches(batch: DataFrame, index: DataFrame, idCol: String,
       textCol: String, k: Int = 16, maskBits: Int = 6,
-      indexIsDistinct: Boolean = false, carryCols: Seq[String] = Nil): DataFrame =
+      carryCols: Seq[String] = Nil): DataFrame =
     cdcChunks(batch, idCol, textCol, k, maskBits, carryCols)
-      // distinct defensively BY DEFAULT: a non-distinct index
-      // (concatenated daily indexes, raw chunk rows) would fan out EVERY
-      // join row and inflate n_chunks/bytes too, not just the dup counts.
-      // A steady-state server probing a true [[cdcChunkIndex]] every
-      // batch passes indexIsDistinct = true to skip the corpus-index
-      // shuffle the distinct would add to the hot path (review r13 #2)
-      .join((if (indexIsDistinct) index.select(col("h"), col("len"))
-             else index.select(col("h"), col("len")).distinct())
-          .withColumn("__hit", lit(1L)),
+      .join(index.select(col("h"), col("len")).withColumn("__hit", lit(1L)),
         Seq("h", "len"), "left")
       // carryCols join the group key (they ride through the chunk explode
       // untouched): the streaming probe groups by (id, event time) so the

@@ -290,11 +290,12 @@ object DocumentStream {
         col("ingestTs"),
         TextFunctions.simhash31(col("text")).as("sim"))
       .where(col("sim") >= 0)
-    // the probe itself is the ONE shared definition (Dedup.indexMatchCore);
+    // the probe itself is the ONE shared definition (Dedup.hashIndexMatchCore);
     // only the multi-block-collision collapse — and the broadcast hint,
     // which a stream-static join wants on the static side — is
     // streaming-specific (the batch probe lets Catalyst pick by stats)
-    Dedup.indexMatchCore(withSim, broadcast(index), maxHamming, blocks)
+    Dedup.hashIndexMatchCore(withSim, broadcast(index), maxHamming, blocks,
+        bits = 31, idName = "doc_id")
       .select(col("doc_id"), col("ingestTs"), col("corpusId"), col("dist"))
       .withWatermark("ingestTs", dedupDelay)
       .dropDuplicatesWithinWatermark("doc_id", "corpusId")
@@ -404,7 +405,7 @@ object DocumentStream {
       .withColumn("sim", TextFunctions.simhash31(col("text")))
       .where(col("sim") >= 0)
       .select(col("doc_id"), col("ingestTs"), col("sim"),
-        posexplode(Dedup.blockKeyCols(col("sim"), blocks)))
+        posexplode(Dedup.comboKeyCols(col("sim"), blocks, bits = 31, comboWidth = 1)))
       .withColumnsRenamed(Map("pos" -> "block", "col" -> "blockKey"))
     val left = blocked(stream).withWatermark("ingestTs", window)
     val right = blocked(stream)
@@ -540,11 +541,7 @@ object DocumentStream {
         s"state evicted after $delay), or pass allowUnboundedState = true " +
         "for a deliberately bounded backfill")
     val in = if (bounded) docs.withWatermark("ingestTs", delay) else docs
-    // the contract here IS a cdcChunkIndex (distinct by construction):
-    // skip the defensive index distinct, which would re-shuffle the
-    // corpus-sized index every micro-batch
     Dedup.cdcIndexMatches(in, index, idCol, textCol, k, maskBits,
-      indexIsDistinct = true,
       carryCols = if (bounded) Seq("ingestTs") else Nil)
   }
 

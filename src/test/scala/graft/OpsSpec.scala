@@ -1053,14 +1053,14 @@ class OpsSpec extends AnyFunSuite {
       .head.getInt(0) == 0)
   }
 
-  test("connectedComponents: chains, triangles, and isolated pairs label by min id") {
+  test("connectedComponentsStar: chains, triangles, and isolated pairs label by min id") {
     val pairs = Seq(
-      (1L, 2L), (2L, 3L), (3L, 4L),  // 3-hop chain: tests multi-round propagation
+      (1L, 2L), (2L, 3L), (3L, 4L),  // 3-hop chain: needs more than one round
       (10L, 11L),                    // isolated pair
       (20L, 21L), (21L, 22L), (20L, 22L), // triangle (cycle)
       (31L, 30L)                     // reversed order in the pair
     ).toDF("idA", "idB")
-    val comp = Dedup.connectedComponents(pairs, "idA", "idB")
+    val comp = Dedup.connectedComponentsStar(pairs, "idA", "idB")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(comp == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L,
@@ -1068,32 +1068,39 @@ class OpsSpec extends AnyFunSuite {
     // representatives are exactly the node == comp rows
     assert(comp.count { case (n, c) => n == c } == 4)
     // an empty pair list yields an empty (not failing) result
-    assert(Dedup.connectedComponents(pairs.limit(0), "idA", "idB").count() == 0)
+    assert(Dedup.connectedComponentsStar(pairs.limit(0), "idA", "idB").count() == 0)
     // non-convergence within maxIters is an error, not a partial answer —
     // on the DISTRIBUTED path (cap 0 forces it; below the size gate the
     // driver union-find is exact in one pass and maxIters is moot)
     spark.conf.set("spark.graft.cc.localEdgeCap", "0")
     try assertThrows[IllegalStateException](
-      Dedup.connectedComponents(pairs, "idA", "idB", maxIters = 1).count())
+      Dedup.connectedComponentsStar(pairs, "idA", "idB", maxIters = 1).count())
     finally spark.conf.unset("spark.graft.cc.localEdgeCap")
     // and the size gate itself: the same maxIters=1 call SUCCEEDS under
     // the default cap (driver fast path), with identical labels
-    val fastComp = Dedup.connectedComponents(pairs, "idA", "idB", maxIters = 1)
+    val fastComp = Dedup.connectedComponentsStar(pairs, "idA", "idB", maxIters = 1)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fastComp == comp)
   }
 
-  test("star components: agrees with label prop; logarithmic on a long path") {
-    // a 200-node path has diameter 199: label propagation needs ~200
-    // rounds (maxIters=15 must throw), large-star/small-star collapses it
-    // in O(log n) rounds well inside the same budget
+  test("collectEdgesUnder refuses a lazy edge frame; a checkpoint passes") {
+    // count-then-collect reads the same rows only from a materialized frame
+    val edges = Seq((2L, 1L), (3L, 2L)).toDF("u", "v")
+    intercept[IllegalArgumentException](Dedup.collectEdgesUnder(edges, 10))
+    val ck = edges.localCheckpoint(true)
+    assert(Dedup.collectEdgesUnder(ck, 10).map(_.toSet)
+      .contains(Set((2L, 1L), (3L, 2L))))
+    assert(Dedup.collectEdgesUnder(ck, 1).isEmpty)
+  }
+
+  test("star components: logarithmic on a long path; both sides of the size gate agree") {
+    // a 200-node path has diameter 199: large-star/small-star collapses
+    // it in O(log n) rounds, well inside a 15-round budget
     val path = (0L until 199L).map(i => (i, i + 1)).toDF("idA", "idB")
-    // the round-count contrast is a DISTRIBUTED-path property; cap 0
-    // forces both algorithms past the driver union-find size gate
+    // the round count is a DISTRIBUTED-path property; cap 0 forces the
+    // closure past the driver union-find size gate
     spark.conf.set("spark.graft.cc.localEdgeCap", "0")
     try {
-      assertThrows[IllegalStateException](
-        Dedup.connectedComponents(path, "idA", "idB", maxIters = 15).count())
       val star = Dedup.connectedComponentsStar(path, "idA", "idB", maxIters = 15)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(star.size == 200 && star.values.forall(_ == 0L))
@@ -1102,19 +1109,18 @@ class OpsSpec extends AnyFunSuite {
     val fastStar = Dedup.connectedComponentsStar(path, "idA", "idB")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fastStar.size == 200 && fastStar.values.forall(_ == 0L))
-    // and on a general shape (incl. a self-pair-only node, which only the
-    // star form's allNodes branch re-attaches) both algorithms agree
-    // exactly, on BOTH sides of the size gate
+    // and on a general shape (incl. a self-pair-only node, which the
+    // allNodes branch re-attaches) both sides of the size gate agree
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L),
       (20L, 21L), (21L, 22L), (20L, 22L), (31L, 30L), (7L, 7L)).toDF("idA", "idB")
     def m(df: DataFrame) = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val fastPair = m(Dedup.connectedComponentsStar(pairs, "idA", "idB"))
-    assert(fastPair == m(Dedup.connectedComponents(pairs, "idA", "idB")))
+    assert(fastPair == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+      10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L,
+      30L -> 30L, 31L -> 30L, 7L -> 7L))
     spark.conf.set("spark.graft.cc.localEdgeCap", "0")
-    try {
-      assert(m(Dedup.connectedComponentsStar(pairs, "idA", "idB")) == fastPair)
-      assert(m(Dedup.connectedComponents(pairs, "idA", "idB")) == fastPair)
-    } finally spark.conf.unset("spark.graft.cc.localEdgeCap")
+    try assert(m(Dedup.connectedComponentsStar(pairs, "idA", "idB")) == fastPair)
+    finally spark.conf.unset("spark.graft.cc.localEdgeCap")
   }
 
   test("containment decontamination: ratio gate catches short eval items") {
@@ -2351,7 +2357,7 @@ class OpsSpec extends AnyFunSuite {
     assert(Decontaminate.containment(docs, docs.limit(0), "doc_id", "text").count() == 0)
     // a degenerate self-pair is its own component, not a crash
     val self = Seq((7L, 7L)).toDF("idA", "idB")
-    assert(Dedup.connectedComponents(self, "idA", "idB")
+    assert(Dedup.connectedComponentsStar(self, "idA", "idB")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((7L, 7L)))
     // one shard degrades epochShards to a plain deterministic permutation
     val one = Sampling.epochShards(spark.range(0, 50).toDF("doc_id"), "doc_id", nShards = 1)

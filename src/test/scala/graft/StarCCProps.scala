@@ -4,11 +4,12 @@ import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAll
 
 /** Property suite for [[graft.ops.Dedup.connectedComponentsStar]] — the
-  * closure every removal/incremental dedup path rides on. The example
-  * specs pin chains, triangles, and the id-sum potential; this sweep
-  * checks the algorithm against a plain union-find reference on random
-  * multigraphs (duplicate edges, both orientations, self-loops, isolated
-  * self-loop-only nodes): for EVERY node of the pair list, the emitted
+  * one closure every clustering/removal/incremental dedup path rides on.
+  * The example specs pin chains, triangles, and the id-sum potential;
+  * this sweep checks the algorithm against a plain union-find reference
+  * on random multigraphs (duplicate edges, both orientations,
+  * self-loops, isolated self-loop-only nodes): for EVERY node of the
+  * pair list, the emitted
   * component label must be the MINIMUM id reachable from it, and the
   * output must carry exactly one row per distinct node. Spark-backed, so
   * iterations are few; the graphs are small but adversarially shaped
@@ -104,24 +105,6 @@ object StarCCProps extends Properties("connectedComponentsStar") {
         // the id-sum potential overflow under test lives on the
         // DISTRIBUTED path; check the driver path rides along unharmed
         withCap(Some("0"))(got) == want && withCap(None)(got) == want
-      }
-    }
-
-  // the label-propagation form (d_dedup_clusters' closure) must agree
-  // with the same union-find reference on the same adversarial graphs —
-  // the two CC variants are interchangeable by contract, so a divergence
-  // in either is a removal-correctness bug. maxIters raised past the
-  // generator's worst diameter (a 24-node chain needs ~23 rounds; the
-  // default 20 is sized for dedup clusters, not adversarial chains).
-  property("label propagation agrees with union-find (and the star form)") =
-    forAll(genGraph) { pairs =>
-      pairs.isEmpty || {
-        import spark.implicits._
-        def got = graft.ops.Dedup.connectedComponents(
-            pairs.toDF("idA", "idB"), "idA", "idB", maxIters = 64)
-          .as[(Long, Long)].collect().toMap
-        val want = unionFind(pairs)
-        withCap(None)(got) == want && withCap(Some("0"))(got) == want
       }
     }
 }

@@ -151,7 +151,7 @@ class TextHashSpec extends AnyFunSuite {
           s ^ (1L << rnd.nextInt(31)) ^ (1L << rnd.nextInt(31)) ^ (1L << rnd.nextInt(31))))
     }
     val df = sims.toDF("id", "sim")
-    val got = Dedup.pairsFromSimhash(df, maxHamming = 3, blocks = 4)
+    val got = Dedup.pairsFromHash(df, maxHamming = 3, blocks = 4, bits = 31)
       .select("idA", "idB").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val want = (for {
       (a, sa) <- sims; (b, sb) <- sims
@@ -160,7 +160,7 @@ class TextHashSpec extends AnyFunSuite {
     assert(want.nonEmpty)
     assert(got == want) // complete (pigeonhole) AND sound
     intercept[IllegalArgumentException] {
-      Dedup.pairsFromSimhash(df, maxHamming = 4, blocks = 4)
+      Dedup.pairsFromHash(df, maxHamming = 4, blocks = 4, bits = 31)
     }
   }
 
@@ -183,14 +183,14 @@ class TextHashSpec extends AnyFunSuite {
     } yield (a, b)).toSet
     assert(want.nonEmpty)
     for (k <- Seq(2, 3)) {
-      val got = Dedup.pairsFromSimhash(df, maxHamming = 3, blocks = 3 + k,
-          comboWidth = k)
+      val got = Dedup.pairsFromHash(df, maxHamming = 3, blocks = 3 + k,
+          bits = 31, comboWidth = k)
         .select("idA", "idB").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got == want, s"comboWidth $k")
     }
     // the pigeonhole precondition still raises when violated at k > 1
     intercept[IllegalArgumentException] {
-      Dedup.pairsFromSimhash(df, maxHamming = 3, blocks = 4, comboWidth = 2)
+      Dedup.pairsFromHash(df, maxHamming = 3, blocks = 4, bits = 31, comboWidth = 2)
     }
   }
 
